@@ -19,6 +19,9 @@ Structural semantics reproduced:
     This engine copies in both cases — deterministic multicast is the
     saner contract, and the reference's split behavior looks accidental
     (no test pins it); anyone relying on it gets a superset of events.
+    Streaming frames can't persist: start() runs one query per sink, so
+    a shared upstream is read once per sink and every query carries its
+    own copy of each stateful rule's state.
   * fan-in — several rules naming one sink (`pipeline.go:387-391`):
     ``unionByName`` before the write.
 """
@@ -251,68 +254,28 @@ class CompiledPipeline:
             write_sink(df, self.spec.sinks[name])
 
     def start(self, checkpoint_root: str, available_now: bool = False) -> list:
-        """Start the streaming sinks; returns the StreamingQuerys
-        (≡ StartPipeline's goroutine swarm, but one query per sink with
-        Spark owning scheduling/backpressure/recovery).
+        """Start one StreamingQuery per sink, checkpointed under
+        ``<checkpoint_root>/<sink>`` (≡ StartPipeline's goroutine swarm,
+        with Spark owning scheduling/backpressure/recovery).
 
-        Multiple sinks over one source route through streaming.sinks.
-        fanout_sink — ONE source read, each micro-batch persisted and
-        driven through every branch (SURVEY §4.3d) — instead of N queries
-        each re-reading the source. Sink types are validated up front so
-        an unsupported sink fails here, not asynchronously inside the
-        first micro-batch.
+        Each query runs its sink's streaming frame from compile_pipeline,
+        so stateful rules keep their state across micro-batches whatever
+        the sink count; a source feeding several sinks is read once per
+        sink. Sink types are validated up front so an unsupported sink
+        fails here, not asynchronously inside the first micro-batch.
         """
         from ..streaming import sinks as ssinks
 
-        sink_items = list(self.sink_inputs.items())
-        fanout = len(sink_items) > 1 and len(self.spec.sources) == 1
-        for name, _ in sink_items:
+        for name in self.sink_inputs:
             stype = self.spec.sinks[name].type
-            allowed = _FANOUT_SINK_TYPES if fanout else _STREAM_SINK_TYPES
-            if stype not in allowed:
-                mode = "streaming fan-out" if fanout else "streaming"
+            if stype not in _STREAM_SINK_TYPES:
                 raise ValueError(
-                    f"sink {name!r}: type {stype!r} unsupported in {mode} "
-                    f"(supported: {sorted(allowed)})"
+                    f"sink {name!r}: type {stype!r} unsupported in streaming "
+                    f"(supported: {sorted(_STREAM_SINK_TYPES)})"
                 )
 
-        if fanout:
-            [(src_name, _)] = self.spec.sources.items()
-            src_df = self.node_frames[src_name]
-            spec = self.spec
-
-            def make_branch(sink_name: str):
-                def branch(batch_df: DataFrame) -> DataFrame:
-                    frames = {src_name: batch_df}
-                    _compute_rule_frames(spec, frames)
-                    outs = [
-                        frames[r.name]
-                        for r in spec.rules.values()
-                        if r.sink == sink_name
-                    ]
-                    merged = outs[0]
-                    for o in outs[1:]:
-                        merged = merged.unionByName(o)
-                    return merged
-
-                return branch
-
-            branches = {name: make_branch(name) for name, _ in sink_items}
-            writers = {
-                name: _stream_batch_writer(self.spec.sinks[name])
-                for name, _ in sink_items
-            }
-            q = ssinks.fanout_sink(
-                src_df,
-                branches,
-                writers,
-                checkpoint=os.path.join(checkpoint_root, "fanout"),
-                trigger_available_now=available_now,
-            )
-            return [q]
-
         queries = []
-        for name, df in sink_items:
+        for name, df in self.sink_inputs.items():
             sink = self.spec.sinks[name]
             ckpt = os.path.join(checkpoint_root, name)
             if sink.type in ("file", "json"):
@@ -350,7 +313,10 @@ class CompiledPipeline:
                 # ≡ output/sqs.go:40-61 via the generic foreach adapter —
                 # each micro-batch runs the per-event SendMessage loop.
                 queries.append(
-                    ssinks.foreach_sink(df, _sqs_writer(sink), ckpt)
+                    ssinks.foreach_sink(
+                        df, _sqs_writer(sink), ckpt,
+                        trigger_available_now=available_now,
+                    )
                 )
             elif sink.type == "parquet_upsert":
                 # keyed-table sink: each micro-batch MERGEs by key
@@ -366,6 +332,7 @@ class CompiledPipeline:
                             sink.options.get("partition_col"),
                         ),
                         ckpt,
+                        trigger_available_now=available_now,
                     )
                 )
             elif sink.type == "memory":
@@ -380,44 +347,11 @@ class CompiledPipeline:
         return queries
 
 
-#: Sink types a streaming pipeline supports; fan-out runs writers inside
-#: foreachBatch, where the memory sink does not exist.
+#: Sink types a streaming pipeline supports.
 _STREAM_SINK_TYPES = frozenset(
     {"file", "json", "json_idempotent", "parquet", "parquet_upsert",
      "console", "memory", "sqs"}
 )
-_FANOUT_SINK_TYPES = frozenset(
-    {"file", "json", "json_idempotent", "parquet", "parquet_upsert",
-     "console", "sqs"}
-)
-
-
-def _stream_batch_writer(sink: SinkSpec):
-    """Per-micro-batch writer for the fan-out path."""
-
-    def w(batch_df: DataFrame, batch_id: int) -> None:
-        if sink.type in ("file", "json"):
-            batch_df.write.mode("append").json(sink.options["path"])
-        elif sink.type == "parquet":
-            batch_df.write.mode("append").parquet(sink.options["path"])
-        elif sink.type == "json_idempotent":
-            from ..streaming.sinks import idempotent_batch_writer
-
-            idempotent_batch_writer(sink.options["path"])(batch_df, batch_id)
-        elif sink.type == "parquet_upsert":
-            from ..operators.upsert import upsert_batch_writer
-
-            upsert_batch_writer(
-                sink.options["path"],
-                list(sink.options["keys"]),
-                sink.options.get("partition_col"),
-            )(batch_df, batch_id)
-        elif sink.type == "console":
-            batch_df.show(truncate=False)
-        elif sink.type == "sqs":
-            _sqs_writer(sink)(batch_df, batch_id)
-
-    return w
 
 
 def resolve_tasks(spec: PipelineSpec) -> None:
@@ -487,7 +421,7 @@ def compile_pipeline(
     # Fan-out: persist any node consumed more than once (by child rules,
     # by a rule it feeds as sink, or by a sink write) so the upstream
     # isn't recomputed per consumer. Streaming DataFrames can't persist —
-    # fan-out there is handled by start()'s single-read foreachBatch path.
+    # there start() runs one query per sink, each reading its sources.
     if not streaming:
         consumers: dict[str, int] = {}
         for rule in spec.rules.values():

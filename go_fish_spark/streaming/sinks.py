@@ -5,7 +5,6 @@
 | File sink: JSON + newline + fsync per event (`output/file.go:31-54`) | ``json_sink`` — durable per-micro-batch commit (documented delta: per-batch, not per-event, SURVEY §4.2) |
 | SQS per-event SendMessage (`output/sqs.go:40-61`) | ``foreach_sink`` adapter calling a user function per row/batch |
 | nil-skipping (`output/file.go:38-40`) | tasks return filtered DataFrames; nothing to skip |
-| DAG multicast without re-reading the source | ``fanout_sink`` — one query, persist the micro-batch, drive every branch (SURVEY §4.3 custom-engineering point d) |
 """
 
 from __future__ import annotations
@@ -14,7 +13,7 @@ import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.streaming import StreamingQuery
 
 
 def json_sink(
@@ -45,15 +44,17 @@ def foreach_sink(
     fn: Callable,
     checkpoint: str,
     per_batch: bool = True,
+    trigger_available_now: bool = False,
 ) -> StreamingQuery:
     """≡ the SQS sink's per-event SendMessage loop (`output/sqs.go:40-61`),
     generalized: ``fn(batch_df, batch_id)`` (or ``fn(row)`` when
     per_batch=False, which is the literal per-event shape — use per-batch
     for anything that can batch its I/O)."""
     w = df.writeStream.option("checkpointLocation", checkpoint)
-    if per_batch:
-        return w.foreachBatch(fn).start()
-    return w.foreach(fn).start()
+    w = w.foreachBatch(fn) if per_batch else w.foreach(fn)
+    if trigger_available_now:
+        w = w.trigger(availableNow=True)
+    return w.start()
 
 
 def idempotent_json_sink(
@@ -92,32 +93,3 @@ def idempotent_batch_writer(path: str) -> Callable[[DataFrame, int], None]:
         )
 
     return write
-
-
-def fanout_sink(
-    df: DataFrame,
-    branches: dict[str, Callable[[DataFrame], DataFrame]],
-    writers: dict[str, Callable[[DataFrame, int], None]],
-    checkpoint: str,
-    trigger_available_now: bool = False,
-) -> StreamingQuery:
-    """DAG fan-out from ONE source read: each micro-batch is persisted,
-    every branch transformation + writer runs against it, then it is
-    unpersisted. N independent ``StreamingQuery``s would each re-read the
-    source (`SURVEY §4.3d`); this is the reference's copy-to-every-child
-    fan-out (`pipeline.go:400-404`) without N source scans."""
-
-    def run_branches(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            for name, transform in branches.items():
-                writers[name](transform(batch_df), batch_id)
-        finally:
-            batch_df.unpersist()
-
-    w = df.writeStream.option("checkpointLocation", checkpoint).foreachBatch(
-        run_branches
-    )
-    if trigger_available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()

@@ -13,10 +13,11 @@ The reference ships these as compiled Go plugins:
 Design: all user-declared logic (predicates, derivations, fallbacks) is
 SQL strings compiled to Column expressions BEFORE any state machinery —
 so it runs JVM-side and Catalyst-optimized in both modes. The streaming
-path only carries one opaque "latest value" per key through
-``run_stateful`` (applyInPandasWithState); the batch path expresses the
-identical semantics as an event-time window (`last(... ) IGNORE NULLS``),
-so the two modes are differential-testable against each other.
+paths only carry a small per-key state (the latest value, or a running
+count) through ``run_stateful`` (applyInPandasWithState); the batch paths
+express the identical semantics as an event-time window
+(``last(...) IGNORE NULLS``) or one hash aggregation, so the two modes are
+differential-testable against each other.
 """
 
 from __future__ import annotations
@@ -121,15 +122,46 @@ class KeyedCounter(BasicTask):
                kept by get-or-create (`:47-63`)
 
     Output: (key, occurrences, first_seen). Batch: one hash aggregation.
-    Streaming: the same expression under Spark's aggregation state —
-    emission cadence is the trigger/output-mode (≡ the window drain,
-    `window.go:38-49`), not a per-rule poller.
+    Streaming: the count per key lives in ``run_stateful`` state (≡ the
+    get-or-create KV entry), and each micro-batch emits the running
+    (key, occurrences, first_seen) of every key it touched.
     """
 
     def apply(self, df: DataFrame) -> DataFrame:
         o = self.options
         d = df.filter(F.expr(o["when"])) if "when" in o else df
+        if df.isStreaming:
+            return self._streaming(d, o["key"], o["time"])
         return d.groupBy(o["key"]).agg(
             F.count(F.lit(1)).alias("occurrences"),
             F.min(o["time"]).alias("first_seen"),
         )
+
+    def _streaming(self, d: DataFrame, key: str, time_col: str) -> DataFrame:
+        import pandas as pd
+
+        from .stateful_runtime import run_stateful
+
+        # State round-trips through JSON, so timestamps travel as micros.
+        time_type = d.schema[time_col].dataType
+        is_ts = isinstance(time_type, T.TimestampType)
+        out_schema = T.StructType([
+            d.schema[key],
+            T.StructField("occurrences", T.LongType()),
+            T.StructField("first_seen", T.LongType() if is_ts else time_type),
+        ])
+
+        def fn(k, rows: pd.DataFrame, state: dict):
+            n = state.get("n", 0) + len(rows)
+            seen = [v for v in (rows["_t"].min(), state.get("first"))
+                    if v is not None and not pd.isna(v)]
+            first = min(seen) if seen else None
+            first = first.item() if hasattr(first, "item") else first
+            out = pd.DataFrame({key: [k[0]], "occurrences": [n], "first_seen": [first]})
+            return out, {"n": n, "first": first}
+
+        t = F.unix_micros(time_col) if is_ts else F.col(time_col)
+        out = run_stateful(d.select(key, t.alias("_t")), [key], fn, out_schema)
+        if is_ts:
+            out = out.withColumn("first_seen", F.timestamp_micros("first_seen"))
+        return out

@@ -160,3 +160,49 @@ def test_s2s_enrich_streaming_state_across_batches(spark, tmp_path):
     got = {r.event_id: r.entity for r in out.collect()}
     # batch-2 purchase enriched by batch-1 signup: cross-batch state
     assert got == {1: "user/Bob", 2: "user/Bob"}
+
+
+def test_example_pipeline_streams_state_across_deliveries(spark, tmp_path):
+    """The shipped two-sink example, streamed over two deliveries: the
+    AssumeRole in delivery 1 enriches the delivery-2 event on ``r1``
+    (cross-batch ``s2s_enrich`` state), and the no-MFA count for ``r1``
+    runs on from 1 to 2 (cross-batch ``keyed_counter`` state)."""
+    import os
+
+    path = os.path.join(
+        os.path.dirname(__file__), "..", "examples", "cloudtrail_s2s_pipeline.json"
+    )
+    with open(path) as f:
+        raw = json.load(f)
+    indir = tmp_path / "in"
+    indir.mkdir()
+    raw["sources"]["trail"]["options"]["path"] = str(indir)
+    for name in raw["sinks"]:
+        raw["sinks"][name]["options"]["path"] = str(tmp_path / name)
+    spec = parse_spec(raw)
+    schema = raw["sources"]["trail"]["options"]["schema"]
+
+    deliveries = [
+        dict(event_id=1, ts="2024-01-01T00:00:00Z", role_id="r1",
+             event_name="AssumeRole", principal="alice", mfa="false"),
+        dict(event_id=2, ts="2024-01-01T00:01:00Z", role_id="r1",
+             event_name="GetObject", principal="bob", mfa="false"),
+    ]
+    for i, event in enumerate(deliveries):
+        (indir / f"b{i}.json").write_text(json.dumps(event) + "\n")
+        compiled = compile_pipeline(spark, spec, streaming=True)
+        for q in compiled.start(str(tmp_path / "ckpt"), available_now=True):
+            q.awaitTermination(120)
+
+    enriched = spark.read.schema(schema + ", entity string").json(
+        str(tmp_path / "enriched")
+    )
+    assert {r.event_id: r.entity for r in enriched.collect()} == {
+        1: "user/alice",
+        2: "user/alice",
+    }
+    alerts = spark.read.schema(
+        "role_id string, occurrences long, first_seen timestamp"
+    ).json(str(tmp_path / "alerts"))
+    rows = alerts.filter("role_id = 'r1'").collect()
+    assert sorted(r.occurrences for r in rows) == [1, 2]

@@ -92,12 +92,14 @@ def test_sql_udtf_chunk_text_matches_column_operator(spark):
     assert via_sql == via_op and via_sql
 
 
-def test_cli_run_streaming_available_now(tmp_path):
+@pytest.mark.parametrize("sink_type", ["json", "parquet_upsert"])
+def test_cli_run_streaming_available_now(tmp_path, sink_type):
     """End-to-end drive of `run --streaming --available-now` in a real
     subprocess (the run path owns its SparkSession): a JSON-source →
-    gate → JSON-sink spec drains everything available as Structured
+    gate → sink spec drains everything available as Structured
     Streaming queries with a checkpoint, then exits 0 and prints the
-    stored pipeline UUID."""
+    stored pipeline UUID — for Spark's native file sink and for a
+    foreachBatch sink alike."""
     import os
     import subprocess
     import sys
@@ -116,7 +118,8 @@ def test_cli_run_streaming_available_now(tmp_path):
         "rules": {"keep": {"task": "filter_length", "source": "docs",
                            "sink": "out", "options": {
             "column": "text", "max_length": 100}}},
-        "sinks": {"out": {"type": "json", "options": {"path": str(outdir)}}},
+        "sinks": {"out": {"type": sink_type, "options": {
+            "path": str(outdir), "keys": ["doc_id"]}}},
         "states": {},
     }
     cfg = tmp_path / "pipe.json"
@@ -133,11 +136,16 @@ def test_cli_run_streaming_available_now(tmp_path):
     assert proc.returncode == 0, proc.stderr[-2000:]
     uid = proc.stdout.strip().splitlines()[-1]
     assert len(uid) >= 8  # the stored pipeline UUID, as `run` prints
-    out_rows = [
-        json.loads(line)
-        for f in outdir.glob("*.json") if f.stat().st_size
-        for line in f.read_text().splitlines()
-    ]
+    if sink_type == "json":
+        out_rows = [
+            json.loads(line)
+            for f in outdir.glob("*.json") if f.stat().st_size
+            for line in f.read_text().splitlines()
+        ]
+    else:
+        import pandas as pd
+
+        out_rows = pd.read_parquet(outdir).to_dict("records")
     assert [r["doc_id"] for r in out_rows] == [1]
 
 

@@ -109,24 +109,45 @@ def test_registry_rejects_traversal_ids(tmp_path):
         reg.store("{}", uuid="../evil")
 
 
-def test_streaming_fanout_memory_sink_fails_fast(spark, tmp_path):
-    """Unsupported sink types in fan-out must fail at start(), not
-    asynchronously inside the first micro-batch."""
+def test_streaming_multi_sink_starts_and_bad_sink_type_fails_fast(spark, tmp_path):
+    """Two memory sinks in one streaming spec start one query each and
+    both tables fill; an unknown sink type (spec.py does not check sink
+    types) fails at start(), not asynchronously inside a micro-batch."""
     indir = tmp_path / "in"
     indir.mkdir()
     (indir / "b.json").write_text('{"event_id": 1}\n')
-    spec = parse_spec({
-        "sources": {"src": {"type": "json", "options": {"path": str(indir), "schema": "event_id long"}}},
-        "rules": {
-            "r1": {"source": "src", "task": "passthrough", "sink": "m1"},
-            "r2": {"source": "src", "task": "passthrough", "sink": "m2"},
-        },
-        "sinks": {"m1": {"type": "memory"}, "m2": {"type": "memory"}},
-        "states": {},
-    })
-    compiled = compile_pipeline(spark, spec, streaming=True)
-    with pytest.raises(ValueError, match="unsupported in streaming fan-out"):
-        compiled.start(str(tmp_path / "ckpt"), available_now=True)
+
+    def spec(sinks):
+        return parse_spec({
+            "sources": {"src": {"type": "json", "options": {"path": str(indir), "schema": "event_id long"}}},
+            "rules": {
+                "r1": {"source": "src", "task": "passthrough", "sink": "multi_m1"},
+                "r2": {"source": "src", "task": "passthrough", "sink": "multi_m2"},
+            },
+            "sinks": sinks,
+            "states": {},
+        })
+
+    compiled = compile_pipeline(
+        spark, spec({"multi_m1": {"type": "memory"}, "multi_m2": {"type": "memory"}}),
+        streaming=True,
+    )
+    queries = compiled.start(str(tmp_path / "ckpt"), available_now=True)
+    assert len(queries) == 2
+    for q in queries:
+        q.awaitTermination(120)
+    for table in ("multi_m1", "multi_m2"):
+        assert [r.event_id for r in spark.table(table).collect()] == [1]
+
+    compiled = compile_pipeline(
+        spark,
+        spec({"multi_m1": {"type": "memory"},
+              "multi_m2": {"type": "jsonl", "options": {"path": str(tmp_path / "o")}}}),
+        streaming=True,
+    )
+    with pytest.raises(ValueError, match="'jsonl' unsupported in streaming"):
+        compiled.start(str(tmp_path / "ckpt2"), available_now=True)
+    assert not [q for q in spark.streams.active if q.name == "multi_m1"]
 
 
 def test_filter_length_max_is_inclusive(spark):

@@ -98,8 +98,8 @@ def test_stateful_state_clear(spark, tmp_path):
 
 
 def test_streaming_pipeline_compile(spark, tmp_path):
-    """Streaming compile of a pipeline spec: json-dir source → rule →
-    two sinks through the single-read fan-out path."""
+    """Streaming compile of a pipeline spec: json-dir source → rules →
+    two sinks, started as one query per sink."""
     from go_fish_spark.plans import compile_pipeline, parse_spec
 
     indir = tmp_path / "in"

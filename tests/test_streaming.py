@@ -229,43 +229,6 @@ def test_stream_incremental_dedup_vs_static_store(spark, tmp_path):
     assert [(r.doc_id, r.text) for r in rows] == [(11, "brand new")]
 
 
-def test_fanout_single_read(spark, tmp_path):
-    """DAG fan-out from one source read (`pipeline.go:400-404` ≡
-    fanout_sink): both branches see the same micro-batch."""
-    import pyspark.sql.functions as F
-    from go_fish_spark.streaming import sinks, sources
-
-    indir = tmp_path / "in"
-    write_events(
-        indir,
-        [dict(event_id=i, ts="2024-01-01T00:00:00Z",
-              event_type="click" if i % 2 else "view",
-              key="k", principal=None, principal_id="p") for i in range(6)],
-    )
-    events = sources.json_stream(spark, str(indir), EVENT_SCHEMA)
-
-    got: dict[str, list] = {"clicks": [], "views": []}
-
-    def writer(name):
-        def w(df, batch_id):
-            got[name].extend(r.event_id for r in df.collect())
-        return w
-
-    q = sinks.fanout_sink(
-        events,
-        branches={
-            "clicks": lambda df: df.filter(F.col("event_type") == "click"),
-            "views": lambda df: df.filter(F.col("event_type") == "view"),
-        },
-        writers={"clicks": writer("clicks"), "views": writer("views")},
-        checkpoint=str(tmp_path / "ckpt"),
-        trigger_available_now=True,
-    )
-    q.awaitTermination(120)
-    assert sorted(got["clicks"]) == [1, 3, 5]
-    assert sorted(got["views"]) == [0, 2, 4]
-
-
 def test_session_window_stream(spark, tmp_path):
     """Streaming session windows (gap-based), the idiomatic generalization
     of the reference's drain-on-interval (`window.go:38-49`) — batch
