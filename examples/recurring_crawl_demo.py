@@ -9,8 +9,9 @@ composed end to end from its oracle-verified parts:
     crawl batch 2 arrives -> sigstore maintenance arm appends only the
     new batch's signatures (map-only; history never re-read) ->
     delta pairs by probing the STORE (dedup.delta_minhash_pairs) ->
-    incremental label merge (audit.incremental_audit_merge — CC on the
-    reduced graph bounded by |batch| + |touched components|) ->
+    incremental label merge (audit.incremental_audit_merge — a
+    driver-side union-find on the reduced graph, bounded by |batch| +
+    |delta pairs|) ->
     asserted ≡ the full recompute over the mutated corpus.
 
 Run:  python examples/recurring_crawl_demo.py [sf_dir]  (default sf0.001)

@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -113,11 +115,21 @@ def incremental_audit_merge(
 
     Exactness: labels are min-reachable-id, so an old label IS the min
     id of its members; contracting each touched old component to its
-    label-node and running CC on the REDUCED graph (delta ids + touched
+    label-node and solving the REDUCED graph (delta ids + touched
     labels, delta edges with old endpoints rewritten to their labels)
-    yields merged labels equal to the full recompute's — pairwise pair
-    disciplines make pairs(all) = pairs(hist×hist) ∪ delta_pairs, and
-    min-label CC composes over that union (parity-tested).
+    for min-reachable-id labels yields merged labels equal to the full
+    recompute's — pairwise pair disciplines make pairs(all) =
+    pairs(hist×hist) ∪ delta_pairs, and min-label CC composes over that
+    union (parity-tested).
+
+    Solve: the reduced graph is collected to the driver in ONE Arrow
+    action (rewritten edges plus a self-edge per delta id) and labeled
+    by :func:`_min_label_union_find`, whose smaller-root-wins union
+    reproduces the :func:`~go_fish_spark.operators.graph.
+    connected_components` contract. The iterative CC cost ~3-4 Spark
+    jobs per round on a graph of a few hundred rows; the union-find is
+    one collect. It has no ``max_iter``, so a long-chain batch that
+    would exhaust CC's round budget converges.
 
     Output: (id, component) for history ∪ batch with ``emit="full"``;
     with ``emit="changed"`` only the rows whose label is NEW OR CHANGED
@@ -136,11 +148,14 @@ def incremental_audit_merge(
     the stored side) and the final relabel left-join against the
     ≤|touched components| merge map (broadcastable; with
     ``emit="changed"`` it becomes a semi-join that moves only touched
-    members). The CC iteration itself runs on the reduced graph,
-    bounded by |batch| + |touched components| — never the corpus."""
+    members). History is read only through those joins, in Spark. The
+    DRIVER holds the reduced graph: |delta ids| + |delta pairs| rows —
+    a 10⁶-document batch with ~10⁶ pairs is ~32 MB of int64 endpoints —
+    so the batch size, not the corpus, bounds driver memory."""
     if emit not in ("full", "changed"):
         raise ValueError(f"emit must be 'full' or 'changed', got {emit!r}")
-    from .graph import connected_components
+    import pyarrow as pa
+    from pyspark.sql import types as T
 
     old = old_components.select(
         F.col("id").alias("_oid"), F.col("component").alias("_ocomp")
@@ -158,19 +173,42 @@ def incremental_audit_merge(
         .select(
             F.coalesce("_ca", "_a").alias("id_a"),
             F.coalesce("_cb", "_b").alias("id_b"),
+            F.lit(False).alias("_d"),
         )
     )
-    nodes = delta_ids.select(F.col(id_col).alias("id"))
-    merged = connected_components(nodes, e, id_col="id")
+    # one self-edge per delta id marks the batch's nodes
+    nodes = delta_ids.select(
+        F.col(id_col).alias("id_a"),
+        F.col(id_col).alias("id_b"),
+        F.lit(True).alias("_d"),
+    )
+    # null ids never match a join, so the iterative CC emitted no row
+    # for them either
+    graph = e.unionByName(nodes).dropna(subset=["id_a", "id_b"])
+    id_type = graph.schema["id_a"].dataType
+    tbl = graph.toArrow()
+    ids, root, src_rank = _min_label_union_find(tbl["id_a"], tbl["id_b"])
+    # every other node is a rewritten endpoint: a touched old label (an
+    # endpoint outside history ∪ batch adds a relabel row no old row
+    # matches, and bridges exactly as it did under iterative CC)
+    old_node = np.ones(len(ids), dtype=bool)
+    old_node[src_rank[tbl["_d"].to_numpy()]] = False
+    solved = delta_pairs.sparkSession.createDataFrame(
+        pa.table({"id": ids, "component": ids.take(root), "_old": old_node}),
+        T.StructType(
+            [
+                T.StructField("id", id_type),
+                T.StructField("component", id_type),
+                T.StructField("_old", T.BooleanType()),
+            ]
+        ),
+    )
     # relabel map for TOUCHED old components: label-node → merged label
     # (≤ |touched components| rows — broadcast side of the final join)
-    relabel = merged.join(
-        old_components.select(F.col("component").alias("id")).distinct(),
-        "id",
-    ).select(F.col("id").alias("_ocomp"), F.col("component").alias("_new"))
-    batch = merged.join(
-        nodes.select(F.col("id")), "id", "left_semi"
-    ).select("id", "component")
+    relabel = solved.filter("_old").select(
+        F.col("id").alias("_ocomp"), F.col("component").alias("_new")
+    )
+    batch = solved.filter(~F.col("_old")).select("id", "component")
     if emit == "changed":
         # only touched-and-RELABELED old members move: inner-join the
         # (≤ touched) relabel map, keep rows whose label actually moved
@@ -187,6 +225,40 @@ def incremental_audit_merge(
         .select("id", F.coalesce("_new", "_ocomp").alias("component"))
     )
     return hist.unionByName(batch)
+
+
+def _min_label_union_find(src, dst):
+    """Connected components of a driver-side edge list (Arrow columns
+    ``src``/``dst`` of one type). Ids are ranked in sorted order — Arrow
+    sorts strings by UTF-8 bytes, as Spark compares them — and every
+    union makes the SMALLER root the parent, so each root is its set's
+    min id: the :func:`~go_fish_spark.operators.graph.
+    connected_components` contract, without a round budget.
+
+    Returns ``(ids, root, src_rank)``: the sorted distinct ids (Arrow),
+    each id's root rank, and the rank of every ``src`` entry (numpy)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    both = pa.concat_arrays([src.combine_chunks(), dst.combine_chunks()])
+    ids = pc.unique(both)
+    ids = ids.take(pc.array_sort_indices(ids))
+    ranks = pc.index_in(both, value_set=ids).to_numpy()
+    parent = list(range(len(ids)))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    n = len(src)
+    for x, y in zip(ranks[:n].tolist(), ranks[n:].tolist()):
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
+    root = np.fromiter((find(i) for i in range(len(ids))), np.int64, len(ids))
+    return ids, root, ranks[:n]
 
 
 def component_cohesion(

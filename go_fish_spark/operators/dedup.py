@@ -41,6 +41,7 @@ signature frames because a self-join consumes them twice.
 from __future__ import annotations
 
 import random
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -74,16 +75,29 @@ def _persist(df: DataFrame) -> DataFrame:
     return df
 
 
-def release_caches() -> int:
-    """Unpersist every frame cached by dedup operators; returns the count."""
+def release_caches(keep: int = 0) -> int:
+    """Unpersist every frame cached by dedup operators after the first
+    ``keep``; returns the count."""
     n = 0
-    while _CACHED_FRAMES:
+    while len(_CACHED_FRAMES) > keep:
         try:
             _CACHED_FRAMES.pop().unpersist()
             n += 1
         except Exception:
             pass
     return n
+
+
+@contextmanager
+def scoped_caches():
+    """Release, on exit, the frames dedup operators cache inside the
+    block: a long-running stream wraps each micro-batch in it, so one
+    batch's signature caches never outlive the batch."""
+    keep = len(_CACHED_FRAMES)
+    try:
+        yield
+    finally:
+        release_caches(keep)
 
 
 def minhash_params(n_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
@@ -1759,7 +1773,10 @@ def group_sketch_overlap(
     seed, portable) — the shared-sketch discipline (x66's shared-audit
     pattern applied to the sketch family): a pipeline running several
     sketch audits fits the signatures ONCE and every consumer reads the
-    materialized frame instead of re-tokenizing the corpus.
+    materialized frame instead of re-tokenizing the corpus. Its
+    non-NULL signatures must hold exactly ``n_hashes`` positions: a
+    frame fitted with other parameters fails the query rather than
+    being truncated to its first ``n_hashes`` positions.
 
     Physical shape (optimization r15 — the x94/x100 array-side
     treatment, guide §2.3/§2.4): the union sketch is built as ONE
@@ -1770,7 +1787,22 @@ def group_sketch_overlap(
     rows reduced by a second exchange. Same integer agreements, same
     dyadic division — the estimate is bit-identical."""
     sigs = (
-        sig_frame.select(F.col(group_col).alias("_g"), "_sig")
+        sig_frame.select(
+            F.col(group_col).alias("_g"),
+            F.when(
+                F.col("_sig").isNull() | (F.size("_sig") == n_hashes),
+                F.col("_sig"),
+            )
+            .otherwise(
+                F.raise_error(
+                    F.lit(
+                        f"sig_frame signatures must hold n_hashes={n_hashes}"
+                        " positions"
+                    )
+                )
+            )
+            .alias("_sig"),
+        )
         if sig_frame is not None
         else df.select(
             F.col(group_col).alias("_g"),

@@ -999,8 +999,8 @@ def x118_incremental_audit(spark, sf_dir):
     is re-read, x77's discipline at pair grain) and
     audit.incremental_audit_merge folds those edges into the existing
     labels by contracting touched components to their label-nodes and
-    running CC on the REDUCED graph (bounded by |batch| + |touched
-    components|, never the corpus). The ORACLE is the full recompute
+    solving the REDUCED graph with one driver-side union-find (bounded
+    by |batch| + |delta pairs|, never the corpus). The ORACLE is the full recompute
     over the mutated corpus — pairwise estimators + min-label CC make
     incremental ≡ full exactly, and the hash compare proves it. The
     reference's KV-state get-or-create pattern (`state/kv.go:45-80`)

@@ -31,12 +31,13 @@ duplicate append is collapsed by the reader (identical rows).
 
 100 TB shape: per batch, ONE map-only signature pass over just the
 batch, band-bucket probes against the store (slim rows; bucketed store
-⇒ zero-exchange on the stored side), CC on the reduced graph bounded
-by |batch| + |touched components|, and a broadcast relabel join. The
-label-table rewrite is the one full-table touch — at corpus scale it
-becomes a partition-pruned MERGE INTO on the touched components
-(Delta/Iceberg); the versioned parquet overwrite here is the sandbox
-form of that operation.
+⇒ zero-exchange on the stored side), a driver-side union-find over the
+reduced graph (|batch| ids + |delta pairs| edges, collected in one
+Arrow action — the batch, not the corpus, bounds driver memory), and a
+broadcast relabel join. The label-table rewrite is the one full-table
+touch — at corpus scale it becomes a partition-pruned MERGE INTO on the
+touched components (Delta/Iceberg); the versioned parquet overwrite
+here is the sandbox form of that operation.
 """
 
 from __future__ import annotations
@@ -89,12 +90,17 @@ def dedup_maintenance_stream(
     """Start the maintenance loop (returns the StreamingQuery). Batch 0
     bootstraps the label table (within-batch LSH pairs + CC); later
     batches run the incremental path: store probe + reduced-graph
-    merge. Read the result with :func:`read_labels`."""
+    merge. Read the result with :func:`read_labels`. The signature
+    caches a batch's delta probe persists are released when the batch
+    ends."""
+    from pyspark.sql import Observation
+
     from ..operators.audit import incremental_audit_merge
     from ..operators.dedup import (
         delta_minhash_pairs,
         minhash_lsh_pairs,
         minhash_signature,
+        scoped_caches,
     )
     from ..operators.graph import connected_components
 
@@ -102,14 +108,21 @@ def dedup_maintenance_stream(
     sig_dir = _os.path.join(labels_dir, "_sigs")
 
     def process_batch(bdf: DataFrame, batch_id: int) -> None:
+        with scoped_caches():
+            run_batch(bdf, batch_id)
+
+    def run_batch(bdf: DataFrame, batch_id: int) -> None:
         bdf = bdf.select(id_col, text_col).dropDuplicates([id_col])
         prev = read_labels(spark, labels_dir)
         if prev is not None:
             bdf = bdf.join(
                 prev.select(F.col("id").alias(id_col)), id_col, "left_anti"
             )
-        fresh = bdf.localCheckpoint()
-        if fresh.rdd.isEmpty():
+        # the fresh-row count rides the checkpoint job as an observed
+        # metric (graph.checkpoint_with_sum's pattern): no probe job
+        obs = Observation()
+        fresh = bdf.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
+        if obs.get["n"] == 0:
             return
         sig = minhash_signature(text_col, n_hashes, k, seed, portable)
         # (1) sigs first — replay-safe (see module docstring)

@@ -37,7 +37,8 @@ one full-batch merge — and any partially-appended row superseded by the
 replay's further merge is out-voted by the smaller-component tie-break.
 
 100 TB shape: per batch one map-only signature pass, slim band-bucket
-probes, CC on the reduced graph, and an append of |patch| rows hashed
+probes, a driver-side union-find over the reduced graph (bounded by
+|batch| + |delta pairs|), and an append of |patch| rows hashed
 across shards (ONE exchange on the shard key). The corpus-scale label
 table is never rewritten; the latest-wins window partitions by id
 (per-key bounded, parallel) and at read-mostly scale is amortized by
@@ -444,6 +445,7 @@ def label_store_maintenance_stream(
         delta_minhash_pairs,
         minhash_lsh_pairs,
         minhash_signature,
+        scoped_caches,
     )
     from ..operators.graph import connected_components
 
@@ -460,7 +462,7 @@ def label_store_maintenance_stream(
     lease_owner = f"stream:{_os.path.abspath(checkpoint_dir)}"
 
     def process_batch(bdf: DataFrame, batch_id: int) -> None:
-        with _sk.writer_lease(store_dir, lease_owner) as ld:
+        with _sk.writer_lease(store_dir, lease_owner) as ld, scoped_caches():
             _run_batch(bdf, batch_id, (store_dir, ld["nonce"]))
 
     def _run_batch(bdf: DataFrame, batch_id: int, fence: tuple) -> None:

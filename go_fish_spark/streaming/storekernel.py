@@ -138,14 +138,16 @@ def _probe_no_visible_files(path: str) -> bool:
     walk says nothing about what Spark sees — decline and let the JVM
     answer). Hidden names (``_``/``.`` prefixes) are invisible to
     Spark's file index, except the parquet summary files, which CAN
-    seed schema inference and therefore count as visible."""
+    seed schema inference and therefore count as visible. Symlinked
+    directories are walked: the JVM reader follows them, so data behind
+    one is committed data."""
     if not _os.path.isabs(path):
         return False  # relative path: Python/JVM CWDs may diverge
     if _os.path.isfile(path):
         return False  # a concrete file: let the reader decide
     if not _os.path.exists(path):
         return True  # PATH_NOT_FOUND, without constructing it
-    for dirpath, dirnames, filenames in _os.walk(path):
+    for dirpath, dirnames, filenames in _os.walk(path, followlinks=True):
         dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
         for fn in filenames:
             if fn in ("_metadata", "_common_metadata"):

@@ -77,7 +77,7 @@ SHOWCASE = [
     ("x116_quantile_norm", "per-source percent_rank windows — parallel across sources, never a global window; the keep flag evaluates inside codegen"),
     ("x117_waterfill_budget", "ONE source-keyed exchange with partial agg to the ≤|sources| capacity frame; saturation/level windows and the k* broadcast all run on that bounded frame"),
     ("q93_purchase_attribution", "one user-keyed join with the 7-day bounds as join filters (no corpus-wide window); per-purchase min/max struct aggregation; bounded full-outer attribution rollup"),
-    ("x118_incremental_audit", "delta docs probe the signature store via band-bucket equi-joins; CC runs on the REDUCED graph (batch + touched components); final relabel is a broadcast join"),
+    ("x118_incremental_audit", "delta docs probe the signature store via band-bucket equi-joins; the REDUCED graph is solved by one driver-side union-find, so the merged labels are a LocalTableScan built from one Arrow table (no CC lineage, no documents re-read, no distinct over the label table); final relabel is a broadcast join"),
     ("x120_blocking_choice", "four discipline costs from bounded key-histogram aggs — no pair join anywhere in the plan"),
     ("x122_moore_lewis", "one token exchange computing BOTH models (conditional sum); 1-row totals broadcast; scoring join on distinct (doc, token) pairs"),
     ("x123_edit_verify", "x115's bucketed rank + w equi-joins; |Δlen| prefilter inside the join condition; banded levenshtein inside codegen"),

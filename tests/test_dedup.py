@@ -767,6 +767,70 @@ def test_dedup_audit_shares_one_cc_run(spark, monkeypatch):
         assert "ExistingRDD" in frame._jdf.queryExecution().executedPlan().toString()
 
 
+def _bridge_case():
+    """Batch doc 30 pairs with members of TWO old components (1 and 10)
+    and merges them to the global min label; component 20 is untouched;
+    batch doc 31 has no pairs and becomes a singleton."""
+    old = [(1, 1), (2, 1), (10, 10), (11, 10), (20, 20)]
+    return old, [30, 31], [(2, 30), (30, 11)], {
+        1: 1, 2: 1, 10: 1, 11: 1, 20: 20, 30: 1, 31: 31
+    }
+
+
+def _chain_case():
+    """A 30-hop chain through shuffled batch ids hanging off old
+    component {0, 1}: the iterative CC's 25 rounds did not converge on
+    it; the union-find has no round budget."""
+    import random
+
+    perm = list(range(2, 32))
+    random.Random(30).shuffle(perm)
+    chain = [1] + perm
+    pairs = [(min(a, b), max(a, b)) for a, b in zip(chain, chain[1:])]
+    full = {i: 0 for i in range(32)}
+    full[40] = 40
+    return [(0, 0), (1, 0), (40, 40)], perm, pairs, full
+
+
+@pytest.mark.parametrize("emit", ["full", "changed"])
+@pytest.mark.parametrize("id_type", ["long", "string"])
+@pytest.mark.parametrize("case", [_bridge_case, _chain_case], ids=["bridge", "chain"])
+def test_incremental_audit_merge_bridges_components(
+    spark, monkeypatch, case, id_type, emit
+):
+    """The merge solves the reduced graph on the driver, never through
+    connected_components, and returns min-reachable-id labels: the full
+    table for emit='full', and for emit='changed' exactly the batch plus
+    the old members whose label moved."""
+    from go_fish_spark.operators import audit as audit_mod
+
+    def no_cc(*a, **kw):
+        raise AssertionError("the merge must not run iterative CC")
+
+    monkeypatch.setattr(audit_mod, "connected_components", no_cc)
+    key = (lambda i: f"d{i:03d}") if id_type == "string" else (lambda i: i)
+    old_rows, delta_rows, pair_rows, full = case()
+    old = spark.createDataFrame(
+        [(key(i), key(c)) for i, c in old_rows],
+        f"id {id_type}, component {id_type}",
+    )
+    delta = spark.createDataFrame([(key(i),) for i in delta_rows], f"id {id_type}")
+    pairs = spark.createDataFrame(
+        [(key(a), key(b)) for a, b in pair_rows], f"id_a {id_type}, id_b {id_type}"
+    )
+    old_label = dict(old_rows)
+    want = {
+        key(i): key(c)
+        for i, c in full.items()
+        if emit == "full" or i in delta_rows or old_label[i] != c
+    }
+    out = audit_mod.incremental_audit_merge(old, delta, pairs, emit=emit)
+    got = {r["id"]: r["component"] for r in out.collect()}
+    assert got == want
+    assert out.count() == len(want)
+    assert out.schema.simpleString() == old.schema.simpleString()
+
+
 def test_minhash_error_audit_bounds_and_duplicates(spark):
     """Sketch-accuracy audit (x75's engine): exact duplicates estimate
     J=1 with ZERO error; every |error| is bounded by 1; the histogram

@@ -93,6 +93,25 @@ def test_read_parquet_if_exists_still_reads_real_store(spark, tmp_path):
     assert df is not None and df.count() == 10
 
 
+def test_probe_follows_symlinked_data_dirs(spark, tmp_path):
+    """Data behind a symlinked shard directory is committed data: the
+    probe must not call the store provably empty, and the read returns
+    the rows the JVM reader sees through the link."""
+    from go_fish_spark.streaming.storekernel import (
+        _probe_no_visible_files,
+        read_parquet_if_exists,
+    )
+
+    real = str(tmp_path / "elsewhere" / "shard=0")
+    spark.range(5).write.parquet(real)
+    store = tmp_path / "store"
+    store.mkdir()
+    os.symlink(real, store / "shard=0")
+    assert not _probe_no_visible_files(str(store))
+    df = read_parquet_if_exists(spark, str(store))
+    assert df is not None and df.count() == 5
+
+
 # ---------------------------------------------------------------------------
 # connected_components: the convergence sum rides the checkpoint action
 # as an observed metric — output must be identical to a from-scratch
@@ -240,6 +259,24 @@ def test_group_sketch_overlap_arrayside_matches_exploded(spark):
     by_pair = {(a, b): o for a, b, o in got2}
     assert by_pair[("dupA", "dupB")] == 1.0
     assert by_pair[("dupA", "empty")] is None
+
+
+def test_group_sketch_overlap_rejects_mismatched_sig_frame(spark):
+    """A sig_frame fitted with more positions than ``n_hashes`` fails
+    the query instead of being silently truncated; matching and NULL
+    signatures pass."""
+    from go_fish_spark.operators import dedup
+
+    def overlap(sig_rows):
+        sf = spark.createDataFrame(sig_rows, "g string, _sig array<bigint>")
+        return dedup.group_sketch_overlap(
+            None, "g", "text", n_hashes=4, sig_frame=sf
+        ).collect()
+
+    ok = overlap([("a", [1, 2, 3, 4]), ("b", [1, 2, 3, 9]), ("b", None)])
+    assert [tuple(r) for r in ok] == [("a", "b", 0.75)]
+    with pytest.raises(Exception, match="n_hashes"):
+        overlap([("a", [1, 2, 3, 4]), ("b", [1, 2, 3, 4, 5, 6])])
 
 
 # ---------------------------------------------------------------------------

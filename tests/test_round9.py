@@ -174,31 +174,6 @@ def test_quantile_norm_oracle_single_window(spark, duck):
     assert got == want
 
 
-def test_incremental_audit_merge_bridges_components(spark):
-    """A batch doc pairing with members of TWO old components merges
-    them (and any old-old merge via the delta bridge) to the global min
-    label; untouched components keep their labels; pair-less batch docs
-    become singletons."""
-    from go_fish_spark.operators.audit import incremental_audit_merge
-
-    old = spark.createDataFrame(
-        [(1, 1), (2, 1), (10, 10), (11, 10), (20, 20)],
-        "id long, component long",
-    )
-    delta = spark.createDataFrame([(30,), (31,)], "id long")
-    # 30 bridges old components 1 and 10; 31 has no pairs
-    pairs = spark.createDataFrame(
-        [(2, 30), (30, 11)], "id_a long, id_b long"
-    )
-    got = sorted(
-        (r["id"], r["component"])
-        for r in incremental_audit_merge(old, delta, pairs).collect()
-    )
-    assert got == [
-        (1, 1), (2, 1), (10, 1), (11, 1), (20, 20), (30, 1), (31, 31)
-    ]
-
-
 def test_incremental_audit_equals_full_recompute(spark):
     """Parity (r8 verdict Next #2 done-condition): the incremental merge
     over (history labels + store-probed delta pairs) reproduces the full

@@ -229,6 +229,43 @@ def test_stream_incremental_dedup_vs_static_store(spark, tmp_path):
     assert [(r.doc_id, r.text) for r in rows] == [(11, "brand new")]
 
 
+def test_dedup_maintenance_stream_releases_batch_caches(spark, tmp_path):
+    """Each maintenance micro-batch releases the signature frames its
+    delta probe persisted: a bootstrap and three incremental batches
+    leave the dedup cache registry as they found it (it grew by two
+    frames per batch before). A restart with no new docs is a no-op —
+    its empty test rides the fresh-set checkpoint."""
+    from go_fish_spark.operators import dedup
+    from go_fish_spark.streaming.dedup_maintenance import (
+        dedup_maintenance_stream,
+        read_labels,
+    )
+
+    src, labels, cp = (str(tmp_path / d) for d in ("in", "labels", "cp"))
+    schema = "doc_id long, text string"
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+
+    def run():
+        q = dedup_maintenance_stream(
+            spark.readStream.schema(schema).parquet(src), labels, cp,
+            bands=32, threshold=0.3, portable=True,
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    cached = len(dedup._CACHED_FRAMES)
+    for b in range(4):
+        rows = [(10 * b, text), (10 * b + 1, f"lone document number {b} here")]
+        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
+        run()
+        assert len(dedup._CACHED_FRAMES) == cached, f"batch {b}"
+    got = dict(map(tuple, read_labels(spark, labels).collect()))
+    assert {i: got[i] for i in (0, 10, 20, 30)} == dict.fromkeys((0, 10, 20, 30), 0)
+    assert all(got[10 * b + 1] == 10 * b + 1 for b in range(4))
+    run()
+    assert dict(map(tuple, read_labels(spark, labels).collect())) == got
+
+
 def test_session_window_stream(spark, tmp_path):
     """Streaming session windows (gap-based), the idiomatic generalization
     of the reference's drain-on-interval (`window.go:38-49`) — batch
