@@ -40,6 +40,7 @@ signature frames because a self-join consumes them twice.
 
 from __future__ import annotations
 
+import functools
 import random
 from contextlib import contextmanager
 
@@ -200,10 +201,13 @@ def minhash_signature(
 
 def _band_struct_array(n_hashes: int, bands: int, portable: bool):
     """``array<struct<band,bh>>`` expression over a ``_sig`` column —
-    slim banding rows: (id, band, band_hash) ONLY, because carrying the
-    64-long signature through a bands×-exploded join would shuffle
-    ``bands`` copies of every signature; candidates join back to the
-    persisted sigs for verification. One parsed SQL literal, not
+    slim banding rows: (id, band, band_hash) ONLY on any side that is
+    shuffled or broadcast, because carrying the 64-long signature through
+    a bands×-exploded join would move ``bands`` copies of every
+    signature. Candidates then meet their signatures either by joining
+    back to the persisted sigs (:func:`minhash_lsh_pairs`) or, in the
+    delta probe (:func:`_delta_probe`), on the streamed store row that
+    produced them, which never leaves its task. One parsed SQL literal, not
     bands × 4 Column calls (py4j overhead). The ``portable`` arm is the
     Horner fold :func:`duck_minhash_lsh_sql` mirrors integer-for-
     integer; the default arm is JVM xxhash64 over the band slice."""
@@ -1248,6 +1252,84 @@ def sketch_store(
     )
 
 
+#: Budget for the hash relations one delta-probe chunk broadcasts, and
+#: their measured built sizes (about 120 B per slim (id, band, bh) row
+#: and 850 B per 64-hash signature, on 10⁴- and 4·10⁴-document batches):
+#: a batch past the budget is probed in _id-hash chunks.
+_PROBE_BROADCAST_BYTES = 128 << 20
+_SLIM_ROW_BYTES, _SIG_HASH_BYTES = 120, 14
+
+
+def _probe_chunks(n_sigs: int, n_hashes: int, bands: int) -> int:
+    """How many broadcast chunks :func:`_delta_probe` splits an
+    ``n_sigs``-document batch into (about 47k documents per chunk at 64
+    hashes and 16 bands)."""
+    per_doc = bands * _SLIM_ROW_BYTES + n_hashes * _SIG_HASH_BYTES
+    return max(1, -(-n_sigs * per_doc // _PROBE_BROADCAST_BYTES))
+
+
+def _delta_probe(
+    sigs: DataFrame,
+    n_sigs: int,
+    store: DataFrame,
+    n_hashes: int,
+    bands: int,
+    threshold: float,
+    portable: bool,
+) -> DataFrame:
+    """The one delta probe behind :func:`incremental_near_dedup` and
+    :func:`delta_minhash_pairs`: every VERIFIED candidate between the
+    batch's (_id, _sig) frame ``sigs`` (``n_sigs`` rows) and the
+    historical ``store``, as rows (_id, _nid, _new, est_jaccard).
+    ``_nid`` is a batch doc; ``_id`` is the row that probed it — a store
+    doc (``_new`` false) or a SMALLER-id batch doc (``_new`` true). A
+    pair that collides in several bands, or a store row present twice
+    (a replayed append), repeats; callers reduce by key.
+
+    Shape: the batch's slim (id, band, bh) rows and its (id, sig) rows
+    are broadcast; the store, with the batch's own rows appended, is
+    streamed through both broadcast hash joins. Each probing row keeps
+    its own ``_sig``, so a candidate is verified on the row that
+    produced it — the store is never shuffled, cached or deduplicated.
+    ``sigs`` is read several times (the broadcasts and the scan), so
+    hand in a materialized frame.
+
+    Broadcast bound: a batch whose built relations would pass
+    ``_PROBE_BROADCAST_BYTES`` (128 MB, about 47k documents at 16
+    bands) is split by _id hash into chunks under it; each chunk
+    streams the store once and the hits are unioned. One chunk — one
+    store scan — covers any micro-batch up to that size."""
+    assert n_hashes % bands == 0
+    band_rows = _band_struct_array(n_hashes, bands, portable)
+    probing = (
+        store.select("_id", "_sig", F.lit(False).alias("_new"))
+        .unionByName(sigs.select("_id", "_sig", F.lit(True).alias("_new")))
+        .select("*", F.inline(band_rows))
+    )
+    agree = F.size(
+        F.filter(F.zip_with("_sig", "_nsig", lambda x, y: x == y), lambda v: v)
+    )
+    n_chunks = _probe_chunks(n_sigs, n_hashes, bands)
+    hits = []
+    for i in range(n_chunks):
+        part = sigs.select(F.col("_id").alias("_nid"), "_sig")
+        if n_chunks > 1:
+            part = part.filter(F.pmod(F.xxhash64("_nid"), F.lit(n_chunks)) == i)
+        slim = F.broadcast(part.select("_nid", F.inline(band_rows)))
+        batch = F.broadcast(part.select("_nid", F.col("_sig").alias("_nsig")))
+        hits.append(
+            probing.join(slim, ["band", "bh"])
+            .filter(~F.col("_new") | (F.col("_id") < F.col("_nid")))
+            .join(batch, "_nid")
+            .select(
+                "_id", "_nid", "_new",
+                (agree / F.lit(float(n_hashes))).alias("est_jaccard"),
+            )
+            .filter(F.col("est_jaccard") >= threshold)
+        )
+    return functools.reduce(DataFrame.unionByName, hits)
+
+
 def incremental_near_dedup(
     new_df: DataFrame,
     store: DataFrame,
@@ -1277,99 +1359,34 @@ def incremental_near_dedup(
       * ``kept`` — neither. Among kept docs no verified pair exists
         (if (a,b) verified with a < b, b is marked).
 
-    100 TB shape: history is touched ONLY through its signatures — band
-    hashes re-derive from ``_sig`` by array math, so the text of the
-    historical corpus is never read, let alone re-tokenized. Both
-    band-bucket joins move slim (id, band, bh) rows; verification joins
-    back to the persisted signature frames over candidate-bounded sets
-    (the x02 banding law bounds candidates). No broadcast hint on the
-    store side (corpus-scale); a bucketed store makes the probe
-    zero-exchange on that side (tests/test_bucketing.py pattern).
+    100 TB shape: history is touched ONLY through its signatures, in
+    a streamed scan (:func:`_delta_probe`) — band hashes re-derive from
+    ``_sig`` by array math, so the historical text is never read, and
+    the store is never shuffled or cached. Only the batch is broadcast:
+    |batch| × (bands × 20 B + 0.5 KB) of raw payload, about 2.8 KB per
+    document as built hash relations. A batch past the kernel's 128 MB
+    budget (about 47k documents at 16 bands) is probed in _id-hash
+    chunks, one store scan each. The one exchange is a groupBy of the
+    verified hits on the batch id (candidate-bounded by the x02 banding
+    law).
     """
-    assert n_hashes % bands == 0
-    new_sigs = _persist(
-        new_df.select(
-            F.col(id_col).alias("_id"),
-            minhash_signature(text_col, n_hashes, k, seed, portable).alias(
-                "_sig"
-            ),
-        )
+    sigs = _persist(
+        sketch_store(new_df, id_col, text_col, n_hashes, k, seed, portable)
     )
-    hist_sigs = _persist(store.select("_id", "_sig"))
-    band_cols = _band_struct_array(n_hashes, bands, portable)
-
-    def ex(sigs: DataFrame) -> DataFrame:
-        return sigs.select("_id", F.explode(band_cols).alias("bd")).select(
-            "_id", F.col("bd.band").alias("band"), F.col("bd.bh").alias("bh")
+    flags = (
+        _delta_probe(
+            sigs, sigs.count(), store, n_hashes, bands, threshold, portable
         )
-
-    new_ex, hist_ex = ex(new_sigs), ex(hist_sigs)
-    agree = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
+        .groupBy(F.col("_nid").alias("_id"))
+        .agg(F.max(~F.col("_new")).alias("_h"), F.max("_new").alias("_b"))
     )
-    verified = (agree / F.lit(float(n_hashes))) >= threshold
-
-    cand_h = (
-        new_ex.alias("n")
-        .join(
-            hist_ex.alias("h"),
-            (F.col("n.band") == F.col("h.band"))
-            & (F.col("n.bh") == F.col("h.bh")),
-        )
-        .select(F.col("n._id").alias("nid"), F.col("h._id").alias("hid"))
-        .dropDuplicates(["nid", "hid"])
-    )
-    hist_dup = (
-        cand_h.join(
-            new_sigs.select(F.col("_id").alias("nid"), F.col("_sig").alias("sig_a")),
-            "nid",
-        )
-        .join(
-            hist_sigs.select(F.col("_id").alias("hid"), F.col("_sig").alias("sig_b")),
-            "hid",
-        )
-        .filter(verified)
-        .select("nid")
-        .distinct()
-    )
-
-    a, b = new_ex.alias("a"), new_ex.alias("b")
-    cand_b = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    batch_dup = (
-        cand_b.join(
-            new_sigs.select(F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a")),
-            "id_a",
-        )
-        .join(
-            new_sigs.select(F.col("_id").alias("id_b"), F.col("_sig").alias("sig_b")),
-            "id_b",
-        )
-        .filter(verified)
-        .select(F.col("id_b").alias("nid"))
-        .distinct()
-    )
-
-    h = hist_dup.withColumn("_h", F.lit(True)).withColumnRenamed("nid", "_id")
-    bt = batch_dup.withColumn("_b", F.lit(True)).withColumnRenamed("nid", "_id")
     status = (
         F.when(F.col("_h"), F.lit("dup_of_history"))
         .when(F.col("_b"), F.lit("dup_in_batch"))
         .otherwise(F.lit("kept"))
     )
-    return (
-        new_sigs.select("_id")
-        .join(h, "_id", "left")
-        .join(bt, "_id", "left")
-        .select(F.col("_id").alias(id_col), status.alias("status"))
+    return sigs.join(flags, "_id", "left").select(
+        F.col("_id").alias(id_col), status.alias("status")
     )
 
 
@@ -1427,7 +1444,7 @@ def duck_incremental_near_dedup_sql(
 
 
 def delta_minhash_pairs(
-    new_df: DataFrame,
+    new_df: DataFrame | None,
     store: DataFrame,
     id_col: str,
     text_col: str,
@@ -1437,10 +1454,12 @@ def delta_minhash_pairs(
     threshold: float = 0.5,
     seed: int = 42,
     portable: bool = False,
+    sigs: DataFrame | None = None,
+    n_sigs: int | None = None,
 ) -> DataFrame:
     """Verified near-dup PAIRS touching a new crawl batch — the pair-grain
     sibling of :func:`incremental_near_dedup` (which reduces the same
-    candidates to per-doc statuses): every (id_a, id_b, est_jaccard) with
+    probe to per-doc statuses): every (id_a, id_b, est_jaccard) with
     est ≥ ``threshold`` where AT LEAST ONE side is a new doc; the other
     side may come from the historical :func:`sketch_store`. id_a < id_b.
 
@@ -1449,72 +1468,39 @@ def delta_minhash_pairs(
     pairs(corpus ∪ batch) = pairs(corpus × corpus) ∪ THIS, because the
     signature estimator is pairwise — so merging these edges into the
     existing component labels reproduces the full recompute exactly
-    (parity-tested in tests/test_round9.py).
+    (the union law is tested in tests/test_dedup.py, the merge parity
+    in tests/test_round9.py).
 
-    100 TB shape: identical to :func:`incremental_near_dedup` — history
-    is touched only through its stored signatures (band hashes re-derive
-    by array math; no historical text is read), both band-bucket joins
-    move slim (id, band, bh) rows, candidates are bounded by the x02
-    banding law, and the store side carries no broadcast hint (bucketed
-    store ⇒ zero-exchange probe)."""
-    assert n_hashes % bands == 0
-    new_sigs = _persist(
-        new_df.select(
-            F.col(id_col).alias("_id"),
-            minhash_signature(text_col, n_hashes, k, seed, portable).alias(
-                "_sig"
-            ),
+    ``sigs``: the batch's pre-computed (_id, _sig) frame at the SAME
+    params (``new_df`` is then unused) — a caller that already holds
+    the batch's signatures, materialized, hands them in instead of
+    hashing the batch again. ``n_sigs``: the batch's row count, if the
+    caller already observed it (otherwise it is counted).
+
+    100 TB shape: the store is streamed through the broadcast batch
+    (:func:`_delta_probe`) — no historical text is read, and the store
+    is never shuffled, cached or deduplicated. Only the batch is
+    broadcast: |batch| × (bands × 20 B + 0.5 KB) of raw payload, about
+    2.8 KB per document as built hash relations. A batch past the
+    kernel's 128 MB budget (about 47k documents at 16 bands) is probed
+    in _id-hash chunks, one store scan each. The one exchange is the
+    dropDuplicates of the slim verified pairs, which also absorbs
+    duplicate store rows."""
+    if sigs is None:
+        sigs = _persist(
+            sketch_store(new_df, id_col, text_col, n_hashes, k, seed, portable)
         )
+    if n_sigs is None:
+        n_sigs = sigs.count()
+    hits = _delta_probe(
+        sigs.select("_id", "_sig"), n_sigs, store, n_hashes, bands,
+        threshold, portable,
     )
-    hist_sigs = _persist(store.select("_id", "_sig"))
-    band_cols = _band_struct_array(n_hashes, bands, portable)
-
-    def ex(sigs: DataFrame) -> DataFrame:
-        return sigs.select("_id", F.explode(band_cols).alias("bd")).select(
-            "_id", F.col("bd.band").alias("band"), F.col("bd.bh").alias("bh")
-        )
-
-    new_ex, hist_ex = ex(new_sigs), ex(hist_sigs)
-
-    cand_h = (
-        new_ex.alias("n")
-        .join(
-            hist_ex.alias("h"),
-            (F.col("n.band") == F.col("h.band"))
-            & (F.col("n.bh") == F.col("h.bh")),
-        )
-        .select(
-            F.least("n._id", "h._id").alias("id_a"),
-            F.greatest("n._id", "h._id").alias("id_b"),
-        )
-    )
-    a, b = new_ex.alias("a"), new_ex.alias("b")
-    cand_b = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bh") == F.col("b.bh"))
-        & (F.col("a._id") < F.col("b._id")),
-    ).select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-    cand = cand_h.unionByName(cand_b).dropDuplicates(["id_a", "id_b"])
-
-    sigs = new_sigs.unionByName(hist_sigs).dropDuplicates(["_id"])
-    agree = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
-    )
-    est = agree / F.lit(float(n_hashes))
-    return (
-        cand.join(
-            sigs.select(F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a")),
-            "id_a",
-        )
-        .join(
-            sigs.select(F.col("_id").alias("id_b"), F.col("_sig").alias("sig_b")),
-            "id_b",
-        )
-        .withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
+    return hits.select(
+        F.least("_id", "_nid").alias("id_a"),
+        F.greatest("_id", "_nid").alias("id_b"),
+        "est_jaccard",
+    ).dropDuplicates(["id_a", "id_b"])
 
 
 def passage_dedup(

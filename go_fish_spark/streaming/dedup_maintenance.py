@@ -10,7 +10,7 @@ get-or-create, mutate, store back) applied to the dedup graph at table
 grain: the label table is the KV store, each batch's merge is the
 transaction, and the invariant maintained is `labels ≡ full CC
 recompute over everything ingested so far` (parity-tested per batch in
-tests/test_round9.py).
+tests/test_streaming.py, crash-replay included).
 
 Why foreachBatch rather than applyInPandasWithState: component merging
 is a GLOBAL operation (one batch doc can bridge two existing clusters),
@@ -26,18 +26,24 @@ A crash anywhere replays the batch against the PREVIOUS committed
 labels. The fresh-set is derived from the LABEL table (ids not yet
 labeled), so an already-applied batch is a no-op; a batch that crashed
 between (1) and (2) re-runs with its sigs already in the store — the
-probe excludes them (store is semi-joined to LABELED ids), and the
-duplicate append is collapsed by the reader (identical rows).
+probe excludes them (store is semi-joined to LABELED ids). A row
+appended twice is read twice; the probe's one dropDuplicates on the
+verified pairs absorbs it, so the store needs no dedup.
 
 100 TB shape: per batch, ONE map-only signature pass over just the
-batch, band-bucket probes against the store (slim rows; bucketed store
-⇒ zero-exchange on the stored side), a driver-side union-find over the
-reduced graph (|batch| ids + |delta pairs| edges, collected in one
-Arrow action — the batch, not the corpus, bounds driver memory), and a
-broadcast relabel join. The label-table rewrite is the one full-table
-touch — at corpus scale it becomes a partition-pruned MERGE INTO on the
-touched components (Delta/Iceberg); the versioned parquet overwrite
-here is the sandbox form of that operation.
+batch (inside its fresh-set checkpoint, which the append, the probe
+and the merge all read), ONE streamed scan of the store through the
+broadcast batch — its slim (id, band, bh) rows and its signatures,
+about |batch| × (bands × 20 B + 0.5 KB), so the store is never
+shuffled, cached or deduplicated (a batch past the probe's 128 MB
+broadcast budget, about 47k documents, is probed in chunks, one scan
+each) — a driver-side union-find over the reduced graph (|batch| ids +
+|delta pairs| edges, collected in one Arrow action — the batch, not
+the corpus, bounds driver memory), and a broadcast relabel join. The
+label-table rewrite is the one full-table touch — at corpus scale it
+becomes a partition-pruned MERGE INTO on the touched components
+(Delta/Iceberg); the versioned parquet overwrite here is the sandbox
+form of that operation.
 """
 
 from __future__ import annotations
@@ -90,9 +96,9 @@ def dedup_maintenance_stream(
     """Start the maintenance loop (returns the StreamingQuery). Batch 0
     bootstraps the label table (within-batch LSH pairs + CC); later
     batches run the incremental path: store probe + reduced-graph
-    merge. Read the result with :func:`read_labels`. The signature
-    caches a batch's delta probe persists are released when the batch
-    ends."""
+    merge. Read the result with :func:`read_labels`. Each batch is
+    hashed once, into its fresh-set checkpoint; any frame a dedup
+    operator caches during the batch is released when the batch ends."""
     from pyspark.sql import Observation
 
     from ..operators.audit import incremental_audit_merge
@@ -118,42 +124,49 @@ def dedup_maintenance_stream(
             bdf = bdf.join(
                 prev.select(F.col("id").alias(id_col)), id_col, "left_anti"
             )
-        # the fresh-row count rides the checkpoint job as an observed
-        # metric (graph.checkpoint_with_sum's pattern): no probe job
+        # the batch is hashed ONCE, inside the fresh-set checkpoint; the
+        # sig append, the pair pass and the merge all read it. The
+        # fresh-row count rides the same job as an observed metric
+        # (graph.checkpoint_with_sum's pattern): no probe job
         obs = Observation()
-        fresh = bdf.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-        if obs.get["n"] == 0:
+        fresh = (
+            bdf.select(
+                F.col(id_col).alias("_id"),
+                minhash_signature(text_col, n_hashes, k, seed, portable).alias(
+                    "_sig"
+                ),
+            )
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint()
+        )
+        n_fresh = obs.get["n"]
+        if n_fresh == 0:
             return
-        sig = minhash_signature(text_col, n_hashes, k, seed, portable)
+        fresh_ids = fresh.select(F.col("_id").alias(id_col))
         # (1) sigs first — replay-safe (see module docstring)
-        fresh.select(F.col(id_col).alias("_id"), sig.alias("_sig")).write.mode(
-            "append"
-        ).parquet(sig_dir)
+        fresh.write.mode("append").parquet(sig_dir)
         if prev is None:
             pairs = minhash_lsh_pairs(
-                fresh, id_col, text_col, n_hashes, bands, k, threshold,
-                seed, portable,
+                None, "_id", text_col, n_hashes, bands, k, threshold,
+                seed, portable, sigs=fresh,
             )
             labels = connected_components(
-                fresh.select(id_col), pairs, id_col=id_col
+                fresh_ids, pairs, id_col=id_col
             ).select("id", "component")
         else:
             # store = signatures of LABELED docs only (excludes any
-            # orphan rows a crashed attempt appended for this batch)
-            store = (
-                spark.read.parquet(sig_dir)
-                .dropDuplicates(["_id"])
-                .join(
-                    prev.select(F.col("id").alias("_id")), "_id",
-                    "left_semi",
-                )
+            # orphan rows a crashed attempt appended for this batch);
+            # a row appended twice needs no dedup — the probe reduces
+            # its verified pairs by key
+            store = spark.read.parquet(sig_dir).join(
+                prev.select(F.col("id").alias("_id")), "_id", "left_semi"
             )
             dpairs = delta_minhash_pairs(
-                fresh, store, id_col, text_col, n_hashes, bands, k,
-                threshold, seed, portable,
+                None, store, id_col, text_col, n_hashes, bands, k,
+                threshold, seed, portable, sigs=fresh, n_sigs=n_fresh,
             )
             labels = incremental_audit_merge(
-                prev, fresh.select(id_col), dpairs, id_col=id_col
+                prev, fresh_ids, dpairs, id_col=id_col
             )
         # (2) labels last — the commit point
         _commit_labels(labels, labels_dir, batch_id)

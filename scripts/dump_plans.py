@@ -53,7 +53,7 @@ SHOWCASE = [
     ("x70_boilerplate_affixes", "map-only affix extraction — no joins; one exchange on the (kind, affix) groupBy key"),
     ("x71_dupgraph_pagerank", "fixed-iteration PageRank: final round reads the checkpointed rank frame + pre-partitioned adjacency; only the slim (id, rank) frame moves per iteration"),
     ("x20_curation_pipeline", "flagship shares ONE audit pass: canonical selection reads the checkpointed CC label frame (ExistingRDD) — no second pair-graph/CC computation inside the composed plan"),
-    ("x77_incremental_near_dedup", "incremental near-dedup: slim (id, band, bh) bucket joins against the signature store — no history text in any scan; verification joins back to persisted sigs over candidate-bounded sets"),
+    ("x77_incremental_near_dedup", "incremental near-dedup: the signature store (derived in place from history here, a durable sig table in production) is streamed ONCE as the probe side of two broadcast hash joins — the batch's slim (id, band, bh) rows and its (id, sig) rows, both read from the batch's cached sigs — and each candidate verifies on the store row that produced it; no exchange, cache or aggregate over the store; the probe's one exchange is the groupBy of verified hits on the batch id"),
     ("x78_vocab_coverage", "top-N vocab elected by TakeOrdered (distributed heap, no global window); vocab broadcast into the map-only coverage join"),
     ("x80_corpus_diff", "both snapshots reduce to (id, digest) before ONE full-outer SortMergeJoin — text never shuffles"),
     ("x81_heavy_hitters", "MG candidate stage is the only Python (ArrowEvalPython/MapInPandas); exact verification joins the corpus to BROADCAST candidates — the token-keyed shuffle is candidate-bounded"),
@@ -77,7 +77,7 @@ SHOWCASE = [
     ("x116_quantile_norm", "per-source percent_rank windows — parallel across sources, never a global window; the keep flag evaluates inside codegen"),
     ("x117_waterfill_budget", "ONE source-keyed exchange with partial agg to the ≤|sources| capacity frame; saturation/level windows and the k* broadcast all run on that bounded frame"),
     ("q93_purchase_attribution", "one user-keyed join with the 7-day bounds as join filters (no corpus-wide window); per-purchase min/max struct aggregation; bounded full-outer attribution rollup"),
-    ("x118_incremental_audit", "delta docs probe the signature store via band-bucket equi-joins; the REDUCED graph is solved by one driver-side union-find, so the merged labels are a LocalTableScan built from one Arrow table (no CC lineage, no documents re-read, no distinct over the label table); final relabel is a broadcast join"),
+    ("x118_incremental_audit", "delta docs probe the signature store in one streamed scan — x77's kernel (dedup._delta_probe), whose plan shape is the x77 section: the store streamed through two broadcast hash joins, with no cache or aggregate over it; here the probe runs inside the merge's one Arrow action, so this plan shows only its result; the REDUCED graph is solved by one driver-side union-find, so the merged labels are a LocalTableScan built from one Arrow table (no CC lineage, no documents re-read, no distinct over the label table); final relabel is a broadcast join"),
     ("x120_blocking_choice", "four discipline costs from bounded key-histogram aggs — no pair join anywhere in the plan"),
     ("x122_moore_lewis", "one token exchange computing BOTH models (conditional sum); 1-row totals broadcast; scoring join on distinct (doc, token) pairs"),
     ("x123_edit_verify", "x115's bucketed rank + w equi-joins; |Δlen| prefilter inside the join condition; banded levenshtein inside codegen"),

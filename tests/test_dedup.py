@@ -924,6 +924,124 @@ def test_incremental_near_dedup_statuses_and_kept_invariant(spark):
     assert out2 == out
 
 
+def test_delta_minhash_pairs_cover_full_pairs(spark):
+    """pairs(all) = pairs(hist x hist) ∪ delta_minhash_pairs — the union
+    law incremental_audit_merge relies on (pairwise estimator, so the
+    split cannot change any pair's verdict)."""
+    from pyspark.sql import functions as F
+
+    from go_fish_spark.catalog import table
+    from go_fish_spark.operators import dedup
+
+    docs = table(spark, SF_SMALL, "documents")
+    is_new = F.col("doc_id") % 7 == 0
+    hist, delta = docs.filter(~is_new), docs.filter(is_new)
+    full = {
+        (r["id_a"], r["id_b"])
+        for r in dedup.minhash_lsh_pairs(
+            docs, "doc_id", "text", threshold=0.35, portable=True
+        ).collect()
+    }
+    hh = {
+        (r["id_a"], r["id_b"])
+        for r in dedup.minhash_lsh_pairs(
+            hist, "doc_id", "text", threshold=0.35, portable=True
+        ).collect()
+    }
+    dp = {
+        (r["id_a"], r["id_b"])
+        for r in dedup.delta_minhash_pairs(
+            delta,
+            dedup.sketch_store(hist, "doc_id", "text", portable=True),
+            "doc_id", "text", threshold=0.35, portable=True,
+        ).collect()
+    }
+    assert hh | dp == full
+    assert hh.isdisjoint(dp)
+    dedup.release_caches()
+
+
+def test_delta_probe_ignores_duplicate_store_rows(spark):
+    """A store holding every row twice (a replayed append) gives the
+    same delta pairs and per-doc statuses as the store with each row
+    once: the probe reduces its verified hits by key, so the store is
+    read without a dedup."""
+    from pyspark.sql import functions as F
+
+    from go_fish_spark.catalog import table
+    from go_fish_spark.operators import dedup
+
+    docs = table(spark, SF_SMALL, "documents")
+    is_new = F.col("doc_id") % 7 == 0
+    hist, delta = docs.filter(~is_new), docs.filter(is_new)
+    store = dedup.sketch_store(hist, "doc_id", "text", portable=True)
+    doubled = store.unionByName(store)
+
+    def pairs(s):
+        return sorted(
+            map(tuple, dedup.delta_minhash_pairs(
+                delta, s, "doc_id", "text", threshold=0.35, portable=True,
+            ).collect())
+        )
+
+    def statuses(s):
+        return sorted(
+            map(tuple, dedup.incremental_near_dedup(
+                delta, s, "doc_id", "text", threshold=0.35, portable=True,
+            ).collect())
+        )
+
+    once = pairs(store)
+    assert once and len({(a, b) for a, b, _ in once}) == len(once)
+    assert pairs(doubled) == once
+    st = statuses(store)
+    assert "dup_of_history" in {s for _, s in st}
+    assert statuses(doubled) == st
+    dedup.release_caches()
+
+
+def test_delta_probe_chunks_batches_past_the_broadcast_budget(
+    spark, monkeypatch
+):
+    """A batch whose broadcast relations would pass the probe's budget
+    is split into _id-hash chunks, each streaming the store once; the
+    pairs and statuses equal those of the one-chunk probe."""
+    from pyspark.sql import functions as F
+
+    from go_fish_spark.catalog import table
+    from go_fish_spark.operators import dedup
+
+    docs = table(spark, SF_SMALL, "documents")
+    is_new = F.col("doc_id") % 7 == 0
+    hist, delta = docs.filter(~is_new), docs.filter(is_new)
+    store = dedup.sketch_store(hist, "doc_id", "text", portable=True)
+
+    def probe():
+        pairs = dedup.delta_minhash_pairs(
+            delta, store, "doc_id", "text", threshold=0.35, portable=True,
+        )
+        statuses = dedup.incremental_near_dedup(
+            delta, store, "doc_id", "text", threshold=0.35, portable=True,
+        )
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        return (
+            sorted(map(tuple, pairs.collect())),
+            sorted(map(tuple, statuses.collect())),
+            plan.count("BroadcastHashJoin"),
+        )
+
+    pairs, statuses, joins = probe()
+    assert pairs and joins == 2
+    n = delta.count()
+    per_doc = 16 * dedup._SLIM_ROW_BYTES + 64 * dedup._SIG_HASH_BYTES
+    monkeypatch.setattr(
+        dedup, "_PROBE_BROADCAST_BYTES", per_doc * -(-n // 3)
+    )
+    assert dedup._probe_chunks(n, 64, 16) == 3
+    assert probe() == (pairs, statuses, 6)
+    dedup.release_caches()
+
+
 def test_ann_recall_audit_golden(spark):
     """x79's audit op on constructed top-k frames: per-query hit
     counting, zero-recall queries retained, rows beyond rank k ignored

@@ -218,43 +218,6 @@ def test_incremental_audit_equals_full_recompute(spark):
     dedup.release_caches()
 
 
-def test_delta_minhash_pairs_cover_full_pairs(spark):
-    """pairs(all) = pairs(hist x hist) ∪ delta_minhash_pairs — the union
-    law incremental_audit_merge relies on (pairwise estimator, so the
-    split cannot change any pair's verdict)."""
-    from pyspark.sql import functions as F
-
-    from go_fish_spark.catalog import table
-    from go_fish_spark.operators import dedup
-
-    docs = table(spark, SF_SMALL, "documents")
-    is_new = F.col("doc_id") % 7 == 0
-    hist, delta = docs.filter(~is_new), docs.filter(is_new)
-    full = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=0.35, portable=True
-        ).collect()
-    }
-    hh = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.minhash_lsh_pairs(
-            hist, "doc_id", "text", threshold=0.35, portable=True
-        ).collect()
-    }
-    dp = {
-        (r["id_a"], r["id_b"])
-        for r in dedup.delta_minhash_pairs(
-            delta,
-            dedup.sketch_store(hist, "doc_id", "text", portable=True),
-            "doc_id", "text", threshold=0.35, portable=True,
-        ).collect()
-    }
-    assert hh | dp == full
-    assert hh.isdisjoint(dp)
-    dedup.release_caches()
-
-
 def test_multikey_snm_superset_and_recall_lift(spark):
     """x119: the multi-key candidate union contains the single-key
     pass's pairs (prefix is one of the keys), and on a head-salted
@@ -555,99 +518,6 @@ def test_cluster_split_has_zero_leakage(spark):
     ]
     assert straddling == []
     release_session_caches()
-
-
-def test_dedup_maintenance_stream_three_batches(spark, tmp_path):
-    """The LIVE maintenance loop: three crawl batches (the third
-    bridges two existing clusters), each folded into the persisted
-    label table; after every batch the table equals the full CC
-    recompute over everything ingested so far, and a restarted query on
-    the same checkpoint is a no-op."""
-    import pyspark.sql.types as T
-
-    from go_fish_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        release_caches,
-    )
-    from go_fish_spark.operators.graph import connected_components
-    from go_fish_spark.streaming.dedup_maintenance import (
-        dedup_maintenance_stream,
-        read_labels,
-    )
-
-    src = str(tmp_path / "incoming")
-    labels = str(tmp_path / "labels")
-    cp = str(tmp_path / "cp")
-    os.makedirs(src)
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    batches = [
-        [
-            (1, "alpha beta gamma delta epsilon zeta eta theta iota"),
-            (2, "alpha beta gamma delta epsilon zeta eta theta kappa"),
-            (3, "utterly different content about streaming engines here "
-                "today friend"),
-        ],
-        [
-            (4, "utterly different content about streaming engines here "
-                "today friend"),
-            (5, "a lone document with nothing in common with others"),
-        ],
-        # 6 bridges cluster{1,2} and cluster{3,4}: the concatenation of
-        # both texts (bands=32 below keeps ~0.42-jaccard collisions
-        # reliable — r=2 banding)
-        [
-            (6,
-             "alpha beta gamma delta epsilon zeta eta theta iota "
-             "utterly different content about streaming engines here "
-             "today friend"),
-        ],
-    ]
-    seen: list = []
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(
-            src
-        )
-        seen.extend(rows)
-        q = dedup_maintenance_stream(
-            spark.readStream.schema(schema).parquet(src),
-            labels, cp, bands=32, threshold=0.3, portable=True,
-        )
-        q.awaitTermination(120)
-        got = sorted(
-            map(tuple, read_labels(spark, labels).collect())
-        )
-        full_df = spark.createDataFrame(seen, schema)
-        want = sorted(
-            map(
-                tuple,
-                connected_components(
-                    full_df.select("doc_id"),
-                    minhash_lsh_pairs(
-                        full_df, "doc_id", "text", bands=32,
-                        threshold=0.3, portable=True,
-                    ),
-                    id_col="doc_id",
-                ).collect(),
-            )
-        )
-        assert got == want, f"divergence after batch {i}"
-        release_caches()
-    # batch 3 merged the two clusters through doc 6
-    comp = dict(got)
-    assert comp[1] == comp[2] == comp[3] == comp[4] == comp[6] == 1
-    assert comp[5] == 5
-    # restart with no new data: a no-op, table unchanged
-    q = dedup_maintenance_stream(
-        spark.readStream.schema(schema).parquet(src),
-        labels, cp, bands=32, threshold=0.3, portable=True,
-    )
-    q.awaitTermination(120)
-    assert sorted(map(tuple, read_labels(spark, labels).collect())) == got
 
 
 def _lev(a: str, b: str) -> int:

@@ -230,10 +230,10 @@ def test_stream_incremental_dedup_vs_static_store(spark, tmp_path):
 
 
 def test_dedup_maintenance_stream_releases_batch_caches(spark, tmp_path):
-    """Each maintenance micro-batch releases the signature frames its
-    delta probe persisted: a bootstrap and three incremental batches
-    leave the dedup cache registry as they found it (it grew by two
-    frames per batch before). A restart with no new docs is a no-op —
+    """Each maintenance micro-batch releases any frame a dedup operator
+    cached during it (the bootstrap's pair pass caches its signatures):
+    a bootstrap and three incremental batches leave the dedup cache
+    registry as they found it. A restart with no new docs is a no-op —
     its empty test rides the fresh-set checkpoint."""
     from go_fish_spark.operators import dedup
     from go_fish_spark.streaming.dedup_maintenance import (
@@ -264,6 +264,159 @@ def test_dedup_maintenance_stream_releases_batch_caches(spark, tmp_path):
     assert all(got[10 * b + 1] == 10 * b + 1 for b in range(4))
     run()
     assert dict(map(tuple, read_labels(spark, labels).collect())) == got
+
+
+_MAINT_SCHEMA = "doc_id long, text string"
+_MAINT_BATCHES = [
+    [
+        (1, "alpha beta gamma delta epsilon zeta eta theta iota"),
+        (2, "alpha beta gamma delta epsilon zeta eta theta kappa"),
+        (3, "utterly different content about streaming engines here "
+            "today friend"),
+    ],
+    [
+        (4, "utterly different content about streaming engines here "
+            "today friend"),
+        (5, "a lone document with nothing in common with others"),
+    ],
+    # 6 bridges cluster{1,2} and cluster{3,4}: the concatenation of
+    # both texts (bands=32 below keeps ~0.42-jaccard collisions
+    # reliable — r=2 banding)
+    [
+        (6,
+         "alpha beta gamma delta epsilon zeta eta theta iota "
+         "utterly different content about streaming engines here "
+         "today friend"),
+    ],
+]
+
+
+def _maintain(spark, src, labels, cp):
+    """One available-now run of the maintenance loop over ``src``; a
+    failed batch is read off the returned query's ``exception()``."""
+    from pyspark.errors import StreamingQueryException
+
+    from go_fish_spark.streaming import dedup_maintenance as dm
+
+    q = dm.dedup_maintenance_stream(
+        spark.readStream.schema(_MAINT_SCHEMA).parquet(src),
+        labels, cp, bands=32, threshold=0.3, portable=True,
+    )
+    try:
+        q.awaitTermination(120)
+    except StreamingQueryException:
+        pass
+    return q
+
+
+def _labels(spark, labels):
+    from go_fish_spark.streaming.dedup_maintenance import read_labels
+
+    return sorted(map(tuple, read_labels(spark, labels).collect()))
+
+
+def _full_cc_labels(spark, rows):
+    """The invariant the loop maintains: CC over the LSH pairs of
+    everything ingested, recomputed from scratch."""
+    from go_fish_spark.operators.dedup import minhash_lsh_pairs, release_caches
+    from go_fish_spark.operators.graph import connected_components
+
+    full_df = spark.createDataFrame(rows, _MAINT_SCHEMA)
+    want = sorted(
+        map(
+            tuple,
+            connected_components(
+                full_df.select("doc_id"),
+                minhash_lsh_pairs(
+                    full_df, "doc_id", "text", bands=32,
+                    threshold=0.3, portable=True,
+                ),
+                id_col="doc_id",
+            ).collect(),
+        )
+    )
+    release_caches()
+    return want
+
+
+def test_dedup_maintenance_stream_three_batches(spark, tmp_path):
+    """The LIVE maintenance loop: three crawl batches (the third
+    bridges two existing clusters), each folded into the persisted
+    label table; after every batch the table equals the full CC
+    recompute over everything ingested so far, and a restarted query on
+    the same checkpoint is a no-op."""
+    src, labels, cp = (str(tmp_path / d) for d in ("incoming", "labels", "cp"))
+    seen: list = []
+    for i, rows in enumerate(_MAINT_BATCHES):
+        spark.createDataFrame(rows, _MAINT_SCHEMA).write.mode("append").parquet(
+            src
+        )
+        seen.extend(rows)
+        assert _maintain(spark, src, labels, cp).exception() is None
+        got = _labels(spark, labels)
+        assert got == _full_cc_labels(spark, seen), f"divergence after batch {i}"
+    # batch 3 merged the two clusters through doc 6
+    comp = dict(got)
+    assert comp[1] == comp[2] == comp[3] == comp[4] == comp[6] == 1
+    assert comp[5] == 5
+    # restart with no new data: a no-op, table unchanged
+    assert _maintain(spark, src, labels, cp).exception() is None
+    assert _labels(spark, labels) == got
+
+
+def test_dedup_maintenance_stream_crash_after_sig_append_replays(
+    spark, tmp_path, monkeypatch
+):
+    """A batch that crashes after its signature append and before the
+    label commit leaves the previous labels current. Replayed on the
+    same checkpoint, it appends its signatures a second time and commits
+    labels equal to a full recompute; the next batch then probes a store
+    holding those rows twice and still matches the full recompute."""
+    import os
+
+    from go_fish_spark.streaming import dedup_maintenance as dm
+
+    src, labels, cp = (str(tmp_path / d) for d in ("incoming", "labels", "cp"))
+    sig_dir = os.path.join(labels, "_sigs")
+
+    def land(rows):
+        spark.createDataFrame(rows, _MAINT_SCHEMA).write.mode("append").parquet(
+            src
+        )
+
+    def sig_ids():
+        return sorted(r._id for r in spark.read.parquet(sig_dir).collect())
+
+    land(_MAINT_BATCHES[0])
+    assert _maintain(spark, src, labels, cp).exception() is None
+
+    real_commit = dm._commit_labels
+    state = {"raised": False}
+
+    def crashing_commit(*a, **kw):
+        if not state["raised"]:
+            state["raised"] = True
+            raise RuntimeError("injected crash before the label commit")
+        return real_commit(*a, **kw)
+
+    monkeypatch.setattr(dm, "_commit_labels", crashing_commit)
+    land(_MAINT_BATCHES[1])
+    assert _maintain(spark, src, labels, cp).exception() is not None
+    assert state["raised"]
+    assert _labels(spark, labels) == _full_cc_labels(spark, _MAINT_BATCHES[0])
+    assert sig_ids() == [1, 2, 3, 4, 5]  # the orphan append landed
+
+    assert _maintain(spark, src, labels, cp).exception() is None
+    seen = _MAINT_BATCHES[0] + _MAINT_BATCHES[1]
+    assert _labels(spark, labels) == _full_cc_labels(spark, seen)
+    assert sig_ids() == [1, 2, 3, 4, 4, 5, 5]
+
+    land(_MAINT_BATCHES[2])
+    assert _maintain(spark, src, labels, cp).exception() is None
+    seen = seen + _MAINT_BATCHES[2]
+    got = _labels(spark, labels)
+    assert got == _full_cc_labels(spark, seen)
+    assert dict(got)[4] == 1  # the bridge reached doc 4 through doubled rows
 
 
 def test_session_window_stream(spark, tmp_path):
