@@ -3,13 +3,11 @@
 composed end to end from its oracle-verified parts:
 
     crawl batches (readStream, one per trigger) ->
-    `streaming/labelstore.label_store_maintenance_stream(policy=True)`:
+    `streaming/labelstore.label_store_maintenance_stream`:
       per batch, signatures append to the store FIRST (replay-safe),
-      `audit.maintenance_plan` prices incremental vs full from the
-      delta probe's pairs, and the label table receives either the
-      bounded changed-emit UPSERT patch (x118/x139 discipline) or —
-      when a batch bridges enough clusters — a full relabel FROM THE
-      SIGNATURE STORE (no text re-read) ->
+      the delta probe finds the batch's pairs against the stored
+      signatures, and the label table receives the bounded
+      changed-emit UPSERT patch (x118/x139 discipline) ->
     a RESTARTED query on the same checkpoint resumes from the persisted
     sharded table (nothing refits) ->
     asserted ≡ the full CC recompute over everything ingested.
@@ -61,7 +59,6 @@ def run_demo(spark, sf_dir: str, work: str) -> int:
     cp = os.path.join(work, "checkpoint")
     os.makedirs(incoming)
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    plans: list = []
 
     seen = None
     for b in range(3):
@@ -72,8 +69,7 @@ def run_demo(spark, sf_dir: str, work: str) -> int:
         # resumes from the checkpoint + the persisted table every time
         q = label_store_maintenance_stream(
             spark.readStream.schema(SCHEMA).parquet(incoming),
-            store, cp, bands=32, threshold=0.3, portable=True,
-            n_shards=16, policy=True, on_plan=plans.append,
+            store, cp, bands=32, threshold=0.3, portable=True, n_shards=16,
         )
         q.awaitTermination(300)
 
@@ -99,11 +95,10 @@ def run_demo(spark, sf_dir: str, work: str) -> int:
         spark, os.path.join(store, "labels"), n_shards=16
     )
     assert n_compact == len(got)
-    decisions = [p["action"] for p in plans]
     n_clusters = len({c for _, c in got})
     print(
         f"durable labels ≡ full recompute: {len(got)} docs, "
-        f"{n_clusters} clusters; policy decisions per batch: {decisions}; "
+        f"{n_clusters} clusters after 3 upsert batches; "
         f"compacted to {n_compact} rows"
     )
     return n_clusters

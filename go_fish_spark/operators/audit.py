@@ -137,9 +137,9 @@ def incremental_audit_merge(
     components — i.e. the UPSERT set a label-table maintainer writes
     back. At recurring-crawl scale this is the difference between
     rewriting the archive's label table daily and appending a
-    delta-bounded patch (measured in scripts/incremental_thesis.py:
-    the full-emit incremental step still pays one corpus-wide relabel
-    map; the changed-emit output is bounded by |batch| + |touched
+    delta-bounded patch (measured in SCALE.md "Round-9 part 6": the
+    full-emit incremental step still pays one corpus-wide relabel map;
+    the changed-emit output is bounded by |batch| + |touched
     members|).
 
     100 TB shape: the TWO corpus-scale touches are slim keyed joins —
@@ -346,6 +346,14 @@ def maintenance_plan(
     / ``salt_plan``, priced from the DELTA PROBE's own output (the
     pairs are already in hand when this question is asked; pricing adds
     two slim aggregations over the label table, never a pair join).
+
+    This is the pricing operator registry entry x149 certifies; no
+    maintenance stream calls it. Both streams fold every post-bootstrap
+    batch incrementally (`streaming/dedup_maintenance.fold_label_batch`
+    — its fresh set already excludes labeled ids, so the edit gate
+    cannot fire there, and since the merge became a driver-side
+    union-find the full arm measured slower even on a batch bridging
+    every cluster — SCALE.md "Store maintenance: one fold").
 
     The SCALE.md x118 sweep identified the crossover variable:
     TOUCHED-COMPONENT growth. The incremental step's corpus-scale work

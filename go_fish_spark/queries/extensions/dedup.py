@@ -1311,6 +1311,71 @@ def _x139_oracle() -> str:
     """
 
 
+def _store_dir(spark, entry: str) -> str:
+    import os
+
+    return os.path.join(
+        "/tmp", f"gofish_{entry}_{spark.sparkContext.applicationId}"
+    )
+
+
+def _exact_dup_label_store(spark, sf_dir, base: str, on_batch=None) -> None:
+    """The protocol entries' shared ingest: recreate the store directory
+    ``base``, whose ``labels`` table then receives the corpus as THREE
+    append-only crawl batches (doc_id % 3) — batch 0 bootstraps with
+    min doc_id per content hash, batches 1-2 append only
+    `incremental_audit_merge(..., emit="changed")`'s upsert set over
+    the exact-duplicate pairs touching the batch (the other side may
+    be historical; id_a < id_b). ``on_batch(b)`` runs after each patch
+    append."""
+    import os
+    import shutil
+
+    from pyspark.sql import Window
+
+    from ...operators.audit import incremental_audit_merge
+    from ...streaming.labelstore import append_label_patch, read_label_store
+
+    labels_path = os.path.join(base, "labels")
+    shutil.rmtree(base, ignore_errors=True)
+    os.makedirs(base)
+
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", F.md5("text").alias("_h")
+    )
+    for b in range(3):
+        fresh = docs.filter(F.col("doc_id") % 3 == b)
+        prev = read_label_store(spark, labels_path)
+        if prev is None:
+            w = Window.partitionBy("_h")
+            patch = fresh.select(
+                F.col("doc_id").alias("id"),
+                F.min("doc_id").over(w).alias("component"),
+            )
+        else:
+            hist = docs.filter(F.col("doc_id") % 3 < b)
+            both = hist.unionByName(fresh)
+            f2 = fresh.select(
+                F.col("doc_id").alias("_fid"), F.col("_h").alias("_fh")
+            )
+            dpairs = (
+                both.join(f2, both["_h"] == f2["_fh"])
+                .filter(F.col("doc_id") != F.col("_fid"))
+                .select(
+                    F.least("doc_id", "_fid").alias("id_a"),
+                    F.greatest("doc_id", "_fid").alias("id_b"),
+                )
+                .distinct()
+            )
+            patch = incremental_audit_merge(
+                prev, fresh.select(F.col("doc_id").alias("id")), dpairs,
+                id_col="id", emit="changed",
+            )
+        append_label_patch(patch, labels_path, batch_id=b, n_shards=16)
+        if on_batch is not None:
+            on_batch(b)
+
+
 @query("x139_label_store_readback", oracle=_x139_oracle(), family="protocol")
 def x139_label_store_readback(spark, sf_dir):
     """Durable label-table READ-BACK (r9 verdict Next #2's oracle arm):
@@ -1331,57 +1396,12 @@ def x139_label_store_readback(spark, sf_dir):
     per-id window over slim label rows; no full-table rewrite ever
     happens (the thing this entry exists to keep true)."""
     import os
-    import shutil
 
-    from ...operators.audit import incremental_audit_merge
-    from ...streaming.labelstore import (
-        append_label_patch,
-        read_label_store,
-    )
     from pyspark.sql import Window
 
-    base = os.path.join(
-        "/tmp", f"gofish_x139_{spark.sparkContext.applicationId}"
-    )
-    labels_path = os.path.join(base, "labels")
-    shutil.rmtree(base, ignore_errors=True)
-
-    docs = table(spark, sf_dir, "documents").select(
-        "doc_id", F.md5("text").alias("_h")
-    )
-    for b in range(3):
-        fresh = docs.filter(F.col("doc_id") % 3 == b)
-        prev = read_label_store(spark, labels_path)
-        if prev is None:
-            w = Window.partitionBy("_h")
-            patch = fresh.select(
-                F.col("doc_id").alias("id"),
-                F.min("doc_id").over(w).alias("component"),
-            )
-        else:
-            # delta pairs: exact-dup edges touching >= 1 fresh doc (the
-            # other side may be historical) — id_a < id_b
-            hist = docs.filter(F.col("doc_id") % 3 < b)
-            both = hist.unionByName(fresh)
-            f2 = fresh.select(
-                F.col("doc_id").alias("_fid"), F.col("_h").alias("_fh")
-            )
-            dpairs = (
-                both.join(f2, both["_h"] == f2["_fh"])
-                .filter(F.col("doc_id") != F.col("_fid"))
-                .select(
-                    F.least("doc_id", "_fid").alias("id_a"),
-                    F.greatest("doc_id", "_fid").alias("id_b"),
-                )
-                .distinct()
-            )
-            patch = incremental_audit_merge(
-                prev, fresh.select(F.col("doc_id").alias("id")), dpairs,
-                id_col="id", emit="changed",
-            )
-        append_label_patch(patch, labels_path, batch_id=b, n_shards=16)
-
-    raw = spark.read.parquet(labels_path)
+    base = _store_dir(spark, "x139")
+    _exact_dup_label_store(spark, sf_dir, base)
+    raw = spark.read.parquet(os.path.join(base, "labels"))
     w = Window.partitionBy("id").orderBy(
         F.col("_batch_id").desc(), F.col("component").asc()
     )
@@ -1642,9 +1662,7 @@ def x150_sigstore_readback(spark, sf_dir):
 
     from ._shared import shared_doc_sigs
 
-    base = os.path.join(
-        "/tmp", f"gofish_x150_{spark.sparkContext.applicationId}"
-    )
+    base = _store_dir(spark, "x150")
     shutil.rmtree(base, ignore_errors=True)
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     sig = dedup.minhash_signature("text", 64, 3, 42, portable=True)
@@ -1804,61 +1822,23 @@ def x163_compacted_store_readback(spark, sf_dir):
     bounded per shard; the repoint is one atomic rename; readers never
     block."""
     import os
-    import shutil
 
-    from pyspark.sql import Window
-
-    from ...operators.audit import incremental_audit_merge
     from ...streaming.labelstore import (
-        append_label_patch,
         compact_label_store,
         read_compaction_manifest,
         read_label_store,
     )
 
-    base = os.path.join(
-        "/tmp", f"gofish_x163_{spark.sparkContext.applicationId}"
-    )
+    base = _store_dir(spark, "x163")
     labels_path = os.path.join(base, "labels")
-    shutil.rmtree(base, ignore_errors=True)
 
-    docs = table(spark, sf_dir, "documents").select(
-        "doc_id", F.md5("text").alias("_h")
-    )
-    for b in range(3):
-        fresh = docs.filter(F.col("doc_id") % 3 == b)
-        prev = read_label_store(spark, labels_path)
-        if prev is None:
-            w = Window.partitionBy("_h")
-            patch = fresh.select(
-                F.col("doc_id").alias("id"),
-                F.min("doc_id").over(w).alias("component"),
-            )
-        else:
-            hist = docs.filter(F.col("doc_id") % 3 < b)
-            both = hist.unionByName(fresh)
-            f2 = fresh.select(
-                F.col("doc_id").alias("_fid"), F.col("_h").alias("_fh")
-            )
-            dpairs = (
-                both.join(f2, both["_h"] == f2["_fh"])
-                .filter(F.col("doc_id") != F.col("_fid"))
-                .select(
-                    F.least("doc_id", "_fid").alias("id_a"),
-                    F.greatest("doc_id", "_fid").alias("id_b"),
-                )
-                .distinct()
-            )
-            patch = incremental_audit_merge(
-                prev, fresh.select(F.col("doc_id").alias("id")), dpairs,
-                id_col="id", emit="changed",
-            )
-        append_label_patch(patch, labels_path, batch_id=b, n_shards=16)
+    def compact_after_batch_1(b):
         if b == 1:  # fold batches 0-1 into generation 1 mid-sequence
             compact_label_store(spark, labels_path, n_shards=16)
             man = read_compaction_manifest(labels_path)
             assert man is not None and man["gen"] == 1
 
+    _exact_dup_label_store(spark, sf_dir, base, on_batch=compact_after_batch_1)
     return read_label_store(spark, labels_path).orderBy("id")
 
 
@@ -1882,56 +1862,17 @@ def x169_selective_compaction_readback(spark, sf_dir):
     global labels. Shard membership is a pure id hash, so per-shard
     folds are independent — the invariant this entry pins."""
     import os
-    import shutil
 
-    from pyspark.sql import Window
-
-    from ...operators.audit import incremental_audit_merge
     from ...streaming.labelstore import (
-        append_label_patch,
         compact_label_store,
         read_compaction_manifest,
         read_label_store,
     )
 
-    base = os.path.join(
-        "/tmp", f"gofish_x169_{spark.sparkContext.applicationId}"
-    )
+    base = _store_dir(spark, "x169")
     labels_path = os.path.join(base, "labels")
-    shutil.rmtree(base, ignore_errors=True)
 
-    docs = table(spark, sf_dir, "documents").select(
-        "doc_id", F.md5("text").alias("_h")
-    )
-    for b in range(3):
-        fresh = docs.filter(F.col("doc_id") % 3 == b)
-        prev = read_label_store(spark, labels_path)
-        if prev is None:
-            w = Window.partitionBy("_h")
-            patch = fresh.select(
-                F.col("doc_id").alias("id"),
-                F.min("doc_id").over(w).alias("component"),
-            )
-        else:
-            hist = docs.filter(F.col("doc_id") % 3 < b)
-            both = hist.unionByName(fresh)
-            f2 = fresh.select(
-                F.col("doc_id").alias("_fid"), F.col("_h").alias("_fh")
-            )
-            dpairs = (
-                both.join(f2, both["_h"] == f2["_fh"])
-                .filter(F.col("doc_id") != F.col("_fid"))
-                .select(
-                    F.least("doc_id", "_fid").alias("id_a"),
-                    F.greatest("doc_id", "_fid").alias("id_b"),
-                )
-                .distinct()
-            )
-            patch = incremental_audit_merge(
-                prev, fresh.select(F.col("doc_id").alias("id")), dpairs,
-                id_col="id", emit="changed",
-            )
-        append_label_patch(patch, labels_path, batch_id=b, n_shards=16)
+    def half_fold_after_batch_1(b):
         if b == 1:  # first fold: HALF the shards — gen 1 is partial
             compact_label_store(
                 spark, labels_path, n_shards=16, shards=list(range(8))
@@ -1939,6 +1880,10 @@ def x169_selective_compaction_readback(spark, sf_dir):
             man = read_compaction_manifest(labels_path)
             assert man is not None and man["gen"] == 1
             assert man["covered_default"] == -1
+
+    _exact_dup_label_store(
+        spark, sf_dir, base, on_batch=half_fold_after_batch_1
+    )
     # second fold: 4-11 (4-7 re-fold, 8-11 first fold, 0-3 carried)
     compact_label_store(
         spark, labels_path, n_shards=16, shards=list(range(4, 12))
@@ -1976,9 +1921,7 @@ def x174_sig_compaction_readback(spark, sf_dir):
     )
     from ...streaming.storekernel import read_store_manifest
 
-    base = os.path.join(
-        "/tmp", f"gofish_x174_{spark.sparkContext.applicationId}"
-    )
+    base = _store_dir(spark, "x174")
     store = os.path.join(base, "sigs")
     shutil.rmtree(base, ignore_errors=True)
     from ._shared import shared_doc_sigs
@@ -2051,8 +1994,8 @@ def _x164_oracle() -> str:
 @query("x164_committed_store_readback", oracle=_x164_oracle(), family="protocol")
 def x164_committed_store_readback(spark, sf_dir):
     """The r11 ATOMIC CROSS-STORE COMMIT under the oracle contract:
-    ingest the corpus as three batches, each appending (1) signatures,
-    (2) the label patch, then (3) publishing the pair as ONE manifest
+    ingest the corpus as three batches, each appending its label patch
+    and its signatures, then publishing the pair as ONE manifest
     version (`publish_store_commit`); read back through
     `read_committed_store`, which cuts BOTH stores at the committed
     batch — a reader can never see a batch's signatures without its
@@ -2064,70 +2007,30 @@ def x164_committed_store_readback(spark, sf_dir):
     commit is one atomic rename per batch; both read cuts are
     partition-prunable `_batch_id` filters."""
     import os
-    import shutil
 
-    from pyspark.sql import Window
-
-    from ...operators.audit import incremental_audit_merge
     from ...streaming.labelstore import (
-        append_label_patch,
         publish_store_commit,
         read_committed_store,
-        read_label_store,
     )
-
-    base = os.path.join(
-        "/tmp", f"gofish_x164_{spark.sparkContext.applicationId}"
-    )
-    labels_path = os.path.join(base, "labels")
-    sig_dir = os.path.join(base, "_sigs")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base)
-
     from ._shared import shared_doc_sigs
 
-    docs = table(spark, sf_dir, "documents").select(
-        "doc_id", "text", F.md5("text").alias("_h")
-    )
     # batch signatures append from the session-shared signature frame
-    # (same params → identical arrays; the x150 comment applies)
+    # (same params → identical arrays; the x150 comment applies), then
+    # the batch's sig + label appends publish as one commit
     shared = shared_doc_sigs(spark, sf_dir)
-    for b in range(3):
-        fresh = docs.filter(F.col("doc_id") % 3 == b)
+    base = _store_dir(spark, "x164")
+
+    def append_sigs_and_publish(b):
         shared.filter(F.col("doc_id") % 3 == b).select(
             F.col("doc_id").alias("_id"), "_sig"
         ).withColumn("_batch_id", F.lit(b)).write.mode("append").parquet(
-            sig_dir
+            os.path.join(base, "_sigs")
         )
-        prev = read_label_store(spark, labels_path)
-        if prev is None:
-            w = Window.partitionBy("_h")
-            patch = fresh.select(
-                F.col("doc_id").alias("id"),
-                F.min("doc_id").over(w).alias("component"),
-            )
-        else:
-            hist = docs.filter(F.col("doc_id") % 3 < b)
-            both = hist.unionByName(fresh)
-            f2 = fresh.select(
-                F.col("doc_id").alias("_fid"), F.col("_h").alias("_fh")
-            )
-            dpairs = (
-                both.join(f2, both["_h"] == f2["_fh"])
-                .filter(F.col("doc_id") != F.col("_fid"))
-                .select(
-                    F.least("doc_id", "_fid").alias("id_a"),
-                    F.greatest("doc_id", "_fid").alias("id_b"),
-                )
-                .distinct()
-            )
-            patch = incremental_audit_merge(
-                prev, fresh.select(F.col("doc_id").alias("id")), dpairs,
-                id_col="id", emit="changed",
-            )
-        append_label_patch(patch, labels_path, batch_id=b, n_shards=16)
         publish_store_commit(base, b)
 
+    _exact_dup_label_store(
+        spark, sf_dir, base, on_batch=append_sigs_and_publish
+    )
     view = read_committed_store(spark, base)
     return (
         view["labels"]

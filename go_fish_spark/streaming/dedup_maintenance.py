@@ -12,6 +12,15 @@ transaction, and the invariant maintained is `labels ≡ full CC
 recompute over everything ingested so far` (parity-tested per batch in
 tests/test_streaming.py, crash-replay included).
 
+ONE fold, two stores: :func:`fold_label_batch` is the get-or-create +
+mutate half of that loop — fresh set, one hashing pass, sig append,
+then bootstrap (first batch) or store probe + merge — and both
+maintenance streams run it. Each stream owns only the store-back half:
+:func:`dedup_maintenance_stream` writes a versioned overwrite and
+repoints ``_current.json``; `streaming/labelstore.
+label_store_maintenance_stream` appends a sharded upsert patch
+(``emit="changed"``) and publishes a cross-store commit.
+
 Why foreachBatch rather than applyInPandasWithState: component merging
 is a GLOBAL operation (one batch doc can bridge two existing clusters),
 so per-key state cannot express it — the correct streaming form is a
@@ -79,6 +88,94 @@ def _commit_labels(df: DataFrame, labels_dir: str, batch_id: int) -> None:
     )
 
 
+def fold_label_batch(
+    bdf: DataFrame,
+    labeled: DataFrame | None,
+    prev: DataFrame | None,
+    read_sigs,
+    append_sigs,
+    emit: str,
+    id_col: str,
+    text_col: str,
+    n_hashes: int,
+    bands: int,
+    k: int,
+    threshold: float,
+    seed: int,
+    portable: bool,
+) -> DataFrame | None:
+    """Fold one micro-batch into the dedup labels; the caller commits
+    the returned (id, component) frame, or skips the commit on None
+    (no fresh ids).
+
+    ``labeled`` (an ``id`` column; None before the first commit) is
+    what the batch is anti-joined against; ``prev`` is the committed
+    (id, component) view, None exactly when ``labeled`` is.
+    ``append_sigs(fresh)`` persists the batch's ``(_id, _sig)`` rows;
+    ``read_sigs()`` returns the store's ``(_id, _sig)`` rows and is
+    called after that append, and only when ``prev`` exists. The first
+    batch bootstraps (within-batch LSH pairs + CC, every row new);
+    later ones probe the store's LABELED rows and merge with
+    ``incremental_audit_merge(..., emit=emit)``."""
+    from pyspark.sql import Observation
+
+    from ..operators.audit import incremental_audit_merge
+    from ..operators.dedup import (
+        delta_minhash_pairs,
+        minhash_lsh_pairs,
+        minhash_signature,
+    )
+    from ..operators.graph import connected_components
+
+    bdf = bdf.select(id_col, text_col).dropDuplicates([id_col])
+    if labeled is not None:
+        bdf = bdf.join(
+            labeled.select(F.col("id").alias(id_col)), id_col, "left_anti"
+        )
+    # the batch is hashed ONCE, inside the fresh-set checkpoint; the
+    # sig append, the pair pass and the merge all read it. The
+    # fresh-row count rides the same job as an observed metric
+    # (graph.checkpoint_with_sum's pattern): no probe job
+    obs = Observation()
+    fresh = (
+        bdf.select(
+            F.col(id_col).alias("_id"),
+            minhash_signature(text_col, n_hashes, k, seed, portable).alias(
+                "_sig"
+            ),
+        )
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    n_fresh = obs.get["n"]
+    if n_fresh == 0:
+        return None
+    fresh_ids = fresh.select(F.col("_id").alias(id_col))
+    # (1) sigs first — replay-safe (see module docstring)
+    append_sigs(fresh)
+    if prev is None:
+        pairs = minhash_lsh_pairs(
+            None, "_id", text_col, n_hashes, bands, k, threshold,
+            seed, portable, sigs=fresh,
+        )
+        return connected_components(
+            fresh_ids, pairs, id_col=id_col
+        ).select("id", "component")
+    # store = signatures of LABELED docs only (excludes any orphan rows
+    # a crashed attempt appended for this batch); a row appended twice
+    # needs no dedup — the probe reduces its verified pairs by key
+    store = read_sigs().join(
+        prev.select(F.col("id").alias("_id")), "_id", "left_semi"
+    )
+    dpairs = delta_minhash_pairs(
+        None, store, id_col, text_col, n_hashes, bands, k,
+        threshold, seed, portable, sigs=fresh, n_sigs=n_fresh,
+    )
+    return incremental_audit_merge(
+        prev, fresh_ids, dpairs, id_col=id_col, emit=emit
+    )
+
+
 def dedup_maintenance_stream(
     docs_stream: DataFrame,
     labels_dir: str,
@@ -93,83 +190,30 @@ def dedup_maintenance_stream(
     portable: bool = False,
     available_now: bool = True,
 ):
-    """Start the maintenance loop (returns the StreamingQuery). Batch 0
-    bootstraps the label table (within-batch LSH pairs + CC); later
-    batches run the incremental path: store probe + reduced-graph
-    merge. Read the result with :func:`read_labels`. Each batch is
-    hashed once, into its fresh-set checkpoint; any frame a dedup
-    operator caches during the batch is released when the batch ends."""
-    from pyspark.sql import Observation
-
-    from ..operators.audit import incremental_audit_merge
-    from ..operators.dedup import (
-        delta_minhash_pairs,
-        minhash_lsh_pairs,
-        minhash_signature,
-        scoped_caches,
-    )
-    from ..operators.graph import connected_components
+    """Start the maintenance loop (returns the StreamingQuery). Each
+    batch runs :func:`fold_label_batch` (batch 0 bootstraps, later
+    batches probe the store and merge) and commits the full label
+    table as a new version. Read the result with :func:`read_labels`.
+    Any frame a dedup operator caches during the batch is released
+    when the batch ends."""
+    from ..operators.dedup import scoped_caches
 
     spark = docs_stream.sparkSession
     sig_dir = _os.path.join(labels_dir, "_sigs")
 
     def process_batch(bdf: DataFrame, batch_id: int) -> None:
         with scoped_caches():
-            run_batch(bdf, batch_id)
-
-    def run_batch(bdf: DataFrame, batch_id: int) -> None:
-        bdf = bdf.select(id_col, text_col).dropDuplicates([id_col])
-        prev = read_labels(spark, labels_dir)
-        if prev is not None:
-            bdf = bdf.join(
-                prev.select(F.col("id").alias(id_col)), id_col, "left_anti"
+            prev = read_labels(spark, labels_dir)
+            labels = fold_label_batch(
+                bdf, prev, prev,
+                lambda: spark.read.parquet(sig_dir),
+                lambda fresh: fresh.write.mode("append").parquet(sig_dir),
+                "full", id_col, text_col, n_hashes, bands, k, threshold,
+                seed, portable,
             )
-        # the batch is hashed ONCE, inside the fresh-set checkpoint; the
-        # sig append, the pair pass and the merge all read it. The
-        # fresh-row count rides the same job as an observed metric
-        # (graph.checkpoint_with_sum's pattern): no probe job
-        obs = Observation()
-        fresh = (
-            bdf.select(
-                F.col(id_col).alias("_id"),
-                minhash_signature(text_col, n_hashes, k, seed, portable).alias(
-                    "_sig"
-                ),
-            )
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
-        )
-        n_fresh = obs.get["n"]
-        if n_fresh == 0:
-            return
-        fresh_ids = fresh.select(F.col("_id").alias(id_col))
-        # (1) sigs first — replay-safe (see module docstring)
-        fresh.write.mode("append").parquet(sig_dir)
-        if prev is None:
-            pairs = minhash_lsh_pairs(
-                None, "_id", text_col, n_hashes, bands, k, threshold,
-                seed, portable, sigs=fresh,
-            )
-            labels = connected_components(
-                fresh_ids, pairs, id_col=id_col
-            ).select("id", "component")
-        else:
-            # store = signatures of LABELED docs only (excludes any
-            # orphan rows a crashed attempt appended for this batch);
-            # a row appended twice needs no dedup — the probe reduces
-            # its verified pairs by key
-            store = spark.read.parquet(sig_dir).join(
-                prev.select(F.col("id").alias("_id")), "_id", "left_semi"
-            )
-            dpairs = delta_minhash_pairs(
-                None, store, id_col, text_col, n_hashes, bands, k,
-                threshold, seed, portable, sigs=fresh, n_sigs=n_fresh,
-            )
-            labels = incremental_audit_merge(
-                prev, fresh_ids, dpairs, id_col=id_col
-            )
-        # (2) labels last — the commit point
-        _commit_labels(labels, labels_dir, batch_id)
+            if labels is not None:
+                # (2) labels last — the commit point
+                _commit_labels(labels, labels_dir, batch_id)
 
     writer = docs_stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir

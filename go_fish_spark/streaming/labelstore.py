@@ -14,9 +14,12 @@ How it composes the existing disciplines:
 * **Upserts** are the x77 sketch-store discipline applied to labels:
   each micro-batch APPENDS only its patch — `incremental_audit_merge(
   ..., emit="changed")`'s upsert set, bounded by |batch| + |touched
-  members| — never a full-table rewrite (the dedup_maintenance module's
-  versioned-overwrite commit rewrites the whole table per batch; at
-  archive scale that is the difference the r9 thesis table measures).
+  members| — never a full-table rewrite. The patch comes from the
+  same per-batch fold as the dedup_maintenance stream
+  (`fold_label_batch`); only the commit differs: that module's
+  versioned overwrite rewrites the whole table per batch, and at
+  archive scale that is the difference SCALE.md "Round-9 part 6"
+  measures.
 * **Reads** are latest-wins per id with ties broken to the SMALLER
   component: a replayed batch re-appends rows at the same ``_batch_id``,
   and because merges only ever move a label DOWN (components are
@@ -76,11 +79,9 @@ LABEL_SHARDS = 64
 #     (r10 verdict Next #3).
 
 
-#: path rules + manifest read — the r13 kernel consolidation: the
-#: labelstore pioneered these and the kernel now owns them (the sig
-#: store is the second instantiation); the names stay for callers.
-_compaction_manifest_path = _sk.store_manifest_path
-_generation_root = _sk.store_generation_root
+#: generation path rule — the r13 kernel consolidation: the labelstore
+#: pioneered it and the kernel now owns it (the sig store is the second
+#: instantiation); the name stays for callers.
 _generation_path = _sk.store_generation_path
 
 
@@ -113,12 +114,6 @@ def append_label_patch(
         .partitionBy("shard")
         .parquet(store_path)
     )
-
-
-#: patch-visibility cut + live-rows stitch — storekernel.patch_cut_filter
-#: / live_keyed_rows (the labelstore rules, factored once for every
-#: sharded keyed store — labels here, sigs in streaming/sigstore.py)
-_patch_cut_filter = _sk.patch_cut_filter
 
 
 def _live_sig_rows(spark, sig_dir: str) -> DataFrame | None:
@@ -292,12 +287,6 @@ def compact_label_store(
     )
 
 
-def _prune_label_generations(store_path: str, keep_from: int) -> None:
-    """GC generation directories STRICTLY OLDER than ``keep_from`` (the
-    N-1 generation is retained one cycle — see compact_label_store)."""
-    _sk.prune_generations(_generation_root(store_path), keep_from)
-
-
 # ---------------------------------------------------------------------------
 # Cross-store commit (r10 verdict Next #3): sig + label appends publish
 # as ONE atomic manifest version, so a concurrent reader never sees the
@@ -402,17 +391,16 @@ def label_store_maintenance_stream(
     portable: bool = False,
     n_shards: int = LABEL_SHARDS,
     available_now: bool = True,
-    policy: bool = False,
-    policy_cutoff: float = 0.5,
-    on_plan=None,
     compaction_policy: bool = False,
     compaction_file_cutoff: float = 4.0,
     compaction_min_files: int = 8,
     on_compaction=None,
 ):
     """Start the durable maintenance loop (returns the StreamingQuery):
-    batch 0 bootstraps (within-batch LSH pairs + CC — every row is new,
-    so the bootstrap IS its own changed-set); later batches append only
+    each batch runs the shared fold
+    (`dedup_maintenance.fold_label_batch`) — batch 0 bootstraps
+    (within-batch LSH pairs + CC — every row is new, so the bootstrap
+    IS its own changed-set); later batches append only
     `incremental_audit_merge(..., emit="changed")`'s patch. Labels live
     under ``store_dir/labels`` (sharded parquet), signatures under
     ``store_dir/_sigs``. Read the table with :func:`read_label_store`;
@@ -427,33 +415,18 @@ def label_store_maintenance_stream(
     argument); the manifest only moves forward.
 
     ``compaction_policy=True`` (r10 verdict Next #4): after each
-    commit the stream prices :func:`compaction_plan` from the store's
-    per-shard file counts and folds the patch history into a new
-    generation when the mean files-per-shard crosses
-    ``compaction_file_cutoff``. ``on_compaction`` observes each
-    decision dict (with ``batch_id`` and, when it ran, ``compacted``
-    row count).
+    commit the stream prices :func:`compaction_plan` for the label and
+    the signature surface from their per-shard file counts and folds
+    either one's patch history into a new generation when its mean
+    files-per-shard crosses ``compaction_file_cutoff``.
+    ``on_compaction`` observes each decision dict (with ``batch_id``,
+    ``store`` = ``"labels"`` or ``"sigs"`` and, when it ran,
+    ``compacted`` row count)."""
+    from functools import partial
 
-    ``policy=True`` (r9 verdict Next #5): each batch first runs
-    :func:`~go_fish_spark.operators.audit.maintenance_plan` on the
-    delta probe's pairs; when touched-component growth makes the
-    incremental step no cheaper than starting over
-    (``incremental_frac > policy_cutoff``), the batch instead re-labels
-    from the SIGNATURE STORE (banding pair join over stored sigs + one
-    CC — no text is ever re-read) and appends the full relabel as the
-    patch (latest-wins supersedes everything older). ``on_plan`` is an
-    optional callable receiving each batch's decision dict — the hook
-    monitoring/tests observe the policy through."""
-    from pyspark.sql import Observation
-
-    from ..operators.audit import incremental_audit_merge
-    from ..operators.dedup import (
-        delta_minhash_pairs,
-        minhash_lsh_pairs,
-        minhash_signature,
-        scoped_caches,
-    )
-    from ..operators.graph import connected_components
+    from ..operators.dedup import scoped_caches
+    from .dedup_maintenance import fold_label_batch
+    from .sigstore import append_sig_patch, compact_signature_store
 
     spark = docs_stream.sparkSession
     labels_path = _os.path.join(store_dir, "labels")
@@ -472,111 +445,28 @@ def label_store_maintenance_stream(
             _run_batch(bdf, batch_id, (store_dir, ld["nonce"]))
 
     def _run_batch(bdf: DataFrame, batch_id: int, fence: tuple) -> None:
-        bdf = bdf.select(id_col, text_col).dropDuplicates([id_col])
         # Fresh-set derivation needs label EXISTENCE only — the raw
         # live rows (generation + uncut patches), no latest-wins
         # window (r11 verdict nit #2: the per-batch full-store window
-        # ran even when the batch had nothing new). The folded view is
-        # built lazily below, only once there IS fresh work. Fresh
-        # still derives from LABELS, not sigs: a crash between the sig
-        # and label appends leaves orphan sigs whose ids must re-label
-        # on replay (the module docstring's exactly-once argument).
+        # ran even when the batch had nothing new); the folded view
+        # stays lazy until the fold finds fresh work. Fresh still
+        # derives from LABELS, not sigs: a crash between the sig and
+        # label appends leaves orphan sigs whose ids must re-label on
+        # replay (the module docstring's exactly-once argument).
         live = _live_label_rows(spark, labels_path)
-        if live is not None:
-            bdf = bdf.join(
-                live.select(F.col("id").alias(id_col)), id_col, "left_anti"
-            )
-        # the batch is hashed ONCE, inside the fresh-set checkpoint
-        # (the sig append, the pair pass and the merge all read it);
-        # the fresh-row count rides the same job as an observed metric
-        obs = Observation()
-        fresh = (
-            bdf.select(
-                F.col(id_col).alias("_id"),
-                minhash_signature(text_col, n_hashes, k, seed, portable).alias(
-                    "_sig"
-                ),
-            )
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+        patch = fold_label_batch(
+            bdf, live, _latest_wins(live) if live is not None else None,
+            lambda: _live_sig_rows(spark, sig_dir).select("_id", "_sig"),
+            # the batch stamp lets read_committed_store cut sigs at the
+            # commit point; sharded like labels (r12 verdict Next #1)
+            lambda fresh: append_sig_patch(
+                fresh, sig_dir, batch_id, id_col="_id", n_shards=n_shards
+            ),
+            "changed", id_col, text_col, n_hashes, bands, k, threshold,
+            seed, portable,
         )
-        n_fresh = obs.get["n"]
-        if n_fresh == 0:
+        if patch is None:
             return
-        fresh_ids = fresh.select(F.col("_id").alias(id_col))
-        prev = _latest_wins(live) if live is not None else None
-        # (1) sigs first — replay-safe (module docstring); the batch
-        # stamp lets read_committed_store cut sigs at the commit point.
-        # SHARDED like labels (r12 verdict Next #1): the sig store now
-        # folds on the kernel, so its appends carry the same md5 shard
-        # — one exchange on the shard key, one file per touched shard
-        from .sigstore import append_sig_patch
-
-        append_sig_patch(
-            fresh, sig_dir, batch_id, id_col="_id", n_shards=n_shards
-        )
-        if prev is None:
-            pairs = minhash_lsh_pairs(
-                None, "_id", text_col, n_hashes, bands, k, threshold,
-                seed, portable, sigs=fresh,
-            )
-            patch = connected_components(
-                fresh_ids, pairs, id_col=id_col
-            ).select("id", "component")
-        else:
-            # labeled docs only; a replayed append's duplicate rows are
-            # absorbed by the probe's dropDuplicates on verified pairs
-            store = (
-                _live_sig_rows(spark, sig_dir)
-                .select("_id", "_sig")
-                .join(
-                    prev.select(F.col("id").alias("_id")), "_id",
-                    "left_semi",
-                )
-            )
-            dpairs = delta_minhash_pairs(
-                None, store, id_col, text_col, n_hashes, bands, k,
-                threshold, seed, portable, sigs=fresh, n_sigs=n_fresh,
-            )
-            go_full = False
-            if policy:
-                from ..operators.audit import maintenance_plan
-
-                # the plan and the merge both read the pairs: probe the
-                # store once, into |delta pairs| checkpointed rows
-                dpairs = dpairs.localCheckpoint()
-                plan = maintenance_plan(
-                    prev,
-                    fresh.select(F.col("_id").alias("id")),
-                    dpairs,
-                    cost_cutoff=policy_cutoff,
-                )
-                if on_plan is not None:
-                    on_plan(dict(plan, batch_id=batch_id))
-                go_full = plan["action"] == "full"
-            if go_full:
-                # full relabel FROM THE SIGNATURE STORE (batch sigs are
-                # already appended): banding pair join over sigs + one
-                # CC — no text re-read; the full label frame is the
-                # patch, latest-wins supersedes all older rows
-                all_sigs = (
-                    _live_sig_rows(spark, sig_dir)
-                    .select("_id", "_sig")
-                    .dropDuplicates(["_id"])
-                )
-                pairs = minhash_lsh_pairs(
-                    None, "_id", text_col, n_hashes, bands, k,
-                    threshold, seed, portable, sigs=all_sigs,
-                )
-                patch = connected_components(
-                    all_sigs.select(F.col("_id").alias("id")), pairs,
-                    id_col="id",
-                ).select("id", "component")
-            else:
-                patch = incremental_audit_merge(
-                    prev, fresh_ids, dpairs, id_col=id_col,
-                    emit="changed",
-                )
         # heartbeat between the two appends (ADVICE r12 #1): a batch
         # longer than the lease TTL renews instead of being reclaimed
         # mid-write; a batch whose lease WAS reclaimed fails-stop here
@@ -588,48 +478,33 @@ def label_store_maintenance_stream(
         # a matched pair to read_committed_store — FENCED: a
         # TTL-reclaimed writer is refused at this commit point
         publish_store_commit(store_dir, batch_id, fence=fence)
-        if compaction_policy:
-            cplan = compaction_plan(
-                labels_path,
+        if not compaction_policy:
+            return
+        # both surfaces price and fold under the SAME policy and lease
+        # (r12 verdict Next #1): same kernel plan, same selective-fold
+        # rule, committed-batch cap via COMMIT.json
+        for store, path, compact in (
+            ("labels", labels_path, compact_label_store),
+            ("sigs", sig_dir, partial(compact_signature_store, id_col="_id")),
+        ):
+            plan = compaction_plan(
+                path,
                 file_cutoff=compaction_file_cutoff,
                 min_patch_files=compaction_min_files,
             )
-            if cplan["action"] == "compact":
-                cplan["compacted"] = compact_label_store(
-                    spark, labels_path, n_shards=n_shards,
+            if plan["action"] == "compact":
+                plan["compacted"] = compact(
+                    spark, path, n_shards=n_shards,
                     lease=False,  # the stream already holds the lease
                     fence=fence,  # ... and fences with its own nonce
                     shards=(
-                        cplan["shards_to_fold"]
-                        if cplan["fold_scope"] == "selective"
+                        plan["shards_to_fold"]
+                        if plan["fold_scope"] == "selective"
                         else None
                     ),
                 )
             if on_compaction is not None:
-                on_compaction(dict(cplan, batch_id=batch_id, store="labels"))
-            # the sig surface prices and folds under the SAME policy
-            # and lease (r12 verdict Next #1 — the last store with
-            # unbounded append history): same kernel plan, same
-            # selective-fold rule, committed-batch cap via COMMIT.json
-            from .sigstore import compact_signature_store
-
-            splan = compaction_plan(
-                sig_dir,
-                file_cutoff=compaction_file_cutoff,
-                min_patch_files=compaction_min_files,
-            )
-            if splan["action"] == "compact":
-                splan["compacted"] = compact_signature_store(
-                    spark, sig_dir, id_col="_id", n_shards=n_shards,
-                    lease=False, fence=fence,
-                    shards=(
-                        splan["shards_to_fold"]
-                        if splan["fold_scope"] == "selective"
-                        else None
-                    ),
-                )
-            if on_compaction is not None:
-                on_compaction(dict(splan, batch_id=batch_id, store="sigs"))
+                on_compaction(dict(plan, batch_id=batch_id, store=store))
 
     writer = docs_stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -538,67 +538,6 @@ def test_maintenance_plan_decisions(spark):
     assert p["incremental_frac"] > 0.5
 
 
-def test_label_store_policy_full_fallback(spark, tmp_path):
-    """policy=True in the maintenance stream: a bridge-storm batch that
-    touches every existing cluster flips the policy to a FULL relabel
-    from the signature store (no text re-read), and the resulting table
-    still equals the full CC recompute."""
-    import os
-
-    from go_fish_spark.streaming import labelstore as ls
-
-    src = str(tmp_path / "in")
-    store = str(tmp_path / "store")
-    cp = str(tmp_path / "cp")
-    os.makedirs(src)
-    plans: list = []
-
-    def run(batch_rows):
-        from go_fish_spark.streaming.labelstore import (
-            label_store_maintenance_stream,
-        )
-
-        spark.createDataFrame(batch_rows, _LS_SCHEMA).write.mode(
-            "append"
-        ).parquet(src)
-        q = label_store_maintenance_stream(
-            spark.readStream.schema(_LS_SCHEMA).parquet(src),
-            store, cp, bands=32, threshold=0.3, portable=True,
-            n_shards=8, policy=True, policy_cutoff=0.5,
-            on_plan=plans.append,
-        )
-        q.awaitTermination(120)
-
-    # batch 0: two 1-doc clusters + one 2-doc cluster (bootstrap)
-    run(_LS_BATCHES[0])
-    # batch 1: one doc bridging BOTH existing clusters -> touched
-    # members ~= history -> the policy recommends full
-    bridge = [(
-        9,
-        "alpha beta gamma delta epsilon zeta eta theta iota "
-        "utterly different content about streaming engines here "
-        "today friend",
-    )]
-    run(bridge)
-    assert plans and plans[-1]["action"] == "full"
-    assert plans[-1]["reason"] == "touched_growth"
-    got = sorted(
-        map(tuple, ls.read_label_store(
-            spark, os.path.join(store, "labels")).collect())
-    )
-    assert got == _full_labels(spark, _LS_BATCHES[0] + bridge)
-
-    # a quiet batch afterwards goes back to the incremental arm
-    lone = [(12, "yet another totally unrelated document body appears")]
-    run(lone)
-    assert plans[-1]["action"] == "incremental"
-    got = sorted(
-        map(tuple, ls.read_label_store(
-            spark, os.path.join(store, "labels")).collect())
-    )
-    assert got == _full_labels(spark, _LS_BATCHES[0] + bridge + lone)
-
-
 # --- x135/x137 streaming fit/apply arms (r9 verdict Next #6) ------------------
 
 
@@ -946,7 +885,7 @@ def test_ecdf_gate_task(spark):
 
 def test_durable_labels_demo_runs(spark):
     """examples/durable_labels_demo.py must keep working as the
-    composed round-10 loop (policy-routed upserts -> restart-resume ->
+    composed round-10 loop (changed-emit upserts -> restart-resume ->
     labels ≡ full recompute -> compaction)."""
     import importlib.util
     import os

@@ -291,14 +291,21 @@ _MAINT_BATCHES = [
 ]
 
 
-def _maintain(spark, src, labels, cp):
-    """One available-now run of the maintenance loop over ``src``; a
-    failed batch is read off the returned query's ``exception()``."""
+def _maintain(spark, src, labels, cp, stream="dedup_maintenance"):
+    """One available-now run of a maintenance loop over ``src`` —
+    ``stream`` names the dedup_maintenance or the labelstore stream,
+    which keep their labels in ``labels``; a failed batch is read off
+    the returned query's ``exception()``."""
     from pyspark.errors import StreamingQueryException
 
     from go_fish_spark.streaming import dedup_maintenance as dm
+    from go_fish_spark.streaming import labelstore as ls
 
-    q = dm.dedup_maintenance_stream(
+    start = {
+        "dedup_maintenance": dm.dedup_maintenance_stream,
+        "labelstore": ls.label_store_maintenance_stream,
+    }[stream]
+    q = start(
         spark.readStream.schema(_MAINT_SCHEMA).parquet(src),
         labels, cp, bands=32, threshold=0.3, portable=True,
     )
@@ -309,10 +316,17 @@ def _maintain(spark, src, labels, cp):
     return q
 
 
-def _labels(spark, labels):
-    from go_fish_spark.streaming.dedup_maintenance import read_labels
+def _labels(spark, labels, stream="dedup_maintenance"):
+    import os
 
-    return sorted(map(tuple, read_labels(spark, labels).collect()))
+    from go_fish_spark.streaming.dedup_maintenance import read_labels
+    from go_fish_spark.streaming.labelstore import read_label_store
+
+    if stream == "labelstore":
+        df = read_label_store(spark, os.path.join(labels, "labels"))
+    else:
+        df = read_labels(spark, labels)
+    return sorted(map(tuple, df.collect()))
 
 
 def _full_cc_labels(spark, rows):
@@ -339,12 +353,14 @@ def _full_cc_labels(spark, rows):
     return want
 
 
-def test_dedup_maintenance_stream_three_batches(spark, tmp_path):
-    """The LIVE maintenance loop: three crawl batches (the third
-    bridges two existing clusters), each folded into the persisted
-    label table; after every batch the table equals the full CC
-    recompute over everything ingested so far, and a restarted query on
-    the same checkpoint is a no-op."""
+@pytest.mark.parametrize("stream", ["dedup_maintenance", "labelstore"])
+def test_dedup_maintenance_stream_three_batches(spark, tmp_path, stream):
+    """The LIVE maintenance loops — the versioned-overwrite stream and
+    the sharded label store's upsert stream share one per-batch fold:
+    three crawl batches (the third bridges two existing clusters), each
+    folded into the persisted label table; after every batch the table
+    equals the full CC recompute over everything ingested so far, and a
+    restarted query on the same checkpoint is a no-op."""
     src, labels, cp = (str(tmp_path / d) for d in ("incoming", "labels", "cp"))
     seen: list = []
     for i, rows in enumerate(_MAINT_BATCHES):
@@ -352,16 +368,16 @@ def test_dedup_maintenance_stream_three_batches(spark, tmp_path):
             src
         )
         seen.extend(rows)
-        assert _maintain(spark, src, labels, cp).exception() is None
-        got = _labels(spark, labels)
+        assert _maintain(spark, src, labels, cp, stream).exception() is None
+        got = _labels(spark, labels, stream)
         assert got == _full_cc_labels(spark, seen), f"divergence after batch {i}"
     # batch 3 merged the two clusters through doc 6
     comp = dict(got)
     assert comp[1] == comp[2] == comp[3] == comp[4] == comp[6] == 1
     assert comp[5] == 5
     # restart with no new data: a no-op, table unchanged
-    assert _maintain(spark, src, labels, cp).exception() is None
-    assert _labels(spark, labels) == got
+    assert _maintain(spark, src, labels, cp, stream).exception() is None
+    assert _labels(spark, labels, stream) == got
 
 
 def test_dedup_maintenance_stream_crash_after_sig_append_replays(
