@@ -112,8 +112,8 @@ def main(argv: list[str] | None = None) -> int:
         default=None,
         help="JSON object feeding corpus-measured recalls for the "
         "guarantee-class disciplines, e.g. "
-        '\'{"sorted_neighborhood": 0.93}\' (the x100 sweep / '
-        "scripts/snm_recall.py are the instruments)",
+        '\'{"sorted_neighborhood": 0.93}\' (measured by the x100 '
+        'sweep; see SCALE.md "Round-9 part 1")',
     )
     cb.add_argument(
         "--run",

@@ -348,8 +348,8 @@ def maintenance_plan(
     two slim aggregations over the label table, never a pair join).
 
     This is the pricing operator registry entry x149 certifies; no
-    maintenance stream calls it. Both streams fold every post-bootstrap
-    batch incrementally (`streaming/dedup_maintenance.fold_label_batch`
+    maintenance stream calls it. Both streams fold every batch, the
+    first included, incrementally (`streaming/dedup_maintenance.fold_label_batch`
     — its fresh set already excludes labeled ids, so the edit gate
     cannot fire there, and since the merge became a driver-side
     union-find the full arm measured slower even on a batch bridging

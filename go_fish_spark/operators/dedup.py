@@ -42,7 +42,6 @@ from __future__ import annotations
 
 import functools
 import random
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -76,29 +75,17 @@ def _persist(df: DataFrame) -> DataFrame:
     return df
 
 
-def release_caches(keep: int = 0) -> int:
-    """Unpersist every frame cached by dedup operators after the first
-    ``keep``; returns the count."""
+def release_caches() -> int:
+    """Unpersist every frame cached by dedup operators; returns the
+    count."""
     n = 0
-    while len(_CACHED_FRAMES) > keep:
+    while _CACHED_FRAMES:
         try:
             _CACHED_FRAMES.pop().unpersist()
             n += 1
         except Exception:
             pass
     return n
-
-
-@contextmanager
-def scoped_caches():
-    """Release, on exit, the frames dedup operators cache inside the
-    block: a long-running stream wraps each micro-batch in it, so one
-    batch's signature caches never outlive the batch."""
-    keep = len(_CACHED_FRAMES)
-    try:
-        yield
-    finally:
-        release_caches(keep)
 
 
 def minhash_params(n_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
@@ -2579,10 +2566,10 @@ def measure_blocking_recall(
     Returns {discipline: recall float} — a discipline is ABSENT when
     the sample contains no ground-truth pair (nothing to measure; the
     caller should widen the sample). Honest-estimate caveat
-    (documented, matches scripts/snm_recall.py): doc-sampling removes
-    intervening docs, which can flatter rank-adjacency disciplines on
-    sparse corpora — treat the estimate as the instrument's reading,
-    not a guarantee class."""
+    (documented, matches SCALE.md "Round-9 part 1: multi-key SNM recall
+    lift"): doc-sampling removes intervening docs, which can flatter
+    rank-adjacency disciplines on sparse corpora — treat the estimate
+    as the instrument's reading, not a guarantee class."""
     if snm_keys is None:
         snm_keys = _SNM_KEYS
     samp = (

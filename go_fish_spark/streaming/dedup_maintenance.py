@@ -14,12 +14,16 @@ tests/test_streaming.py, crash-replay included).
 
 ONE fold, two stores: :func:`fold_label_batch` is the get-or-create +
 mutate half of that loop — fresh set, one hashing pass, sig append,
-then bootstrap (first batch) or store probe + merge — and both
-maintenance streams run it. Each stream owns only the store-back half:
-:func:`dedup_maintenance_stream` writes a versioned overwrite and
-repoints ``_current.json``; `streaming/labelstore.
-label_store_maintenance_stream` appends a sharded upsert patch
-(``emit="changed"``) and publishes a cross-store commit.
+store probe + merge — and both maintenance streams run it for every
+batch. The first delivery is an ordinary one: a missing label table
+reads as empty labels and an empty store, as a missing key reads as
+empty in the reference's KV state, so the probe emits the batch×batch
+pairs and the merge labels their components. Each stream owns only
+the store-back half: :func:`dedup_maintenance_stream` writes a
+versioned overwrite and repoints ``_current.json``;
+`streaming/labelstore.label_store_maintenance_stream` appends a
+sharded upsert patch (``emit="changed"``) and publishes a cross-store
+commit.
 
 Why foreachBatch rather than applyInPandasWithState: component merging
 is a GLOBAL operation (one batch doc can bridge two existing clusters),
@@ -47,12 +51,16 @@ about |batch| × (bands × 20 B + 0.5 KB), so the store is never
 shuffled, cached or deduplicated (a batch past the probe's 128 MB
 broadcast budget, about 47k documents, is probed in chunks, one scan
 each) — a driver-side union-find over the reduced graph (|batch| ids +
-|delta pairs| edges, collected in one Arrow action — the batch, not
-the corpus, bounds driver memory), and a broadcast relabel join. The
-label-table rewrite is the one full-table touch — at corpus scale it
-becomes a partition-pruned MERGE INTO on the touched components
-(Delta/Iceberg); the versioned parquet overwrite here is the sandbox
-form of that operation.
+|delta pairs| edges, collected in one Arrow action, about 32 MB at
+10⁶ documents — the batch, not the corpus, bounds driver memory), and
+a broadcast relabel join. That bound holds for the first batch too: a
+stream started over an existing corpus takes the whole corpus as its
+first micro-batch unless the file source's ``maxFilesPerTrigger``
+caps it (``availableNow`` honours it), which splits the initial load
+into ordinary batches. The label-table rewrite is the one full-table
+touch — at corpus scale it becomes a partition-pruned MERGE INTO on
+the touched components (Delta/Iceberg); the versioned parquet
+overwrite here is the sandbox form of that operation.
 """
 
 from __future__ import annotations
@@ -113,19 +121,15 @@ def fold_label_batch(
     (id, component) view, None exactly when ``labeled`` is.
     ``append_sigs(fresh)`` persists the batch's ``(_id, _sig)`` rows;
     ``read_sigs()`` returns the store's ``(_id, _sig)`` rows and is
-    called after that append, and only when ``prev`` exists. The first
-    batch bootstraps (within-batch LSH pairs + CC, every row new);
-    later ones probe the store's LABELED rows and merge with
-    ``incremental_audit_merge(..., emit=emit)``."""
+    called after that append, and only when ``prev`` exists. Every
+    batch, the first included, probes the store's LABELED rows and
+    merges with ``incremental_audit_merge(..., emit=emit)``: no labels
+    yet reads as empty labels and an empty store, so the probe emits
+    only batch×batch pairs and the merge labels their components."""
     from pyspark.sql import Observation
 
     from ..operators.audit import incremental_audit_merge
-    from ..operators.dedup import (
-        delta_minhash_pairs,
-        minhash_lsh_pairs,
-        minhash_signature,
-    )
-    from ..operators.graph import connected_components
+    from ..operators.dedup import delta_minhash_pairs, minhash_signature
 
     bdf = bdf.select(id_col, text_col).dropDuplicates([id_col])
     if labeled is not None:
@@ -150,29 +154,30 @@ def fold_label_batch(
     n_fresh = obs.get["n"]
     if n_fresh == 0:
         return None
-    fresh_ids = fresh.select(F.col("_id").alias(id_col))
     # (1) sigs first — replay-safe (see module docstring)
     append_sigs(fresh)
     if prev is None:
-        pairs = minhash_lsh_pairs(
-            None, "_id", text_col, n_hashes, bands, k, threshold,
-            seed, portable, sigs=fresh,
+        # a missing label table reads as empty (the reference's
+        # get-or-create): zero labels, typed from the batch's ids
+        store = fresh.where(F.lit(False))
+        prev = store.select(
+            F.col("_id").alias("id"), F.col("_id").alias("component")
         )
-        return connected_components(
-            fresh_ids, pairs, id_col=id_col
-        ).select("id", "component")
-    # store = signatures of LABELED docs only (excludes any orphan rows
-    # a crashed attempt appended for this batch); a row appended twice
-    # needs no dedup — the probe reduces its verified pairs by key
-    store = read_sigs().join(
-        prev.select(F.col("id").alias("_id")), "_id", "left_semi"
-    )
+    else:
+        # store = signatures of LABELED docs only (excludes any orphan
+        # rows a crashed attempt appended for this batch); a row
+        # appended twice needs no dedup — the probe reduces its
+        # verified pairs by key
+        store = read_sigs().join(
+            prev.select(F.col("id").alias("_id")), "_id", "left_semi"
+        )
     dpairs = delta_minhash_pairs(
         None, store, id_col, text_col, n_hashes, bands, k,
         threshold, seed, portable, sigs=fresh, n_sigs=n_fresh,
     )
     return incremental_audit_merge(
-        prev, fresh_ids, dpairs, id_col=id_col, emit=emit
+        prev, fresh.select(F.col("_id").alias(id_col)), dpairs,
+        id_col=id_col, emit=emit,
     )
 
 
@@ -191,29 +196,24 @@ def dedup_maintenance_stream(
     available_now: bool = True,
 ):
     """Start the maintenance loop (returns the StreamingQuery). Each
-    batch runs :func:`fold_label_batch` (batch 0 bootstraps, later
-    batches probe the store and merge) and commits the full label
-    table as a new version. Read the result with :func:`read_labels`.
-    Any frame a dedup operator caches during the batch is released
-    when the batch ends."""
-    from ..operators.dedup import scoped_caches
-
+    batch, the first included, runs :func:`fold_label_batch` (store
+    probe + merge) and commits the full label table as a new version.
+    Read the result with :func:`read_labels`."""
     spark = docs_stream.sparkSession
     sig_dir = _os.path.join(labels_dir, "_sigs")
 
     def process_batch(bdf: DataFrame, batch_id: int) -> None:
-        with scoped_caches():
-            prev = read_labels(spark, labels_dir)
-            labels = fold_label_batch(
-                bdf, prev, prev,
-                lambda: spark.read.parquet(sig_dir),
-                lambda fresh: fresh.write.mode("append").parquet(sig_dir),
-                "full", id_col, text_col, n_hashes, bands, k, threshold,
-                seed, portable,
-            )
-            if labels is not None:
-                # (2) labels last — the commit point
-                _commit_labels(labels, labels_dir, batch_id)
+        prev = read_labels(spark, labels_dir)
+        labels = fold_label_batch(
+            bdf, prev, prev,
+            lambda: spark.read.parquet(sig_dir),
+            lambda fresh: fresh.write.mode("append").parquet(sig_dir),
+            "full", id_col, text_col, n_hashes, bands, k, threshold,
+            seed, portable,
+        )
+        if labels is not None:
+            # (2) labels last — the commit point
+            _commit_labels(labels, labels_dir, batch_id)
 
     writer = docs_stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -19,7 +19,8 @@ Primitives:
 * **Existence-aware parquet read** — returns None ONLY for
   missing-path / nothing-committed; every other failure re-raises
   (ADVICE r10 #1: a transient read error must never masquerade as
-  "store empty" and send a maintenance stream down its bootstrap path).
+  "store empty" and make a maintenance stream label a batch as if it
+  were the first delivery).
 * **Latest-wins fold** — the shared read rule: one row per key, from
   the highest ``_batch_id``, ties broken by caller-supplied DETERMINISTIC
   columns (never partition order) so every crash/replay interleaving
@@ -163,16 +164,16 @@ def read_parquet_if_exists(
     """Read a parquet store, returning None ONLY when nothing has ever
     been committed at ``path``. Every other failure — corruption,
     permission, schema mismatch — RE-RAISES: treating a transient read
-    error as "store empty" would silently send a maintenance stream
-    down its bootstrap path and label a batch without merging against
-    history (ADVICE r10 #1). ``merge_schema`` unions file schemas so
-    legacy files missing later-added columns surface them as nulls
-    instead of being schema-clipped (ADVICE r11 #2).
+    error as "store empty" would silently make a maintenance stream
+    label a batch as if it were the first delivery, without merging
+    against history (ADVICE r10 #1). ``merge_schema`` unions file
+    schemas so legacy files missing later-added columns surface them as
+    nulls instead of being schema-clipped (ADVICE r11 #2).
 
     Missing/empty ABSOLUTE paths short-circuit on a Python-side listing
     instead of letting the JVM throw (optimization r15): the analysis
-    exception a bootstrap probe used to provoke is cached in the failed
-    QueryExecution's LazyTry, and any registered QueryExecutionListener
+    exception a first-delivery read used to provoke is cached in the
+    failed QueryExecution's LazyTry, and any registered QueryExecutionListener
     (e.g. the fold's ``Observation``) that later touches it re-throws —
     ExecutionListenerBus then dumps the whole stack to stderr at ERROR,
     which is what kept tripping the driver's bench-ok scrape. The

@@ -10,6 +10,11 @@ import time
 
 import pytest
 
+# bound at import, so the full recompute keeps the real kernels while a
+# test switches them off for the maintenance streams
+from go_fish_spark.operators.dedup import minhash_lsh_pairs, release_caches
+from go_fish_spark.operators.graph import connected_components
+
 EVENT_SCHEMA = (
     "event_id long, ts timestamp, event_type string, key string, "
     "principal string, principal_id string"
@@ -230,11 +235,11 @@ def test_stream_incremental_dedup_vs_static_store(spark, tmp_path):
 
 
 def test_dedup_maintenance_stream_releases_batch_caches(spark, tmp_path):
-    """Each maintenance micro-batch releases any frame a dedup operator
-    cached during it (the bootstrap's pair pass caches its signatures):
-    a bootstrap and three incremental batches leave the dedup cache
-    registry as they found it. A restart with no new docs is a no-op —
-    its empty test rides the fresh-set checkpoint."""
+    """A maintenance micro-batch caches nothing: four batches, the
+    first included, leave the dedup cache registry as they found it
+    (the fold reads its fresh-set checkpoint, never a persisted frame).
+    A restart with no new docs is a no-op — its empty test rides the
+    fresh-set checkpoint."""
     from go_fish_spark.operators import dedup
     from go_fish_spark.streaming.dedup_maintenance import (
         dedup_maintenance_stream,
@@ -332,9 +337,6 @@ def _labels(spark, labels, stream="dedup_maintenance"):
 def _full_cc_labels(spark, rows):
     """The invariant the loop maintains: CC over the LSH pairs of
     everything ingested, recomputed from scratch."""
-    from go_fish_spark.operators.dedup import minhash_lsh_pairs, release_caches
-    from go_fish_spark.operators.graph import connected_components
-
     full_df = spark.createDataFrame(rows, _MAINT_SCHEMA)
     want = sorted(
         map(
@@ -353,14 +355,40 @@ def _full_cc_labels(spark, rows):
     return want
 
 
-@pytest.mark.parametrize("stream", ["dedup_maintenance", "labelstore"])
-def test_dedup_maintenance_stream_three_batches(spark, tmp_path, stream):
+@pytest.mark.parametrize(
+    "stream, chunked",
+    [
+        pytest.param("dedup_maintenance", False, id="dedup_maintenance"),
+        pytest.param("labelstore", False, id="labelstore"),
+        pytest.param("dedup_maintenance", True, id="chunked_first_probe"),
+    ],
+)
+def test_dedup_maintenance_stream_three_batches(
+    spark, tmp_path, monkeypatch, stream, chunked
+):
     """The LIVE maintenance loops — the versioned-overwrite stream and
     the sharded label store's upsert stream share one per-batch fold:
     three crawl batches (the third bridges two existing clusters), each
     folded into the persisted label table; after every batch the table
     equals the full CC recompute over everything ingested so far, and a
-    restarted query on the same checkpoint is a no-op."""
+    restarted query on the same checkpoint is a no-op. The batch pair
+    pass and iterative CC raise throughout, so every batch, the first
+    included, takes the store probe + merge. ``chunked`` shrinks the
+    probe's broadcast budget to about one document, so batch 0's
+    batch×batch pairs cross broadcast chunks."""
+    from go_fish_spark.operators import dedup, graph
+
+    def off_path(*a, **kw):
+        raise AssertionError("a maintenance batch left the probe + merge path")
+
+    monkeypatch.setattr(dedup, "minhash_lsh_pairs", off_path)
+    monkeypatch.setattr(graph, "connected_components", off_path)
+    if chunked:
+        monkeypatch.setattr(
+            dedup, "_PROBE_BROADCAST_BYTES",
+            32 * dedup._SLIM_ROW_BYTES + 64 * dedup._SIG_HASH_BYTES,
+        )
+        assert dedup._probe_chunks(len(_MAINT_BATCHES[0]), 64, 32) >= 2
     src, labels, cp = (str(tmp_path / d) for d in ("incoming", "labels", "cp"))
     seen: list = []
     for i, rows in enumerate(_MAINT_BATCHES):
@@ -380,13 +408,16 @@ def test_dedup_maintenance_stream_three_batches(spark, tmp_path, stream):
     assert _labels(spark, labels, stream) == got
 
 
+@pytest.mark.parametrize("crash_batch", [0, 1])
 def test_dedup_maintenance_stream_crash_after_sig_append_replays(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, crash_batch
 ):
     """A batch that crashes after its signature append and before the
-    label commit leaves the previous labels current. Replayed on the
-    same checkpoint, it appends its signatures a second time and commits
-    labels equal to a full recompute; the next batch then probes a store
+    label commit leaves the previous labels current (none, when the
+    first batch crashes). Replayed on the same checkpoint, it appends
+    its signatures a second time and commits labels equal to a full
+    recompute — the first batch against an empty store while its own
+    rows sit in the store twice; every later batch then probes a store
     holding those rows twice and still matches the full recompute."""
     import os
 
@@ -395,44 +426,36 @@ def test_dedup_maintenance_stream_crash_after_sig_append_replays(
     src, labels, cp = (str(tmp_path / d) for d in ("incoming", "labels", "cp"))
     sig_dir = os.path.join(labels, "_sigs")
 
-    def land(rows):
-        spark.createDataFrame(rows, _MAINT_SCHEMA).write.mode("append").parquet(
-            src
-        )
-
     def sig_ids():
         return sorted(r._id for r in spark.read.parquet(sig_dir).collect())
 
-    land(_MAINT_BATCHES[0])
-    assert _maintain(spark, src, labels, cp).exception() is None
-
-    real_commit = dm._commit_labels
-    state = {"raised": False}
-
     def crashing_commit(*a, **kw):
-        if not state["raised"]:
-            state["raised"] = True
-            raise RuntimeError("injected crash before the label commit")
-        return real_commit(*a, **kw)
+        raise RuntimeError("injected crash before the label commit")
 
-    monkeypatch.setattr(dm, "_commit_labels", crashing_commit)
-    land(_MAINT_BATCHES[1])
-    assert _maintain(spark, src, labels, cp).exception() is not None
-    assert state["raised"]
-    assert _labels(spark, labels) == _full_cc_labels(spark, _MAINT_BATCHES[0])
-    assert sig_ids() == [1, 2, 3, 4, 5]  # the orphan append landed
-
-    assert _maintain(spark, src, labels, cp).exception() is None
-    seen = _MAINT_BATCHES[0] + _MAINT_BATCHES[1]
-    assert _labels(spark, labels) == _full_cc_labels(spark, seen)
-    assert sig_ids() == [1, 2, 3, 4, 4, 5, 5]
-
-    land(_MAINT_BATCHES[2])
-    assert _maintain(spark, src, labels, cp).exception() is None
-    seen = seen + _MAINT_BATCHES[2]
-    got = _labels(spark, labels)
-    assert got == _full_cc_labels(spark, seen)
-    assert dict(got)[4] == 1  # the bridge reached doc 4 through doubled rows
+    seen: list = []
+    for i, rows in enumerate(_MAINT_BATCHES):
+        spark.createDataFrame(rows, _MAINT_SCHEMA).write.mode("append").parquet(
+            src
+        )
+        if i == crash_batch:
+            with monkeypatch.context() as m:
+                m.setattr(dm, "_commit_labels", crashing_commit)
+                q = _maintain(spark, src, labels, cp)
+            assert "injected crash" in str(q.exception())
+            if seen:
+                assert _labels(spark, labels) == _full_cc_labels(spark, seen)
+            else:
+                assert dm.read_labels(spark, labels) is None
+            orphans = [r[0] for r in rows]
+            assert sig_ids() == sorted([r[0] for r in seen] + orphans)
+        assert _maintain(spark, src, labels, cp).exception() is None
+        seen.extend(rows)
+        got = _labels(spark, labels)
+        assert got == _full_cc_labels(spark, seen), f"divergence after batch {i}"
+        if i == crash_batch:  # the replay appended its rows a second time
+            assert sig_ids() == sorted([r[0] for r in seen] + orphans)
+    # the bridge reached docs 1-4 through doubled rows
+    assert {dict(got)[d] for d in (1, 2, 3, 4, 6)} == {1}
 
 
 def test_session_window_stream(spark, tmp_path):
