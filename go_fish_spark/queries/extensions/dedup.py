@@ -1823,11 +1823,8 @@ def x163_compacted_store_readback(spark, sf_dir):
     block."""
     import os
 
-    from ...streaming.labelstore import (
-        compact_label_store,
-        read_compaction_manifest,
-        read_label_store,
-    )
+    from ...streaming.labelstore import compact_label_store, read_label_store
+    from ...streaming.storekernel import read_store_manifest
 
     base = _store_dir(spark, "x163")
     labels_path = os.path.join(base, "labels")
@@ -1835,7 +1832,7 @@ def x163_compacted_store_readback(spark, sf_dir):
     def compact_after_batch_1(b):
         if b == 1:  # fold batches 0-1 into generation 1 mid-sequence
             compact_label_store(spark, labels_path, n_shards=16)
-            man = read_compaction_manifest(labels_path)
+            man = read_store_manifest(labels_path)
             assert man is not None and man["gen"] == 1
 
     _exact_dup_label_store(spark, sf_dir, base, on_batch=compact_after_batch_1)
@@ -1863,11 +1860,8 @@ def x169_selective_compaction_readback(spark, sf_dir):
     folds are independent — the invariant this entry pins."""
     import os
 
-    from ...streaming.labelstore import (
-        compact_label_store,
-        read_compaction_manifest,
-        read_label_store,
-    )
+    from ...streaming.labelstore import compact_label_store, read_label_store
+    from ...streaming.storekernel import read_store_manifest
 
     base = _store_dir(spark, "x169")
     labels_path = os.path.join(base, "labels")
@@ -1877,7 +1871,7 @@ def x169_selective_compaction_readback(spark, sf_dir):
             compact_label_store(
                 spark, labels_path, n_shards=16, shards=list(range(8))
             )
-            man = read_compaction_manifest(labels_path)
+            man = read_store_manifest(labels_path)
             assert man is not None and man["gen"] == 1
             assert man["covered_default"] == -1
 
@@ -1888,7 +1882,7 @@ def x169_selective_compaction_readback(spark, sf_dir):
     compact_label_store(
         spark, labels_path, n_shards=16, shards=list(range(4, 12))
     )
-    man = read_compaction_manifest(labels_path)
+    man = read_store_manifest(labels_path)
     assert man["gen"] == 2 and len(man["covered"]) == 12
     return read_label_store(spark, labels_path).orderBy("id")
 
@@ -1996,7 +1990,7 @@ def x164_committed_store_readback(spark, sf_dir):
     """The r11 ATOMIC CROSS-STORE COMMIT under the oracle contract:
     ingest the corpus as three batches, each appending its label patch
     and its signatures, then publishing the pair as ONE manifest
-    version (`publish_store_commit`); read back through
+    version (`storekernel.publish_commit`); read back through
     `read_committed_store`, which cuts BOTH stores at the committed
     batch — a reader can never see a batch's signatures without its
     labels. The output inner-joins the committed labels to the
@@ -2008,10 +2002,8 @@ def x164_committed_store_readback(spark, sf_dir):
     partition-prunable `_batch_id` filters."""
     import os
 
-    from ...streaming.labelstore import (
-        publish_store_commit,
-        read_committed_store,
-    )
+    from ...streaming.labelstore import read_committed_store
+    from ...streaming.storekernel import publish_commit
     from ._shared import shared_doc_sigs
 
     # batch signatures append from the session-shared signature frame
@@ -2026,7 +2018,7 @@ def x164_committed_store_readback(spark, sf_dir):
         ).withColumn("_batch_id", F.lit(b)).write.mode("append").parquet(
             os.path.join(base, "_sigs")
         )
-        publish_store_commit(base, b)
+        publish_commit(base, b)
 
     _exact_dup_label_store(
         spark, sf_dir, base, on_batch=append_sigs_and_publish

@@ -168,7 +168,8 @@ def shard_compaction_plan(
     fragment shard directories; read amplification ≈ mean live files
     per shard directory, 1.0 being the one-file-per-shard ideal this
     layout exists for. Compact when the mean crosses ``file_cutoff``
-    AND at least ``min_files`` live files exist."""
+    AND at least ``min_files`` live files exist
+    (storekernel.read_amp_decision — the rule every store plan runs)."""
     from ..streaming import storekernel as _sk
 
     _total, bytes_, per_dir = _sk.walk_parquet_files(path)
@@ -178,15 +179,14 @@ def shard_compaction_plan(
         d: n for d, n in per_dir.items() if not d.startswith(("_", "."))
     }
     total = sum(live.values())
-    read_amp = (total / len(live)) if live else 0.0
-    action = (
-        "compact"
-        if read_amp >= file_cutoff and total >= min_files
-        else "skip"
+    # the shared read-amp rule; a whole-corpus rewrite has no selective
+    # form, so the rule's fold list and scope go unused here
+    read_amp, action, _fold, _scope = _sk.read_amp_decision(
+        live, total, file_cutoff, min_files, "shard="
     )
     return {
         "action": action,
-        "read_amp": round(read_amp, 3),
+        "read_amp": read_amp,
         "file_cutoff": file_cutoff,
         "live_files": total,
         "live_bytes": bytes_,

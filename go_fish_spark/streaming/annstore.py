@@ -23,7 +23,10 @@ Maintenance is MAP-ONLY: each micro-batch encodes its own rows against
 the frozen literals (no shuffle — the one exchange is the
 partitionBy(cell) write) and appends; edited ids re-append and the
 latest-wins reader supersedes (the sigstore rule). Restart safety =
-checkpointed offsets + latest-wins collapse of a replayed batch.
+checkpointed offsets + latest-wins collapse of a replayed batch. The
+per-batch writer lease and the priced inline compaction are the
+kernel's ``leased_store_stream`` — the loop the label and sig store
+streams run too.
 
 Refit is a PRICED DECISION, not a reflex: :func:`ann_refit_plan`
 compares the incoming batch's cell distribution against the model's
@@ -225,23 +228,21 @@ def ann_store_stream(
     :func:`ann_refit_plan` and passes the decision to the hook — the
     hook (or an out-of-band scheduler) decides when to actually run
     :func:`refit_ann_store` as a batch job; a micro-batch never
-    re-encodes the corpus inline."""
+    re-encodes the corpus inline.
+
+    The appender holds the store's writer lease per batch and
+    ``compaction_policy=True`` folds inline under it
+    (storekernel.leased_store_stream — the loop the label and sig
+    streams run too); ``on_compaction`` observes each
+    :func:`ann_compaction_plan` decision dict."""
     from ..operators.similarity import fit_ivfpq_det
 
     spark = vec_stream.sparkSession
-    # single-writer enforcement (r11 verdict Next #3) — see
-    # label_store_maintenance_stream: appender holds the writer lease
-    # per batch; same-checkpoint replay reclaims its own stale lease
-    lease_owner = f"stream:{_os.path.abspath(checkpoint_dir)}"
 
-    def process_batch(bdf: DataFrame, batch_id: int) -> None:
-        with _sk.writer_lease(store_dir, lease_owner) as ld:
-            _run_batch(bdf, batch_id, (store_dir, ld["nonce"]))
-
-    def _run_batch(bdf: DataFrame, batch_id: int, fence: tuple) -> None:
+    def run_batch(bdf: DataFrame, batch_id: int, fence: tuple) -> bool:
         bdf = bdf.select(id_col, vec_col).dropDuplicates([id_col])
         if bdf.isEmpty():
-            return
+            return False
         model = load_ann_model(store_dir)
         if model is None:
             coarse, pq = fit_ivfpq_det(
@@ -273,31 +274,25 @@ def ann_store_stream(
         # reclaimed mid-write; a reclaimed one fails-stop here
         _sk.renew_lease(*fence)
         append_ann_patch(coded, store_dir, batch_id, gen=doc["gen"])
-        if compaction_policy:
-            cplan = ann_compaction_plan(
-                store_dir,
-                file_cutoff=compaction_file_cutoff,
-                min_files=compaction_min_files,
-            )
-            if cplan["action"] == "compact":
-                cplan["compacted"] = compact_ann_store(
-                    spark, store_dir, lease=False,  # stream holds the lease
-                    fence=fence,  # ... and fences with its own nonce
-                    cells=(
-                        cplan["cells_to_fold"]
-                        if cplan["fold_scope"] == "selective"
-                        else None
-                    ),
-                )
-            if on_compaction is not None:
-                on_compaction(dict(cplan, batch_id=batch_id))
+        return True
 
-    writer = vec_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    surface = (
+        None,
+        lambda: ann_compaction_plan(
+            store_dir,
+            file_cutoff=compaction_file_cutoff,
+            min_files=compaction_min_files,
+        ),
+        "cells_to_fold",
+        lambda fold, fence: compact_ann_store(
+            spark, store_dir, cells=fold, fence=fence
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _sk.leased_store_stream(
+        vec_stream, store_dir, checkpoint_dir, run_batch,
+        (surface,) if compaction_policy else (), on_compaction,
+        available_now,
+    )
 
 
 def _cell_hist(coded: DataFrame, n_cells: int) -> list[int]:
@@ -371,7 +366,6 @@ def refit_ann_store(
     train_cap: int = 100_000,
     seed: int = 42,
     prune: bool = True,
-    lease: bool = True,
     fence: tuple | None = None,
 ) -> int:
     """The REFIT arm as a batch job over the raw-vector lake: fit a
@@ -380,52 +374,45 @@ def refit_ann_store(
     — the compact_label_store commit discipline; a crash before the
     repoint leaves readers on the old generation+model, fully
     consistent). Old generation pruned best-effort after the commit.
-    Takes the store's writer lease (refused while the maintenance
-    stream holds it — r11 verdict Next #3); ``lease=False`` only for
-    callers that already hold it. Returns the re-encoded row count."""
+    Called without ``fence`` it takes the store's writer lease (refused
+    while the maintenance stream holds it — r11 verdict Next #3); with
+    ``fence`` the caller already holds it (storekernel.held_fence).
+    Returns the re-encoded row count."""
     from ..operators.similarity import fit_ivfpq_det
 
-    if lease:
-        lh = _sk.writer_lease(store_dir, _sk.unique_owner("refit"))
-        with lh:
-            return refit_ann_store(
-                spark, store_dir, vectors_df, id_col, vec_col, n_cells,
-                m, ksub, train_cap, seed, prune, lease=False,
-                fence=lh.fence,
-            )
-    cur = load_ann_manifest(store_dir)
-    new_gen = (int(cur["gen"]) + 1) if cur else 1
-    covered = _covered_batch(spark, store_dir, cur)
-    coarse, pq = fit_ivfpq_det(
-        vectors_df, id_col, vec_col, n_cells, m, ksub, train_cap, seed
-    )
-    coded = encode_ann_batch(vectors_df, coarse, pq, id_col, vec_col)
-    gen_path = _cells_path(store_dir, new_gen)
-    if _os.path.exists(gen_path):  # torn previous attempt never repointed
-        _shutil.rmtree(gen_path)
-    (
-        # stamp at the COVERED max batch id (ADVICE r11 #4, the
-        # labelstore rule): a lost checkpoint restarting batch ids at 0
-        # must not tie the folded rows in the latest-wins window
-        coded.withColumn("_batch_id", F.lit(int(covered)))
-        .repartition("cell")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(gen_path)
-    )
-    n = spark.read.parquet(gen_path).count()
-    mass = _cell_hist(coded, len(coarse._centers))
-    if fence is not None:
+    with _sk.held_fence(store_dir, fence, "refit") as fence:
+        cur = load_ann_manifest(store_dir)
+        new_gen = (int(cur["gen"]) + 1) if cur else 1
+        covered = _covered_batch(spark, store_dir, cur)
+        coarse, pq = fit_ivfpq_det(
+            vectors_df, id_col, vec_col, n_cells, m, ksub, train_cap, seed
+        )
+        coded = encode_ann_batch(vectors_df, coarse, pq, id_col, vec_col)
+        gen_path = _cells_path(store_dir, new_gen)
+        if _os.path.exists(gen_path):  # torn attempt never repointed
+            _shutil.rmtree(gen_path)
+        (
+            # stamp at the COVERED max batch id (ADVICE r11 #4, the
+            # labelstore rule): a lost checkpoint restarting batch ids
+            # at 0 must not tie the folded rows in the latest-wins window
+            coded.withColumn("_batch_id", F.lit(int(covered)))
+            .repartition("cell")
+            .write.mode("append")
+            .partitionBy("cell")
+            .parquet(gen_path)
+        )
+        n = spark.read.parquet(gen_path).count()
+        mass = _cell_hist(coded, len(coarse._centers))
         # heartbeat + ownership check after the corpus re-encode — the
         # long step the renewal exists for (ADVICE r12 #1); a reclaimed
         # refit fails-stop here, its torn generation invisible garbage
-        _sk.renew_lease(fence[0], fence[1])
-    publish_ann_model(  # the commit point — model + gen repoint LAST
-        store_dir, coarse, pq, cell_mass=mass, gen=new_gen, fence=fence
-    )
-    if prune:
-        _prune_generations(store_dir, keep_from=new_gen - 1)
-    return n
+        _sk.renew_lease(*fence)
+        publish_ann_model(  # the commit point — model + gen repoint LAST
+            store_dir, coarse, pq, cell_mass=mass, gen=new_gen, fence=fence
+        )
+        if prune:
+            _sk.prune_generations(_cells_root(store_dir), new_gen - 1)
+        return n
 
 
 def _covered_batch(spark, store_dir: str, doc: dict | None) -> int:
@@ -443,13 +430,6 @@ def _covered_batch(spark, store_dir: str, doc: dict | None) -> int:
         .collect()[0]["m"]
     )
     return int(m) if m is not None else 0
-
-
-def _prune_generations(store_dir: str, keep_from: int) -> None:
-    """GC cell generations STRICTLY OLDER than ``keep_from`` — the N-1
-    generation is retained one cycle for in-flight readers of the
-    previous manifest (storekernel.prune_generations, ADVICE r11 #3)."""
-    _sk.prune_generations(_cells_root(store_dir), keep_from)
 
 
 def adc_search_store(
@@ -593,6 +573,8 @@ def ann_search_stream(
             f"recall_mode must be 'exact' or 'full_probe_adc', "
             f"got {recall_mode!r}"
         )
+    from .sinks import foreach_sink
+
     spark = query_stream.sparkSession
 
     def process_batch(bdf: DataFrame, batch_id: int) -> None:
@@ -697,12 +679,10 @@ def ann_search_stream(
                 info["recall_mode"] = recall_mode
             on_batch(info)
 
-    writer = query_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_sink(
+        query_stream, process_batch, checkpoint_dir,
+        trigger_available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_search_results(spark, output_path: str) -> DataFrame | None:
@@ -749,28 +729,16 @@ def ann_compaction_plan(
     total, _bytes, per_cell = _sk.walk_parquet_files(
         _cells_path(store_dir, doc["gen"])
     )
-    read_amp = (sum(per_cell.values()) / len(per_cell)) if per_cell else 0.0
-    action = (
-        "compact"
-        if read_amp >= file_cutoff and total >= min_files
-        else "skip"
-    )
-    # Selective-fold decision (r11 verdict Next #1): the cells whose
-    # OWN file count crossed the cutoff; cold cells are hard-link-
-    # carried into the new generation instead of rewritten.
-    to_fold = sorted(
-        int(c.split("=", 1)[1])
-        for c, nf in per_cell.items()
-        if c.startswith("cell=") and nf >= file_cutoff
-    )
-    fold_scope = (
-        "full"
-        if (not to_fold or len(to_fold) == len(per_cell))
-        else "selective"
+    # the shared read-amp rule (storekernel.read_amp_decision); the
+    # selective fold list is the cells whose OWN file count crossed
+    # the cutoff — cold cells are hard-link-carried instead of
+    # rewritten (r11 verdict Next #1)
+    read_amp, action, to_fold, fold_scope = _sk.read_amp_decision(
+        per_cell, total, file_cutoff, min_files, "cell="
     )
     return {
         "action": action,
-        "read_amp": round(read_amp, 3),
+        "read_amp": read_amp,
         "file_cutoff": file_cutoff,
         "live_files": total,
         "n_live_cells": len(per_cell),
@@ -784,7 +752,6 @@ def compact_ann_store(
     spark,
     store_dir: str,
     prune: bool = True,
-    lease: bool = True,
     cells: list[int] | None = None,
     fence: tuple | None = None,
 ) -> int:
@@ -808,65 +775,59 @@ def compact_ann_store(
     cells only.
 
     Single-writer discipline ENFORCED via the store's writer lease
-    (r11 verdict Next #3): refused while the maintenance stream holds
-    it; ``lease=False`` only when the caller already holds it. Returns
-    the folded row count (hot cells only when selective)."""
-    if lease:
-        lh = _sk.writer_lease(store_dir, _sk.unique_owner("compactor"))
-        with lh:
-            return compact_ann_store(
-                spark, store_dir, prune=prune, lease=False, cells=cells,
-                fence=lh.fence,
-            )
-    doc = load_ann_manifest(store_dir)
-    if doc is None:
-        return 0
-    covered = _covered_batch(spark, store_dir, doc)
-    latest = read_ann_store(spark, store_dir)  # GLOBAL latest-wins
-    sel = sorted({int(c) for c in cells}) if cells is not None else None
-    if sel is not None:
-        latest = latest.filter(F.col("cell").isin(sel))
-    new_gen = int(doc["gen"]) + 1
-    gen_path = _cells_path(store_dir, new_gen)
-    if _os.path.exists(gen_path):  # torn previous attempt never repointed
-        _shutil.rmtree(gen_path)
-    (
-        # stamped at the covered max batch id, not 0 (ADVICE r11 #4):
-        # a checkpoint-loss restart re-appending at batch 0 must LOSE
-        # to the fold, and the labelstore stamps the same way
-        latest.withColumn("_batch_id", F.lit(int(covered)))
-        .repartition("cell")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(gen_path)
-    )
-    if sel is not None:
-        old_root = _cells_path(store_dir, doc["gen"])
-        hot = {f"cell={c}" for c in sel}
-        cold = [
-            d
-            for d in _os.listdir(old_root)
-            if d.startswith("cell=") and d not in hot
-        ]
-        _sk.carry_partitions(old_root, gen_path, cold)
-        n_df = spark.read.parquet(gen_path).filter(
-            F.col("cell").isin(sel)
+    (r11 verdict Next #3): called without ``fence`` the fold takes it
+    and is refused while the maintenance stream holds it; with
+    ``fence`` the caller already holds it (storekernel.held_fence).
+    Returns the folded row count (hot cells only when selective)."""
+    with _sk.held_fence(store_dir, fence, "compactor") as fence:
+        doc = load_ann_manifest(store_dir)
+        if doc is None:
+            return 0
+        covered = _covered_batch(spark, store_dir, doc)
+        latest = read_ann_store(spark, store_dir)  # GLOBAL latest-wins
+        sel = sorted({int(c) for c in cells}) if cells is not None else None
+        if sel is not None:
+            latest = latest.filter(F.col("cell").isin(sel))
+        new_gen = int(doc["gen"]) + 1
+        gen_path = _cells_path(store_dir, new_gen)
+        if _os.path.exists(gen_path):  # torn attempt never repointed
+            _shutil.rmtree(gen_path)
+        (
+            # stamped at the covered max batch id, not 0 (ADVICE r11
+            # #4): a checkpoint-loss restart re-appending at batch 0
+            # must LOSE to the fold, and the labelstore stamps the same
+            latest.withColumn("_batch_id", F.lit(int(covered)))
+            .repartition("cell")
+            .write.mode("append")
+            .partitionBy("cell")
+            .parquet(gen_path)
         )
-    else:
-        n_df = spark.read.parquet(gen_path)
-    n = n_df.count()
-    coarse = Quantizer(_np.asarray(doc["coarse"], dtype=_np.float64))
-    pq = ProductQuantizer(
-        [_np.asarray(b, dtype=_np.float64) for b in doc["books"]]
-    )
-    if fence is not None:
+        if sel is not None:
+            old_root = _cells_path(store_dir, doc["gen"])
+            hot = {f"cell={c}" for c in sel}
+            cold = [
+                d
+                for d in _os.listdir(old_root)
+                if d.startswith("cell=") and d not in hot
+            ]
+            _sk.carry_partitions(old_root, gen_path, cold)
+            n_df = spark.read.parquet(gen_path).filter(
+                F.col("cell").isin(sel)
+            )
+        else:
+            n_df = spark.read.parquet(gen_path)
+        n = n_df.count()
+        coarse = Quantizer(_np.asarray(doc["coarse"], dtype=_np.float64))
+        pq = ProductQuantizer(
+            [_np.asarray(b, dtype=_np.float64) for b in doc["books"]]
+        )
         # heartbeat + ownership check after the fold write (ADVICE r12
         # #1); a reclaimed compactor fails-stop before the repoint
-        _sk.renew_lease(fence[0], fence[1])
-    publish_ann_model(  # same model, new data generation — repoint LAST
-        store_dir, coarse, pq, cell_mass=doc.get("cell_mass"), gen=new_gen,
-        fence=fence,
-    )
-    if prune:
-        _prune_generations(store_dir, keep_from=new_gen - 1)
-    return n
+        _sk.renew_lease(*fence)
+        publish_ann_model(  # same model, new data generation — LAST
+            store_dir, coarse, pq, cell_mass=doc.get("cell_mass"),
+            gen=new_gen, fence=fence,
+        )
+        if prune:
+            _sk.prune_generations(_cells_root(store_dir), new_gen - 1)
+        return n

@@ -71,6 +71,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import storekernel as _sk
+from .sinks import foreach_sink
 
 
 def _current_version(table_dir: str) -> str | None:
@@ -215,9 +216,7 @@ def dedup_maintenance_stream(
             # (2) labels last — the commit point
             _commit_labels(labels, labels_dir, batch_id)
 
-    writer = docs_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return foreach_sink(
+        docs_stream, process_batch, checkpoint_dir,
+        trigger_available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

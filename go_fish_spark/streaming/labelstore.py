@@ -26,6 +26,10 @@ How it composes the existing disciplines:
   min-reachable-id), the smaller component of two same-batch rows is
   always the more-merged, correct one — so the reader is deterministic
   under every crash/replay interleaving.
+* **The loop** — per batch: writer lease, fold, sig append, label
+  append, commit publish, priced inline compaction of both surfaces —
+  is `storekernel.leased_store_stream`, the one loop the sig and ANN
+  store streams run too; this module supplies the batch body.
 
 Exactly-once argument (crash anywhere, replay the batch):
   1. batch signatures are APPENDED to the sig store first;
@@ -67,30 +71,15 @@ LABEL_SHARDS = 64
 
 # ---------------------------------------------------------------------------
 # Manifests — the atomic-publish primitive (storekernel.atomic_write_json)
-# at two grains:
+# at two grains, both read and written through the kernel:
 #   * ``<labels>_MANIFEST.json`` — the COMPACTION manifest of one label
-#     table: which generation directory is current and the highest
-#     ``_batch_id`` it folded (ADVICE r10 #2: the generation-directory +
-#     repoint-LAST commit the docstring promised, now real).
+#     table (storekernel.read_store_manifest): which generation
+#     directory is current and the highest ``_batch_id`` it folded.
 #   * ``<store_dir>/COMMIT.json`` — the CROSS-STORE commit of the
-#     maintenance stream: the highest batch whose signature AND label
-#     appends have BOTH landed. Readers of record go through
-#     :func:`read_committed_store` and never see sig/label skew
-#     (r10 verdict Next #3).
-
-
-#: generation path rule — the r13 kernel consolidation: the labelstore
-#: pioneered it and the kernel now owns it (the sig store is the second
-#: instantiation); the name stays for callers.
-_generation_path = _sk.store_generation_path
-
-
-def read_compaction_manifest(store_path: str) -> dict | None:
-    """The label table's compaction manifest (None = never compacted):
-    ``{"gen": N, "covered_max_batch": B, "version": k}`` — patches with
-    ``_batch_id <= B`` are folded into generation directory N; the
-    reader of record scans gen N plus only the newer patches."""
-    return _sk.read_store_manifest(store_path)
+#     maintenance stream (storekernel.publish_commit / read_commit):
+#     the highest batch whose signature AND label appends have BOTH
+#     landed. Readers of record go through :func:`read_committed_store`
+#     and never see sig/label skew (r10 verdict Next #3).
 
 
 def append_label_patch(
@@ -99,45 +88,12 @@ def append_label_patch(
     batch_id: int,
     n_shards: int = LABEL_SHARDS,
 ) -> None:
-    """Append an (id, component) upsert patch as sharded parquet rows:
-    attach the deterministic md5 shard of the id (the
-    `sources/sharding` rule — engine-reproducible, size-balanced) and
-    the batch stamp, ONE exchange on the shard key so each shard
-    directory receives exactly one file per batch."""
-    from ..sources.sharding import with_shard
-
-    (
-        with_shard(patch.select("id", "component"), "id", n_shards)
-        .withColumn("_batch_id", F.lit(int(batch_id)))
-        .repartition("shard")
-        .write.mode("append")
-        .partitionBy("shard")
-        .parquet(store_path)
+    """Append an (id, component) upsert patch as sharded parquet rows
+    (storekernel.append_sharded_patch keyed at the id): one file per
+    touched shard directory per batch, stamped with the batch id."""
+    _sk.append_sharded_patch(
+        patch.select("id", "component"), store_path, batch_id, "id", n_shards
     )
-
-
-def _live_sig_rows(spark, sig_dir: str) -> DataFrame | None:
-    """Live rows of the maintenance stream's sig surface: compaction
-    generation + newer patches (the kernel stitch — the sig store folds
-    like labels since r13). ONE implementation: the sigstore reader of
-    record, keyed at this surface's ``_id`` — two copies of the sig
-    read path could silently diverge the stream's mid-batch view from
-    what read_signature_store serves."""
-    from . import sigstore as _ss
-
-    return _ss._live_sig_rows(spark, sig_dir, "_id")
-
-
-def _live_label_rows(
-    spark, store_path: str, extra_filter=None
-) -> DataFrame | None:
-    """The raw LIVE rows of a label table: the current compaction
-    generation (if any) plus only the patches NEWER than what it
-    folded (per-shard cut — storekernel.patch_cut_filter). Superseded
-    patch files left behind by a crash between the manifest repoint
-    and the prune are filtered out by the cut — a torn compaction is
-    garbage, never corruption."""
-    return _sk.live_keyed_rows(spark, store_path, extra_filter)
 
 
 def _latest_wins(df: DataFrame) -> DataFrame:
@@ -165,7 +121,7 @@ def read_label_store(
         if committed_batch is not None
         else None
     )
-    df = _live_label_rows(spark, store_path, cut)
+    df = _sk.live_keyed_rows(spark, store_path, cut)
     if df is None:
         return None
     return _latest_wins(df)
@@ -185,7 +141,7 @@ def read_label_shard(spark, store_path: str, any_id, n_shards: int = LABEL_SHARD
         int(hashlib.md5(str(any_id).encode()).hexdigest()[:8], 16)
         % n_shards
     )
-    df = _live_label_rows(
+    df = _sk.live_keyed_rows(
         spark,
         store_path,
         (F.col("shard") == shard) & (F.col("id") == any_id),
@@ -200,7 +156,6 @@ def compact_label_store(
     store_path: str,
     n_shards: int = LABEL_SHARDS,
     prune: bool = True,
-    lease: bool = True,
     shards: list[int] | None = None,
     fence: tuple | None = None,
 ) -> int:
@@ -230,32 +185,23 @@ def compact_label_store(
     including half-carried links, is invisible garbage); after the
     repoint, during the prune → superseded files remain but every
     reader filters them with the per-shard cut. Single-writer
-    discipline (the LSM rule), ENFORCED (r11 verdict Next #3): the
-    fold takes the store's writer lease — an out-of-band compaction
-    racing the maintenance stream (which holds the lease for each
-    batch) is REFUSED with :class:`storekernel.LeaseHeld`; a crashed
-    holder's lease is reclaimed after its TTL. ``lease=False`` is for
-    callers that already hold it (the stream folding inline between
-    its own batches).
+    discipline (the LSM rule), ENFORCED (r11 verdict Next #3): called
+    without ``fence``, the fold takes the store's writer lease — an
+    out-of-band compaction racing the maintenance stream (which holds
+    the lease for each batch) is REFUSED with
+    :class:`storekernel.LeaseHeld`; a crashed holder's lease is
+    reclaimed after its TTL. A caller passing ``fence`` already holds
+    the lease (the stream folding inline inside its own batch) and the
+    fold publishes under that token (storekernel.held_fence).
 
     Returns the folded row count (hot shards only when selective)."""
-    if lease:
-        # lease scope is the PARENT store dir (the maintenance stream
-        # holds it there for each whole batch — that cross-refusal is
-        # the point). abspath first (ADVICE r12 #3): a bare relative
-        # store_path ("labels") would yield dirname "" and crash
-        # os.makedirs; note the scope contract means a label table must
-        # live in its own store directory, never two tables directly
-        # under one parent.
-        store_dir = _os.path.dirname(
-            _os.path.abspath(store_path.rstrip("/"))
-        )
-        lh = _sk.writer_lease(store_dir, _sk.unique_owner("compactor"))
-        with lh:
-            return compact_label_store(
-                spark, store_path, n_shards=n_shards, prune=prune,
-                lease=False, shards=shards, fence=lh.fence,
-            )
+    # lease scope is the PARENT store dir (the maintenance stream holds
+    # it there for each whole batch — that cross-refusal is the point).
+    # abspath first (ADVICE r12 #3): a bare relative store_path
+    # ("labels") would yield dirname "" and crash os.makedirs; note the
+    # scope contract means a label table must live in its own store
+    # directory, never two tables directly under one parent.
+    store_dir = _os.path.dirname(_os.path.abspath(store_path.rstrip("/")))
     # The fold itself is the kernel's generic sharded-keyed-store
     # compaction (r13 — factored so the sig store shares it verbatim):
     # covered cut, latest-wins rewrite of hot shards, hard-link carry
@@ -267,48 +213,29 @@ def compact_label_store(
     # half-committed batch into a generation stamped at its own
     # _batch_id, which would surface it to the committed reader before
     # its publish (r11 hardening).
-    committed = read_store_commit(
-        _os.path.dirname(_os.path.abspath(store_path.rstrip("/")))
-    )
-    return _sk.compact_keyed_store(
-        spark,
-        store_path,
-        key_cols=["id"],
-        # ties to the SMALLER component: merges only move labels down,
-        # so the smaller same-batch row is the more-merged, correct one
-        tiebreak=[F.col("component").asc()],
-        value_cols=["component"],
-        shard_key="id",
-        n_shards=n_shards,
-        shards=shards,
-        prune=prune,
-        committed=committed,
-        fence=fence,
-    )
+    with _sk.held_fence(store_dir, fence, "compactor") as fence:
+        return _sk.compact_keyed_store(
+            spark,
+            store_path,
+            key_cols=["id"],
+            # ties to the SMALLER component: merges only move labels
+            # down, so the smaller same-batch row is the more-merged one
+            tiebreak=[F.col("component").asc()],
+            value_cols=["component"],
+            shard_key="id",
+            n_shards=n_shards,
+            shards=shards,
+            prune=prune,
+            committed=_sk.read_commit(store_dir),
+            fence=fence,
+        )
 
 
 # ---------------------------------------------------------------------------
 # Cross-store commit (r10 verdict Next #3): sig + label appends publish
-# as ONE atomic manifest version, so a concurrent reader never sees the
-# window between them (sigs landed, labels not yet — sig/label skew).
-
-
-def publish_store_commit(
-    store_dir: str, batch_id: int, fence: tuple | None = None
-) -> dict:
-    """Publish batch ``batch_id`` as committed: both its signature and
-    label appends are durable. Forward-only (a replayed batch can never
-    move the commit point backwards); atomic rename is the commit
-    (storekernel.publish_commit). ``fence`` re-validates the writer
-    lease at the rename — a TTL-reclaimed writer is refused here
-    instead of publishing over the new holder (r12 verdict Next #2)."""
-    return _sk.publish_commit(store_dir, batch_id, fence=fence)
-
-
-def read_store_commit(store_dir: str) -> int | None:
-    """The highest atomically-published batch id (None = nothing
-    committed yet)."""
-    return _sk.read_commit(store_dir)
+# as ONE atomic manifest version (storekernel.publish_commit), so a
+# concurrent reader never sees the window between them (sigs landed,
+# labels not yet — sig/label skew).
 
 
 def read_committed_store(spark, store_dir: str) -> dict:
@@ -318,7 +245,9 @@ def read_committed_store(spark, store_dir: str) -> dict:
     pair — never a batch's signatures without its labels. Returns
     ``{"committed_batch": B|None, "labels": DF|None, "sigs": DF|None}``;
     both None before the first commit."""
-    committed = read_store_commit(store_dir)
+    from .sigstore import _live_sig_rows
+
+    committed = _sk.read_commit(store_dir)
     if committed is None:
         return {"committed_batch": None, "labels": None, "sigs": None}
     labels = read_label_store(
@@ -332,7 +261,7 @@ def read_committed_store(spark, store_dir: str) -> dict:
     # as -1: the ``<= committed`` cut keeps them (they predate every
     # commit point) and the latest-wins window ranks them below any
     # stamped re-append — the correct precedence, now a kernel rule.
-    sigs = _live_sig_rows(spark, _os.path.join(store_dir, "_sigs"))
+    sigs = _live_sig_rows(spark, _os.path.join(store_dir, "_sigs"), "_id")
     if sigs is not None:
         sigs = _sk.latest_wins(
             sigs.filter(F.col("_batch_id") <= committed),
@@ -420,29 +349,24 @@ def label_store_maintenance_stream(
     files-per-shard crosses ``compaction_file_cutoff``.
     ``on_compaction`` observes each decision dict (with ``batch_id``,
     ``store`` = ``"labels"`` or ``"sigs"`` and, when it ran,
-    ``compacted`` row count)."""
-    from functools import partial
+    ``compacted`` row count).
 
+    The loop — per-batch writer lease held across sig append → label
+    append → publish → inline compaction, so an out-of-band compactor
+    can never interleave — is storekernel.leased_store_stream; this
+    function supplies the batch body and the two surfaces."""
     from .dedup_maintenance import fold_label_batch
-    from .sigstore import append_sig_patch, compact_signature_store
+    from .sigstore import (
+        _live_sig_rows,
+        append_sig_patch,
+        compact_signature_store,
+    )
 
     spark = docs_stream.sparkSession
     labels_path = _os.path.join(store_dir, "labels")
     sig_dir = _os.path.join(store_dir, "_sigs")
-    # single-writer enforcement (r11 verdict Next #3): the appender
-    # holds the store's writer lease for the whole batch (sig append →
-    # label append → publish → inline compaction), so an out-of-band
-    # compactor can never interleave. Owner = the checkpoint identity:
-    # a crash-replayed batch under the same checkpoint reclaims its own
-    # stale lease immediately (the previous incarnation is dead by
-    # construction — same checkpoint, same process slot).
-    lease_owner = f"stream:{_os.path.abspath(checkpoint_dir)}"
 
-    def process_batch(bdf: DataFrame, batch_id: int) -> None:
-        with _sk.writer_lease(store_dir, lease_owner) as ld:
-            _run_batch(bdf, batch_id, (store_dir, ld["nonce"]))
-
-    def _run_batch(bdf: DataFrame, batch_id: int, fence: tuple) -> None:
+    def run_batch(bdf: DataFrame, batch_id: int, fence: tuple) -> bool:
         # Fresh-set derivation needs label EXISTENCE only — the raw
         # live rows (generation + uncut patches), no latest-wins
         # window (r11 verdict nit #2: the per-batch full-store window
@@ -451,10 +375,12 @@ def label_store_maintenance_stream(
         # derives from LABELS, not sigs: a crash between the sig and
         # label appends leaves orphan sigs whose ids must re-label on
         # replay (the module docstring's exactly-once argument).
-        live = _live_label_rows(spark, labels_path)
+        live = _sk.live_keyed_rows(spark, labels_path)
         patch = fold_label_batch(
             bdf, live, _latest_wins(live) if live is not None else None,
-            lambda: _live_sig_rows(spark, sig_dir).select("_id", "_sig"),
+            lambda: _live_sig_rows(spark, sig_dir, "_id").select(
+                "_id", "_sig"
+            ),
             # the batch stamp lets read_committed_store cut sigs at the
             # commit point; sharded like labels (r12 verdict Next #1)
             lambda fresh: append_sig_patch(
@@ -464,7 +390,7 @@ def label_store_maintenance_stream(
             seed, portable,
         )
         if patch is None:
-            return
+            return False
         # heartbeat between the two appends (ADVICE r12 #1): a batch
         # longer than the lease TTL renews instead of being reclaimed
         # mid-write; a batch whose lease WAS reclaimed fails-stop here
@@ -475,38 +401,31 @@ def label_store_maintenance_stream(
         # (3) publish: one atomic rename makes (sig, label) visible as
         # a matched pair to read_committed_store — FENCED: a
         # TTL-reclaimed writer is refused at this commit point
-        publish_store_commit(store_dir, batch_id, fence=fence)
-        if not compaction_policy:
-            return
-        # both surfaces price and fold under the SAME policy and lease
-        # (r12 verdict Next #1): same kernel plan, same selective-fold
-        # rule, committed-batch cap via COMMIT.json
-        for store, path, compact in (
-            ("labels", labels_path, compact_label_store),
-            ("sigs", sig_dir, partial(compact_signature_store, id_col="_id")),
-        ):
-            plan = compaction_plan(
-                path,
-                file_cutoff=compaction_file_cutoff,
-                min_patch_files=compaction_min_files,
-            )
-            if plan["action"] == "compact":
-                plan["compacted"] = compact(
-                    spark, path, n_shards=n_shards,
-                    lease=False,  # the stream already holds the lease
-                    fence=fence,  # ... and fences with its own nonce
-                    shards=(
-                        plan["shards_to_fold"]
-                        if plan["fold_scope"] == "selective"
-                        else None
-                    ),
-                )
-            if on_compaction is not None:
-                on_compaction(dict(plan, batch_id=batch_id, store=store))
+        _sk.publish_commit(store_dir, batch_id, fence=fence)
+        return True
 
-    writer = docs_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    def plan_of(path: str):
+        return lambda: compaction_plan(
+            path,
+            file_cutoff=compaction_file_cutoff,
+            min_patch_files=compaction_min_files,
+        )
+
+    # both surfaces price and fold under the SAME policy and lease
+    # (r12 verdict Next #1): same kernel plan, same selective-fold
+    # rule, committed-batch cap via COMMIT.json
+    surfaces = (
+        ("labels", plan_of(labels_path), "shards_to_fold",
+         lambda fold, fence: compact_label_store(
+             spark, labels_path, n_shards, shards=fold, fence=fence
+         )),
+        ("sigs", plan_of(sig_dir), "shards_to_fold",
+         lambda fold, fence: compact_signature_store(
+             spark, sig_dir, "_id", n_shards, shards=fold, fence=fence
+         )),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _sk.leased_store_stream(
+        docs_stream, store_dir, checkpoint_dir, run_batch,
+        surfaces if compaction_policy else (), on_compaction,
+        available_now,
+    )

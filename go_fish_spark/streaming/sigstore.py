@@ -32,7 +32,9 @@ retention — the identical discipline labels (labelstore) and ANN codes
 written before the shard/stamp discipline fold in as batch -1 (they
 lose to any stamped re-append — the read_committed_store precedence);
 ``covered_default=-2`` keeps a never-folded shard's legacy rows live
-until ITS fold.
+until ITS fold. The stream's per-batch lease, append and inline fold
+run in the kernel's ``leased_store_stream``, the loop the label and
+ANN streams share.
 
 Reference anchor: the persisted-state pattern of `state/kv.go:45-80` /
 `backend.go:64-188` applied to the sketch family (gap category —
@@ -58,9 +60,6 @@ from . import storekernel as _sk
 
 SIG_SHARDS = 64
 
-#: sig tables price folds exactly like label tables — the kernel plan
-sig_compaction_plan = _sk.sharded_compaction_plan
-
 
 def append_sig_patch(
     patch: DataFrame,
@@ -69,21 +68,11 @@ def append_sig_patch(
     id_col: str = "doc_id",
     n_shards: int = SIG_SHARDS,
 ) -> None:
-    """Append one batch of signature rows as sharded parquet: attach
-    the deterministic md5 shard of the id (the `sources/sharding` rule
-    — the same bucket labels use) and the batch stamp, ONE exchange on
-    the shard key so each touched shard directory receives exactly one
-    file per batch (the labelstore append_label_patch, for sigs)."""
-    from ..sources.sharding import with_shard
-
-    (
-        with_shard(patch, id_col, n_shards)
-        .withColumn("_batch_id", F.lit(int(batch_id)))
-        .repartition("shard")
-        .write.mode("append")
-        .partitionBy("shard")
-        .parquet(store_path)
-    )
+    """Append one batch of signature rows as sharded parquet
+    (storekernel.append_sharded_patch keyed at ``id_col`` — the same
+    md5 bucket labels use): one file per touched shard directory per
+    batch, stamped with the batch id."""
+    _sk.append_sharded_patch(patch, store_path, batch_id, id_col, n_shards)
 
 
 def signature_store_stream(
@@ -114,12 +103,13 @@ def signature_store_stream(
     continuous query.
 
     The appender holds the store's writer lease for each batch (the
-    single-writer rule every kernel store enforces) — an out-of-band
+    single-writer rule every kernel store enforces;
+    storekernel.leased_store_stream runs the loop) — an out-of-band
     :func:`compact_signature_store` racing an in-flight append is
     refused instead of interleaving. ``compaction_policy=True`` prices
-    :func:`sig_compaction_plan` after each batch and folds inline
-    (selectively when only some shards fragmented), under the same
-    lease; ``on_compaction`` observes each decision dict."""
+    storekernel.sharded_compaction_plan after each batch and folds
+    inline (selectively when only some shards fragmented), under the
+    same lease; ``on_compaction`` observes each decision dict."""
     spark = docs_stream.sparkSession
     proj = docs_stream.select(
         F.col(id_col),
@@ -128,45 +118,37 @@ def signature_store_stream(
             "_sig"
         ),
     )
-    store_dir = _os.path.dirname(_os.path.abspath(store_path.rstrip("/")))
-    lease_owner = f"stream:{_os.path.abspath(checkpoint_dir)}"
 
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        with _sk.writer_lease(store_dir, lease_owner) as ld:
-            fence = (store_dir, ld["nonce"])
-            # one row per id per batch (the labelstore rule): a source
-            # emitting an id twice in one micro-batch must not write
-            # two same-stamp rows whose latest-wins pick could differ
-            # across readers before a fold canonicalizes them
-            append_sig_patch(
-                bdf.dropDuplicates([id_col]),
-                store_path, batch_id, id_col, n_shards,
-            )
-            if compaction_policy:
-                plan = sig_compaction_plan(
-                    store_path,
-                    file_cutoff=compaction_file_cutoff,
-                    min_patch_files=compaction_min_files,
-                )
-                if plan["action"] == "compact":
-                    plan["compacted"] = compact_signature_store(
-                        spark, store_path, id_col=id_col,
-                        n_shards=n_shards, lease=False, fence=fence,
-                        shards=(
-                            plan["shards_to_fold"]
-                            if plan["fold_scope"] == "selective"
-                            else None
-                        ),
-                    )
-                if on_compaction is not None:
-                    on_compaction(dict(plan, batch_id=batch_id))
+    def run_batch(bdf: DataFrame, batch_id: int, fence: tuple) -> bool:
+        # one row per id per batch (the labelstore rule): a source
+        # emitting an id twice in one micro-batch must not write two
+        # same-stamp rows whose latest-wins pick could differ across
+        # readers before a fold canonicalizes them
+        append_sig_patch(
+            bdf.dropDuplicates([id_col]), store_path, batch_id, id_col,
+            n_shards,
+        )
+        return True
 
-    writer = proj.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
+    surface = (
+        None,
+        lambda: _sk.sharded_compaction_plan(
+            store_path,
+            file_cutoff=compaction_file_cutoff,
+            min_patch_files=compaction_min_files,
+        ),
+        "shards_to_fold",
+        lambda fold, fence: compact_signature_store(
+            spark, store_path, id_col, n_shards, shards=fold, fence=fence
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _sk.leased_store_stream(
+        proj,
+        _os.path.dirname(_os.path.abspath(store_path.rstrip("/"))),
+        checkpoint_dir, run_batch,
+        (surface,) if compaction_policy else (), on_compaction,
+        available_now,
+    )
 
 
 def _live_sig_rows(
@@ -225,7 +207,6 @@ def compact_signature_store(
     n_shards: int = SIG_SHARDS,
     shards: list[int] | None = None,
     prune: bool = True,
-    lease: bool = True,
     fence: tuple | None = None,
 ) -> int:
     """Fold the sig append history to one latest-wins row per id in a
@@ -242,37 +223,27 @@ def compact_signature_store(
     Legacy files (no shard/stamp) fold in as batch -1;
     ``covered_default=-2`` keeps a never-folded shard's legacy rows
     live until its own fold, and a FULL fold prunes the legacy files
-    it just absorbed. Takes the store's writer lease (refused while
-    the maintenance stream holds it); ``lease=False`` only for callers
-    that already hold it. Returns the folded row count."""
-    if lease:
-        store_dir = _os.path.dirname(
-            _os.path.abspath(store_path.rstrip("/"))
+    it just absorbed. Called without ``fence`` the fold takes the
+    store's writer lease (refused while the maintenance stream holds
+    it); with ``fence`` the caller already holds it
+    (storekernel.held_fence). Returns the folded row count."""
+    store_dir = _os.path.dirname(_os.path.abspath(store_path.rstrip("/")))
+    with _sk.held_fence(store_dir, fence, "compactor") as fence:
+        return _sk.compact_keyed_store(
+            spark,
+            store_path,
+            key_cols=[id_col],
+            # value columns and the all-values-ascending tiebreak derive
+            # from the live frame INSIDE the kernel — a second
+            # mergeSchema frame built here just to list columns would
+            # double the fold's footer-merge pass
+            shard_key=id_col,
+            n_shards=n_shards,
+            shards=shards,
+            prune=prune,
+            committed=_sk.read_commit(store_dir),
+            fence=fence,
+            merge_schema=True,
+            legacy_fill=True,
+            never_folded_cut=-2,
         )
-        lh = _sk.writer_lease(store_dir, _sk.unique_owner("compactor"))
-        with lh:
-            return compact_signature_store(
-                spark, store_path, id_col=id_col, n_shards=n_shards,
-                shards=shards, prune=prune, lease=False, fence=lh.fence,
-            )
-    committed = _sk.read_commit(
-        _os.path.dirname(_os.path.abspath(store_path.rstrip("/")))
-    )
-    return _sk.compact_keyed_store(
-        spark,
-        store_path,
-        key_cols=[id_col],
-        # value columns and the all-values-ascending tiebreak derive
-        # from the live frame INSIDE the kernel — a second mergeSchema
-        # frame built here just to list columns would double the fold's
-        # footer-merge pass
-        shard_key=id_col,
-        n_shards=n_shards,
-        shards=shards,
-        prune=prune,
-        committed=committed,
-        fence=fence,
-        merge_schema=True,
-        legacy_fill=True,
-        never_folded_cut=-2,
-    )

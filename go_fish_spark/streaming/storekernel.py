@@ -44,6 +44,7 @@ Reference anchor: the persisted-state discipline of `backend.go:64-188`
 
 from __future__ import annotations
 
+import contextlib as _contextlib
 import json as _json
 import os as _os
 import shutil as _shutil
@@ -587,11 +588,36 @@ def carry_partitions(
 
 # ---------------------------------------------------------------------------
 # Sharded keyed store — the GENERIC fold discipline (r12 verdict Next
-# #1): one implementation of manifest + generation + per-shard
-# selective compaction + latest-wins read, parameterized by key,
-# tiebreak, and value columns. The labelstore pioneered every rule
-# here (r10-r12); the sig store is the second instantiation — a third
-# hand-rolled copy is exactly what this kernel exists to prevent.
+# #1): one implementation of sharded append + manifest + generation +
+# per-shard selective compaction + latest-wins read, parameterized by
+# key, tiebreak, and value columns. The label and sig stores are its
+# two instantiations; their maintenance streams (and the ANN store's)
+# run through :func:`leased_store_stream` below, so neither the fold
+# nor the per-batch lease loop has a per-store copy.
+
+
+def append_sharded_patch(
+    patch: DataFrame,
+    store_path: str,
+    batch_id: int,
+    shard_key: str,
+    n_shards: int,
+) -> None:
+    """Append one batch's patch as sharded parquet rows: attach the
+    deterministic md5 shard of ``shard_key`` (the `sources/sharding`
+    rule — engine-reproducible, size-balanced) and the batch stamp,
+    ONE exchange on the shard key so each touched shard directory
+    receives exactly one file per batch."""
+    from ..sources.sharding import with_shard
+
+    (
+        with_shard(patch, shard_key, n_shards)
+        .withColumn("_batch_id", F.lit(int(batch_id)))
+        .repartition("shard")
+        .write.mode("append")
+        .partitionBy("shard")
+        .parquet(store_path)
+    )
 
 
 def store_manifest_path(store_path: str) -> str:
@@ -1018,6 +1044,42 @@ def compact_keyed_store(
     return n
 
 
+def read_amp_decision(
+    live: dict,
+    gate_files: int,
+    file_cutoff: float,
+    min_files: int,
+    key_prefix: str,
+) -> tuple[float, str, list[int], str]:
+    """The read-amplification rule every compaction plan prices (label,
+    sig and ANN stores, and the sharded corpus layout). ``live`` maps
+    leaf directory name → live file count (:func:`walk_parquet_files`);
+    read amplification is the mean over its directories (1.0 is the
+    compacted ideal). Action is ``"compact"`` when that mean reaches
+    ``file_cutoff`` AND ``gate_files`` reaches ``min_files`` (a
+    near-empty store is never worth a rewrite). The fold list holds the
+    ``<key_prefix><n>`` directories whose OWN count crossed the cutoff;
+    the scope is ``"full"`` when that is none or all of them, else
+    ``"selective"`` (cold directories are hard-link-carried). Returns
+    ``(read_amp, action, fold, scope)``."""
+    read_amp = (sum(live.values()) / len(live)) if live else 0.0
+    action = (
+        "compact"
+        if read_amp >= file_cutoff and gate_files >= min_files
+        else "skip"
+    )
+    keyed = {k: nf for k, nf in live.items() if k.startswith(key_prefix)}
+    to_fold = sorted(
+        int(k.split("=", 1)[1]) for k, nf in keyed.items() if nf >= file_cutoff
+    )
+    scope = (
+        "full"
+        if not to_fold or len(to_fold) == len(keyed)
+        else "selective"
+    )
+    return round(read_amp, 3), action, to_fold, scope
+
+
 def sharded_compaction_plan(
     store_path: str,
     file_cutoff: float = 4.0,
@@ -1047,37 +1109,21 @@ def sharded_compaction_plan(
     live = {
         s: patch_shards.get(s, 0) + gen_shards.get(s, 0) for s in shards
     }
-    read_amp = (sum(live.values()) / len(live)) if live else 0.0
-    action = (
-        "compact"
-        if read_amp >= file_cutoff and patch_files >= min_patch_files
-        else "skip"
-    )
-    to_fold = sorted(
-        int(s.split("=", 1)[1])
-        for s, nf in live.items()
-        if s.startswith("shard=") and nf >= file_cutoff
+    read_amp, action, to_fold, fold_scope = read_amp_decision(
+        live, patch_files, file_cutoff, min_patch_files, "shard="
     )
     # legacy (pre-shard-discipline) files live at non-"shard=" leaves;
     # they belong to NO single shard, so only a FULL fold can absorb
-    # them — force full scope while any exist, and never let their
-    # leaf keys deflate the full/selective comparison denominator.
-    shard_keys = [s for s in live if s.startswith("shard=")]
+    # them — force full scope while any exist (the rule's denominator
+    # counts "shard=" leaves only, so theirs never deflate it)
     legacy_files = sum(
         nf for s, nf in patch_shards.items() if not s.startswith("shard=")
     )
-    fold_scope = (
-        "full"
-        if (
-            legacy_files > 0
-            or not to_fold
-            or len(to_fold) == len(shard_keys)
-        )
-        else "selective"
-    )
+    if legacy_files:
+        fold_scope = "full"
     return {
         "action": action,
-        "read_amp": round(read_amp, 3),
+        "read_amp": read_amp,
         "file_cutoff": file_cutoff,
         "patch_files": patch_files,
         "patch_bytes": patch_bytes,
@@ -1405,3 +1451,82 @@ class writer_lease:
             nonce=self.doc.get("nonce") if self.doc else None,
         )
         return False
+
+
+@_contextlib.contextmanager
+def held_fence(store_dir: str, fence: tuple | None, owner_prefix: str):
+    """``with held_fence(store_dir, fence, "compactor") as fence:`` —
+    the fence a one-shot writer (a compactor, a refit) publishes under.
+    A caller that passes ``fence`` already holds the store's lease (an
+    inline fold inside a :func:`leased_store_stream` batch) and keeps
+    it; one that passes None gets the lease taken here under a
+    :func:`unique_owner` identity, released on exit — and
+    :class:`LeaseHeld` while another writer (e.g. the maintenance
+    stream, mid-batch) holds it."""
+    if fence is not None:
+        yield fence
+        return
+    lease = writer_lease(store_dir, unique_owner(owner_prefix))
+    with lease:
+        yield lease.fence
+
+
+def leased_store_stream(
+    stream: DataFrame,
+    store_dir: str,
+    checkpoint_dir: str,
+    run_batch,
+    surfaces,
+    on_compaction,
+    available_now: bool,
+):
+    """Start the maintenance loop every durable store stream runs
+    (returns the StreamingQuery): per micro-batch, take the store's
+    writer lease, run ``run_batch(bdf, batch_id, fence)`` under it,
+    then — when that returns True (the batch committed something) —
+    fold each compaction surface inline, still under the same lease.
+
+    Lease owner = ``stream:<abs checkpoint>``: a crash-replayed batch
+    under the same checkpoint reclaims its own stale lease immediately
+    (the previous incarnation is dead by construction — same
+    checkpoint, same process slot), while an out-of-band compactor is
+    refused with :class:`LeaseHeld` for the whole batch. ``fence`` is
+    the ``(store_dir, nonce)`` pair the body's fenced publishes and
+    renewals take.
+
+    ``surfaces`` lists ``(name, plan, fold_key, compact)``: ``plan()``
+    prices the surface's decision dict; on ``"compact"``,
+    ``compact(fold, fence)`` folds it — ``fold`` is ``plan[fold_key]``
+    when the plan's scope is selective, else None (full fold) — and
+    its row count lands in the dict as ``compacted``.
+    ``on_compaction`` observes every dict with ``batch_id`` (and
+    ``store=name`` when the name is not None). The query runs through
+    :func:`~go_fish_spark.streaming.sinks.foreach_sink` at
+    ``checkpoint_dir``; ``available_now`` drains what is available and
+    stops."""
+    from .sinks import foreach_sink
+
+    owner = f"stream:{_os.path.abspath(checkpoint_dir)}"
+
+    def process_batch(bdf: DataFrame, batch_id: int) -> None:
+        lease = writer_lease(store_dir, owner)
+        with lease:
+            if not run_batch(bdf, batch_id, lease.fence):
+                return
+            for name, plan_of, fold_key, compact in surfaces:
+                plan = plan_of()
+                if plan["action"] == "compact":
+                    plan["compacted"] = compact(
+                        plan[fold_key]
+                        if plan["fold_scope"] == "selective"
+                        else None,
+                        lease.fence,
+                    )
+                if on_compaction is not None:
+                    tag = {"store": name} if name is not None else {}
+                    on_compaction(dict(plan, batch_id=batch_id, **tag))
+
+    return foreach_sink(
+        stream, process_batch, checkpoint_dir,
+        trigger_available_now=available_now,
+    )

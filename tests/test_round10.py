@@ -223,6 +223,7 @@ def test_label_store_crash_between_sigs_and_labels_replays(
     import os
 
     from go_fish_spark.streaming import labelstore as ls
+    from go_fish_spark.streaming import storekernel as sk
 
     src = str(tmp_path / "in")
     store = str(tmp_path / "store")
@@ -306,7 +307,7 @@ def test_label_store_crash_between_sigs_and_labels_replays(
     assert raw.count() > len(seen)  # history retained -> true upserts
     n = ls.compact_label_store(spark, labels_path, n_shards=8)
     assert n == len(seen)
-    man = ls.read_compaction_manifest(labels_path)
+    man = sk.read_store_manifest(labels_path)
     assert man is not None and man["gen"] == 1
     compacted = sorted(
         map(tuple, ls.read_label_store(spark, labels_path).collect())

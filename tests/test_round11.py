@@ -153,13 +153,14 @@ def test_compaction_generation_manifest_and_reader_of_record(
     spark, tmp_path
 ):
     from go_fish_spark.streaming import labelstore as ls
+    from go_fish_spark.streaming import storekernel as sk
 
     path = str(tmp_path / "labels")
     _mk_patches(spark, ls, path, n_batches=3)
     before = sorted(map(tuple, ls.read_label_store(spark, path).collect()))
     n = ls.compact_label_store(spark, path, n_shards=4)
     assert n == len(before)
-    man = ls.read_compaction_manifest(path)
+    man = sk.read_store_manifest(path)
     assert (man["gen"], man["covered_max_batch"], man["version"]) == (1, 2, 1)
     # a full fold resets the per-shard map to a uniform cut (r12)
     assert man["covered"] == {} and man["covered_default"] == 2
@@ -182,9 +183,9 @@ def test_compaction_generation_manifest_and_reader_of_record(
     # lazy frame over it) and pruned only by the THIRD fold
     n2 = ls.compact_label_store(spark, path, n_shards=4)
     assert n2 == len(before)
-    man2 = ls.read_compaction_manifest(path)
+    man2 = sk.read_store_manifest(path)
     assert man2["gen"] == 2 and man2["covered_max_batch"] == 7
-    assert os.path.exists(ls._generation_path(path, 1))
+    assert os.path.exists(sk.store_generation_path(path, 1))
     got2 = dict(
         (r.id, r.component)
         for r in ls.read_label_store(spark, path).collect()
@@ -195,8 +196,8 @@ def test_compaction_generation_manifest_and_reader_of_record(
         path, batch_id=8, n_shards=4,
     )
     ls.compact_label_store(spark, path, n_shards=4)
-    assert not os.path.exists(ls._generation_path(path, 1))
-    assert os.path.exists(ls._generation_path(path, 2))
+    assert not os.path.exists(sk.store_generation_path(path, 1))
+    assert os.path.exists(sk.store_generation_path(path, 2))
 
 
 def _live_parquet_files(root):
@@ -215,6 +216,7 @@ def test_torn_compaction_invisible_until_repoint(spark, tmp_path):
     manifest repoint leaves the reader on the old (complete) view; a
     re-run of compaction recovers by rewriting the torn generation."""
     from go_fish_spark.streaming import labelstore as ls
+    from go_fish_spark.streaming import storekernel as sk
 
     path = str(tmp_path / "labels")
     _mk_patches(spark, ls, path, n_batches=2)
@@ -222,9 +224,9 @@ def test_torn_compaction_invisible_until_repoint(spark, tmp_path):
     # simulate the torn write: generation 1 exists, no manifest
     latest = ls.read_label_store(spark, path)
     ls.append_label_patch(
-        latest, ls._generation_path(path, 1), batch_id=1, n_shards=4
+        latest, sk.store_generation_path(path, 1), batch_id=1, n_shards=4
     )
-    assert ls.read_compaction_manifest(path) is None
+    assert sk.read_store_manifest(path) is None
     assert (
         sorted(map(tuple, ls.read_label_store(spark, path).collect()))
         == before
@@ -263,15 +265,16 @@ def test_read_label_shard_prunes_after_compaction(spark, tmp_path):
 
 def test_store_commit_forward_only(tmp_path):
     from go_fish_spark.streaming import labelstore as ls
+    from go_fish_spark.streaming import storekernel as sk
 
     d = str(tmp_path)
-    assert ls.read_store_commit(d) is None
-    ls.publish_store_commit(d, 5)
-    assert ls.read_store_commit(d) == 5
-    ls.publish_store_commit(d, 3)  # a replayed batch can't move it back
-    assert ls.read_store_commit(d) == 5
-    ls.publish_store_commit(d, 6)
-    assert ls.read_store_commit(d) == 6
+    assert sk.read_commit(d) is None
+    sk.publish_commit(d, 5)
+    assert sk.read_commit(d) == 5
+    sk.publish_commit(d, 3)  # a replayed batch can't move it back
+    assert sk.read_commit(d) == 5
+    sk.publish_commit(d, 6)
+    assert sk.read_commit(d) == 6
 
 
 def test_committed_reader_never_sees_sig_label_skew(spark, tmp_path):
@@ -281,6 +284,7 @@ def test_committed_reader_never_sees_sig_label_skew(spark, tmp_path):
     matched (sig, label) pair; after publish it serves the new pair."""
     from go_fish_spark.operators.dedup import minhash_signature
     from go_fish_spark.streaming import labelstore as ls
+    from go_fish_spark.streaming import storekernel as sk
 
     store = str(tmp_path / "store")
     labels_path = os.path.join(store, "labels")
@@ -302,7 +306,7 @@ def test_committed_reader_never_sees_sig_label_skew(spark, tmp_path):
         spark.createDataFrame([(1, 1), (2, 2)], "id long, component long"),
         labels_path, batch_id=0, n_shards=4,
     )
-    ls.publish_store_commit(store, 0)
+    sk.publish_commit(store, 0)
     view0 = ls.read_committed_store(spark, store)
     assert view0["committed_batch"] == 0
     ids0 = {r._id for r in view0["sigs"].collect()}
@@ -326,7 +330,7 @@ def test_committed_reader_never_sees_sig_label_skew(spark, tmp_path):
     assert {r.id for r in view_b["labels"].collect()} == {1, 2}
 
     # publish: both surfaces advance together
-    ls.publish_store_commit(store, 1)
+    sk.publish_commit(store, 1)
     view1 = ls.read_committed_store(spark, store)
     assert {r._id for r in view1["sigs"].collect()} == {1, 2, 3}
     assert {r.id for r in view1["labels"].collect()} == {1, 2, 3}
@@ -358,53 +362,6 @@ def test_compaction_plan_many_small_vs_few_large(spark, tmp_path):
     assert plan3["read_amp"] <= 1.0
     after = sorted(map(tuple, ls.read_label_store(spark, many).collect()))
     assert after == before
-
-
-def test_maintenance_stream_runs_compaction_policy(spark, tmp_path):
-    """E2E: the stream prices compaction after each commit and folds
-    the store when the cutoff trips; the read-back still equals the
-    full recompute (parity through compaction)."""
-    from test_round10 import _LS_BATCHES, _LS_SCHEMA, _full_labels
-
-    from go_fish_spark.streaming.labelstore import (
-        label_store_maintenance_stream,
-        read_compaction_manifest,
-        read_label_store,
-    )
-
-    src = str(tmp_path / "in")
-    store = str(tmp_path / "store")
-    cp = str(tmp_path / "cp")
-    os.makedirs(src)
-    decisions = []
-
-    def _drain():
-        label_store_maintenance_stream(
-            spark.readStream.schema(_LS_SCHEMA).parquet(src),
-            store, cp, bands=32, threshold=0.3, portable=True,
-            n_shards=4, compaction_policy=True,
-            compaction_file_cutoff=1.0, compaction_min_files=1,
-            on_compaction=decisions.append,
-        ).awaitTermination(120)
-
-    seen = []
-    for batch in _LS_BATCHES:
-        spark.createDataFrame(batch, _LS_SCHEMA).write.mode(
-            "append"
-        ).parquet(src)
-        seen.extend(batch)
-        _drain()
-    assert any(d["action"] == "compact" for d in decisions)
-    assert read_compaction_manifest(os.path.join(store, "labels"))
-    got = sorted(
-        map(
-            tuple,
-            read_label_store(
-                spark, os.path.join(store, "labels")
-            ).collect(),
-        )
-    )
-    assert got == _full_labels(spark, seen)
 
 
 # --- r10 Next #2: choose_ann / run_ann -----------------------------------------
@@ -1210,6 +1167,7 @@ def test_cli_label_store_committed_read(tmp_path, spark):
 
     from go_fish_spark.operators.dedup import minhash_signature
     from go_fish_spark.streaming import labelstore as ls
+    from go_fish_spark.streaming import storekernel as sk
 
     store = str(tmp_path / "store")
     os.makedirs(store)
@@ -1225,7 +1183,7 @@ def test_cli_label_store_committed_read(tmp_path, spark):
         spark.createDataFrame([(1, 1)], "id long, component long"),
         os.path.join(store, "labels"), batch_id=0, n_shards=4,
     )
-    ls.publish_store_commit(store, 0)
+    sk.publish_commit(store, 0)
     # batch 1 half-landed (labels only, never published)
     ls.append_label_patch(
         spark.createDataFrame([(2, 2)], "id long, component long"),
@@ -1375,57 +1333,6 @@ def test_ann_store_compaction_policy_and_fold(spark, tmp_path):
     assert search_after == search_before
 
 
-def test_ann_store_stream_with_compaction_policy(spark, tmp_path):
-    """E2E: the ANN maintenance stream prices compaction after each
-    batch and folds when the cutoff trips; read-back still equals the
-    one-shot encode."""
-    import os
-
-    from go_fish_spark.streaming import annstore
-
-    df = _ann_corpus(spark, 90)
-    src = str(tmp_path / "in")
-    store = str(tmp_path / "ann")
-    cp = str(tmp_path / "cp")
-    os.makedirs(src)
-    decisions = []
-
-    def drain():
-        annstore.ann_store_stream(
-            spark.readStream.schema(
-                "vec_id long, embedding array<double>"
-            ).parquet(src),
-            store, cp, n_cells=8, m=4, ksub=16,
-            compaction_policy=True, compaction_file_cutoff=1.0,
-            compaction_min_files=1, on_compaction=decisions.append,
-        ).awaitTermination(120)
-
-    for b in range(3):
-        df.filter(F.col("vec_id") % 3 == b).write.mode("append").parquet(
-            src
-        )
-        drain()
-    assert any(d["action"] == "compact" for d in decisions)
-    coarse, pq, _ = annstore.load_ann_model(store)
-    want = sorted(
-        map(
-            tuple,
-            annstore.encode_ann_batch(df, coarse, pq)
-            .select("_id", "cell", F.col("codes").cast("string"))
-            .collect(),
-        )
-    )
-    got = sorted(
-        map(
-            tuple,
-            annstore.read_ann_store(spark, store)
-            .select("_id", "cell", F.col("codes").cast("string"))
-            .collect(),
-        )
-    )
-    assert got == want
-
-
 # --- r11 hardening: torn-first-append bootstrap + committed-cut compaction ----
 
 
@@ -1453,6 +1360,7 @@ def test_compaction_never_folds_or_drops_unpublished_batches(
     import os
 
     from go_fish_spark.streaming import labelstore as ls
+    from go_fish_spark.streaming import storekernel as sk
 
     store = str(tmp_path / "store")
     labels = os.path.join(store, "labels")
@@ -1461,7 +1369,7 @@ def test_compaction_never_folds_or_drops_unpublished_batches(
         spark.createDataFrame([(1, 1), (2, 2)], "id long, component long"),
         labels, batch_id=0, n_shards=4,
     )
-    ls.publish_store_commit(store, 0)
+    sk.publish_commit(store, 0)
     # batch 1 half-landed: labels appended, never published
     ls.append_label_patch(
         spark.createDataFrame([(3, 3)], "id long, component long"),
@@ -1469,7 +1377,7 @@ def test_compaction_never_folds_or_drops_unpublished_batches(
     )
     n = ls.compact_label_store(spark, labels, n_shards=4)
     assert n == 2  # only the published rows folded
-    man = ls.read_compaction_manifest(labels)
+    man = sk.read_store_manifest(labels)
     assert man["covered_max_batch"] == 0
     # committed reader: still exactly the published view
     view = ls.read_committed_store(spark, store)
@@ -1480,7 +1388,7 @@ def test_compaction_never_folds_or_drops_unpublished_batches(
     )
     assert raw == [(1, 1), (2, 2), (3, 3)]
     # once published, the batch becomes visible and compactable
-    ls.publish_store_commit(store, 1)
+    sk.publish_commit(store, 1)
     view2 = ls.read_committed_store(spark, store)
     assert {r.id for r in view2["labels"].collect()} == {1, 2, 3}
     n2 = ls.compact_label_store(spark, labels, n_shards=4)

@@ -94,6 +94,7 @@ def test_ann_stream_histograms_at_loaded_model_cell_count(spark, tmp_path):
 
 def test_committed_store_legacy_sigs_survive_schema_merge(spark, tmp_path):
     from go_fish_spark.streaming import labelstore as ls
+    from go_fish_spark.streaming import storekernel as sk
 
     store = str(tmp_path / "store")
     sig_dir = os.path.join(store, "_sigs")
@@ -111,7 +112,7 @@ def test_committed_store_legacy_sigs_survive_schema_merge(spark, tmp_path):
         ),
         os.path.join(store, "labels"), batch_id=0, n_shards=4,
     )
-    ls.publish_store_commit(store, 0)
+    sk.publish_commit(store, 0)
 
     view = ls.read_committed_store(spark, store)
     got = {r["_id"]: r["_sig"] for r in view["sigs"].collect()}
@@ -122,7 +123,7 @@ def test_committed_store_legacy_sigs_survive_schema_merge(spark, tmp_path):
     spark.createDataFrame(
         [(1, "sigA2")], "_id long, _sig string"
     ).withColumn("_batch_id", F.lit(1)).write.mode("append").parquet(sig_dir)
-    ls.publish_store_commit(store, 1)
+    sk.publish_commit(store, 1)
     got2 = {
         r["_id"]: r["_sig"]
         for r in ls.read_committed_store(spark, store)["sigs"].collect()
@@ -276,6 +277,7 @@ def test_selective_label_compaction_folds_only_hot_shards(spark, tmp_path):
     their live patches keep serving; the reader of record equals the
     full-fold answer throughout."""
     from go_fish_spark.streaming import labelstore as ls
+    from go_fish_spark.streaming import storekernel as sk
 
     path = str(tmp_path / "labels")
     n_shards = 4
@@ -292,8 +294,8 @@ def test_selective_label_compaction_folds_only_hot_shards(spark, tmp_path):
         path, batch_id=0, n_shards=n_shards,
     )
     ls.compact_label_store(spark, path, n_shards=n_shards)
-    man1 = ls.read_compaction_manifest(path)
-    gen1 = ls._generation_path(path, 1)
+    man1 = sk.read_store_manifest(path)
+    gen1 = sk.store_generation_path(path, 1)
     cold_inodes = {
         f: os.stat(f).st_ino
         for f in _live_parquet_files(gen1)
@@ -324,13 +326,13 @@ def test_selective_label_compaction_folds_only_hot_shards(spark, tmp_path):
         spark, path, n_shards=n_shards, shards=[hot]
     )
     assert n == len(hot_ids)
-    man2 = ls.read_compaction_manifest(path)
+    man2 = sk.read_store_manifest(path)
     assert man2["gen"] == 2
     # hot shard's cut advanced; default (cold shards) unchanged
     assert man2["covered"] == {str(hot): 3}
     assert man2["covered_default"] == man1["covered_default"] == 0
     # cold generation files were CARRIED: same inode, zero bytes moved
-    gen2 = ls._generation_path(path, 2)
+    gen2 = sk.store_generation_path(path, 2)
     carried = {
         f: os.stat(f).st_ino
         for f in _live_parquet_files(gen2)
@@ -352,7 +354,7 @@ def test_selective_label_compaction_folds_only_hot_shards(spark, tmp_path):
     assert got == expect
     # a later FULL fold resets the map and still agrees
     ls.compact_label_store(spark, path, n_shards=n_shards)
-    man3 = ls.read_compaction_manifest(path)
+    man3 = sk.read_store_manifest(path)
     assert man3["covered"] == {} and man3["covered_default"] == 4
     got3 = {
         r.id: r.component

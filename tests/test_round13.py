@@ -297,7 +297,6 @@ def test_compact_refused_at_publish_when_lease_stolen(spark, tmp_path):
     from go_fish_spark.streaming.labelstore import (
         append_label_patch,
         compact_label_store,
-        read_compaction_manifest,
         read_label_store,
     )
 
@@ -310,10 +309,10 @@ def test_compact_refused_at_publish_when_lease_stolen(spark, tmp_path):
     holder = sk.acquire_lease(store_dir, "the-new-holder", ttl_s=600)
     with pytest.raises(sk.LeaseLost):
         compact_label_store(
-            spark, labels, n_shards=4, lease=False,
+            spark, labels, n_shards=4,
             fence=(store_dir, "reclaimed-dead-nonce"),
         )
-    assert read_compaction_manifest(labels) is None  # repoint refused
+    assert sk.read_store_manifest(labels) is None  # repoint refused
     got = {
         (r["id"], r["component"])
         for r in read_label_store(spark, labels).collect()
@@ -373,7 +372,6 @@ def test_cross_process_compactor_refused_then_folds(spark, tmp_path):
     from go_fish_spark.streaming import storekernel as sk
     from go_fish_spark.streaming.labelstore import (
         label_store_maintenance_stream,
-        read_compaction_manifest,
         read_label_store,
     )
 
@@ -405,7 +403,7 @@ def test_cross_process_compactor_refused_then_folds(spark, tmp_path):
     try:
         line = child.stdout.readline().strip()
         assert line == "REFUSED", f"child said {line!r}"
-        assert read_compaction_manifest(labels) is None  # nothing folded
+        assert sk.read_store_manifest(labels) is None  # nothing folded
         sk.release_lease(store, "stream:live-batch-sim", nonce=held["nonce"])
         out, _ = child.communicate(timeout=180)
         assert child.returncode == 0, f"child exit {child.returncode}: {out}"
@@ -413,7 +411,7 @@ def test_cross_process_compactor_refused_then_folds(spark, tmp_path):
     finally:
         if child.poll() is None:
             child.kill()
-    man = read_compaction_manifest(labels)
+    man = sk.read_store_manifest(labels)
     assert man is not None and man["gen"] == 1
     after = sorted(map(tuple, read_label_store(spark, labels).collect()))
     assert after == before  # read-back parity through the foreign fold
@@ -491,10 +489,7 @@ def test_walk_ignores_temporary_dirs(spark, tmp_path):
     invisible to readers and must be invisible to the compaction
     pressure signal too — else one crash inflates the plan forever."""
     from go_fish_spark.streaming import storekernel as sk
-    from go_fish_spark.streaming.sigstore import (
-        append_sig_patch,
-        sig_compaction_plan,
-    )
+    from go_fish_spark.streaming.sigstore import append_sig_patch
 
     store = str(tmp_path / "sigs")
     append_sig_patch(_sig_rows(spark, 8, "a"), store, 0, n_shards=4)
@@ -505,7 +500,7 @@ def test_walk_ignores_temporary_dirs(spark, tmp_path):
         fh.write(b"not a real footer")
     files1, _b, per1 = sk.walk_parquet_files(store)
     assert (files1, per1) == (files0, per0)
-    plan = sig_compaction_plan(store, file_cutoff=1.0, min_patch_files=1)
+    plan = sk.sharded_compaction_plan(store, file_cutoff=1.0, min_patch_files=1)
     assert plan["legacy_files"] == 0  # no phantom legacy pressure
 
 
@@ -690,10 +685,10 @@ def test_plan_forces_full_scope_while_legacy_files_exist(spark, tmp_path):
     """Legacy root files belong to no single shard — only a FULL fold
     absorbs them, so the plan must force fold_scope='full' (and report
     them) while any exist; once absorbed, selective folds resume."""
+    from go_fish_spark.streaming import storekernel as sk
     from go_fish_spark.streaming.sigstore import (
         append_sig_patch,
         compact_signature_store,
-        sig_compaction_plan,
     )
 
     store = str(tmp_path / "store" / "sigs")
@@ -702,7 +697,7 @@ def test_plan_forces_full_scope_while_legacy_files_exist(spark, tmp_path):
     )
     for b in range(3):  # fragment one shard population
         append_sig_patch(_sig_rows(spark, 20, f"b{b}"), store, b, n_shards=4)
-    plan = sig_compaction_plan(store, file_cutoff=2.0, min_patch_files=1)
+    plan = sk.sharded_compaction_plan(store, file_cutoff=2.0, min_patch_files=1)
     assert plan["legacy_files"] == 1
     assert plan["fold_scope"] == "full"  # never 'selective' w/ legacy
     compact_signature_store(spark, store, n_shards=4)  # absorbs legacy
@@ -710,67 +705,7 @@ def test_plan_forces_full_scope_while_legacy_files_exist(spark, tmp_path):
         append_sig_patch(
             _sig_rows(spark, 4, f"b{b}"), store, b, n_shards=4
         )
-    plan2 = sig_compaction_plan(store, file_cutoff=2.0, min_patch_files=1)
+    plan2 = sk.sharded_compaction_plan(store, file_cutoff=2.0, min_patch_files=1)
     assert plan2["legacy_files"] == 0
     # with legacy gone, per-shard selectivity is allowed again
     assert plan2["fold_scope"] in ("selective", "full")
-
-
-def test_sig_stream_compaction_policy(spark, tmp_path):
-    """E2E: the sig maintenance stream prices the kernel plan after
-    each batch and folds inline under its own lease; read-back parity
-    through the folds."""
-    from go_fish_spark.streaming import storekernel as sk
-    from go_fish_spark.streaming.sigstore import (
-        read_signature_store,
-        signature_store_stream,
-    )
-
-    src = str(tmp_path / "in")
-    store = str(tmp_path / "store" / "sigs")
-    cp = str(tmp_path / "cp")
-    os.makedirs(src)
-    schema = "doc_id long, text string"
-    decisions = []
-
-    def drain():
-        signature_store_stream(
-            spark.readStream.schema(schema).parquet(src),
-            store, cp, n_shards=4, portable=True,
-            compaction_policy=True, compaction_file_cutoff=1.0,
-            compaction_min_files=1, on_compaction=decisions.append,
-        ).awaitTermination(120)
-
-    rows = [(i, f"doc number {i} text body") for i in range(30)]
-    for b in range(3):
-        spark.createDataFrame(
-            [r for r in rows if r[0] % 3 == b], schema
-        ).write.mode("append").parquet(src)
-        drain()
-    assert any(d["action"] == "compact" for d in decisions)
-    assert sk.read_store_manifest(store) is not None
-    from go_fish_spark.operators.dedup import minhash_signature
-
-    want = {
-        tuple(r)
-        for r in spark.createDataFrame(rows, schema)
-        .select(
-            "doc_id",
-            F.md5(F.concat_ws(",", minhash_signature(
-                "text", 64, 3, 42, portable=True
-            ).cast("array<string>"))).alias("m"),
-        )
-        .collect()
-    }
-    got = {
-        tuple(r)
-        for r in read_signature_store(spark, store)
-        .select(
-            "doc_id",
-            F.md5(F.concat_ws(",", F.col("_sig").cast("array<string>"))).alias(
-                "m"
-            ),
-        )
-        .collect()
-    }
-    assert got == want

@@ -458,6 +458,160 @@ def test_dedup_maintenance_stream_crash_after_sig_append_replays(
     assert {dict(got)[d] for d in (1, 2, 3, 4, 6)} == {1}
 
 
+@pytest.mark.parametrize("surface", ["labels", "sigs", "ann"])
+def test_store_stream_compacts_inline_under_its_lease(
+    spark, tmp_path, surface
+):
+    """E2E, one case per durable-store stream: the stream prices
+    compaction after each batch and folds the store inline, under the
+    writer lease it holds for the batch, when the cutoff trips; the
+    read-back still equals the one-shot recompute (parity through
+    compaction). No lease file remains once the query stops, and a
+    compactor called without a fence while another writer holds the
+    lease is refused with LeaseHeld."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from go_fish_spark.streaming import annstore
+    from go_fish_spark.streaming import storekernel as sk
+    from go_fish_spark.streaming.labelstore import (
+        compact_label_store,
+        label_store_maintenance_stream,
+        read_label_store,
+    )
+    from go_fish_spark.streaming.sigstore import (
+        compact_signature_store,
+        read_signature_store,
+        signature_store_stream,
+    )
+
+    src, cp = str(tmp_path / "in"), str(tmp_path / "cp")
+    os.makedirs(src)
+    decisions: list = []
+    policy = dict(
+        compaction_policy=True, compaction_file_cutoff=1.0,
+        compaction_min_files=1, on_compaction=decisions.append,
+    )
+    sig_rows = [(i, f"doc number {i} text body") for i in range(30)]
+    if surface == "labels":
+        store_dir = str(tmp_path / "store")
+        schema = _MAINT_SCHEMA
+        batches = [spark.createDataFrame(b, schema) for b in _MAINT_BATCHES]
+
+        def start(stream):
+            return label_store_maintenance_stream(
+                stream, store_dir, cp, bands=32, threshold=0.3,
+                portable=True, n_shards=4, **policy,
+            )
+
+        def compact():
+            compact_label_store(
+                spark, os.path.join(store_dir, "labels"), n_shards=4
+            )
+    elif surface == "sigs":
+        store = str(tmp_path / "store" / "sigs")
+        store_dir = os.path.dirname(store)
+        schema = "doc_id long, text string"
+        batches = [
+            spark.createDataFrame(
+                [r for r in sig_rows if r[0] % 3 == b], schema
+            )
+            for b in range(3)
+        ]
+
+        def start(stream):
+            return signature_store_stream(
+                stream, store, cp, n_shards=4, portable=True, **policy
+            )
+
+        def compact():
+            compact_signature_store(spark, store, n_shards=4)
+    else:
+        from test_round11 import _ann_corpus
+
+        store_dir = str(tmp_path / "ann")
+        schema = "vec_id long, embedding array<double>"
+        vecs = _ann_corpus(spark, 90)
+        batches = [vecs.filter(F.col("vec_id") % 3 == b) for b in range(3)]
+
+        def start(stream):
+            return annstore.ann_store_stream(
+                stream, store_dir, cp, n_cells=8, m=4, ksub=16, **policy
+            )
+
+        def compact():
+            annstore.compact_ann_store(spark, store_dir)
+
+    for batch in batches:
+        batch.write.mode("append").parquet(src)
+        start(spark.readStream.schema(schema).parquet(src)).awaitTermination(
+            120
+        )
+        assert not os.path.exists(sk.lease_path(store_dir))
+    assert any(d["action"] == "compact" for d in decisions)
+
+    if surface == "labels":
+        labels = os.path.join(store_dir, "labels")
+        assert sk.read_store_manifest(labels)
+        got = sorted(map(tuple, read_label_store(spark, labels).collect()))
+        seen = [r for b in _MAINT_BATCHES for r in b]
+        assert got == _full_cc_labels(spark, seen)
+    elif surface == "sigs":
+        from go_fish_spark.operators.dedup import minhash_signature
+
+        assert sk.read_store_manifest(store) is not None
+        want = {
+            tuple(r)
+            for r in spark.createDataFrame(sig_rows, schema)
+            .select(
+                "doc_id",
+                F.md5(F.concat_ws(",", minhash_signature(
+                    "text", 64, 3, 42, portable=True
+                ).cast("array<string>"))).alias("m"),
+            )
+            .collect()
+        }
+        got = {
+            tuple(r)
+            for r in read_signature_store(spark, store)
+            .select(
+                "doc_id",
+                F.md5(
+                    F.concat_ws(",", F.col("_sig").cast("array<string>"))
+                ).alias("m"),
+            )
+            .collect()
+        }
+        assert got == want
+    else:
+        coarse, pq, _ = annstore.load_ann_model(store_dir)
+        want = sorted(
+            map(
+                tuple,
+                annstore.encode_ann_batch(vecs, coarse, pq)
+                .select("_id", "cell", F.col("codes").cast("string"))
+                .collect(),
+            )
+        )
+        got = sorted(
+            map(
+                tuple,
+                annstore.read_ann_store(spark, store_dir)
+                .select("_id", "cell", F.col("codes").cast("string"))
+                .collect(),
+            )
+        )
+        assert got == want
+
+    holder = sk.acquire_lease(store_dir, "another-writer")
+    try:
+        with pytest.raises(sk.LeaseHeld):
+            compact()
+    finally:
+        sk.release_lease(store_dir, "another-writer", nonce=holder["nonce"])
+
+
 def test_session_window_stream(spark, tmp_path):
     """Streaming session windows (gap-based), the idiomatic generalization
     of the reference's drain-on-interval (`window.go:38-49`) — batch
