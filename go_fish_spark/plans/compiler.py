@@ -28,15 +28,16 @@ Structural semantics reproduced:
 
 from __future__ import annotations
 
+import functools
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..session import tune
-from ..tasks import get_task
+from ..tasks import TASKS, get_task
 from .spec import PipelineSpec, SinkSpec, SourceSpec
 
 
@@ -164,25 +165,10 @@ def write_sink(df: DataFrame, sink: SinkSpec) -> None:
                 "partitionOverwriteMode", "dynamic"
             )
         writer.parquet(opts["path"])
-    elif sink.type == "parquet_upsert":
-        # MERGE-style keyed table sink (see operators/upsert.py; the
-        # reference has only append sinks — this is the keyed-TABLE
-        # counterpart a latest-state-per-entity pipeline needs).
-        from ..operators.upsert import upsert_parquet
-
-        upsert_parquet(
-            df.sparkSession,
-            opts["path"],
-            df,
-            key_cols=list(opts["keys"]),
-            partition_col=opts.get("partition_col"),
-        )
-    elif sink.type == "console":
-        df.show(int(opts.get("num_rows", 20)), truncate=False)
-    elif sink.type == "sqs":
-        _sqs_writer(sink)(df, 0)
     elif sink.type == "memory":
         pass  # results are read via CompiledPipeline.result()
+    elif sink.type in ("parquet_upsert", "console", "sqs"):
+        _batch_writer(df.sparkSession, sink)(df, 0)
     else:
         raise ValueError(f"unknown sink type {sink.type!r}")
 
@@ -232,6 +218,35 @@ def _sqs_writer(sink: SinkSpec):
     return write
 
 
+def _batch_writer(spark: SparkSession, sink: SinkSpec):
+    """``fn(batch_df, batch_id)`` writing one (micro-)batch to ``sink``."""
+    from ..streaming import sinks as ssinks
+
+    opts = sink.options
+    if sink.type in ("file", "json", "parquet"):
+        return ssinks.file_sink_log_writer(
+            spark, opts["path"], "parquet" if sink.type == "parquet" else "json"
+        )
+    if sink.type == "json_idempotent":
+        # replay-safe: a re-delivered micro-batch rewrites its batch_id
+        # partition instead of appending duplicates.
+        return ssinks.idempotent_batch_writer(opts["path"])
+    if sink.type == "parquet_upsert":
+        # MERGE-style keyed table sink (see operators/upsert.py; the
+        # reference has only append sinks — this is the keyed-TABLE
+        # counterpart a latest-state-per-entity pipeline needs). Replay-
+        # safe: re-asserting a batch is idempotent.
+        from ..operators.upsert import upsert_batch_writer
+
+        return upsert_batch_writer(
+            opts["path"], list(opts["keys"]), opts.get("partition_col")
+        )
+    if sink.type == "console":
+        return lambda df, _: df.show(int(opts.get("num_rows", 20)), truncate=False)
+    # ≡ output/sqs.go:40-61: each micro-batch runs the per-event SendMessage loop
+    return _sqs_writer(sink)
+
+
 @dataclass
 class CompiledPipeline:
     spec: PipelineSpec
@@ -258,14 +273,24 @@ class CompiledPipeline:
         ``<checkpoint_root>/<sink>`` (≡ StartPipeline's goroutine swarm,
         with Spark owning scheduling/backpressure/recovery).
 
-        Each query runs its sink's streaming frame from compile_pipeline,
-        so stateful rules keep their state across micro-batches whatever
-        the sink count; a source feeding several sinks is read once per
-        sink. Sink types are validated up front so an unsupported sink
-        fails here, not asynchronously inside the first micro-batch.
+        A sink behind a keyed-state built-in (``s2s_enrich``,
+        ``keyed_counter``) runs as one ``foreach_sink`` query over its
+        upstream's sources (several: one ``_src``-tagged union, split back
+        per batch). Each micro-batch runs ``_compute_rule_frames`` — the
+        batch compile of ``run()`` — with each keyed rule's durable KV log
+        (``<ckpt>/<sink>/kv/<rule>/``) handed to ``task.init`` (≡
+        ``Init(kvstore)``, `rule.go:58`); one localCheckpoint job reads the
+        source once and observes every patch; the sink's batch writer
+        commits (json/file/parquet through Spark's file-sink log,
+        ``_spark_metadata``); the patches are written last. Other sinks run
+        natively. Each sink's query reads its sources and keeps its own KV.
+        Fails before any query starts on an unsupported sink type, a
+        ``memory`` sink behind keyed state, or a keyed sink whose checkpoint
+        still holds ``applyInPandasWithState`` state (``state/``).
         """
         from ..streaming import sinks as ssinks
 
+        keyed = {}
         for name in self.sink_inputs:
             stype = self.spec.sinks[name].type
             if stype not in _STREAM_SINK_TYPES:
@@ -273,78 +298,87 @@ class CompiledPipeline:
                     f"sink {name!r}: type {stype!r} unsupported in streaming "
                     f"(supported: {sorted(_STREAM_SINK_TYPES)})"
                 )
+            sub = _upstream(self.spec, name)
+            rules = sorted(r.name for r in sub.rules.values()
+                           if getattr(TASKS.get(r.task), "keyed_state", False))
+            if not rules:
+                continue
+            keyed[name] = (sub, rules)
+            legacy = os.path.join(checkpoint_root, name, "state")
+            if stype == "memory":
+                raise ValueError(f"sink {name!r}: type 'memory' unsupported in "
+                                 f"streaming downstream of keyed-state rules {rules}")
+            if os.path.isdir(legacy):
+                raise ValueError(
+                    f"sink {name!r}: checkpoint {legacy!r} holds "
+                    f"applyInPandasWithState state for {rules}, whose KV now "
+                    "lives under kv/; start from a fresh checkpoint"
+                )
 
         queries = []
         for name, df in self.sink_inputs.items():
             sink = self.spec.sinks[name]
             ckpt = os.path.join(checkpoint_root, name)
-            if sink.type in ("file", "json"):
-                queries.append(
-                    ssinks.json_sink(
-                        df, sink.options["path"], ckpt, trigger_available_now=available_now
-                    )
-                )
-            elif sink.type == "parquet":
-                w = (
-                    df.writeStream.format("parquet")
-                    .option("path", sink.options["path"])
-                    .option("checkpointLocation", ckpt)
-                )
-                if available_now:
-                    w = w.trigger(availableNow=True)
-                queries.append(w.start())
-            elif sink.type == "console":
-                w = df.writeStream.format("console").option(
-                    "checkpointLocation", ckpt
-                )
-                if available_now:
-                    w = w.trigger(availableNow=True)
-                queries.append(w.start())
-            elif sink.type == "json_idempotent":
-                # replay-safe: a re-delivered micro-batch rewrites its
-                # batch_id partition instead of appending duplicates.
-                queries.append(
-                    ssinks.idempotent_json_sink(
-                        df, sink.options["path"], ckpt,
-                        trigger_available_now=available_now,
-                    )
-                )
-            elif sink.type == "sqs":
-                # ≡ output/sqs.go:40-61 via the generic foreach adapter —
-                # each micro-batch runs the per-event SendMessage loop.
-                queries.append(
-                    ssinks.foreach_sink(
-                        df, _sqs_writer(sink), ckpt,
-                        trigger_available_now=available_now,
-                    )
-                )
-            elif sink.type == "parquet_upsert":
-                # keyed-table sink: each micro-batch MERGEs by key
-                # (replay-safe — re-asserting a batch is idempotent).
-                from ..operators.upsert import upsert_batch_writer
-
-                queries.append(
-                    ssinks.foreach_sink(
-                        df,
-                        upsert_batch_writer(
-                            sink.options["path"],
-                            list(sink.options["keys"]),
-                            sink.options.get("partition_col"),
-                        ),
-                        ckpt,
-                        trigger_available_now=available_now,
-                    )
-                )
+            if name in keyed:
+                q = self._start_keyed(*keyed[name], name, ckpt, available_now)
             elif sink.type == "memory":
-                queries.append(
-                    ssinks.memory_sink(
-                        df,
-                        sink.options.get("name", name),
-                        output_mode=sink.options.get("output_mode", "append"),
-                        trigger_available_now=available_now,
-                    )
+                q = ssinks.memory_sink(
+                    df,
+                    sink.options.get("name", name),
+                    output_mode=sink.options.get("output_mode", "append"),
+                    trigger_available_now=available_now,
                 )
+            elif sink.type in ("file", "json", "parquet", "console"):
+                # Spark's own file sink (``_spark_metadata`` log) or console
+                w = df.writeStream.format(
+                    "json" if sink.type == "file" else sink.type
+                ).option("checkpointLocation", ckpt)
+                if sink.type != "console":
+                    w = w.option("path", sink.options["path"])
+                q = (w.trigger(availableNow=True) if available_now else w).start()
+            else:
+                q = ssinks.foreach_sink(
+                    df, _batch_writer(df.sparkSession, sink), ckpt,
+                    trigger_available_now=available_now,
+                )
+            queries.append(q)
         return queries
+
+    def _start_keyed(
+        self, sub: PipelineSpec, keyed: list[str], name: str, ckpt: str,
+        available_now: bool,
+    ):
+        """The ``foreach_sink`` query of a sink behind keyed state."""
+        from ..streaming import sinks as ssinks
+        from ..streaming.kvlog import KVLog
+
+        srcs = {s: self.node_frames[s] for s in sub.sources}
+        stream = functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [f.withColumn("_src", F.lit(s)) for s, f in srcs.items()],
+        ) if len(srcs) > 1 else next(iter(srcs.values()))
+        write = _batch_writer(stream.sparkSession, self.spec.sinks[name])
+
+        def run_batch(batch: DataFrame, batch_id: int) -> None:
+            if len(srcs) > 1:
+                # split the tagged union back, reading the source once
+                batch = batch.localCheckpoint()
+                frames = {
+                    s: batch.filter(F.col("_src") == s).select(*f.columns)
+                    for s, f in srcs.items()
+                }
+            else:
+                frames = {next(iter(srcs)): batch}
+            kvs = {r: KVLog(os.path.join(ckpt, "kv", r), batch_id) for r in keyed}
+            _compute_rule_frames(sub, frames, kvs)
+            # the one job: window/aggregate over KV ∪ batch, patches observed
+            write(_sink_inputs(sub, frames)[name].localCheckpoint(), batch_id)
+            for kv in kvs.values():
+                kv.commit()
+
+        return ssinks.foreach_sink(
+            stream, run_batch, ckpt, trigger_available_now=available_now
+        )
 
 
 #: Sink types a streaming pipeline supports.
@@ -368,8 +402,26 @@ def resolve_tasks(spec: PipelineSpec) -> None:
             raise ValidationError(f"rule {rule.name!r}: {e}") from e
 
 
+def _upstream(spec: PipelineSpec, sink: str) -> PipelineSpec:
+    """The part of ``spec`` that feeds ``sink``: the rules reaching it
+    through rule sources and rule→rule sink edges, and their sources."""
+    todo = [r.name for r in spec.rules.values() if r.sink == sink]
+    seen: set[str] = set()
+    while todo:
+        name = todo.pop()
+        if name in seen or name not in spec.rules:
+            continue
+        seen.add(name)
+        todo.append(spec.rules[name].source)
+        todo += [r.name for r in spec.rules.values() if r.sink == name]
+    rules = {n: r for n, r in spec.rules.items() if n in seen}
+    srcs = {r.source for r in rules.values()}
+    sources = {n: s for n, s in spec.sources.items() if n in srcs}
+    return PipelineSpec(sources, rules, {sink: spec.sinks[sink]}, spec.states)
+
+
 def _compute_rule_frames(
-    spec: PipelineSpec, frames: dict[str, DataFrame]
+    spec: PipelineSpec, frames: dict[str, DataFrame], kv: dict | None = None
 ) -> dict[str, DataFrame]:
     """Resolve every rule's output DataFrame in dependency order.
 
@@ -384,7 +436,10 @@ def _compute_rule_frames(
     ends (validate() accepts it, spec.py). The reference's duplicate
     AddChild collapses into competing channel consumers delivering each
     event once (`pipeline.go:354-356`), so B is excluded from A's feeder
-    union when it is already A's source."""
+    union when it is already A's source.
+
+    ``kv`` maps a keyed-state rule to the KV handle its ``init`` receives
+    in place of the declared state (a streaming micro-batch's KV log)."""
     pending = dict(spec.rules)
     while pending:
         progressed = False
@@ -396,7 +451,10 @@ def _compute_rule_frames(
             ]
             if rule.source in frames and all(f in frames for f in feeders):
                 task = get_task(rule.task, **rule.options)
-                task.init(spec.states.get(rule.state) if rule.state else None)
+                task.init(
+                    (kv or {}).get(name)
+                    or (spec.states.get(rule.state) if rule.state else None)
+                )
                 inp = frames[rule.source]
                 for f in feeders:
                     inp = inp.unionByName(frames[f])
@@ -432,8 +490,19 @@ def compile_pipeline(
             if n > 1:
                 frames[node] = frames[node].persist(StorageLevel.MEMORY_AND_DISK)
 
-    # Fan-in: group rules by sink, union. (Rule→rule sinks were already
-    # delivered inside _compute_rule_frames.)
+    return CompiledPipeline(
+        spec=spec,
+        node_frames=frames,
+        sink_inputs=_sink_inputs(spec, frames),
+        streaming=streaming,
+    )
+
+
+def _sink_inputs(
+    spec: PipelineSpec, frames: dict[str, DataFrame]
+) -> dict[str, DataFrame]:
+    """Fan-in: group rules by sink, union. (Rule→rule sinks were already
+    delivered inside _compute_rule_frames.)"""
     sink_inputs: dict[str, DataFrame] = {}
     for rule in spec.rules.values():
         if rule.sink is None or rule.sink not in spec.sinks:
@@ -443,7 +512,4 @@ def compile_pipeline(
             sink_inputs[rule.sink] = sink_inputs[rule.sink].unionByName(df)
         else:
             sink_inputs[rule.sink] = df
-
-    return CompiledPipeline(
-        spec=spec, node_frames=frames, sink_inputs=sink_inputs, streaming=streaming
-    )
+    return sink_inputs

@@ -1,10 +1,10 @@
 """Stateful streaming operators — the reference's KV/Counter state programs
-on Spark's keyed state store.
+on Spark's streaming state.
 
 | reference | here |
 |---|---|
-| KVStore set/get (`state/kv.go:45-80`), BoltDB-persisted | per-key state in ``applyInPandasWithState``, checkpoint-persisted |
-| s2s enrichment join (`s2s_rules/cloudTrail_s2s_join.go:68-78,124-130`) | ``s2s_enrichment_stream`` |
+| KVStore set/get (`state/kv.go:45-80`), BoltDB-persisted | the ``s2s_enrich``/``keyed_counter`` tasks' batch-stamped KV log (``streaming/kvlog.py``), one JVM window/aggregation per micro-batch; ``run_stateful`` (``applyInPandasWithState``) for user-written keyed tasks |
+| s2s enrichment join (`s2s_rules/cloudTrail_s2s_join.go:68-78,124-130`) | task ``s2s_enrich`` (``tasks/builtin_stateful.py``) run through ``CompiledPipeline.start``; ``interval_enrich_stream`` for the bounded-age native join |
 | keyed agg w/ drain (`agg_rules/cloudTrail_agg.go:30-96`) | ``windowed_count_stream`` (event-time window + watermark — the declared-interval upgrade over the 1 s processing-time poller, SURVEY §2.4) |
 | Counter window read-and-reset (`state/count.go:18-31`) | ``global_count_stream`` (update mode) |
 """
@@ -12,83 +12,12 @@ on Spark's keyed state store.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-#: Output of the s2s enrichment: the event plus its resolved entity.
-S2S_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("key", T.StringType()),
-        T.StructField("entity", T.StringType()),
-    ]
-)
-
-_S2S_STATE_SCHEMA = T.StructType([T.StructField("principal", T.StringType())])
-
-
-def s2s_enrichment_stream(
-    events: DataFrame,
-    *,
-    key_col: str = "key",
-    kind_col: str = "event_type",
-    write_kind: str,
-    value_col: str,
-    emit_kind: str,
-    fallback_col: str,
-) -> DataFrame:
-    """Stream-to-stream enrichment with "latest write wins" keyed state.
-
-    Semantics ≡ `cloudTrail_s2s_join.go`: an event of ``write_kind`` stores
-    ``value_col`` under its key (`:68-78`, kv.Set(assumedRoleID →
-    principal)); an event of ``emit_kind`` emits with the stored principal,
-    or ``fallback_col`` on a state miss (`:124-130`). Rows are processed in
-    (ts, event_id) order within each key, so replaying a batch gives the
-    same answer as the record-at-a-time reference.
-
-    Scale: state is partitioned by key across executors and persisted in
-    the checkpoint — the distributed form of the single BoltDB file.
-    """
-
-    def proc(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        principal: str | None = state.get[0] if state.exists else None
-        out: list[dict[str, Any]] = []
-        rows = pd.concat(list(pdfs))
-        rows = rows.sort_values(["ts", "event_id"])
-        for row in rows.itertuples(index=False):
-            kind = getattr(row, kind_col)
-            if kind == write_kind:
-                principal = getattr(row, value_col)
-            elif kind == emit_kind:
-                out.append(
-                    {
-                        "event_id": row.event_id,
-                        "ts": row.ts,
-                        "key": key[0],
-                        "entity": principal
-                        if principal is not None
-                        else getattr(row, fallback_col),
-                    }
-                )
-        if principal is not None:
-            state.update((principal,))
-        yield pd.DataFrame(out, columns=[f.name for f in S2S_OUTPUT_SCHEMA])
-
-    return events.groupBy(F.col(key_col)).applyInPandasWithState(
-        proc,
-        outputStructType=S2S_OUTPUT_SCHEMA,
-        stateStructType=_S2S_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def interval_enrich_stream(
@@ -107,8 +36,8 @@ def interval_enrich_stream(
     built-in watermarked interval join instead of per-key Python state —
     each read event pairs with every write for its key whose timestamp
     falls in ``[read_ts − max_age, read_ts]``; reads with no such write
-    emit once with the fallback (left outer). Contrast
-    :func:`s2s_enrichment_stream` (``cloudTrail_s2s_join.go`` semantics:
+    emit once with the fallback (left outer). Contrast the ``s2s_enrich``
+    task (``cloudTrail_s2s_join.go`` semantics:
     LATEST write wins, unbounded age): the interval form is what the
     built-in join state can express — bounded-age matches, ALL of them —
     and stays entirely JVM-side; collapse to as-of (latest-only) with a
@@ -249,95 +178,6 @@ def combine_dedup_rate(totals: DataFrame, distincts: DataFrame) -> DataFrame:
             ).alias("dup_rate"),
         )
         .orderBy("window_start")
-    )
-
-
-def has_transform_with_state() -> bool:
-    """Capability check for Spark 4's StatefulProcessor API
-    (``transformWithStateInPandas``) — gate callers and tests on this so
-    the module still imports on older runtimes. Beyond the method itself,
-    the TWS state-server worker needs ``google.protobuf`` at runtime (the
-    query CRASHES mid-stream without it, it does not fail fast), so the
-    check probes that import too."""
-    from pyspark.sql.group import GroupedData
-
-    if not hasattr(GroupedData, "transformWithStateInPandas"):
-        return False
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        return False
-    return True
-
-
-def keyed_counter_tws_stream(
-    events: DataFrame,
-    key_col: str = "key",
-    count_alias: str = "occurrences",
-    drain_interval_ms: int | None = None,
-) -> DataFrame:
-    """Keyed running counter on ``transformWithStateInPandas`` — the
-    Spark-4 StatefulProcessor upgrade of the ``applyInPandasWithState``
-    runtime. Its TIMERS map even closer to the reference's
-    drain-on-interval than watermark windows do: `window.go:38-49` polls
-    every interval and drains (emit + reset) each keyed count, which is
-    exactly a processing-time timer firing ``handleExpiredTimer``.
-
-    Semantics: every micro-batch emits the running total per key
-    (≡ the reference's repeated emissions, `state/count.go:18-31`); with
-    ``drain_interval_ms`` set, a processing-time timer re-registered on
-    every input batch drains the count — emit final, clear state — when
-    it fires (read-and-reset, `cloudTrail_agg.go:77-96`). State lives in
-    the checkpointed per-key store, partitioned across executors."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = f"{key_col} string, {count_alias} long"
-
-    class _KeyedCounter(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._cnt = handle.getValueState("cnt", "n long")
-
-        def handleInputRows(self, key, rows, timer_values):
-            n = sum(len(pdf) for pdf in rows)
-            prev = self._cnt.get()[0] if self._cnt.exists() else 0
-            total = prev + n
-            self._cnt.update((total,))
-            if drain_interval_ms is not None:
-                # Re-register = delete-then-register: without the delete,
-                # every input batch would stack one more timer on the key
-                # and each expiry would fire its own drain — the
-                # reference's poller (`window.go:38-49`) is ONE interval
-                # per key, not one per batch.
-                for ts in self._handle.listTimers():
-                    self._handle.deleteTimer(
-                        ts if isinstance(ts, int) else ts[0]
-                    )
-                self._handle.registerTimer(
-                    timer_values.getCurrentProcessingTimeInMs()
-                    + drain_interval_ms
-                )
-            yield pd.DataFrame({key_col: [key[0]], count_alias: [total]})
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            # The drain: emit the final count and reset — the destructive
-            # interval read of the reference's poller.
-            if self._cnt.exists():
-                total = self._cnt.get()[0]
-                self._cnt.clear()
-                yield pd.DataFrame({key_col: [key[0]], count_alias: [total]})
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(F.col(key_col)).transformWithStateInPandas(
-        statefulProcessor=_KeyedCounter(),
-        outputStructType=out_schema,
-        outputMode="update",
-        timeMode="processingTime",
     )
 
 

@@ -1,6 +1,6 @@
 """Declarative stateful built-in tasks — the reference's two flagship
 stateful rule programs, JSON-declarable (no Python required), running in
-BOTH batch and streaming from one spec.
+BOTH batch and streaming through one code path.
 
 The reference ships these as compiled Go plugins:
   * ``s2s_enrich`` ≡ `s2s_rules/cloudTrail_s2s_join.go`: on a write-event,
@@ -11,27 +11,38 @@ The reference ships these as compiled Go plugins:
     drained per window.
 
 Design: all user-declared logic (predicates, derivations, fallbacks) is
-SQL strings compiled to Column expressions BEFORE any state machinery —
-so it runs JVM-side and Catalyst-optimized in both modes. The streaming
-paths only carry a small per-key state (the latest value, or a running
-count) through ``run_stateful`` (applyInPandasWithState); the batch paths
-express the identical semantics as an event-time window
-(``last(...) IGNORE NULLS``) or one hash aggregation, so the two modes are
-differential-testable against each other.
+SQL strings compiled to Column expressions, and the state semantics are
+one window (``last(...) IGNORE NULLS``) or one hash aggregation — JVM-side,
+no Python operator. ``init(state)`` hands the task a :class:`KVLog`: empty
+in a plain batch run; in streaming, once per micro-batch, the rule's
+durable patch log (``CompiledPipeline.start``). The window or aggregation
+then runs over (live KV rows ∪ batch), KV rows first by ``_batch_id``, and
+reports the keys the batch changed as the next patch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from ..streaming.kvlog import STAMP, KVLog
 from .protocol import BasicTask
 from .registry import register_task
 
 
+class KeyedStateTask(BasicTask):
+    """A built-in whose state is a keyed KV: the compiler hands it a
+    durable :class:`KVLog` per micro-batch; anything else means empty."""
+
+    keyed_state = True
+
+    @property
+    def kv(self) -> KVLog:
+        return self.state if isinstance(self.state, KVLog) else KVLog()
+
+
 @register_task("s2s_enrich")
-class S2SEnrich(BasicTask):
+class S2SEnrich(KeyedStateTask):
     """Stream-to-stream enrichment with "latest seen" keyed state.
 
     Options:
@@ -43,75 +54,47 @@ class S2SEnrich(BasicTask):
                     ≡ the raw-PrincipalId fallback, `:128-130`)
       alias       — output column name (default "entity")
       tiebreak    — optional column breaking equal-time ordering
+
+    KV: (key → the key's last write); a batch's patch holds the last
+    write of each key it wrote.
     """
 
     def apply(self, df: DataFrame) -> DataFrame:
-        o = self.options
-        key, time_col = o["key"], o["time"]
-        alias = o.get("alias", "entity")
+        o, kv = self.options, self.kv
+        key = o["key"]
         fallback = o.get("fallback", f"CAST({key} AS STRING)")
-        order_cols = [time_col] + ([o["tiebreak"]] if "tiebreak" in o else [])
+        order_cols = [o["time"]] + ([o["tiebreak"]] if "tiebreak" in o else [])
 
         # All declared logic becomes Column expressions up front.
-        prepared = df.withColumn(
-            "_wv", F.when(F.expr(o["write_when"]), F.expr(o["write_value"]))
-        ).withColumn("_fb", F.expr(fallback).cast("string"))
+        prepared = df.select(
+            "*",
+            F.when(F.expr(o["write_when"]), F.expr(o["write_value"])).alias("_wv"),
+            F.expr(fallback).cast("string").alias("_fb"),
+            kv.stamp(),
+        )
 
-        if df.isStreaming:
-            return self._streaming(prepared, df.schema, key, order_cols, alias)
-
-        w = (
-            Window.partitionBy(key)
-            .orderBy(*order_cols)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        w = Window.partitionBy(key).orderBy(STAMP, *order_cols)
+        upto = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        wrote = F.when(F.col("_wv").isNotNull(), F.col(STAMP))
+        out = kv.union(prepared, key, ["_wv"]).select(
+            "*",
+            F.last("_wv", ignorenulls=True).over(upto).alias("_v"),
+            # stamp of the key's latest write, and the key's last row
+            F.last(wrote, ignorenulls=True).over(upto).alias("_vb"),
+            F.lead(STAMP).over(w).isNull().alias("_end"),
+        )
+        out = kv.observe(
+            out, F.col("_end") & kv.is_batch("_vb"), [F.col(key), F.col("_v")]
         )
         return (
-            prepared.withColumn(
-                alias,
-                F.coalesce(F.last("_wv", ignorenulls=True).over(w), F.col("_fb")),
-            )
-            .drop("_wv", "_fb")
-        )
-
-    def _streaming(
-        self,
-        prepared: DataFrame,
-        in_schema: T.StructType,
-        key: str,
-        order_cols: list[str],
-        alias: str,
-    ) -> DataFrame:
-        import pandas as pd
-
-        from .stateful_runtime import run_stateful
-
-        out_schema = T.StructType(
-            list(in_schema.fields) + [T.StructField(alias, T.StringType())]
-        )
-        in_cols = [f.name for f in in_schema.fields]
-
-        def fn(k, rows: pd.DataFrame, state: dict):
-            cur = state.get("v")
-            entities = []
-            for _, r in rows.iterrows():
-                if r["_wv"] is not None and not pd.isna(r["_wv"]):
-                    cur = r["_wv"]
-                entities.append(cur if cur is not None else r["_fb"])
-            out = rows[in_cols].copy()
-            out[alias] = entities
-            return out, {"v": cur}
-
-        return run_stateful(
-            prepared,
-            [key],
-            fn,
-            out_schema,
-            sort_within_key=order_cols,
+            out.filter(kv.is_batch())
+            .withColumn(o.get("alias", "entity"), F.coalesce("_v", "_fb"))
+            .drop("_wv", "_fb", "_v", "_vb", "_end", STAMP)
         )
 
 
 @register_task("keyed_counter")
-class KeyedCounter(BasicTask):
+class KeyedCounter(KeyedStateTask):
     """Keyed occurrence counting with first-event metadata.
 
     Options:
@@ -121,47 +104,39 @@ class KeyedCounter(BasicTask):
       time   — event-time column; min(time) ≡ the first-event metadata
                kept by get-or-create (`:47-63`)
 
-    Output: (key, occurrences, first_seen). Batch: one hash aggregation.
-    Streaming: the count per key lives in ``run_stateful`` state (≡ the
-    get-or-create KV entry), and each micro-batch emits the running
-    (key, occurrences, first_seen) of every key it touched.
+    Output: (key, occurrences, first_seen) of every key the input touched
+    — in streaming, the running values per micro-batch. KV: those rows
+    (≡ the get-or-create KV entry), which are also the batch's patch.
     """
 
     def apply(self, df: DataFrame) -> DataFrame:
-        o = self.options
+        o, kv = self.options, self.kv
+        key = o["key"]
         d = df.filter(F.expr(o["when"])) if "when" in o else df
-        if df.isStreaming:
-            return self._streaming(d, o["key"], o["time"])
-        return d.groupBy(o["key"]).agg(
-            F.count(F.lit(1)).alias("occurrences"),
-            F.min(o["time"]).alias("first_seen"),
+        rows = kv.union(
+            d.select(
+                key,
+                F.lit(None).cast("long").alias("occurrences"),
+                F.col(o["time"]).alias("first_seen"),
+                kv.stamp(),
+            ),
+            key,
+            ["occurrences", "first_seen"],
         )
-
-    def _streaming(self, d: DataFrame, key: str, time_col: str) -> DataFrame:
-        import pandas as pd
-
-        from .stateful_runtime import run_stateful
-
-        # State round-trips through JSON, so timestamps travel as micros.
-        time_type = d.schema[time_col].dataType
-        is_ts = isinstance(time_type, T.TimestampType)
-        out_schema = T.StructType([
-            d.schema[key],
-            T.StructField("occurrences", T.LongType()),
-            T.StructField("first_seen", T.LongType() if is_ts else time_type),
-        ])
-
-        def fn(k, rows: pd.DataFrame, state: dict):
-            n = state.get("n", 0) + len(rows)
-            seen = [v for v in (rows["_t"].min(), state.get("first"))
-                    if v is not None and not pd.isna(v)]
-            first = min(seen) if seen else None
-            first = first.item() if hasattr(first, "item") else first
-            out = pd.DataFrame({key: [k[0]], "occurrences": [n], "first_seen": [first]})
-            return out, {"n": n, "first": first}
-
-        t = F.unix_micros(time_col) if is_ts else F.col(time_col)
-        out = run_stateful(d.select(key, t.alias("_t")), [key], fn, out_schema)
-        if is_ts:
-            out = out.withColumn("first_seen", F.timestamp_micros("first_seen"))
-        return out
+        # KV counts only grow, so the max is the latest
+        out = (
+            rows.groupBy(key)
+            .agg(
+                (
+                    F.coalesce(F.max("occurrences"), F.lit(0))
+                    + F.count(F.when(kv.is_batch(), 1))
+                ).alias("occurrences"),
+                F.min("first_seen").alias("first_seen"),
+                F.max(STAMP).alias(STAMP),
+            )
+            .filter(kv.is_batch())
+        )
+        out = kv.observe(
+            out, F.lit(True), [F.col(c) for c in (key, "occurrences", "first_seen")]
+        )
+        return out.drop(STAMP)

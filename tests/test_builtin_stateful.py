@@ -12,7 +12,11 @@ scenarios driven purely from a JSON pipeline spec (no user Python):
 
 from __future__ import annotations
 
+import glob
 import json
+import os
+
+import pytest
 
 from go_fish_spark.plans import compile_pipeline, parse_spec
 
@@ -206,3 +210,302 @@ def test_example_pipeline_streams_state_across_deliveries(spark, tmp_path):
     ).json(str(tmp_path / "alerts"))
     rows = alerts.filter("role_id = 'r1'").collect()
     assert sorted(r.occurrences for r in rows) == [1, 2]
+
+
+# ---------------------------------------------------------------------------
+# Streaming keyed state: the batch branch once per micro-batch over a
+# batch-stamped KV log (streaming/kvlog.py).
+
+TRAIL_SCHEMA = (
+    "event_id long, ts timestamp, role_id string, event_name string, "
+    "principal string, mfa string"
+)
+
+
+def _trail_deliveries(n=4, per=6):
+    """``n`` deliveries over three roles, event time increasing across
+    deliveries: AssumeRole writes, reads, and no-MFA events in each."""
+    out, eid = [], 0
+    for _ in range(n):
+        batch = []
+        for _ in range(per):
+            eid += 1
+            batch.append(dict(
+                event_id=eid, ts=f"2024-01-01T00:{eid:02d}:00Z",
+                role_id=f"r{(eid * 7) % 3}",
+                event_name="AssumeRole" if eid % 4 == 1 else "GetObject",
+                principal=f"p{eid}", mfa="true" if eid % 3 == 0 else "false",
+            ))
+        out.append(batch)
+    return out
+
+
+def _trail_reference(deliveries):
+    """(event_id → entity, sorted (role, occurrences) emissions): go-fish's
+    record-at-a-time semantics, one keyed_counter row per touched role per
+    delivery."""
+    kv, counts, entity, emitted = {}, {}, {}, []
+    for batch in deliveries:
+        touched = set()
+        for e in batch:
+            if e["event_name"] == "AssumeRole":
+                kv[e["role_id"]] = "user/" + e["principal"]
+            entity[e["event_id"]] = kv.get(e["role_id"], e["role_id"])
+            if e["mfa"] == "false":
+                counts[e["role_id"]] = counts.get(e["role_id"], 0) + 1
+                touched.add(e["role_id"])
+        emitted += [(r, counts[r]) for r in touched]
+    return entity, sorted(emitted)
+
+
+def _trail_raw(tmp_path):
+    path = os.path.join(
+        os.path.dirname(__file__), "..", "examples", "cloudtrail_s2s_pipeline.json"
+    )
+    with open(path) as f:
+        raw = json.load(f)
+    raw["sources"]["trail"]["options"]["path"] = str(tmp_path / "in")
+    for name in raw["sinks"]:
+        raw["sinks"][name]["options"]["path"] = str(tmp_path / name)
+    return raw
+
+
+def _deliver(spark, tmp_path, i, batch):
+    indir = tmp_path / "in"
+    indir.mkdir(exist_ok=True)
+    (indir / f"b{i:03d}.json").write_text(
+        "".join(json.dumps(e) + "\n" for e in batch)
+    )
+
+
+def _drain(spark, raw, tmp_path):
+    """Start the streaming spec from its checkpoint and run it dry."""
+    queries = compile_pipeline(spark, parse_spec(raw), streaming=True).start(
+        str(tmp_path / "ckpt"), available_now=True
+    )
+    for q in queries:
+        q.awaitTermination(180)
+    return queries
+
+
+def _emitted(spark, tmp_path):
+    """What the sinks committed (their _spark_metadata logs decide)."""
+    enriched = spark.read.schema(TRAIL_SCHEMA + ", entity string").json(
+        str(tmp_path / "enriched")
+    ).collect()
+    alerts = spark.read.schema(
+        "role_id string, occurrences long, first_seen timestamp"
+    ).json(str(tmp_path / "alerts")).collect()
+    return enriched, alerts
+
+
+def _assert_exactly_once(spark, tmp_path, deliveries):
+    entity, counts = _trail_reference(deliveries)
+    enriched, alerts = _emitted(spark, tmp_path)
+    assert sorted(r.event_id for r in enriched) == sorted(entity)  # once each
+    assert {r.event_id: r.entity for r in enriched} == entity
+    assert sorted((r.role_id, r.occurrences) for r in alerts) == counts
+
+
+def test_streamed_deliveries_equal_run_over_concatenated_input(spark, tmp_path):
+    """(c) k deliveries through start() equal run() over all of them: the
+    entity of every event, and each key's latest count and first_seen."""
+    raw = _trail_raw(tmp_path)
+    deliveries = _trail_deliveries()
+    for i, batch in enumerate(deliveries):
+        _deliver(spark, tmp_path, i, batch)
+        _drain(spark, raw, tmp_path)
+    enriched, alerts = _emitted(spark, tmp_path)
+
+    batch = compile_pipeline(spark, parse_spec(raw))
+    want_entity = {r.event_id: r.entity for r in batch.result("enriched").collect()}
+    assert {r.event_id: r.entity for r in enriched} == want_entity
+    latest = {}
+    for r in alerts:
+        if r.occurrences > latest.get(r.role_id, (0,))[0]:
+            latest[r.role_id] = (r.occurrences, r.first_seen)
+    want = {r.role_id: (r.occurrences, r.first_seen)
+            for r in batch.result("alerts").collect()}
+    assert latest == want
+    _assert_exactly_once(spark, tmp_path, deliveries)
+
+
+def test_crash_after_kv_patch_before_sink_commit_replays_once(spark, tmp_path):
+    """(a) Batch 1's KV patches are written but neither its sink log entry
+    nor Spark's commit is: the restarted queries replay batch 1 against the
+    KV cut at < 1 and rewrite the same patch, so every event is emitted
+    exactly once with the reference entity and count."""
+    raw = _trail_raw(tmp_path)
+    deliveries = _trail_deliveries(3)
+    for i, batch in enumerate(deliveries[:2]):
+        _deliver(spark, tmp_path, i, batch)
+        _drain(spark, raw, tmp_path)
+    for sink in ("enriched", "alerts"):
+        assert glob.glob(str(tmp_path / "ckpt" / sink / "kv" / "*" / "patch-1.parquet"))
+        for p in (tmp_path / sink / "_spark_metadata" / "1",
+                  tmp_path / sink / "_spark_metadata" / ".1.crc",
+                  tmp_path / "ckpt" / sink / "commits" / "1",
+                  tmp_path / "ckpt" / sink / "commits" / ".1.crc"):
+            p.unlink()
+    _drain(spark, raw, tmp_path)  # replays batch 1
+    _deliver(spark, tmp_path, 2, deliveries[2])
+    _drain(spark, raw, tmp_path)
+    _assert_exactly_once(spark, tmp_path, deliveries)
+
+
+def test_crash_after_sink_commit_before_kv_patch_replays_once(spark, tmp_path, monkeypatch):
+    """(b) The queries die after batch 1's sink commit and before its KV
+    patch: the restart replays batch 1, the file sink skips the committed
+    id, the patch is written, and batch 2 reads the state it carries."""
+    from go_fish_spark.streaming.kvlog import KVLog
+
+    raw = _trail_raw(tmp_path)
+    deliveries = _trail_deliveries(3)
+    _deliver(spark, tmp_path, 0, deliveries[0])
+    _drain(spark, raw, tmp_path)
+
+    commit = KVLog.commit
+
+    def crash_on_batch_1(self):
+        if self.batch_id == 1:
+            raise RuntimeError("crash before the KV patch")
+        commit(self)
+
+    monkeypatch.setattr(KVLog, "commit", crash_on_batch_1)
+    _deliver(spark, tmp_path, 1, deliveries[1])
+    for q in compile_pipeline(spark, parse_spec(raw), streaming=True).start(
+        str(tmp_path / "ckpt"), available_now=True
+    ):
+        with pytest.raises(Exception, match="crash before the KV patch"):
+            q.awaitTermination(180)
+    for sink in ("enriched", "alerts"):
+        assert (tmp_path / sink / "_spark_metadata" / "1").exists()
+        assert not glob.glob(str(tmp_path / "ckpt" / sink / "kv" / "*" / "patch-1.parquet"))
+
+    monkeypatch.setattr(KVLog, "commit", commit)
+    _drain(spark, raw, tmp_path)  # replays batch 1: sink skip, patch written
+    _deliver(spark, tmp_path, 2, deliveries[2])
+    _drain(spark, raw, tmp_path)
+    _assert_exactly_once(spark, tmp_path, deliveries)
+
+
+def test_kv_fold_keeps_state_and_reads_each_row_once(spark, tmp_path, monkeypatch):
+    """(d) With folds forced every few batches, the output still matches
+    the reference, a fold's generation replaces the patches it covers, and
+    streaming progress counts every delivered row exactly once (the source
+    is read once per micro-batch)."""
+    from go_fish_spark.streaming import kvlog
+
+    monkeypatch.setattr(kvlog, "_FILE_CUTOFF", 2)
+    monkeypatch.setattr(kvlog, "_MIN_PATCHES", 2)
+    raw = _trail_raw(tmp_path)
+    deliveries = _trail_deliveries(6, per=4)
+    input_rows = 0
+    for i, batch in enumerate(deliveries):
+        _deliver(spark, tmp_path, i, batch)
+        for q in _drain(spark, raw, tmp_path):
+            input_rows += sum(p["numInputRows"] for p in q.recentProgress)
+        for t in list(kvlog._FOLDS.values()):
+            t.join(120)
+    assert input_rows == 2 * sum(len(b) for b in deliveries)  # two sinks
+    _assert_exactly_once(spark, tmp_path, deliveries)
+    kv_root = tmp_path / "ckpt" / "enriched" / "kv" / "enrich"
+    manifest = json.loads((kv_root / "MANIFEST.json").read_text())
+    assert not [p for p in kv_root.glob("patch-*.parquet")
+                if int(p.stem.split("-")[1]) <= manifest["covered"]]
+
+
+def test_start_rejects_memory_sink_behind_keyed_state(spark, tmp_path):
+    (tmp_path / "in").mkdir()
+    spec = parse_spec(_s2s_spec({
+        "type": "json", "options": {"path": str(tmp_path / "in"), "schema": ROWS_SCHEMA},
+    }))
+    compiled = compile_pipeline(spark, spec, streaming=True)
+    with pytest.raises(ValueError, match=r"'memory' unsupported in streaming downstream of keyed-state rules \['enrich'\]"):
+        compiled.start(str(tmp_path / "ckpt"), available_now=True)
+
+
+def test_start_rejects_checkpoint_with_python_operator_state(spark, tmp_path):
+    """A sink checkpoint written by the applyInPandasWithState engine holds
+    state/ — resuming it would silently start from an empty KV."""
+    raw = _trail_raw(tmp_path)
+    (tmp_path / "in").mkdir()
+    (tmp_path / "ckpt" / "enriched" / "state" / "0").mkdir(parents=True)
+    compiled = compile_pipeline(spark, parse_spec(raw), streaming=True)
+    with pytest.raises(ValueError, match="holds applyInPandasWithState state for \\['enrich'\\]"):
+        compiled.start(str(tmp_path / "ckpt"), available_now=True)
+    assert not spark.streams.active
+
+
+def test_file_sink_log_writer_commits_each_batch_id_once(spark, tmp_path):
+    """Batch ids 0, 1, 1: the log holds 0 and 1, the replayed id writes no
+    file, and a reader sees only the committed rows."""
+    from go_fish_spark.streaming.sinks import file_sink_log_writer
+
+    out = tmp_path / "out"
+    write = file_sink_log_writer(spark, str(out))
+    for batch_id, v in ((0, 0), (1, 1), (1, 2)):
+        write(spark.createDataFrame([(v,)], "v long").coalesce(1), batch_id)
+    log = sorted(p.name for p in (out / "_spark_metadata").iterdir()
+                 if not p.name.startswith("."))
+    assert log == ["0", "1"]
+    assert len(list(out.glob("part-*.json"))) == 2
+    assert sorted(r.v for r in spark.read.schema("v long").json(str(out)).collect()) == [0, 1]
+
+
+def test_jvm_class_lookup_falls_back_then_names_what_is_missing(spark):
+    from py4j.java_gateway import JavaClass
+
+    from go_fish_spark.streaming.sinks import FILE_STREAM_SINK_CLASSES, jvm_class
+
+    # the 4.1 name, or the pre-4.1 one — whichever this Spark ships
+    assert isinstance(jvm_class(spark._jvm, FILE_STREAM_SINK_CLASSES), JavaClass)
+    real = "org.apache.spark.sql.execution.datasources.json.JsonFileFormat"
+    assert jvm_class(spark._jvm, ["org.example.Missing", real])._fqn == real
+    with pytest.raises(RuntimeError, match="org.example.Missing"):
+        jvm_class(spark._jvm, ["org.example.Missing", "org.example.AlsoMissing"])
+
+
+def test_multi_source_keyed_spec_streams_as_one_tagged_union(spark, tmp_path):
+    """Two sources upstream of one keyed rule stream as one query: the
+    AssumeRole source feeds ``s2s_enrich`` through a rule→rule sink edge,
+    its writes enrich the other source's events in a later delivery, and
+    each delivered row is read once."""
+    (tmp_path / "roles").mkdir()
+    (tmp_path / "events").mkdir()
+    src = {"type": "json", "options": {"schema": TRAIL_SCHEMA}}
+    raw = {
+        "sources": {
+            "roles": {**src, "options": {**src["options"], "path": str(tmp_path / "roles")}},
+            "events": {**src, "options": {**src["options"], "path": str(tmp_path / "events")}},
+        },
+        "rules": {
+            "assumed": {"source": "roles", "task": "passthrough", "sink": "enrich"},
+            "enrich": {"source": "events", "task": "s2s_enrich", "sink": "out",
+                       "options": {"key": "role_id", "time": "ts", "tiebreak": "event_id",
+                                   "write_when": "event_name = 'AssumeRole'",
+                                   "write_value": "concat('user/', principal)",
+                                   "fallback": "role_id"}},
+        },
+        "sinks": {"out": {"type": "json", "options": {"path": str(tmp_path / "out")}}},
+        "states": {},
+    }
+    deliveries = [
+        {"roles": [dict(event_id=1, ts="2024-01-01T00:00:00Z", role_id="r1",
+                        event_name="AssumeRole", principal="alice", mfa="false")],
+         "events": [dict(event_id=2, ts="2024-01-01T00:01:00Z", role_id="r2",
+                         event_name="GetObject", principal=None, mfa="false")]},
+        {"events": [dict(event_id=3, ts="2024-01-01T00:02:00Z", role_id="r1",
+                         event_name="GetObject", principal=None, mfa="false")]},
+    ]
+    input_rows = 0
+    for i, delivery in enumerate(deliveries):
+        for name, events in delivery.items():
+            (tmp_path / name / f"b{i}.json").write_text(
+                "".join(json.dumps(e) + "\n" for e in events))
+        [q] = _drain(spark, raw, tmp_path)
+        input_rows += sum(p["numInputRows"] for p in q.recentProgress)
+    assert input_rows == 3
+    out = spark.read.schema(TRAIL_SCHEMA + ", entity string").json(str(tmp_path / "out"))
+    assert {r.event_id: r.entity for r in out.collect()} == {
+        1: "user/alice", 2: "r2", 3: "user/alice"}

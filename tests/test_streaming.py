@@ -36,13 +36,47 @@ def run_to_memory(df, name, mode="append"):
     return q
 
 
+def _s2s_emit_spec(indir, outdir):
+    """The s2s golden as a JSON spec: ``s2s_enrich`` keyed on the role id
+    (AssumeRole writes the principal, a miss falls back to principal_id),
+    then only the CreateUser emits reach the json sink."""
+    from go_fish_spark.plans import parse_spec
+
+    return parse_spec({
+        "sources": {"in": {"type": "json", "options": {
+            "path": str(indir), "schema": EVENT_SCHEMA}}},
+        "rules": {
+            "enrich": {"source": "in", "task": "s2s_enrich", "state": "kv",
+                       "options": {"key": "key", "time": "ts",
+                                   "tiebreak": "event_id",
+                                   "write_when": "event_type = 'AssumeRole'",
+                                   "write_value": "principal",
+                                   "fallback": "principal_id"}},
+            "emits": {"source": "enrich", "task": "filter_eq", "sink": "out",
+                      "options": {"column": "event_type", "value": "CreateUser"}},
+        },
+        "sinks": {"out": {"type": "json", "options": {"path": str(outdir)}}},
+        "states": {"kv": {"type": "KV"}},
+    })
+
+
+def drain_s2s(spark, indir, outdir, ckpt):
+    """Start the s2s spec from ``ckpt`` and run it dry; returns the
+    committed (event_id → entity)."""
+    from go_fish_spark.plans import compile_pipeline
+
+    compiled = compile_pipeline(spark, _s2s_emit_spec(indir, outdir), streaming=True)
+    for q in compiled.start(str(ckpt), available_now=True):
+        q.awaitTermination(180)
+    out = spark.read.schema(EVENT_SCHEMA + ", entity string").json(str(outdir))
+    return {r.event_id: r.entity for r in out.collect()}
+
+
 def test_s2s_enrichment_golden(spark, tmp_path):
     """≡ integration_test.go:185-276: AssumeRole stores role-id→principal;
     a later CreateUser by that role emits Entity 'user/Bob'. A read with no
     prior write falls back to the raw principal id (`cloudTrail_s2s_join.
     go:124-130`)."""
-    from go_fish_spark.streaming import sources, stateful
-
     indir = tmp_path / "in"
     write_events(
         indir,
@@ -58,51 +92,26 @@ def test_s2s_enrichment_golden(spark, tmp_path):
                  key="AROLE:nobody", principal=None, principal_id="AROLE:nobody"),
         ],
     )
-    events = sources.json_stream(spark, str(indir), EVENT_SCHEMA)
-    enriched = stateful.s2s_enrichment_stream(
-        events,
-        write_kind="AssumeRole",
-        value_col="principal",
-        emit_kind="CreateUser",
-        fallback_col="principal_id",
-    )
-    run_to_memory(enriched, "s2s_out")
-    rows = {r.event_id: r.entity for r in spark.sql("SELECT * FROM s2s_out").collect()}
+    rows = drain_s2s(spark, indir, tmp_path / "out", tmp_path / "ckpt")
     assert rows == {2: "user/Bob", 3: "AROLE:nobody"}
 
 
 def test_s2s_state_persists_across_batches(spark, tmp_path):
     """The KV write must survive into later micro-batches (BoltDB
-    durability ≡ checkpointed state)."""
-    from go_fish_spark.streaming import sources, stateful, sinks
-
-    indir = tmp_path / "in"
-    ckpt = str(tmp_path / "ckpt")
+    durability ≡ the checkpointed KV log)."""
+    indir, outdir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
     write_events(indir, [
         dict(event_id=1, ts="2024-01-01T00:00:00Z", event_type="AssumeRole",
              key="k1", principal="user/Alice", principal_id="x"),
     ], "b0.json")
-
-    outdir = str(tmp_path / "out")
-    events = sources.json_stream(spark, str(indir), EVENT_SCHEMA, max_files_per_trigger=1)
-    enriched = stateful.s2s_enrichment_stream(
-        events, write_kind="AssumeRole", value_col="principal",
-        emit_kind="CreateUser", fallback_col="principal_id",
-    )
-    # memory sink can't recover from a checkpoint; use the file sink
-    q = sinks.json_sink(enriched, outdir, ckpt, trigger_available_now=True)
-    q.awaitTermination(120)
+    assert drain_s2s(spark, indir, outdir, ckpt) == {}
 
     # second batch, later file: the read must hit batch-1's state
     write_events(indir, [
         dict(event_id=2, ts="2024-01-01T01:00:00Z", event_type="CreateUser",
              key="k1", principal=None, principal_id="fallback"),
     ], "b1.json")
-    q2 = sinks.json_sink(enriched, outdir, ckpt, trigger_available_now=True)
-    q2.awaitTermination(120)
-    out = spark.read.schema("event_id long, ts timestamp, key string, entity string").json(outdir)
-    rows = {r.event_id: r.entity for r in out.collect()}
-    assert rows == {2: "user/Alice"}
+    assert drain_s2s(spark, indir, outdir, ckpt) == {2: "user/Alice"}
 
 
 def test_windowed_agg_golden(spark, tmp_path):
@@ -142,57 +151,6 @@ def test_global_count_stream(spark, tmp_path):
     counted = stateful.global_count_stream(events)
     run_to_memory(counted, "cnt_out", mode="update")
     assert spark.sql("SELECT cnt FROM cnt_out").collect()[0].cnt == 4
-
-
-def test_keyed_counter_tws_golden(spark, tmp_path):
-    """≡ integration_test.go:319-416 keyed agg on the Spark-4
-    StatefulProcessor API (transformWithStateInPandas): three no-MFA
-    events for one entity → running count reaches 3; a second micro-batch
-    proves the ValueState persists across batches (BoltDB durability ≡
-    checkpointed state). Skipped on runtimes without the API."""
-    from go_fish_spark.streaming import sinks, sources, stateful
-
-    if not stateful.has_transform_with_state():
-        pytest.skip("transformWithStateInPandas not available")
-
-    indir = tmp_path / "in"
-    ckpt = str(tmp_path / "ckpt")
-    outdir = str(tmp_path / "out")
-    write_events(
-        indir,
-        [
-            dict(event_id=i, ts=f"2024-01-01T00:0{i}:00Z", event_type="CreateUser",
-                 key="role/AssumeNothing", principal=None, principal_id="p")
-            for i in range(1, 4)
-        ],
-        "b0.json",
-    )
-    events = sources.json_stream(spark, str(indir), EVENT_SCHEMA)
-    counted = stateful.keyed_counter_tws_stream(events)
-    q = sinks.json_sink(counted, outdir, ckpt, trigger_available_now=True)
-    q.awaitTermination(120)
-
-    out_schema = "key string, occurrences long"
-    rows = spark.read.schema(out_schema).json(outdir).collect()
-    assert [(r.key, r.occurrences) for r in rows] == [("role/AssumeNothing", 3)]
-
-    # batch 2: two more events for the same key — state must carry the 3
-    write_events(
-        indir,
-        [
-            dict(event_id=i, ts=f"2024-01-01T01:0{i}:00Z", event_type="CreateUser",
-                 key="role/AssumeNothing", principal=None, principal_id="p")
-            for i in range(4, 6)
-        ],
-        "b1.json",
-    )
-    q2 = sinks.json_sink(counted, outdir, ckpt, trigger_available_now=True)
-    q2.awaitTermination(120)
-    totals = sorted(
-        r.occurrences
-        for r in spark.read.schema(out_schema).json(outdir).collect()
-    )
-    assert totals == [3, 5]
 
 
 def test_stream_incremental_dedup_vs_static_store(spark, tmp_path):
@@ -926,7 +884,7 @@ def test_idempotent_json_sink_end_to_end(spark, tmp_path):
     import json as _json
 
     from go_fish_spark.streaming import sources
-    from go_fish_spark.streaming.sinks import idempotent_json_sink
+    from go_fish_spark.streaming.sinks import foreach_sink, idempotent_batch_writer
 
     indir = tmp_path / "in"
     indir.mkdir()
@@ -934,9 +892,9 @@ def test_idempotent_json_sink_end_to_end(spark, tmp_path):
         for v in (10, 20):
             f.write(_json.dumps({"v": v}) + "\n")
     stream = sources.json_stream(spark, str(indir), "v long")
-    q = idempotent_json_sink(
-        stream, str(tmp_path / "out"), str(tmp_path / "ckpt"),
-        trigger_available_now=True,
+    q = foreach_sink(
+        stream, idempotent_batch_writer(str(tmp_path / "out")),
+        str(tmp_path / "ckpt"), trigger_available_now=True,
     )
     q.awaitTermination(120)
     got = spark.read.json(str(tmp_path / "out"))
@@ -1949,38 +1907,18 @@ def test_s2s_state_survives_checkpointed_restart(spark, tmp_path):
     import glob as _glob
     import json as _json
 
-    from go_fish_spark.streaming import sources, stateful
-
     indir = tmp_path / "in"
-    ckpt = str(tmp_path / "ckpt")
+    ckpt = tmp_path / "ckpt"
     outdir = str(tmp_path / "out")
 
-    def drain():
-        events = sources.json_stream(spark, str(indir), EVENT_SCHEMA)
-        enriched = stateful.s2s_enrichment_stream(
-            events,
-            write_kind="AssumeRole",
-            value_col="principal",
-            emit_kind="CreateUser",
-            fallback_col="principal_id",
-        )
-        q = (
-            enriched.writeStream.format("json")
-            .option("path", outdir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
     def emitted():
-        return {
-            r["event_id"]: r["entity"]
+        return [
+            (r["event_id"], r["entity"])
             for f in _glob.glob(outdir + "/*.json")
             for line in open(f)
             if line.strip()
             for r in [_json.loads(line)]
-        }
+        ]
 
     # run 1: the WRITE plus one emit (sanity that enrichment works live)
     write_events(
@@ -1994,11 +1932,11 @@ def test_s2s_state_survives_checkpointed_restart(spark, tmp_path):
                  principal=None, principal_id="AROLE:Bob-EC2-dev"),
         ],
     )
-    drain()
-    assert emitted() == {2: "user/Bob"}
+    drain_s2s(spark, indir, outdir, ckpt)
+    assert emitted() == [(2, "user/Bob")]
 
     # between runs: ONLY an emit arrives — the principal it needs lives
-    # in run 1's checkpointed state
+    # in run 1's checkpointed KV
     write_events(
         indir,
         [
@@ -2008,8 +1946,8 @@ def test_s2s_state_survives_checkpointed_restart(spark, tmp_path):
         ],
         fname="batch1.json",
     )
-    drain()  # a NEW query object, same checkpoint
-    assert emitted() == {2: "user/Bob", 5: "user/Bob"}
+    drain_s2s(spark, indir, outdir, ckpt)  # a NEW query object, same checkpoint
+    assert sorted(emitted()) == [(2, "user/Bob"), (5, "user/Bob")]
 
 
 def test_stream_pit_features_vs_batch(spark, tmp_path):
