@@ -26,6 +26,14 @@ ops, each designed for the 100 TB shape:
                    checks; the scale path is LSH bucketing in
                    similarity.py (random-hyperplane buckets → one shuffle).
 
+Every pair operator goes through ONE blocked-pair kernel
+(:func:`_blocked_pairs` — explode a key, self-join on it with
+``id_a < id_b``; zero keys gives the exact all-pairs baselines), one
+per-document join-back (:func:`_join_back`) and one guarded set
+Jaccard (:func:`_jaccard`). The exceptions generate pairs their own
+way: the delta probe's broadcast store scan (:func:`_delta_probe`) and
+the sorted-neighborhood rank windows.
+
 All signature math uses Spark built-ins over 31-bit modular arithmetic so
 products stay far below 2^63 — no silent long overflow.
 
@@ -86,6 +94,78 @@ def release_caches() -> int:
         except Exception:
             pass
     return n
+
+
+# ---------------------------------------------------------------------------
+# The blocked-pair kernel: every pair operator below generates its
+# candidate pairs, attaches per-document columns to them and computes
+# shingle-set Jaccard through these helpers.
+
+
+def _blocked_pairs(rows: DataFrame, keys=(), carry=()) -> DataFrame:
+    """Self-join ``rows`` (``_id`` plus the ``keys`` and ``carry``
+    columns) on equal ``keys`` with ``id_a < id_b``: one row per pair
+    and shared key value — a pair sharing two keys gives two
+    co-occurrence rows, which the caller counts or deduplicates — with
+    columns (id_a, id_b, then ``<c>_a``, ``<c>_b`` per ``carry``
+    column). With no ``keys``, every id_a < id_b pair (the exact O(n²)
+    baselines). Pairs sharing no key are never materialized: the join
+    shuffles once on the key columns, and each side is renamed only
+    after it, so the exploded rows carry no extra projection."""
+    on = functools.reduce(
+        lambda x, y: x & y,
+        [F.col(f"_a.{k}") == F.col(f"_b.{k}") for k in keys]
+        + [F.col("_a._id") < F.col("_b._id")],
+    )
+    return rows.alias("_a").join(rows.alias("_b"), on).select(
+        F.col("_a._id").alias("id_a"),
+        F.col("_b._id").alias("id_b"),
+        *[F.col(f"_{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+    )
+
+
+def _join_back(pairs: DataFrame, docs: DataFrame, carry) -> DataFrame:
+    """Attach ``docs``' per-document ``carry`` columns (keyed by
+    ``_id``) to both sides of a candidate pair frame: ``<c>_a`` on
+    id_a, then ``<c>_b`` on id_b. Work ∝ candidate pairs."""
+    for s in "ab":
+        pairs = pairs.join(
+            docs.select(
+                F.col("_id").alias(f"id_{s}"),
+                *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            ),
+            f"id_{s}",
+        )
+    return pairs
+
+
+def _jaccard(inter: Column, n_a: Column, n_b: Column) -> Column:
+    """Set Jaccard from the intersection size and both set sizes. Two
+    empty sets (sub-k-token documents) give NULL, which fails every
+    threshold, instead of a 0/0 that kills the job under ANSI."""
+    denom = n_a + n_b - inter
+    return F.when(denom > 0, inter / denom)
+
+
+def _shingle_jaccard(sa: str = "_sh_a", sb: str = "_sh_b") -> Column:
+    """:func:`_jaccard` of two shingle-set array columns."""
+    return _jaccard(
+        F.size(F.array_intersect(sa, sb)), F.size(sa), F.size(sb)
+    )
+
+
+def _verified_jaccard(
+    cands: DataFrame, shingles: DataFrame, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard) for the candidate pairs ``cands`` whose
+    exact Jaccard over ``shingles``' (_id, _sh) sets meets
+    ``threshold`` — the verification stage of every blocking discipline
+    that screens candidates first (prefix filter, winnowing, SNM)."""
+    return (
+        _join_back(cands, shingles, ("_sh",))
+        .select("id_a", "id_b", _shingle_jaccard().alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 def minhash_params(n_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
@@ -152,8 +232,10 @@ def minhash_signature(
     """array<long> MinHash signature, entirely array-side (no shuffle).
 
     h_i(x) = (a_i*x + b_i) mod (2^31-1); a_i,x < 2^31 keeps products
-    < 2^62. Empty shingle sets get sentinel 2^31-1 signatures (can only
-    collide with other empty docs).
+    < 2^62. Empty shingle sets (fewer than k tokens) get the all-sentinel
+    2^31-1 signature, which no real shingle can produce: it means "no
+    shingles", so banding emits no bands for it (every two such docs
+    would otherwise agree on all components and pair at 1.0).
 
     Shingle hashing runs ONCE per row (let-bound), then the 64 component
     mins iterate the in-memory hash array — O(shingles × n_hashes) array
@@ -192,38 +274,36 @@ def _band_struct_array(n_hashes: int, bands: int, portable: bool):
     shuffled or broadcast, because carrying the 64-long signature through
     a bands×-exploded join would move ``bands`` copies of every
     signature. Candidates then meet their signatures either by joining
-    back to the persisted sigs (:func:`minhash_lsh_pairs`) or, in the
+    back to the persisted sigs (:func:`_join_back` in
+    :func:`minhash_lsh_pairs`) or, in the
     delta probe (:func:`_delta_probe`), on the streamed store row that
     produced them, which never leaves its task. One parsed SQL literal, not
     bands × 4 Column calls (py4j overhead). The ``portable`` arm is the
     Horner fold :func:`duck_minhash_lsh_sql` mirrors integer-for-
-    integer; the default arm is JVM xxhash64 over the band slice."""
+    integer; the default arm is JVM xxhash64 over the band slice. An
+    all-sentinel signature (no shingles, see :func:`minhash_signature`)
+    has no bands."""
     rows_per_band = n_hashes // bands
-    if portable:
-        def _bh(b: int) -> str:
-            e = f"element_at(_sig,{b * rows_per_band + 1})"
-            for j in range(1, rows_per_band):
-                e = (
-                    f"pmod({e} * {_SHINGLE_A} + "
-                    f"element_at(_sig,{b * rows_per_band + j + 1}), {_P31})"
-                )
-            return e
 
-        return F.expr(
-            "array("
-            + ",".join(
-                f"named_struct('band',{b},'bh',{_bh(b)})" for b in range(bands)
+    def _bh(b: int) -> str:
+        if not portable:
+            return (
+                f"xxhash64(slice(_sig,{b * rows_per_band + 1},{rows_per_band}))"
             )
-            + ")"
-        )
+        e = f"element_at(_sig,{b * rows_per_band + 1})"
+        for j in range(1, rows_per_band):
+            e = (
+                f"pmod({e} * {_SHINGLE_A} + "
+                f"element_at(_sig,{b * rows_per_band + j + 1}), {_P31})"
+            )
+        return e
+
     return F.expr(
-        "array("
+        f"CASE WHEN element_at(_sig,1) = {_P31} THEN array() ELSE array("
         + ",".join(
-            f"named_struct('band',{b},"
-            f"'bh',xxhash64(slice(_sig,{b * rows_per_band + 1},{rows_per_band})))"
-            for b in range(bands)
+            f"named_struct('band',{b},'bh',{_bh(b)})" for b in range(bands)
         )
-        + ")"
+        + ") END"
     )
 
 
@@ -280,23 +360,13 @@ def minhash_lsh_pairs(
         "_id", F.col("bd.band").alias("band"), F.col("bd.bh").alias("bh")
     )
 
-    a, b = exploded.alias("a"), exploded.alias("b")
-    cand_ids = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+    cand_ids = _blocked_pairs(exploded, ("band", "bh")).dropDuplicates(
+        ["id_a", "id_b"]
     )
-    sig_a = sigs.select(F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a"))
-    sig_b = sigs.select(F.col("_id").alias("id_b"), F.col("_sig").alias("sig_b"))
-    candidates = cand_ids.join(sig_a, "id_a").join(sig_b, "id_b")
+    candidates = _join_back(cand_ids, sigs, ("_sig",))
 
     agree = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
+        F.filter(F.zip_with("_sig_a", "_sig_b", lambda x, y: x == y), lambda v: v)
     )
     est = agree / F.lit(float(n_hashes))
     return (
@@ -322,6 +392,7 @@ def _duck_minhash_parts(
     signature list, ``bandlist`` Horner band hashes, ``agree`` component
     agreement over ``sa``/``sb``) — shared by every mirror that speaks
     signatures (:func:`duck_minhash_lsh_sql`,
+    :func:`duck_minhash_error_audit_sql`,
     :func:`duck_incremental_near_dedup_sql`)."""
     assert n_hashes % bands == 0
     r = n_hashes // bands
@@ -351,9 +422,10 @@ def _duck_minhash_parts(
             e = f"(({e}) * {_SHINGLE_A} + sig[{b * r + j + 1}]) % {_P31}"
         return e
 
-    bandlist = "[" + ",".join(
+    # the all-sentinel signature means "no shingles": no bands
+    bandlist = f"CASE WHEN sig[1] = {_P31} THEN [] ELSE [" + ",".join(
         f"{{band: {b}, bh: {bh(b)}}}" for b in range(bands)
-    ) + "]"
+    ) + "] END"
     agree = (
         f"len([i for i in range(1, {n_hashes + 1}) "
         "if sa.sig[i] = sb.sig[i]])"
@@ -438,19 +510,11 @@ def minhash_error_audit(
         portable=True,
     )
     sh = df.select(
-        F.col(id_col).alias("_sid"),
+        F.col(id_col).alias("_id"),
         _shingle_hashes(text_col, k, portable=True).alias("_sh"),
     )
-    j = pairs.join(
-        sh.select(F.col("_sid").alias("id_a"), F.col("_sh").alias("_sha")),
-        "id_a",
-    ).join(
-        sh.select(F.col("_sid").alias("id_b"), F.col("_sh").alias("_shb")),
-        "id_b",
-    )
-    inter = F.size(F.array_intersect("_sha", "_shb"))
-    union = F.size("_sha") + F.size("_shb") - inter
-    err = F.abs(F.col("est_jaccard") - inter / union)
+    j = _join_back(pairs, sh, ("_sh",))
+    err = F.abs(F.col("est_jaccard") - _shingle_jaccard())
     binned = j.select(
         F.floor(err * 20).cast("int").alias("err_bin"),
         F.round(err, 12).cast("decimal(27,18)").alias("_e"),
@@ -486,50 +550,21 @@ def duck_minhash_error_audit_sql(
     (est, exact, err, bin) runs in the same order as the Spark arm."""
     from .similarity import _dlit
 
-    assert n_hashes % bands == 0
-    r = n_hashes // bands
-    params = minhash_params(n_hashes, seed)
-    tok = (
-        f"list_transform(string_split({text_col}, ' '), "
-        f"t -> {_DUCK_TOKEN_HASH.format(t='t')} % {_P31})"
-    )
-    sh_e = "th[i]"
-    for jj in range(1, k):
-        sh_e = f"(({sh_e}) * {_SHINGLE_A} + th[i+{jj}]) % {_P31}"
-    shing = (
-        f"CASE WHEN len(th) >= {k} THEN "
-        f"list_distinct([{sh_e} for i in range(1, len(th) - {k - 2})]) "
-        f"ELSE CAST([] AS BIGINT[]) END"
-    )
-    sig_list = "[" + ",".join(
-        f"coalesce(list_min(list_transform(sh, x -> (x * {a} + {b}) % {_P31})), {_P31})"
-        for a, b in params
-    ) + "]"
-
-    def bh(b: int) -> str:
-        e = f"sig[{b * r + 1}]"
-        for jj in range(1, r):
-            e = f"(({e}) * {_SHINGLE_A} + sig[{b * r + jj + 1}]) % {_P31}"
-        return e
-
-    bandlist = "[" + ",".join(
-        f"{{band: {b}, bh: {bh(b)}}}" for b in range(bands)
-    ) + "]"
-    agree = f"len([i for i in range(1, {n_hashes + 1}) if sa.sig[i] = sb.sig[i]])"
+    p = _duck_minhash_parts(text_col, n_hashes, bands, k, seed)
     return f"""
-    WITH th AS (SELECT {id_col} AS _id, {tok} AS th FROM {tbl}),
-    shn AS (SELECT _id, {shing} AS sh FROM th),
-    sig AS (SELECT _id, {sig_list} AS sig FROM shn),
+    WITH th AS (SELECT {id_col} AS _id, {p["tok"]} AS th FROM {tbl}),
+    shn AS (SELECT _id, {p["shing"]} AS sh FROM th),
+    sig AS (SELECT _id, {p["sig"]} AS sig FROM shn),
     ex AS (SELECT _id, bd.band AS band, bd.bh AS bh
-           FROM (SELECT _id, unnest({bandlist}) AS bd FROM sig)),
+           FROM (SELECT _id, unnest({p["bandlist"]}) AS bd FROM sig)),
     cand AS (SELECT DISTINCT a._id AS id_a, b._id AS id_b
              FROM ex a JOIN ex b
              ON a.band = b.band AND a.bh = b.bh AND a._id < b._id),
     est AS (
-      SELECT id_a, id_b, {agree} / {_dlit(n_hashes)} AS est_jaccard
+      SELECT id_a, id_b, {p["agree"]} / {_dlit(n_hashes)} AS est_jaccard
       FROM cand JOIN sig sa ON cand.id_a = sa._id
                 JOIN sig sb ON cand.id_b = sb._id
-      WHERE {agree} / {_dlit(n_hashes)} >= {_dlit(threshold)}
+      WHERE {p["agree"]} / {_dlit(n_hashes)} >= {_dlit(threshold)}
     ),
     jx AS (
       SELECT abs(est_jaccard
@@ -623,25 +658,14 @@ def simhash_pairs(
         "_id", "_chunks", F.posexplode("_chunks").alias("ci", "cv")
     )
 
-    a, b = exploded.alias("a"), exploded.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.col("a._chunks").alias("ca"),
-            F.col("b._chunks").alias("cb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    cands = _blocked_pairs(exploded, ("ci", "cv"), ("_chunks",)).dropDuplicates(
+        ["id_a", "id_b"]
     )
 
     hamming = F.aggregate(
-        F.zip_with("ca", "cb", lambda x, y: F.bit_count(x.bitwiseXOR(y))),
+        F.zip_with(
+            "_chunks_a", "_chunks_b", lambda x, y: F.bit_count(x.bitwiseXOR(y))
+        ),
         F.lit(0),
         lambda acc, x: acc + x,
     )
@@ -734,7 +758,8 @@ def ngram_jaccard_pairs(
     produce identical results; the right one depends on the threshold:
 
     * **inverted-index join** (default for t < 0.6): explode distinct
-      shingles → self-join on shingle → per-pair co-occurrence counts via
+      shingles → self-join on shingle (:func:`_shingle_cooccurrence`
+      over :func:`_blocked_pairs`) → per-pair co-occurrence counts via
       map-side partial aggregation. Every co-occurrence row is touched,
       but Spark's hash aggregation makes that cheap; at moderate
       thresholds most pairs qualify anyway, so pruning buys little
@@ -767,29 +792,10 @@ def ngram_jaccard_pairs(
     if prefix_filter is None:
         prefix_filter = threshold >= 0.6
 
-    sh = _persist(  # consumed by multiple plan branches
-        df.select(
-            F.col(id_col).alias("_id"), word_shingles(text_col, k).alias("_sh")
-        ).withColumn("_n", F.size("_sh"))
-    )
-    inv = sh.select("_id", "_n", F.explode("_sh").alias("s"))
+    sh = _shingle_sets(df, id_col, text_col, k)
 
     if not prefix_filter:
-        a, b = inv.alias("a"), inv.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a._id") < F.col("b._id")),
-            )
-            .groupBy(
-                F.col("a._id").alias("id_a"),
-                F.col("b._id").alias("id_b"),
-                F.col("a._n").alias("n_a"),
-                F.col("b._n").alias("n_b"),
-            )
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
+        inter = _shingle_cooccurrence(sh)
         if pair_sample_frac is not None:
             # per DISTINCT pair — one md5 per pair, not per co-occurrence
             inter = inter.filter(
@@ -800,17 +806,15 @@ def ngram_jaccard_pairs(
                     pair_sample_seed,
                 )
             )
-        jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
+        jac = _jaccard(F.col("inter"), F.col("_n_a"), F.col("_n_b"))
         return (
             inter.withColumn("jaccard", jac)
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard")
         )
 
+    inv = sh.select("_id", "_n", F.explode("_sh").alias("s"))
     freq = inv.groupBy("s").agg(F.count(F.lit(1)).alias("_df"))
-
-    from pyspark.sql import Window
-
     rarity = Window.partitionBy("_id").orderBy("_df", "s")
     prefix_len = F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n")) + 1
     prefix = (
@@ -820,16 +824,7 @@ def ngram_jaccard_pairs(
         .select("_id", "s")
     )
 
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cands = _blocked_pairs(prefix, ("s",)).dropDuplicates(["id_a", "id_b"])
     if pair_sample_frac is not None:
         # per DISTINCT candidate — the exact verification below (the
         # prefix plan's expensive stage) rides the sample
@@ -842,18 +837,32 @@ def ngram_jaccard_pairs(
             )
         )
 
-    sa = sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"), F.col("_n").alias("n_a"))
-    sb = sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"), F.col("_n").alias("n_b"))
-    verified = (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("_sha", "_shb")))
+    return _verified_jaccard(cands, sh, threshold)
+
+
+def _shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, k: int
+) -> DataFrame:
+    """Persisted (_id, _sh, _n) word-k-shingle sets and their sizes —
+    read by the inverted index and again by any verification
+    join-back."""
+    return _persist(
+        df.select(
+            F.col(id_col).alias("_id"), word_shingles(text_col, k).alias("_sh")
+        ).withColumn("_n", F.size("_sh"))
     )
-    jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
+
+
+def _shingle_cooccurrence(sh: DataFrame) -> DataFrame:
+    """(id_a, id_b, _n_a, _n_b, inter) for every unordered pair sharing
+    ≥ 1 shingle of :func:`_shingle_sets` ``sh``: both set sizes and the
+    shared-shingle count — the inverted-index self-join on the shingle
+    with map-side partial aggregation of the co-occurrence rows."""
+    inv = sh.select("_id", "_n", F.explode("_sh").alias("s"))
     return (
-        verified.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        _blocked_pairs(inv, ("s",), ("_n",))
+        .groupBy("id_a", "id_b", "_n_a", "_n_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
     )
 
 
@@ -864,23 +873,29 @@ def ngram_jaccard_pairs(
 def embedding_dup_pairs(
     df: DataFrame, id_col: str, vec_col: str, threshold: float = 0.45
 ) -> DataFrame:
-    """Exact cosine pair scan (O(n²)) — the correctness baseline. The
-    clustered scale path is :func:`semantic_dedup_pairs` (x26)."""
-    left = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
-        vectors.norm(vec_col).alias("_na"),
+    """Exact cosine pair scan (O(n²)) — the correctness baseline: the
+    kernel's zero-key arm. The clustered scale path is
+    :func:`semantic_dedup_pairs` (x26)."""
+    return _cosine_pairs(df, id_col, vec_col, threshold)
+
+
+def _cosine_pairs(
+    df: DataFrame, id_col: str, vec_col: str, threshold: float, **keys: Column
+) -> DataFrame:
+    """(id_a, id_b, cos round-6) for the pairs sharing every ``keys``
+    column (name → expression; none = all pairs) whose exact cosine
+    meets ``threshold``. Norms per ROW, one aggregate per PAIR
+    (bit-identical; vectors.cosine_pre)."""
+    rows = df.select(
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).alias("_v"),
+        *[e.alias(name) for name, e in keys.items()],
+        vectors.norm(vec_col).alias("_nrm"),
     )
-    right = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        vectors.norm(vec_col).alias("_nb"),
-    )
-    pairs = left.join(right, F.col("id_a") < F.col("id_b"))
-    # norms per ROW, one aggregate per PAIR (bit-identical; vectors.cosine_pre)
-    cos = vectors.cosine_pre("va", "vb", "_na", "_nb")
+    cos = vectors.cosine_pre("_v_a", "_v_b", "_nrm_a", "_nrm_b")
     return (
-        pairs.withColumn("cos", cos)
+        _blocked_pairs(rows, tuple(keys), ("_v", "_nrm"))
+        .withColumn("cos", cos)
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
     )
@@ -916,28 +931,9 @@ def lsh_bucketed_dup_pairs(
     from . import similarity
 
     planes = similarity.hyperplanes(dim, n_planes, seed)
-    bk = similarity.bucket_key(vec_col, planes)
-    left = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
-        bk.alias("_bk"),
-        vectors.norm(vec_col).alias("_na"),
-    )
-    right = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        bk.alias("_bk2"),
-        vectors.norm(vec_col).alias("_nb"),
-    )
-    pairs = left.join(
-        right, (F.col("_bk") == F.col("_bk2")) & (F.col("id_a") < F.col("id_b"))
-    )
-    # norms per ROW, one aggregate per PAIR (bit-identical; vectors.cosine_pre)
-    cos = vectors.cosine_pre("va", "vb", "_na", "_nb")
-    return (
-        pairs.withColumn("cos", cos)
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
+    return _cosine_pairs(
+        df, id_col, vec_col, threshold,
+        _bk=similarity.bucket_key(vec_col, planes),
     )
 
 
@@ -1165,19 +1161,15 @@ def semantic_dedup_pairs_expr(
     dense cells (one dgemm per cell), this arm is the correctness
     contract — and is itself scale-sound (same single shuffle; per-pair
     HOF cosine instead of a gram matrix)."""
-    bk = quantizer.assign_expr_col(vec_col)
-    left = df.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), bk.alias("_c")
+    rows = df.select(
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).alias("_v"),
+        quantizer.assign_expr_col(vec_col).alias("_c"),
     )
-    right = df.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), bk.alias("_c2")
-    )
-    pairs = left.join(
-        right, (F.col("_c") == F.col("_c2")) & (F.col("id_a") < F.col("id_b"))
-    )
-    cos = vectors.cosine("va", "vb")
+    cos = vectors.cosine("_v_a", "_v_b")
     return (
-        pairs.withColumn("cos", cos)
+        _blocked_pairs(rows, ("_c",), ("_v",))
+        .withColumn("cos", cos)
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
     )
@@ -1675,34 +1667,24 @@ def containment_pairs(
     directions evaluated independently (containment is not symmetric);
     docs with fewer than k tokens have no shingles and emit nothing.
 
-    100 TB shape: the same inverted-index law as the Jaccard join — one
-    shuffle on the shingle key, per-pair co-occurrence via map-side
-    partial aggregation, pairs sharing no shingle never materialize —
-    with twice the pair rows (ordered, not id_a < id_b)."""
-    sh = _persist(
-        df.select(
-            F.col(id_col).alias("_id"), word_shingles(text_col, k).alias("_sh")
-        ).withColumn("_n", F.size("_sh"))
+    100 TB shape: the Jaccard join's inverted-index co-occurrence count
+    (:func:`_shingle_cooccurrence`: one shuffle on the shingle key,
+    map-side partial aggregation, pairs sharing no shingle never
+    materialize) read once per UNORDERED pair; each counted pair then
+    emits both directions, |S∩|/|Sa| and |S∩|/|Sb|."""
+    inter = _shingle_cooccurrence(_shingle_sets(df, id_col, text_col, k))
+    both = F.array(
+        F.struct(
+            F.col("id_a"), F.col("id_b"),
+            (F.col("inter") / F.col("_n_a")).alias("containment"),
+        ),
+        F.struct(
+            F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"),
+            (F.col("inter") / F.col("_n_b")).alias("containment"),
+        ),
     )
-    inv = sh.select("_id", "_n", F.explode("_sh").alias("s"))
-    a, b = inv.alias("a"), inv.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a._id") != F.col("b._id")),
-        )
-        .groupBy(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.col("a._n").alias("n_a"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        inter.withColumn("containment", F.col("inter") / F.col("n_a"))
-        .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", "containment")
+    return inter.select(F.inline(both)).filter(
+        F.col("containment") >= threshold
     )
 
 
@@ -1805,24 +1787,22 @@ def group_sketch_overlap(
         )
         .filter(F.col("_u").getItem(0).isNotNull())
     )
-    a = m.select(F.col("_g").alias("g_a"), F.col("_u").alias("_sa"))
-    b = m.select(F.col("_g").alias("g_b"), F.col("_u").alias("_sb"))
     agree = F.size(
         F.filter(
-            F.zip_with("_sa", "_sb", lambda x, y: x == y), lambda v: v
+            F.zip_with("_u_a", "_u_b", lambda x, y: x == y), lambda v: v
         )
     )
     # min over a group's positions == sentinel ⟺ every position is
     # the sentinel (it is the max representable value) ⟺ the group's
     # union shingle set is empty → NULL, not a fake-perfect overlap
     return (
-        a.join(b, F.col("g_a") < F.col("g_b"))
+        _blocked_pairs(m.withColumnRenamed("_g", "_id"), carry=("_u",))
         .select(
-            "g_a",
-            "g_b",
+            F.col("id_a").alias("g_a"),
+            F.col("id_b").alias("g_b"),
             F.when(
-                (F.array_min("_sa") == _P31)
-                | (F.array_min("_sb") == _P31),
+                (F.array_min("_u_a") == _P31)
+                | (F.array_min("_u_b") == _P31),
                 F.lit(None).cast("double"),
             )
             .otherwise(agree / F.lit(float(n_hashes)))
@@ -2172,12 +2152,6 @@ def lsh_plan_sweep(
     # one row per pair per side instead of n_hashes exploded rows — and
     # the per-(pair, plan, band) + per-(pair, plan) groupBys disappear:
     # the only aggregation left is the ≤ #plans-row report.
-    a = per_doc.select(
-        F.col("_id").alias("id_a"), F.col("_sig").alias("_sig_a")
-    )
-    b = per_doc.select(
-        F.col("_id").alias("id_b"), F.col("_sig").alias("_sig_b")
-    )
     def collide_expr(bands: int, r: int):
         return F.when(
             F.exists(
@@ -2202,8 +2176,7 @@ def lsh_plan_sweep(
         ]
     )
     collide = (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
+        _join_back(pairs, per_doc, ("_sig",))
         .select("id_a", "id_b", "jaccard", F.explode(plan_rows).alias("_pl"))
         .select("id_a", "id_b", "jaccard", "_pl.*")
     )
@@ -2710,37 +2683,15 @@ def run_blocking(
         # k-gram Jaccard on the CANDIDATE SET only (join through the
         # shingle arrays; bounded by the priced candidate count, never
         # the full pair space)
-        cand = winnow_pair_screen(
-            df, id_col, text_col, k=k, w=winnow_w, portable=portable
-        )
-        vsh = df.select(
-            F.col(id_col).alias("_vid"),
-            word_shingles(text_col, k).alias("_vsh"),
-        ).withColumn("_vn", F.size("_vsh"))
-        verified = (
-            cand.join(
-                vsh.select(
-                    F.col("_vid").alias("id_a"),
-                    F.col("_vsh").alias("_sha"),
-                    F.col("_vn").alias("n_a"),
-                ),
-                "id_a",
-            )
-            .join(
-                vsh.select(
-                    F.col("_vid").alias("id_b"),
-                    F.col("_vsh").alias("_shb"),
-                    F.col("_vn").alias("n_b"),
-                ),
-                "id_b",
-            )
-            .withColumn("inter", F.size(F.array_intersect("_sha", "_shb")))
-        )
-        jac = F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-        pairs = (
-            verified.withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
+        pairs = _verified_jaccard(
+            winnow_pair_screen(
+                df, id_col, text_col, k=k, w=winnow_w, portable=portable
+            ),
+            df.select(
+                F.col(id_col).alias("_id"),
+                word_shingles(text_col, k).alias("_sh"),
+            ),
+            threshold,
         )
     elif chosen == "sorted_neighborhood":
         # SNM candidates are EXACTLY n·window·len(keys) — the realized
@@ -2917,7 +2868,7 @@ def winnow_pair_screen(
 
     100 TB shape: fingerprints are a per-row array expression (no
     shuffle), ONE exchange on the fingerprint key for the inverted-index
-    self-join, map-side-combined pair counts. Hot fingerprints
+    self-join (:func:`_blocked_pairs`), map-side-combined pair counts. Hot fingerprints
     (boilerplate runs) follow the same skew law as hot shingles — AQE
     skew splitting plus the budget estimator are the controls."""
     fp = df.select(
@@ -2926,16 +2877,9 @@ def winnow_pair_screen(
             winnow_fingerprints_expr(text_col, k, w, portable)
         ).alias("_f"),
     )
-    a, b = fp.alias("a"), fp.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a._f") == F.col("b._f"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .groupBy(
-            F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
-        )
+        _blocked_pairs(fp, ("_f",))
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= int(min_shared))
         .orderBy("id_a", "id_b")
@@ -3071,9 +3015,6 @@ def sorted_neighborhood_pairs(
         # verification join, no pair dedupe (one pass's rank-window
         # pairs are already unique). The multi-key path below trades
         # these two joins for cross-pass dedupe before verification.
-        inter1 = F.size(F.array_intersect("_sha", "_shb"))
-        denom1 = F.size("_sha") + F.size("_shb") - inter1
-        jac1 = F.when(denom1 > 0, inter1 / denom1)
         base = df.select(
             F.col(id_col).alias("_id"),
             _snm_key_expr(text_col, keys[0], key_len).alias("_key"),
@@ -3097,7 +3038,7 @@ def sorted_neighborhood_pairs(
             .select(
                 F.least("_ida", "_idb").alias("id_a"),
                 F.greatest("_ida", "_idb").alias("id_b"),
-                jac1.alias("jaccard"),
+                _shingle_jaccard("_sha", "_shb").alias("jaccard"),
             )
             .filter(
                 (F.col("jaccard") >= threshold)
@@ -3164,34 +3105,8 @@ def sorted_neighborhood_pairs(
         .dropDuplicates(["id_a", "id_b"])
     )
 
-    inter = F.size(F.array_intersect("_sha", "_shb"))
-    denom = F.size("_sha") + F.size("_shb") - inter
-    # two adjacent sub-k-token docs have empty shingle sets → 0/0 under
-    # ANSI would kill the job; NULL jaccard drops the pair instead
-    jac = F.when(denom > 0, inter / denom)
-    return (
-        cand.join(
-            shingles.select(
-                F.col("_id").alias("id_a"), F.col("_sh").alias("_sha")
-            ),
-            "id_a",
-        )
-        .join(
-            shingles.select(
-                F.col("_id").alias("id_b"), F.col("_sh").alias("_shb")
-            ),
-            "id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            jac.alias("jaccard"),
-        )
-        .filter(
-            (F.col("jaccard") >= threshold)
-            & F.col("jaccard").isNotNull()
-        )
-        .orderBy("id_a", "id_b")
+    return _verified_jaccard(cand, shingles, threshold).orderBy(
+        "id_a", "id_b"
     )
 
 

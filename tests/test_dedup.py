@@ -1385,3 +1385,129 @@ def test_sketch_screen_relational_equals_expression_arm(spark):
     assert sketch_screen_matches(
         df, "doc_id", "text", [], threshold=0.5, portable=True
     ).count() == 0
+
+
+def test_blocked_pairs_kernel_rows_and_naming(spark):
+    """The blocked-pair kernel: one row per pair and SHARED key (the
+    co-occurrence rows callers count), id_a < id_b, keyless rows never
+    pair, carried columns named <c>_a/<c>_b; the zero-key arm is every
+    id_a < id_b pair. The join-back attaches per-doc columns the same
+    way, and the guarded Jaccard is NULL on two empty sets."""
+    from pyspark.sql import functions as F
+
+    from go_fish_spark.operators.dedup import (
+        _blocked_pairs,
+        _join_back,
+        _shingle_jaccard,
+    )
+
+    rows = spark.createDataFrame(
+        [
+            (1, "x", "c1"), (2, "x", "c2"), (3, "x", "c3"),  # x: 3 docs
+            (1, "y", "c1"), (2, "y", "c2"),  # (1, 2) also shares y
+            (4, None, "c4"),                 # keyless doc
+            (5, "z", "c5"),                  # key nobody shares
+        ],
+        "_id long, k string, c string",
+    )
+    out = _blocked_pairs(rows, ("k",), ("c",))
+    assert out.columns == ["id_a", "id_b", "c_a", "c_b"]
+    assert sorted(map(tuple, out.collect())) == [
+        (1, 2, "c1", "c2"), (1, 2, "c1", "c2"),
+        (1, 3, "c1", "c3"), (2, 3, "c2", "c3"),
+    ]
+    per_pair = {
+        (r.id_a, r.id_b): r.n
+        for r in _blocked_pairs(rows, ("k",))
+        .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert per_pair == {(1, 2): 2, (1, 3): 1, (2, 3): 1}
+
+    docs = rows.select("_id", "c").distinct()
+    cross = _blocked_pairs(docs, carry=("c",))
+    assert cross.columns == ["id_a", "id_b", "c_a", "c_b"]
+    assert sorted((r.id_a, r.id_b) for r in cross.collect()) == [
+        (a, b) for a in range(1, 6) for b in range(a + 1, 6)
+    ]
+    assert all(r.c_a == f"c{r.id_a}" and r.c_b == f"c{r.id_b}"
+               for r in cross.collect())
+
+    sets = spark.createDataFrame(
+        [(1, ["p", "q"]), (2, ["q", "r"]), (3, []), (4, [])],
+        "_id long, _sh array<string>",
+    )
+    pairs = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
+    back = _join_back(pairs, sets, ("_sh",))
+    assert set(back.columns) == {"id_a", "id_b", "_sh_a", "_sh_b"}
+    jac = {
+        (r.id_a, r.id_b): r.j
+        for r in back.select(
+            "id_a", "id_b", _shingle_jaccard().alias("j")
+        ).collect()
+    }
+    assert jac == {(1, 2): 1 / 3, (3, 4): None}
+
+
+def test_minhash_sub_k_docs_never_pair(spark, duck):
+    """Documents with fewer than k tokens have no shingles: their
+    all-sentinel signatures get no bands, so they never pair with each
+    other at est_jaccard 1.0 — in both arms and in the DuckDB mirror —
+    the x75 audit does not divide by zero on them, and the delta
+    probe's union law holds with them in the batch and in the store."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from go_fish_spark.operators import dedup
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    rows = [
+        (1, "hello"), (2, "goodbye world"), (5, "ok"), (8, "two words"),
+        (10, base), (11, base), (12, base + " lambda"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    duck.register("subk_docs", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    sub_k = {1, 2, 5, 8}
+
+    def ids(pairs):
+        return {(r[0], r[1]) for r in pairs}
+
+    for portable in (True, False):
+        got = dedup.minhash_lsh_pairs(
+            df, "doc_id", "text", threshold=0.35, portable=portable
+        ).collect()
+        assert (10, 11) in ids(got)
+        assert not {i for p in ids(got) for i in p} & sub_k, got
+    spark_rows = sorted(map(tuple, dedup.minhash_lsh_pairs(
+        df, "doc_id", "text", threshold=0.35, portable=True
+    ).collect()))
+    duck_rows = duck.execute(dedup.duck_minhash_lsh_sql(
+        "subk_docs", "doc_id", "text", threshold=0.35
+    )).fetchall()
+    assert spark_rows == sorted(duck_rows)
+
+    audit = sorted(map(tuple, dedup.minhash_error_audit(
+        df, "doc_id", "text", threshold=0.2
+    ).collect()))
+    assert sum(r[1] for r in audit) == len(spark_rows)
+    assert audit == sorted(duck.execute(dedup.duck_minhash_error_audit_sql(
+        "subk_docs", "doc_id", "text", threshold=0.2
+    )).fetchall())
+
+    # sub-k docs on both sides of the batch/store split
+    is_new = F.col("doc_id").isin(5, 8, 11)
+    hist, batch = df.filter(~is_new), df.filter(is_new)
+
+    def lsh(d):
+        return ids(dedup.minhash_lsh_pairs(
+            d, "doc_id", "text", threshold=0.35, portable=True
+        ).collect())
+
+    dp = ids(dedup.delta_minhash_pairs(
+        batch, dedup.sketch_store(hist, "doc_id", "text", portable=True),
+        "doc_id", "text", threshold=0.35, portable=True,
+    ).collect())
+    assert lsh(hist) | dp == lsh(df) and lsh(hist).isdisjoint(dp)
+    assert dp and not {i for p in dp for i in p} & sub_k
+    duck.unregister("subk_docs")
+    dedup.release_caches()

@@ -565,7 +565,6 @@ def test_x67_length_drift_derivations_read_checkpointed_counts(spark):
     assert "Scan parquet" not in body  # corpus only feeds the checkpoint
 
 
-@pytest.mark.slow
 def test_registry_wide_no_cartesian_no_row_python(spark):
     """Engine-wide plan canary (round 5): across EVERY registry entry,
     (a) no CartesianProduct except the ops documented as exact O(n²)
