@@ -6,11 +6,14 @@ math runs JVM-side per row with zero Python involvement. All arithmetic is
 promoted to double *before* accumulation: float accumulation would make the
 result depend on nothing but still diverge (~1e-6) from any double-based
 oracle, breaking hash comparison.
+
+:func:`cosine_rows` + :func:`cosine_scored` are the one cosine pair scan
+the similarity searches share (``operators/similarity.py``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -48,6 +51,35 @@ def cosine_pre(
     na = F.col(na) if isinstance(na, str) else na
     nb = F.col(nb) if isinstance(nb, str) else nb
     return dot(a, b) / (na * nb)
+
+
+def cosine_rows(
+    df: DataFrame, id_col: str, vec_col: str, side: str, *extra: Column
+) -> DataFrame:
+    """One side of a cosine pair scan for :func:`cosine_scored`: corpus
+    rows (vec_id, cv, _ncv, *extra) for ``side="c"``, query rows
+    (query_id, qv, _nqv, *extra) for ``side="q"``; the norm rides the
+    row, so a pair evaluates one aggregate."""
+    ids, vecs, n = (
+        ("vec_id", "cv", "_ncv") if side == "c" else ("query_id", "qv", "_nqv")
+    )
+    return df.select(
+        F.col(id_col).alias(ids), F.col(vec_col).alias(vecs),
+        norm(vec_col).alias(n), *extra,
+    )
+
+
+def cosine_scored(c: DataFrame, q: DataFrame, on: str | None = None) -> DataFrame:
+    """Cosine-scored candidate pairs: :func:`cosine_rows` corpus rows
+    ``c`` against query rows ``q``, joined on the shared column ``on``
+    (every pair when None), self-matches dropped, ``cos`` added through
+    :func:`cosine_pre`. Pass ``F.broadcast(q)`` for a bounded query set,
+    so the corpus never shuffles, and plain ``q`` when both sides are
+    corpus-scale."""
+    pairs = c.crossJoin(q) if on is None else c.join(q, on)
+    return pairs.filter(F.col("vec_id") != F.col("query_id")).withColumn(
+        "cos", cosine_pre("cv", "qv", "_ncv", "_nqv")
+    )
 
 
 def duck_cosine(a: str, b: str, dim: int) -> str:

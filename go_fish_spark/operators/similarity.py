@@ -1,15 +1,24 @@
-"""Similarity search over embedding columns: brute-force cosine top-k
-(correctness baseline) and random-hyperplane LSH bucketing (scale path).
+"""Similarity search over embedding columns: exact cosine top-k (the
+correctness baseline), random-hyperplane LSH buckets, IVF cell probing,
+PQ/IVF-PQ asymmetric distance (ADC), and the ANN planner that prices
+them (:func:`choose_ann` / :func:`run_ann`).
 
-North-star extension (BASELINE.json). Design for 100 TB:
+Every search is candidate generation followed by one shared kernel:
 
-* brute-force — broadcast the (small) query set against the corpus; the
-  corpus never shuffles, and per-query top-k is a TakeOrdered-style window
-  that keeps k rows per partition before the final merge.
-* LSH — 16 fixed random hyperplanes (seeded, deterministic) → one 16-bit
-  bucket key per vector → candidates are bucket collisions (optionally
-  multi-probe by flipping one bit). Corpus shuffles ONCE on the bucket key;
-  recall/cost tuned by n_planes and n_probes.
+* :func:`vectors.cosine_scored` / :func:`_adc_scored` — join corpus rows
+  to query rows (a broadcast cross join, a bucket or a cell key), drop
+  self-matches, score each pair (cosine, or m ADC table lookups);
+* :func:`_nearest_cells` — probe routing: each query's ``n_probe``
+  nearest quantizer cells as relational rows, with :func:`_residual`
+  for the IVF-PQ residual against the routed cell;
+* :func:`_topk` — the per-query rank-and-cut, ties broken by vec_id.
+
+Design for 100 TB: a bounded query set broadcasts and the corpus never
+shuffles; corpus-scale query sets route through a bucket or cell key,
+so both sides exchange once on it; the top-k window runs as a partial
+``WindowGroupLimit`` below its exchange (k rows per partition per query
+before the merge). The ``duck_*`` functions are the DuckDB oracle
+mirrors.
 """
 
 from __future__ import annotations
@@ -19,6 +28,103 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors
+
+
+def _topk(
+    scored: DataFrame,
+    score: str,
+    k: int,
+    ascending: bool = False,
+    keep: tuple = (),
+) -> DataFrame:
+    """Per-query top-k of a scored candidate frame: ``row_number`` over
+    ``query_id`` ordered by ``score`` (descending for similarities,
+    ascending for distances) then ``vec_id``, cut at ``rank <= k``.
+    Output (query_id, rank, vec_id, score rounded to 6 places, *keep);
+    a query with fewer than k candidates keeps them all."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id", "rank", "vec_id", F.round(score, 6).alias(score), *keep
+        )
+    )
+
+
+def _nearest_cells(
+    queries: DataFrame,
+    quantizer: "Quantizer",
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+    *carry: Column,
+) -> DataFrame:
+    """Probe routing as relational rows: (query_id, *carry, cell, _rn)
+    for each query's ``n_probe`` nearest cells, ``_rn`` the probe rank.
+    Distances are the quantizer's expression twin (``dist_expr_arr``,
+    mirrored by :func:`duck_dist_list`), posexploded and ranked by
+    (distance, cell): equal distances break to the lower cell, and
+    ``n_probe >= n_cells`` probes every cell."""
+    probe = queries.select(
+        F.col(id_col).alias("query_id"),
+        *carry,
+        F.posexplode(quantizer.dist_expr_arr(vec_col)).alias("cell", "_d"),
+    )
+    w = Window.partitionBy("query_id").orderBy("_d", "cell")
+    return (
+        probe.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= n_probe)
+        .drop("_d")
+    )
+
+
+def _adc_scored(
+    coded: DataFrame, q: DataFrame, on: str | None = None
+) -> DataFrame:
+    """ADC-scored candidate pairs: coded corpus rows (vec_id, codes, …)
+    against query rows (query_id, dt, …) carrying their distance tables,
+    joined on ``on`` (every pair when None), self-matches dropped.
+    ``adist`` is the m table lookups summed left to right — the
+    approximate squared L2."""
+    pairs = coded.crossJoin(q) if on is None else coded.join(q, on)
+    adist = F.aggregate(
+        F.zip_with("codes", "dt", lambda c, t: F.element_at(t, c + 1)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return pairs.filter(F.col("vec_id") != F.col("query_id")).withColumn(
+        "adist", adist
+    )
+
+
+def _residual(
+    rows: DataFrame, coarse: "Quantizer", vec: str, *keep: str
+) -> DataFrame:
+    """(*keep, cell, _rv): ``_rv`` is vector column ``vec`` minus the
+    center of its ``cell`` (the IVF-PQ residual the codes and distance
+    tables are built on), with the centers as one parsed literal."""
+    cl = _centers_lit(coarse._centers)
+    rv = F.zip_with(
+        F.col(vec).cast("array<double>"),
+        F.element_at(cl, F.col("cell") + 1),
+        lambda x, y: x - y,
+    )
+    return rows.select(*keep, "cell", rv.alias("_rv"))
+
+
+def _residual_rows(
+    df: DataFrame, coarse: "Quantizer", id_col: str, vec_col: str, id_as: str
+) -> DataFrame:
+    """(id_as, cell, _rv) for the corpus side of IVF-PQ: each vector's
+    nearest coarse cell (``assign_expr_col``) and its residual."""
+    asg = df.select(
+        F.col(id_col).alias(id_as),
+        F.col(vec_col).alias("_v"),
+        coarse.assign_expr_col(vec_col).alias("cell"),
+    )
+    return _residual(asg, coarse, "_v", id_as)
 
 
 def brute_force_topk(
@@ -32,30 +138,11 @@ def brute_force_topk(
 
     Output: (query_id, rank, vec_id, cos). Self-matches excluded; ties
     broken by vec_id so results are deterministic."""
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            vectors.norm(vec_col).alias("_nqv"),
-        )
+    scored = vectors.cosine_scored(
+        vectors.cosine_rows(corpus, id_col, vec_col, "c"),
+        F.broadcast(vectors.cosine_rows(queries, id_col, vec_col, "q")),
     )
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("cv"),
-        vectors.norm(vec_col).alias("_ncv"),
-    )
-    scored = (
-        c.crossJoin(q)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        # norms per ROW, one aggregate per PAIR (bit-identical; cosine_pre)
-        .withColumn("cos", vectors.cosine_pre("cv", "qv", "_ncv", "_nqv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", F.round("cos", 6).alias("cos"))
-    )
+    return _topk(scored, "cos", k)
 
 
 def hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> list[list[float]]:
@@ -398,121 +485,20 @@ def ivf_topk(
     n_probe: int = 4,
     seed: int = 42,
     train_cap: int = 100_000,
-    max_queries: int = 10_000,
-    probe_mode: str = "driver",
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: a KMeans coarse quantizer
     partitions the corpus into cells; each query scores only the
     ``n_probe`` nearest cells.
 
     Scale shape: the quantizer trains on a bounded, seeded sample of at
-    most ``train_cap`` rows (a coarse quantizer needs only a sketch of the
-    distribution — fitting the full corpus would iterate over 100 TB
-    ``maxIter`` times); assignment is one transform pass over the full
-    corpus, and the search join hits n_probe/n_cells of it — with cell id
-    as the shuffle/cluster key, this is the classic billion-vector layout.
-    Recall/cost is tuned by n_cells × n_probe.
-
-    Probe routing is a CHOICE (``probe_mode``), not a wall:
-
-    * ``"driver"`` — the query batch is collected and its probe list is
-      computed against the driver-resident centroids, then BROADCAST; the
-      corpus never shuffles. Right for "score a batch of probe vectors
-      against a huge corpus"; capped at ``max_queries`` rows with a clear
-      error.
-    * ``"distributed"`` — the probe list is computed executor-side by an
-      Arrow-batched pandas UDF against the (tiny — n_cells × dim) centroid
-      matrix captured in its closure, then EXPLODED and joined to the
-      corpus on the cell key. No cap: both sides shuffle once on cell, so
-      this handles corpus-scale query sets (the n_probe fan-out is the
-      only row multiplier). Same probe lists as driver mode (identical
-      distance + tie-break), asserted in tests.
-    """
-    from pyspark.sql import types as T
-
-    if probe_mode not in ("driver", "distributed"):
-        raise ValueError(f"unknown probe_mode {probe_mode!r}")
-
+    most ``train_cap`` rows (:func:`fit_quantizer` — a coarse quantizer
+    needs only a sketch of the distribution); assignment, probe routing
+    and scoring are :func:`ivf_topk_expr`'s relational route, so any
+    query set — a probe batch or the whole corpus — joins the corpus on
+    the cell key with one exchange per side. Recall/cost is tuned by
+    n_cells × n_probe."""
     model = fit_quantizer(corpus, vec_col, n_cells, train_cap, seed)
-    assigned = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("cv"),
-        model.assign_col(vec_col).alias("cell"),
-    )
-
-    centers = [c.tolist() for c in model.clusterCenters()]
-
-    def nearest_cells(vec: list[float]) -> list[int]:
-        v = np.asarray(vec, dtype=np.float64)
-        dists = [float(np.linalg.norm(v - np.asarray(c))) for c in centers]
-        return sorted(range(len(centers)), key=lambda i: dists[i])[:n_probe]
-
-    if probe_mode == "distributed":
-        import pandas as pd
-
-        # Explicit Series annotations (not the module's deferred-string
-        # ones): pandas_udf resolves hints via the function globals, where
-        # the function-local `pd` import is invisible.
-        def _probe_cells(qvs):
-            # Same distance + stable tie-break as the driver path, so both
-            # modes produce identical probe lists.
-            return pd.Series([nearest_cells(list(v)) for v in qvs])
-
-        _probe_cells.__annotations__ = {"qvs": pd.Series, "return": pd.Series}
-        probe_cells = F.pandas_udf(_probe_cells, T.ArrayType(T.IntegerType()))
-
-        probe = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            F.explode(
-                probe_cells(F.col(vec_col).cast("array<double>"))
-            ).alias("cell"),
-        )
-    else:
-        qrows = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        ).limit(max_queries + 1).collect()
-        if len(qrows) > max_queries:
-            raise ValueError(
-                f"ivf_topk query set exceeds max_queries={max_queries}; "
-                "driver-mode probe lists are computed driver-side against "
-                "the broadcast centroids, so the query batch must be small "
-                "— split the batch or use probe_mode='distributed' for "
-                "corpus-scale query sets"
-            )
-        # Probe schema is derived from the input dtypes so string/int32 ids
-        # and double embeddings round-trip unchanged.
-        q_schema = dict(zip(queries.schema.names, queries.schema.fields))
-        probe_schema = T.StructType(
-            [
-                T.StructField("query_id", q_schema[id_col].dataType),
-                T.StructField("qv", q_schema[vec_col].dataType),
-                T.StructField("cell", T.IntegerType()),
-            ]
-        )
-        probe = F.broadcast(
-            corpus.sparkSession.createDataFrame(
-                [
-                    (r.query_id, list(r.qv), cell)
-                    for r in qrows
-                    for cell in nearest_cells(list(r.qv))
-                ],
-                probe_schema,
-            )
-        )
-    scored = (
-        assigned.withColumn("_ncv", vectors.norm("cv"))
-        .join(probe.withColumn("_nqv", vectors.norm("qv")), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        # norms per ROW, one aggregate per PAIR (bit-identical; cosine_pre)
-        .withColumn("cos", vectors.cosine_pre("cv", "qv", "_ncv", "_nqv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", F.round("cos", 6).alias("cos"))
-    )
+    return ivf_topk_expr(corpus, queries, model, id_col, vec_col, k, n_probe)
 
 
 def ivf_topk_expr(
@@ -524,49 +510,40 @@ def ivf_topk_expr(
     k: int = 10,
     n_probe: int = 4,
 ) -> DataFrame:
-    """Oracle-checkable IVF top-k: same inverted-file layout as
-    :func:`ivf_topk` (corpus partitioned into quantizer cells; each query
-    scores only its ``n_probe`` nearest cells), but with BOTH the cell
-    assignment AND the probe routing as pure column expressions over the
-    quantizer's centroid literals (``assign_expr_col``/``dist_expr_arr``)
-    — no pandas UDF, no driver collect — so a SQL oracle embedding the
-    same centroids (:func:`duck_dist_list`) reproduces every cell choice
-    bit-for-bit. Pass a :func:`fit_quantizer_det` quantizer for full
-    engine-independence.
-
-    Probe routing is fully relational: queries posexplode their per-cell
-    distance array, rank by (distance, cell), keep ``n_probe`` — both
-    sides then shuffle once on the cell key (the distributed-probe shape,
-    with the pandas-UDF router replaced by expressions)."""
-    assigned = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("cv"),
+    """Oracle-checkable IVF top-k: the corpus is partitioned into
+    quantizer cells and each query scores only its ``n_probe`` nearest
+    cells, with BOTH the cell assignment AND the probe routing as pure
+    column expressions over the quantizer's centroid literals
+    (``assign_expr_col`` / :func:`_nearest_cells`) — no pandas UDF, no
+    driver collect — so a SQL oracle embedding the same centroids
+    (:func:`duck_dist_list`) reproduces every cell choice bit-for-bit.
+    Pass a :func:`fit_quantizer_det` quantizer for full
+    engine-independence. Both sides shuffle once on the cell key."""
+    assigned = vectors.cosine_rows(
+        corpus, id_col, vec_col, "c",
         quantizer.assign_expr_col(vec_col).alias("cell"),
-        vectors.norm(vec_col).alias("_ncv"),
     )
-    probe = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        vectors.norm(vec_col).alias("_nqv"),
-        F.posexplode(quantizer.dist_expr_arr(vec_col)).alias("cell", "_d"),
+    probe = _nearest_cells(
+        queries, quantizer, n_probe, id_col, vec_col,
+        F.col(vec_col).alias("qv"), vectors.norm(vec_col).alias("_nqv"),
     )
-    wp = Window.partitionBy("query_id").orderBy("_d", "cell")
-    probe = (
-        probe.withColumn("_rn", F.row_number().over(wp))
-        .filter(F.col("_rn") <= n_probe)
-        .drop("_d", "_rn")
-    )
-    scored = (
-        assigned.join(probe, "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        # norms per ROW, one aggregate per PAIR (bit-identical; cosine_pre)
-        .withColumn("cos", vectors.cosine_pre("cv", "qv", "_ncv", "_nqv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", F.round("cos", 6).alias("cos"))
+    return _topk(vectors.cosine_scored(assigned, probe, "cell"), "cos", k)
+
+
+def _lsh_scored(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    planes: list[list[float]],
+) -> DataFrame:
+    """Cosine-scored bucket collisions: corpus and query rows joined on
+    their hyperplane bucket key."""
+    bk = bucket_key(vec_col, planes).alias("bk")
+    return vectors.cosine_scored(
+        vectors.cosine_rows(corpus, id_col, vec_col, "c", bk),
+        vectors.cosine_rows(queries, id_col, vec_col, "q", bk),
+        "bk",
     )
 
 
@@ -584,32 +561,8 @@ def lsh_topk(
     bucket. One shuffle of the corpus on the bucket key; at 100 TB the
     bucket count (2^n_planes) is sized so each bucket fits an executor."""
     planes = hyperplanes(dim, n_planes, seed)
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("cv"),
-        bucket_key(vec_col, planes).alias("bk"),
-        vectors.norm(vec_col).alias("_ncv"),
-    )
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            bucket_key(vec_col, planes).alias("bk"),
-            vectors.norm(vec_col).alias("_nqv"),
-        )
-    )
-    scored = (
-        c.join(q, "bk")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        # norms per ROW, one aggregate per PAIR (bit-identical; cosine_pre)
-        .withColumn("cos", vectors.cosine_pre("cv", "qv", "_ncv", "_nqv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", F.round("cos", 6).alias("cos"))
-    )
+    scored = _lsh_scored(corpus, F.broadcast(queries), id_col, vec_col, planes)
+    return _topk(scored, "cos", k)
 
 
 # ---------------------------------------------------------------------------
@@ -742,22 +695,7 @@ def adc_topk(
             F.col(id_col).alias("query_id"), pq.dtables_col(vec_col).alias("dt")
         )
     )
-    adist = F.aggregate(
-        F.zip_with("codes", "dt", lambda c, t: F.element_at(t, c + 1)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        coded.crossJoin(q)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("adist", adist)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", F.round("adist", 6).alias("adist"))
-    )
+    return _topk(_adc_scored(coded, q), "adist", k, ascending=True)
 
 
 def duck_pq_codes(vec: str, pq: ProductQuantizer) -> str:
@@ -853,57 +791,34 @@ def ivfpq_topk_expr(
     lookups over nibble codes, and raw vectors never leave their scan.
     Recall tuning: n_cells × n_probe (routing) and m × ksub (code
     resolution) are independent knobs."""
-    cl = _centers_lit(coarse._centers)
-
-    def residual(v: Column, cell: Column) -> Column:
-        return F.zip_with(
-            v.cast("array<double>"),
-            F.element_at(cl, cell + 1),
-            lambda x, y: x - y,
-        )
-
     # Residuals are PROJECTED to a named column so the PQ code/table
     # expressions take the single-parse string fast path (building them
     # through Column-API lambdas costs ~2 py4j round trips per centroid —
     # measured 5.8 s of pure driver time for this query's trees).
-    asg = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("_v"),
-        coarse.assign_expr_col(vec_col).alias("cell"),
+    coded = _residual_rows(corpus, coarse, id_col, vec_col, "vec_id").select(
+        "vec_id", "cell", pq.codes_col("_rv").alias("codes")
     )
-    coded = asg.select(
-        "vec_id", "cell", residual(F.col("_v"), F.col("cell")).alias("_rv")
-    ).select("vec_id", "cell", pq.codes_col("_rv").alias("codes"))
-    probe = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.posexplode(coarse.dist_expr_arr(vec_col)).alias("cell", "_d"),
-    )
-    wp = Window.partitionBy("query_id").orderBy("_d", "cell")
-    probe = (
-        probe.withColumn("_rn", F.row_number().over(wp))
-        .filter(F.col("_rn") <= n_probe)
-        .select(
-            "query_id", "cell", residual(F.col("qv"), F.col("cell")).alias("_rv")
-        )
-        .select("query_id", "cell", pq.dtables_col("_rv").alias("dt"))
-    )
-    adist = F.aggregate(
-        F.zip_with("codes", "dt", lambda c, t: F.element_at(t, c + 1)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        coded.join(probe, "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("adist", adist)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", F.round("adist", 6).alias("adist"))
-    )
+    probe = _probe_tables(queries, coarse, pq, n_probe, id_col, vec_col)
+    return _topk(_adc_scored(coded, probe, "cell"), "adist", k, ascending=True)
+
+
+def _probe_tables(
+    queries: DataFrame,
+    coarse: Quantizer,
+    pq: "ProductQuantizer",
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The IVF-PQ query side: (query_id, cell, dt) per probed cell, ``dt``
+    the ADC distance tables of the query's residual against that cell."""
+    return _residual(
+        _nearest_cells(
+            queries, coarse, n_probe, id_col, vec_col,
+            F.col(vec_col).alias("qv"),
+        ),
+        coarse, "qv", "query_id",
+    ).select("query_id", "cell", pq.dtables_col("_rv").alias("dt"))
 
 
 def duck_centers_lit(centers) -> str:
@@ -996,31 +911,27 @@ def knn_classify(
     ivf_topk for the sublinear path, same voting tail), and the label
     join BROADCASTS the (queries × k)-row neighbor table into the
     corpus-sized label frame — map-only again. Only the final per-query
-    vote aggregation shuffles, on ≤ queries × k rows."""
+    vote aggregation shuffles, on ≤ queries × k rows; the winner is the
+    same :func:`_topk` kernel at k = 1, with the label in vec_id's
+    tie-break place."""
     nn = brute_force_topk(corpus, queries, id_col=id_col, vec_col=vec_col, k=k)
     lab = corpus.select(
         F.col(id_col).alias("vec_id"), F.col(label_col).alias("_nl")
     )
     votes = (
         lab.join(F.broadcast(nn), "vec_id")
-        .groupBy("query_id", "_nl")
+        # the label takes vec_id's place: the winner is the top-1 by
+        # n_votes with ties to the smaller label
+        .groupBy("query_id", F.col("_nl").alias("vec_id"))
         .agg(
             F.count(F.lit(1)).alias("n_votes"),
             F.max("cos").alias("top_cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("n_votes").desc(), F.col("_nl")
-    )
-    return (
-        votes.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") == 1)
-        .select(
-            "query_id",
-            F.col("_nl").alias("label_pred"),
-            "n_votes",
-            F.round("top_cos", 6).alias("top_cos"),
-        )
+    return _topk(
+        votes, "n_votes", 1, keep=(F.round("top_cos", 6).alias("top_cos"),)
+    ).select(
+        "query_id", F.col("vec_id").alias("label_pred"), "n_votes", "top_cos"
     )
 
 
@@ -1126,32 +1037,7 @@ def mutual_knn_pairs(
         if dim is None:
             raise ValueError("method='lsh' requires dim (the vector dimension)")
         planes = hyperplanes(dim, n_planes, seed)
-        c = corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("cv"),
-            bucket_key(vec_col, planes).alias("bk"),
-            vectors.norm(vec_col).alias("_ncv"),
-        )
-        q = corpus.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            bucket_key(vec_col, planes).alias("bk"),
-            vectors.norm(vec_col).alias("_nqv"),
-        )
-        scored = (
-            c.join(q, "bk")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            # norms per ROW, one aggregate per PAIR (bit-identical)
-            .withColumn("cos", vectors.cosine_pre("cv", "qv", "_ncv", "_nqv"))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cos").desc(), F.col("vec_id")
-        )
-        nn = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "vec_id", F.round("cos", 6).alias("cos"))
-        )
+        nn = _topk(_lsh_scored(corpus, corpus, id_col, vec_col, planes), "cos", k)
     else:
         raise ValueError(f"unknown method {method!r}; use 'lsh' or 'brute'")
     nn = _persist(nn)
@@ -1619,47 +1505,25 @@ def hard_negative_topk(
     curriculum signal.
 
     Output: (query_id, query_label, rank, vec_id, neg_label, cos
-    round-6), ties broken by vec_id.
+    round-6), ties broken by vec_id; self-matches excluded, like every
+    search here.
 
     100 TB shape: the x06 contract — the bounded query set broadcasts,
     the corpus is scanned MAP-ONLY (label filter fused into the same
     stage, no shuffle of raw vectors), per-partition top-k heaps merge
     ≤ k·|queries| rows. Corpus-scale query sets belong in the x15/x47
     bucketed/IVF routes, not here."""
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(label_col).alias("query_label"),
-            F.col(vec_col).alias("qv"),
-            vectors.norm(vec_col).alias("_nqv"),
-        )
+    c = vectors.cosine_rows(
+        corpus, id_col, vec_col, "c", F.col(label_col).alias("neg_label")
     )
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(label_col).alias("neg_label"),
-        F.col(vec_col).alias("cv"),
-        vectors.norm(vec_col).alias("_ncv"),
+    q = vectors.cosine_rows(
+        queries, id_col, vec_col, "q", F.col(label_col).alias("query_label")
     )
-    scored = (
-        c.crossJoin(q)
-        .filter(F.col("neg_label") != F.col("query_label"))
-        # norms per ROW, one aggregate per PAIR (bit-identical; cosine_pre)
-        .withColumn("cos", vectors.cosine_pre("cv", "qv", "_ncv", "_nqv"))
+    scored = vectors.cosine_scored(c, F.broadcast(q)).filter(
+        F.col("neg_label") != F.col("query_label")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "query_label",
-            "rank",
-            "vec_id",
-            "neg_label",
-            F.round("cos", 6).alias("cos"),
-        )
+    return _topk(scored, "cos", k, keep=("query_label", "neg_label")).select(
+        "query_id", "query_label", "rank", "vec_id", "neg_label", "cos"
     )
 
 
@@ -1862,17 +1726,7 @@ def choose_ann(
         .unionByName(corpus.select(F.lit("#").alias("_key")))
         .withColumn("_side", F.lit("c"))
     )
-    wp = Window.partitionBy("_qid").orderBy("_d", "cell")
-    probe = (
-        queries.select(
-            F.col(id_col).alias("_qid"),
-            F.posexplode(quantizer.dist_expr_arr(vec_col)).alias(
-                "cell", "_d"
-            ),
-        )
-        .withColumn("_rn", F.row_number().over(wp))
-        .filter(F.col("_rn") <= n_probe)
-    )
+    probe = _nearest_cells(queries, quantizer, n_probe, id_col, vec_col)
     q_keys = (
         queries.select(
             F.concat(F.lit("l:"), bk.cast("string")).alias("_key")
@@ -2213,41 +2067,17 @@ def pq_plan_sweep(
     # the PQ code/table expressions differ. This is the whole wall-time
     # budget of the sweep: building + analyzing the 1024-literal
     # centroid trees per plan measured ~2 s/plan of pure driver time.
-    cl = _centers_lit(coarse._centers)
-
-    def residual(v: Column, cell: Column) -> Column:
-        return F.zip_with(
-            v.cast("array<double>"),
-            F.element_at(cl, cell + 1),
-            lambda x, y: x - y,
-        )
-
-    resc = cor.select(
-        "vec_id",
-        F.col("embedding").alias("_v"),
-        coarse.assign_expr_col("embedding").alias("cell"),
-    )
-    resc = resc.select(
-        "vec_id", "cell", residual(F.col("_v"), F.col("cell")).alias("_rv")
+    resc = _residual_rows(
+        cor, coarse, "vec_id", "embedding", "vec_id"
     ).localCheckpoint()
     max_np = max(p[2] for p in plans)
-    wp = Window.partitionBy("query_id").orderBy("_d", "cell")
-    probe = (
-        samp.select(
-            F.col("vec_id").alias("query_id"),
+    probe = _residual(
+        _nearest_cells(
+            samp, coarse, max_np, "vec_id", "embedding",
             F.col("embedding").alias("_qv"),
-            F.posexplode(coarse.dist_expr_arr("embedding")).alias(
-                "cell", "_d"
-            ),
-        )
-        .withColumn("_rn", F.row_number().over(wp))
-        .filter(F.col("_rn") <= max_np)
-        .select(
-            "query_id", "cell", "_rn",
-            residual(F.col("_qv"), F.col("cell")).alias("_rv"),
-        )
-        .localCheckpoint()
-    )
+        ),
+        coarse, "_qv", "query_id", "_rn",
+    ).localCheckpoint()
 
     # exact candidate counts per n_probe by pure arithmetic over three
     # tiny collects (cell histogram, query routing, own-row cells):
@@ -2289,11 +2119,6 @@ def pq_plan_sweep(
     # truth-join counts hits per plan — job-launch overhead is paid
     # once, not per plan (6 separate audit jobs measured ~6× slower at
     # small SF, pure scheduling)
-    adist = F.aggregate(
-        F.zip_with("codes", "dt", lambda c, t: F.element_at(t, c + 1)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     union = None
     for m, ksub, n_probe in plans:
         pq = pqs[(m, ksub)]
@@ -2303,23 +2128,13 @@ def pq_plan_sweep(
         pdt = probe.filter(F.col("_rn") <= n_probe).select(
             "query_id", "cell", pq.dtables_col("_rv").alias("dt")
         )
-        scored = (
-            coded.join(pdt, "cell")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .withColumn("adist", adist)
-        )
-        wk = Window.partitionBy("query_id").orderBy(
-            F.col("adist").asc(), F.col("vec_id")
-        )
-        ap = (
-            scored.withColumn("rank", F.row_number().over(wk))
-            .filter(F.col("rank") <= k)
-            .select(
-                F.lit(m).alias("pq_m"),
-                F.lit(ksub).alias("pq_ksub"),
-                F.lit(n_probe).alias("n_probe"),
-                "query_id", "vec_id",
-            )
+        ap = _topk(
+            _adc_scored(coded, pdt, "cell"), "adist", k, ascending=True
+        ).select(
+            F.lit(m).alias("pq_m"),
+            F.lit(ksub).alias("pq_ksub"),
+            F.lit(n_probe).alias("n_probe"),
+            "query_id", "vec_id",
         )
         union = ap if union is None else union.unionByName(ap)
     n_true = truth.count()  # every plan audits the same truth set
@@ -2464,6 +2279,14 @@ def run_ann(
     dim, k, seed = p["dim"], p["k"], p["seed"]
     n_planes, n_cells, n_probe = p["n_planes"], p["n_cells"], p["n_probe"]
 
+    def product(c_keys: DataFrame, q_keys: DataFrame, key: str) -> DataFrame:
+        # the planner's candidate law: Σ_key |corpus ∩ key|·|queries ∩ key|
+        ch = c_keys.groupBy(key).agg(F.count(F.lit(1)).alias("_cm"))
+        qh = q_keys.groupBy(key).agg(F.count(F.lit(1)).alias("_qm"))
+        return ch.join(qh, key).agg(
+            F.coalesce(F.sum(F.expr("_cm * _qm")), F.lit(0)).alias("_realized")
+        )
+
     if chosen == "brute_force":
         est = plan["n_corpus"] * plan["n_queries"]
         realized = (
@@ -2474,105 +2297,54 @@ def run_ann(
         result = brute_force_topk(corpus, queries, id_col, vec_col, k)
     elif chosen == "lsh_buckets":
         est = plan["cand_lsh"]
-        planes = hyperplanes(dim, n_planes, seed)
-        bk = bucket_key(vec_col, planes)
-        ch = corpus.select(bk.alias("_bk")).groupBy("_bk").agg(
-            F.count(F.lit(1)).alias("_cm")
-        )
-        qh = queries.select(bk.alias("_bk")).groupBy("_bk").agg(
-            F.count(F.lit(1)).alias("_qm")
-        )
-        realized = ch.join(qh, "_bk").agg(
-            F.coalesce(F.sum(F.expr("_cm * _qm")), F.lit(0)).alias(
-                "_realized"
-            )
-        )
+        bk = bucket_key(vec_col, hyperplanes(dim, n_planes, seed)).alias("_bk")
+        realized = product(corpus.select(bk), queries.select(bk), "_bk")
         result = lsh_topk(
             corpus, queries, dim, id_col, vec_col, k, n_planes, seed
         )
-    elif chosen == "ivfpq_adc" and store_dir is not None:
-        # serve from the durable index: routing + dtables from the
-        # manifest's frozen literals, candidates from the probed cell
-        # partitions, realized count from the store's own histogram
-        from ..streaming.annstore import (
-            adc_search_store,
-            load_ann_model,
-            read_ann_store,
-        )
-
-        est = plan["cand_ivf"]
-        model = load_ann_model(store_dir)
-        if model is None:
-            raise FileNotFoundError(f"no ANN model manifest in {store_dir}")
-        coarse_s, _pq_s, _doc = model
-        spark = corpus.sparkSession
-        ch = (
-            read_ann_store(spark, store_dir)
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("_cm"))
-        )
-        wp = Window.partitionBy("_qid").orderBy("_d", "cell")
-        qh = (
-            queries.select(
-                F.col(id_col).alias("_qid"),
-                F.posexplode(coarse_s.dist_expr_arr(vec_col)).alias(
-                    "cell", "_d"
-                ),
-            )
-            .withColumn("_rn", F.row_number().over(wp))
-            .filter(F.col("_rn") <= n_probe)
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("_qm"))
-        )
-        realized = ch.join(qh, "cell").agg(
-            F.coalesce(F.sum(F.expr("_cm * _qm")), F.lit(0)).alias(
-                "_realized"
-            )
-        )
-        result = adc_search_store(
-            spark, store_dir, queries, id_col, vec_col, k, n_probe
-        )
     elif chosen in ("ivf_probe", "ivfpq_adc"):
         est = plan["cand_ivf"]
-        if quantizer is None:
-            quantizer = fit_quantizer_det(
-                corpus, id_col, vec_col, n_cells, p["train_cap"], seed
+        if chosen == "ivfpq_adc" and store_dir is not None:
+            # serve from the durable index: routing + dtables from the
+            # manifest's frozen literals, candidates from the probed cell
+            # partitions, realized count from the store's own histogram
+            from ..streaming.annstore import (
+                adc_search_store,
+                load_ann_model,
+                read_ann_store,
             )
-        ch = (
-            corpus.select(quantizer.assign_expr_col(vec_col).alias("cell"))
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("_cm"))
-        )
-        wp = Window.partitionBy("_qid").orderBy("_d", "cell")
-        qh = (
-            queries.select(
-                F.col(id_col).alias("_qid"),
-                F.posexplode(quantizer.dist_expr_arr(vec_col)).alias(
-                    "cell", "_d"
-                ),
-            )
-            .withColumn("_rn", F.row_number().over(wp))
-            .filter(F.col("_rn") <= n_probe)
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("_qm"))
-        )
-        realized = ch.join(qh, "cell").agg(
-            F.coalesce(F.sum(F.expr("_cm * _qm")), F.lit(0)).alias(
-                "_realized"
-            )
-        )
-        if chosen == "ivf_probe":
-            result = ivf_topk_expr(
-                corpus, queries, quantizer, id_col, vec_col, k, n_probe
+
+            model = load_ann_model(store_dir)
+            if model is None:
+                raise FileNotFoundError(f"no ANN model manifest in {store_dir}")
+            quantizer = model[0]
+            spark = corpus.sparkSession
+            cells = read_ann_store(spark, store_dir)
+            result = adc_search_store(
+                spark, store_dir, queries, id_col, vec_col, k, n_probe
             )
         else:
-            coarse, pq = fit_ivfpq_det(
-                corpus, id_col, vec_col, n_cells, p["pq_m"], p["pq_ksub"],
-                p["train_cap"], seed,
+            if quantizer is None:
+                quantizer = fit_quantizer_det(
+                    corpus, id_col, vec_col, n_cells, p["train_cap"], seed
+                )
+            cells = corpus.select(
+                quantizer.assign_expr_col(vec_col).alias("cell")
             )
-            result = ivfpq_topk_expr(
-                corpus, queries, coarse, pq, id_col, vec_col, k, n_probe
-            )
+            if chosen == "ivf_probe":
+                result = ivf_topk_expr(
+                    corpus, queries, quantizer, id_col, vec_col, k, n_probe
+                )
+            else:
+                coarse, pq = fit_ivfpq_det(
+                    corpus, id_col, vec_col, n_cells, p["pq_m"],
+                    p["pq_ksub"], p["train_cap"], seed,
+                )
+                result = ivfpq_topk_expr(
+                    corpus, queries, coarse, pq, id_col, vec_col, k, n_probe
+                )
+        probes = _nearest_cells(queries, quantizer, n_probe, id_col, vec_col)
+        realized = product(cells, probes, "cell")
     else:  # pragma: no cover — planner only emits the four above
         raise ValueError(f"unknown discipline {chosen!r}")
 

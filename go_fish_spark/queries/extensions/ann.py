@@ -125,8 +125,8 @@ def x15_ann_ivf(spark, sf_dir):
     assignment and probe routing are pure column expressions over the
     centroid literals (ivf_topk_expr) mirrored bit-for-bit by
     duck_dist_list. Recall vs brute force stays asserted in
-    tests/test_dedup.py; the pandas-UDF probe arms (driver/distributed)
-    remain in similarity.ivf_topk."""
+    tests/test_dedup.py; similarity.ivf_topk runs this same route over
+    a sampled (non-deterministic) quantizer fit."""
     emb = table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 5)
     q = shared_quantizer(spark, sf_dir, 16)

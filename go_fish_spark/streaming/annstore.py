@@ -143,20 +143,9 @@ def encode_ann_batch(
     """(_id, cell, codes) for one batch — cell assignment + residual PQ
     codes as pure expressions over the frozen literals (the
     ivfpq_topk_expr corpus side). Map-only: no shuffle."""
-    from ..operators.similarity import _centers_lit
+    from ..operators.similarity import _residual_rows
 
-    cl = _centers_lit(coarse._centers)
-    asg = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        coarse.assign_expr_col(vec_col).alias("cell"),
-    )
-    rv = F.zip_with(
-        F.col("_v").cast("array<double>"),
-        F.element_at(cl, F.col("cell") + 1),
-        lambda x, y: x - y,
-    )
-    return asg.select("_id", "cell", rv.alias("_rv")).select(
+    return _residual_rows(df, coarse, id_col, vec_col, "_id").select(
         "_id", "cell", pq.codes_col("_rv").alias("codes")
     )
 
@@ -449,62 +438,22 @@ def adc_search_store(
     exactly the probed directories), ADC scoring over stored codes.
     Raw corpus vectors are never read — the store IS the index, which
     is the point of persisting it."""
-    from pyspark.sql import Window
-
-    from ..operators.similarity import _centers_lit
+    from ..operators.similarity import _adc_scored, _probe_tables, _topk
 
     model = load_ann_model(store_dir)
     if model is None:
         raise FileNotFoundError(f"no ANN model manifest in {store_dir}")
     coarse, pq, _doc = model
 
-    cl = _centers_lit(coarse._centers)
-    probe = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.posexplode(coarse.dist_expr_arr(vec_col)).alias("cell", "_d"),
-    )
-    wp = Window.partitionBy("query_id").orderBy("_d", "cell")
-    probe = (
-        probe.withColumn("_rn", F.row_number().over(wp))
-        .filter(F.col("_rn") <= n_probe)
-        .select(
-            "query_id",
-            "cell",
-            F.zip_with(
-                F.col("qv").cast("array<double>"),
-                F.element_at(cl, F.col("cell") + 1),
-                lambda x, y: x - y,
-            ).alias("_rv"),
-        )
-        .select("query_id", "cell", pq.dtables_col("_rv").alias("dt"))
-        .localCheckpoint()  # bounded (|q|·n_probe rows); fixes the cell list
-    )
+    probe = _probe_tables(
+        queries, coarse, pq, n_probe, id_col, vec_col
+    ).localCheckpoint()  # bounded (|q|·n_probe rows); fixes the cell list
     cells = sorted(
         {int(r["cell"]) for r in probe.select("cell").distinct().collect()}
     )
     store = read_ann_store(spark, store_dir, cells=cells)
-    adist = F.aggregate(
-        F.zip_with("codes", "dt", lambda c, t: F.element_at(t, c + 1)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        store.withColumnRenamed("_id", "vec_id")
-        .join(probe, "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("adist", adist)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "rank", "vec_id", F.round("adist", 6).alias("adist")
-        )
-    )
+    scored = _adc_scored(store.withColumnRenamed("_id", "vec_id"), probe, "cell")
+    return _topk(scored, "adist", k, ascending=True)
 
 
 # ---------------------------------------------------------------------------

@@ -18,16 +18,23 @@ from conftest import SF_SMALL, register_duck_views
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", SF_SMALL)
 
 #: Oracle smoke kept in the default run: the entries that go through the
-#: dedup blocked-pair kernel (operators/dedup.py). Every other per-entry
-#: compare is marked ``slow`` — it duplicates the full-registry
-#: self-check (scripts/check_correctness.py) — and scripts/close_round.py
-#: forces the slow set back on with `-o addopts=`.
+#: dedup blocked-pair kernel (operators/dedup.py), the entries that go
+#: through the ANN search kernels (operators/similarity.py; x175 stays
+#: slow, it takes over a minute alone) and q43's exact-moment oracle.
+#: Every other per-entry compare is marked ``slow`` — it duplicates the
+#: full-registry self-check (scripts/check_correctness.py) — and
+#: scripts/close_round.py forces the slow set back on with `-o addopts=`.
 SMOKE = {
     "x02_dedup_minhash_lsh", "x03_dedup_simhash", "x04_dedup_ngram_jaccard",
     "x05_dedup_embedding", "x37_dedup_lsh_bucketed", "x75_sketch_accuracy",
     "x82_containment_pairs", "x92_syndication_matrix", "x100_lsh_plan_sweep",
     "x113_winnow_pair_screen", "x115_sorted_neighborhood",
     "x119_snm_multikey", "x140_run_blocking_handoff",
+    "x06_ann_cosine_topk", "x13_ann_lsh", "x15_ann_ivf", "x44_pq_adc",
+    "x47_ivfpq", "x59_knn_classify", "x64_mutual_knn",
+    "x79_ann_recall_audit", "x127_hard_negatives", "x157_ann_choice",
+    "x166_ann_store_search", "x167_ann_search_stream",
+    "q43_exact_corr",
 }
 
 

@@ -162,45 +162,75 @@ def test_ivf_topk_sampled_fit_and_derived_schema(spark):
     assert dict(out.dtypes)["query_id"] == "string"
 
 
-def test_ivf_topk_query_cap_raises(spark):
-    from go_fish_spark.operators import similarity
-    from go_fish_spark.catalog import table
-    import pytest
-
-    emb = table(spark, SF_DIR, "embeddings")
-    with pytest.raises(ValueError, match="max_queries"):
-        similarity.ivf_topk(emb, emb, dim=64, k=3, max_queries=5)
-
-
-def test_ivf_probe_modes_agree(spark):
-    """VERDICT r02 #7: the distributed probe route (queries assigned to
-    cells executor-side, exploded, joined on the cell key — no driver cap)
-    must produce EXACTLY the driver-broadcast route's results: same
-    centroids, same distance, same tie-break. Also: corpus-scale query
-    sets that the driver cap rejects must pass through distributed mode."""
+def test_ivf_topk_corpus_scale_query_set(spark):
+    """The whole corpus runs as the query set: probe routing is
+    relational (no driver collect, no query cap), and every query gets
+    at most k rows."""
     from go_fish_spark.catalog import table
     from go_fish_spark.operators import similarity
     import pyspark.sql.functions as F
 
     emb = table(spark, SF_DIR, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    kw = dict(dim=64, k=5, n_cells=8, n_probe=3)
-    driver = sorted(
-        tuple(r) for r in similarity.ivf_topk(emb, queries, **kw).collect()
-    )
-    dist = sorted(
-        tuple(r)
-        for r in similarity.ivf_topk(
-            emb, queries, probe_mode="distributed", **kw
-        ).collect()
-    )
-    assert driver == dist
+    big = similarity.ivf_topk(emb, emb, dim=64, k=5, n_cells=8, n_probe=3)
+    per_query = big.groupBy("query_id").agg(F.max("rank").alias("r")).collect()
+    assert per_query
+    assert max(r.r for r in per_query) <= 5
 
-    # the whole corpus as the query set: over the driver cap, fine here
-    big = similarity.ivf_topk(
-        emb, emb, probe_mode="distributed", max_queries=5, **kw
+
+def test_ann_kernels_ties_short_lists_and_probe_routing(spark):
+    """The shared ANN kernels on one hand fixture: _topk breaks equal
+    scores by vec_id, keeps every candidate when k exceeds them, and cuts
+    descending cosine and ascending ADC the same way; _nearest_cells
+    breaks equal cell distances by cell id and probes every cell when
+    n_probe >= n_cells."""
+    from go_fish_spark.operators import similarity
+    from go_fish_spark.operators.similarity import (
+        Quantizer, _adc_scored, _nearest_cells, _topk,
     )
-    assert big.count() > 0
+
+    # query 1: vec 30 and 10 tie at cos 0.9, vec 20 is lower; query 2
+    # has one candidate
+    scored = spark.createDataFrame(
+        [(1, 30, 0.9), (1, 10, 0.9), (1, 20, 0.5), (2, 10, 0.1234567)],
+        "query_id long, vec_id long, cos double",
+    )
+    top = _topk(scored, "cos", 2).orderBy("query_id", "rank")
+    assert [tuple(r) for r in top.collect()] == [
+        (1, 1, 10, 0.9), (1, 2, 30, 0.9), (2, 1, 10, 0.123457),
+    ]
+
+    # ascending ADC through the real scorer: codes index per-query
+    # distance tables; vec 7 is the query itself and drops out
+    coded = spark.createDataFrame(
+        [(5, [0, 1]), (6, [1, 0]), (7, [0, 0]), (8, [1, 1])],
+        "vec_id long, codes array<int>",
+    )
+    q = spark.createDataFrame(
+        [(7, [[1.0, 2.0], [1.0, 2.0]])], "query_id long, dt array<array<double>>"
+    )
+    adc = _topk(_adc_scored(coded, q), "adist", 5, ascending=True)
+    assert [tuple(r) for r in adc.orderBy("rank").collect()] == [
+        (7, 1, 5, 3.0), (7, 2, 6, 3.0), (7, 3, 8, 4.0),
+    ]
+
+    # cells 0 and 2 sit at the same distance from the query, cell 1 is
+    # farther: the tie goes to the lower cell id
+    quant = Quantizer([[1.0, 0.0], [3.0, 0.0], [-1.0, 0.0]])
+    queries = spark.createDataFrame([(1, [0.0, 0.0])], "id long, v array<double>")
+    probe = _nearest_cells(queries, quant, 1, "id", "v")
+    assert [(r.cell, r._rn) for r in probe.collect()] == [(0, 1)]
+    every = _nearest_cells(queries, quant, 5, "id", "v").orderBy("_rn")
+    assert [(r.cell, r._rn) for r in every.collect()] == [(0, 1), (2, 2), (1, 3)]
+
+    # brute force over the same kernels: k beyond the corpus keeps all
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 1.0]), (3, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    bf = similarity.brute_force_topk(corpus, corpus.filter("vec_id = 1"), k=10)
+    assert [(r.rank, r.vec_id) for r in bf.orderBy("rank").collect()] == [
+        (1, 2), (2, 3),
+    ]
 
 
 def test_lsh_topk_matches_brute_force_mostly(spark):
