@@ -38,6 +38,13 @@ from ..functions.text import tokens
 from .sampling import duck_hash_bucket, hash_bucket
 
 
+def _kl_term(p, q):
+    """One bin's KL term p·ln(p/q), rounded to 12 places and cast to
+    decimal(27,18) so the per-group sum is exact and order-independent
+    (shared by :func:`length_drift` and :func:`length_drift_frozen`)."""
+    return F.round(p * F.log(p / q), 12).cast("decimal(27,18)")
+
+
 def length_drift(
     df: DataFrame, group_col: str, text_col: str
 ) -> DataFrame:
@@ -70,11 +77,10 @@ def length_drift(
     n_total = gb.agg(F.sum("_n_gb")).collect()[0][0]  # bounded scalar
     p = F.col("_n_gb") / F.col("_n_g")
     q = F.col("_n_b") / F.lit(float(n_total))
-    term = F.round(p * F.log(p / q), 12).cast("decimal(27,18)")
     return (
         gb.join(g, "_g")
         .join(F.broadcast(b), "_b")
-        .select("_g", "_n_g", term.alias("_t"))
+        .select("_g", "_n_g", _kl_term(p, q).alias("_t"))
         .groupBy("_g", "_n_g")
         .agg(F.round(F.sum("_t").cast("double"), 9).alias("kl"))
         .select(
@@ -414,14 +420,9 @@ def length_drift_frozen(
     for k in bins:
         n_gb = F.col(f"_n{k}")
         if k in baseline:
-            # identical operation order to length_drift: p and q are
-            # long/long → double divides, term = round(p·ln(p/q), 12)
-            # accumulated exactly in decimal
-            q = baseline[k] / float(n_total)
-            p = n_gb / F.col("_n_g")
-            term = F.round(p * F.log(p / F.lit(q)), 12).cast(
-                "decimal(27,18)"
-            )
+            # length_drift's term; q frozen as the same IEEE divide
+            q = F.lit(baseline[k] / float(n_total))
+            term = _kl_term(n_gb / F.col("_n_g"), q)
             kl = kl + F.when(n_gb > 0, term).otherwise(
                 F.lit(0).cast("decimal(27,18)")
             )
@@ -1617,41 +1618,20 @@ def score_auc(
     over that bounded frame, and a ≤|groups| final agg."""
     score = F.col(score_col) if isinstance(score_col, str) else score_col
     label = F.col(label_col) if isinstance(label_col, str) else label_col
-    g = (
+    counts = (
         df.select(
             F.col(group_col).alias("_g"),
-            score.alias("_s"),
+            score.alias("_v"),
             label.cast("int").alias("_y"),
         )
-        .groupBy("_g", "_s")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum("_y").alias("_np"),
-        )
+        .groupBy("_g", "_v")
+        .agg(F.count(F.lit(1)).alias("_c"), F.sum("_y").alias("_cb"))
     )
-    w = (
-        Window.partitionBy("_g")
-        .orderBy("_s")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = g.withColumn("_cum", F.coalesce(F.sum("_n").over(w), F.lit(0)))
-    agg = ranked.groupBy("_g").agg(
-        F.sum("_n").alias("n"),
-        F.sum("_np").alias("n_pos"),
-        F.sum(
-            F.col("_np") * (F.lit(2) * F.col("_cum") + F.col("_n") + 1)
-        ).alias("_r2"),
-    )
-    p_ = F.col("n_pos")
-    n_ = F.col("n") - F.col("n_pos")
-    auc = (F.col("_r2") - p_ * (p_ + 1)).cast("double") / (
-        F.lit(2.0) * (p_ * n_).cast("double")
-    )
-    return agg.select(
+    return _auc_eval(counts).select(
         F.col("_g").alias(group_col),
         F.col("n").cast("bigint").alias("n"),
         F.col("n_pos").cast("bigint").alias("n_pos"),
-        F.when((p_ > 0) & (n_ > 0), F.round(auc, 9)).alias("auc"),
+        "auc",
     ).orderBy(group_col)
 
 
@@ -1945,6 +1925,174 @@ def duck_roc_sql(
     """
 
 
+# --- count-table statistics: one evaluation per statistic -------------------
+# Good–Turing, Gini, OOV and AUC are pure functions of additive integer
+# count tables. Each has ONE private evaluation over its table; the batch
+# operator evaluates the table of its own corpus, the frozen-baseline
+# gate evaluates the batch's table merged with the frozen one
+# (:func:`_merge_counts`), so gate/batch parity holds by construction.
+
+
+def _token_counts(df: DataFrame, group_col: str | None, text_col: str):
+    """(_g, _t, _c): occurrences of each whitespace token per group —
+    the one (group, token) explode-and-count every vocabulary statistic
+    reads. ``group_col=None`` counts per token over the whole frame."""
+    g = [] if group_col is None else [F.col(group_col).alias("_g")]
+    toks = df.select(*g, F.explode(F.split(F.col(text_col), " ")).alias("_t"))
+    return toks.groupBy(*toks.columns).agg(F.count(F.lit(1)).alias("_c"))
+
+
+def _source_mass(df: DataFrame, group_col: str, text_col: str):
+    """(_g, _c): token mass per group — the Gini Lorenz table."""
+    return (
+        df.select(
+            F.col(group_col).alias("_g"),
+            F.size(F.split(F.col(text_col), " ")).alias("_m"),
+        )
+        .groupBy("_g")
+        .agg(F.sum("_m").alias("_c"))
+    )
+
+
+def _value_counts(df: DataFrame, group_col: str, score_col, decimals):
+    """(_g, _v, _c): rows per distinct (group, score value), the score
+    cast to double and rounded to ``decimals`` when given; NULL scores
+    are excluded (they carry no distribution mass)."""
+    score = F.col(score_col) if isinstance(score_col, str) else score_col
+    v = score.cast("double")
+    if decimals is not None:
+        v = F.round(v, decimals)
+    return (
+        df.select(F.col(group_col).alias("_g"), v.alias("_v"))
+        .filter(F.col("_v").isNotNull())
+        .groupBy("_g", "_v")
+        .agg(F.count(F.lit(1)).alias("_c"))
+    )
+
+
+def _merge_counts(batch: DataFrame, frozen: DataFrame, keys: list[str]):
+    """Full-outer integer-add merge of two additive count tables
+    (*keys, _c): (*keys, _c = batch + frozen, _cb = the batch's own
+    count), a side missing a key counting 0 — so the merged table is
+    exactly the count table of history ∪ batch."""
+    cb = F.coalesce("_c", F.lit(0))
+    return batch.join(
+        frozen.withColumnRenamed("_c", "_cf"), keys, "full"
+    ).select(
+        *keys, (cb + F.coalesce("_cf", F.lit(0))).alias("_c"), cb.alias("_cb")
+    )
+
+
+def _ratio9(num: str, den: str):
+    """round(num / den, 9) over two exact integer columns — the one IEEE
+    division each count-table statistic ends in."""
+    return F.round(F.col(num).cast("double") / F.col(den).cast("double"), 9)
+
+
+def _gt_eval(cnt: DataFrame, group_col: str) -> DataFrame:
+    """Good–Turing f₁/N per group over a (_g, _t, _c) token-count
+    table: (group_col, n_tokens, vocab, singletons, unseen_mass)."""
+    agg = cnt.groupBy("_g").agg(
+        F.sum("_c").alias("n_tokens"),
+        F.count(F.lit(1)).alias("vocab"),
+        F.sum(F.when(F.col("_c") == 1, 1).otherwise(0)).alias("singletons"),
+    )
+    return agg.select(
+        F.col("_g").alias(group_col),
+        F.col("n_tokens").cast("bigint").alias("n_tokens"),
+        F.col("vocab").cast("bigint").alias("vocab"),
+        F.col("singletons").cast("bigint").alias("singletons"),
+        _ratio9("singletons", "n_tokens").alias("unseen_mass"),
+    ).orderBy(group_col)
+
+
+def _gini_eval(mass: DataFrame) -> DataFrame:
+    """Exact sorted-cumulative Gini over a (_g, _c) mass table, sources
+    ranked by (mass, source): (n_sources, total_tokens, gini)."""
+    w = Window.orderBy(F.col("_c").asc(), F.col("_g").asc())
+    agg = mass.withColumn("_i", F.row_number().over(w)).agg(
+        F.count(F.lit(1)).alias("n_sources"),
+        F.sum("_c").alias("total_tokens"),
+        F.sum(F.col("_i") * F.col("_c")).alias("_ix"),
+    )
+    n = F.col("n_sources")
+    tot = F.col("total_tokens")
+    gini = (
+        (F.lit(2) * F.col("_ix") - (n + 1) * tot).cast("double")
+        / (n * tot).cast("double")
+    )
+    return agg.select(
+        n.cast("bigint").alias("n_sources"),
+        tot.cast("bigint").alias("total_tokens"),
+        F.when(tot > 0, F.round(gini, 9)).alias("gini"),
+    )
+
+
+def _vocab_topn(cnt: DataFrame, top_n: int) -> DataFrame:
+    """(_t): the ``top_n`` tokens of a (_t, _c) count table under the
+    deterministic (count DESC, token ASC) rank."""
+    w = Window.orderBy(F.col("_c").desc(), F.col("_t").asc())
+    return (
+        cnt.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= int(top_n))
+        .select("_t")
+    )
+
+
+def _oov_eval(cnt: DataFrame, vocab: DataFrame, group_col: str):
+    """Per-group OOV occurrence rate of a (_g, _t, _c) token-count
+    table against a (_t) vocabulary: (group_col, n_tokens,
+    oov_occurrences, oov_rate). The caller decides whether ``vocab``
+    is broadcast."""
+    flagged = cnt.join(vocab.withColumn("_in", F.lit(1)), "_t", "left")
+    agg = flagged.groupBy("_g").agg(
+        F.sum("_c").alias("n_tokens"),
+        F.sum(F.when(F.col("_in").isNull(), F.col("_c")).otherwise(0)).alias(
+            "oov_occurrences"
+        ),
+    )
+    return agg.select(
+        F.col("_g").alias(group_col),
+        F.col("n_tokens").cast("bigint").alias("n_tokens"),
+        F.col("oov_occurrences").cast("bigint").alias("oov_occurrences"),
+        _ratio9("oov_occurrences", "n_tokens").alias("oov_rate"),
+    ).orderBy(group_col)
+
+
+def _auc_eval(counts: DataFrame) -> DataFrame:
+    """Mann–Whitney AUC per group over a (_g, _v, _c, _cb) table — rows
+    and positive rows per distinct value — as (_g, n, n_pos, auc):
+    R2 = Σ_v n_pos(v)·(2·cum_before(v) + n(v) + 1) is twice the
+    positives' average-rank sum in exact BIGINTs, and
+    AUC = (R2 − P(P+1)) / (2·P·N) is the one division. R2 − P(P+1)
+    equals the U-statistic numerator Σ_v n_pos(v)·(2·neg_before(v) +
+    neg(v)) exactly, so a gate that counts negatives from a frozen
+    baseline evaluates the same formula. NULL auc unless both classes
+    are present."""
+    w = (
+        Window.partitionBy("_g")
+        .orderBy("_v")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    cum = F.coalesce(F.sum("_c").over(w), F.lit(0))
+    agg = counts.withColumn("_cum", cum).groupBy("_g").agg(
+        F.sum("_c").alias("n"),
+        F.sum("_cb").alias("n_pos"),
+        F.sum(
+            F.col("_cb") * (F.lit(2) * F.col("_cum") + F.col("_c") + 1)
+        ).alias("_r2"),
+    )
+    p_ = F.col("n_pos")
+    n_ = F.col("n") - F.col("n_pos")
+    auc = (F.col("_r2") - p_ * (p_ + 1)).cast("double") / (
+        F.lit(2.0) * (p_ * n_).cast("double")
+    )
+    return agg.select(
+        "_g", "n", "n_pos",
+        F.when((p_ > 0) & (n_ > 0), F.round(auc, 9)).alias("auc"),
+    )
+
+
 def good_turing_unseen(
     df: DataFrame, group_col: str, text_col: str
 ) -> DataFrame:
@@ -1962,30 +2110,7 @@ def good_turing_unseen(
 
     100 TB shape: ONE (group, token) exchange with map-side combine
     (the x129/x132 vocab-bounded frame), then a ≤|groups| agg."""
-    cnt = (
-        df.select(
-            F.col(group_col).alias("_g"),
-            F.explode(F.split(F.col(text_col), " ")).alias("_t"),
-        )
-        .groupBy("_g", "_t")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-    agg = cnt.groupBy("_g").agg(
-        F.sum("_c").alias("n_tokens"),
-        F.count(F.lit(1)).alias("vocab"),
-        F.sum(F.when(F.col("_c") == 1, 1).otherwise(0)).alias("singletons"),
-    )
-    return agg.select(
-        F.col("_g").alias(group_col),
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        F.col("vocab").cast("bigint").alias("vocab"),
-        F.col("singletons").cast("bigint").alias("singletons"),
-        F.round(
-            F.col("singletons").cast("double")
-            / F.col("n_tokens").cast("double"),
-            9,
-        ).alias("unseen_mass"),
-    ).orderBy(group_col)
+    return _gt_eval(_token_counts(df, group_col, text_col), group_col)
 
 
 def duck_good_turing_sql(table: str, group_col: str, text_col: str) -> str:
@@ -2028,32 +2153,7 @@ def source_gini(df: DataFrame, group_col: str, text_col: str) -> DataFrame:
 
     100 TB shape: one (group) exchange to a ≤|sources| frame; the rank
     window and final agg run on that bounded frame."""
-    mass = (
-        df.select(
-            F.col(group_col).alias("_g"),
-            (F.size(F.split(F.col(text_col), " "))).alias("_m"),
-        )
-        .groupBy("_g")
-        .agg(F.sum("_m").alias("_x"))
-    )
-    w = Window.orderBy(F.col("_x").asc(), F.col("_g").asc())
-    ranked = mass.withColumn("_i", F.row_number().over(w))
-    agg = ranked.agg(
-        F.count(F.lit(1)).alias("n_sources"),
-        F.sum("_x").alias("total_tokens"),
-        F.sum(F.col("_i") * F.col("_x")).alias("_ix"),
-    )
-    n = F.col("n_sources")
-    tot = F.col("total_tokens")
-    gini = (
-        (F.lit(2) * F.col("_ix") - (n + 1) * tot).cast("double")
-        / (n * tot).cast("double")
-    )
-    return agg.select(
-        n.cast("bigint").alias("n_sources"),
-        tot.cast("bigint").alias("total_tokens"),
-        F.when(tot > 0, F.round(gini, 9)).alias("gini"),
-    )
+    return _gini_eval(_source_mass(df, group_col, text_col))
 
 
 def duck_gini_sql(table: str, group_col: str, text_col: str) -> str:
@@ -2101,40 +2201,9 @@ def oov_rate(
     100 TB shape: ONE (group, token) exchange (vocab-bounded frame);
     the global vocab derives from the SAME frame by re-aggregation (no
     second corpus pass); rank window + joins run on bounded frames."""
-    cnt = (
-        df.select(
-            F.col(group_col).alias("_g"),
-            F.explode(F.split(F.col(text_col), " ")).alias("_t"),
-        )
-        .groupBy("_g", "_t")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-    glob = cnt.groupBy("_t").agg(F.sum("_c").alias("_gc"))
-    w = Window.orderBy(F.col("_gc").desc(), F.col("_t").asc())
-    vocab = (
-        glob.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= top_n)
-        .select("_t")
-    )
-    flagged = cnt.join(
-        vocab.withColumn("_in", F.lit(1)), "_t", "left"
-    )
-    agg = flagged.groupBy("_g").agg(
-        F.sum("_c").alias("n_tokens"),
-        F.sum(F.when(F.col("_in").isNull(), F.col("_c")).otherwise(0)).alias(
-            "oov_occurrences"
-        ),
-    )
-    return agg.select(
-        F.col("_g").alias(group_col),
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        F.col("oov_occurrences").cast("bigint").alias("oov_occurrences"),
-        F.round(
-            F.col("oov_occurrences").cast("double")
-            / F.col("n_tokens").cast("double"),
-            9,
-        ).alias("oov_rate"),
-    ).orderBy(group_col)
+    cnt = _token_counts(df, group_col, text_col)
+    vocab = _vocab_topn(cnt.groupBy("_t").agg(F.sum("_c").alias("_c")), top_n)
+    return _oov_eval(cnt, vocab, group_col)
 
 
 def duck_oov_sql(
@@ -2193,16 +2262,7 @@ def score_distribution_baseline(
     100 TB shape: one (group, value) exchange with map-side combine;
     the frame is bounded by distinct quantized values per group and is
     the broadcast side of every gate evaluation."""
-    score = F.col(score_col) if isinstance(score_col, str) else score_col
-    v = score.cast("double")
-    if decimals is not None:
-        v = F.round(v, decimals)
-    cnt = (
-        df.select(F.col(group_col).alias("_g"), v.alias("_v"))
-        .filter(F.col("_v").isNotNull())
-        .groupBy("_g", "_v")
-        .agg(F.count(F.lit(1)).alias("mass"))
-    )
+    cnt = _value_counts(df, group_col, score_col, decimals)
     w = (
         Window.partitionBy("_g")
         .orderBy("_v")
@@ -2211,56 +2271,9 @@ def score_distribution_baseline(
     return cnt.select(
         F.col("_g").alias(group_col),
         F.col("_v").alias("value"),
-        F.sum("mass").over(w).alias("cum_le"),
-        "mass",
-        F.sum("mass").over(Window.partitionBy("_g")).alias("n"),
-    )
-
-
-def _merged_step(df, baseline, group_col, score_col, decimals):
-    """Shared merge for the gates: full-outer the batch's (group,
-    value) counts with the frozen baseline rows and window-fill the
-    baseline's step function (cum_le at the greatest baseline value ≤
-    each grid value) — bounded by |batch distinct| + |baseline| rows
-    per group, one ordered window each."""
-    score = F.col(score_col) if isinstance(score_col, str) else score_col
-    v = score.cast("double")
-    if decimals is not None:
-        v = F.round(v, decimals)
-    bcnt = (
-        df.select(F.col(group_col).alias("_g"), v.alias("_v"))
-        .filter(F.col("_v").isNotNull())
-        .groupBy("_g", "_v")
-        .agg(F.count(F.lit(1)).alias("_np"))
-    )
-    base = baseline.select(
-        F.col(group_col).alias("_g"),
-        F.col("value").alias("_v"),
-        "cum_le",
-        "mass",
-        "n",
-    )
-    m = bcnt.join(base, ["_g", "_v"], "full")
-    wfill = (
-        Window.partitionBy("_g")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        m.withColumn(
-            "_base_cum",
-            F.coalesce(
-                F.last("cum_le", ignorenulls=True).over(wfill), F.lit(0)
-            ),
-        )
-        .withColumn("_base_eq", F.coalesce("mass", F.lit(0)))
-        .withColumn("_np", F.coalesce("_np", F.lit(0)))
-        .withColumn(
-            "_base_n",
-            F.first(
-                F.col("n"), ignorenulls=True
-            ).over(Window.partitionBy("_g")),
-        )
+        F.sum("_c").over(w).alias("cum_le"),
+        F.col("_c").alias("mass"),
+        F.sum("_c").over(Window.partitionBy("_g")).alias("n"),
     )
 
 
@@ -2272,43 +2285,30 @@ def apply_auc_gate(
 ) -> DataFrame:
     """APPLY arm of the x135 AUC — Mann–Whitney AUC of the incoming
     rows' scores (the "positive" sample) against the FROZEN history
-    distribution (the "negative" sample), per group: exactly
-    ``score_auc`` evaluated through the U-statistic identity
-
-        2·P·N·AUC = Σ_v n_pos(v) · (2·hist_cum<(v) + hist_mass=(v))
-
-    so the numerator is pure BIGINT over the merged step function and
-    the one final division is IEEE-identical to the batch op's —
-    apply(pos rows, fit(neg rows)) ≡ score_auc(pos ∪ neg) EXACTLY
-    (parity-tested, not approximately). Output: (group_col, n, auc
-    round-9); NULL auc when the group is absent from the baseline or
-    either sample is empty. Runs per micro-batch under foreachBatch —
-    the aggregation is per-group over the bounded merged frame."""
-    m = _merged_step(df, baseline, group_col, score_col, None)
-    num = F.sum(
-        F.col("_np")
-        * (
-            F.lit(2) * (F.col("_base_cum") - F.col("_base_eq"))
-            + F.col("_base_eq")
-        )
+    distribution (the "negative" sample), per group: the batch's
+    (group, value) counts merged with the baseline's ``mass`` by
+    integer addition, evaluated by score_auc's own formula — so
+    apply(pos rows, fit(neg rows)) ≡ score_auc(pos ∪ neg) over the
+    rows with non-NULL scores, by construction (parity-tested). NULL
+    scores are excluded on both sides (score_auc ranks them). Output:
+    (group_col, n, auc round-9); NULL auc when the group is absent
+    from the baseline. Runs per micro-batch under foreachBatch — the
+    aggregation is per-group over the bounded merged frame."""
+    base = baseline.select(
+        F.col(group_col).alias("_g"),
+        F.col("value").alias("_v"),
+        F.col("mass").alias("_c"),
     )
-    agg = m.groupBy("_g").agg(
-        F.sum("_np").alias("n"),
-        num.alias("_u2"),
-        F.first("_base_n").alias("_nn"),
-    )
-    auc = F.col("_u2").cast("double") / (
-        F.lit(2.0) * (F.col("n") * F.col("_nn")).cast("double")
+    counts = _merge_counts(
+        _value_counts(df, group_col, score_col, None), base, ["_g", "_v"]
     )
     return (
-        agg.filter(F.col("n") > 0)
+        _auc_eval(counts)
+        .filter(F.col("n_pos") > 0)
         .select(
             F.col("_g").alias(group_col),
-            F.col("n").cast("bigint").alias("n"),
-            F.when(
-                F.col("_nn").isNotNull() & (F.col("_nn") > 0),
-                F.round(auc, 9),
-            ).alias("auc"),
+            F.col("n_pos").cast("bigint").alias("n"),
+            "auc",
         )
         .orderBy(group_col)
     )
@@ -2331,15 +2331,37 @@ def apply_ks_gate(
     EXACTLY (parity-tested). Output: (group_col, n, ks round-9); NULL
     ks when the baseline lacks the group. foreachBatch-shaped, bounded
     per-group frames."""
-    m = _merged_step(df, baseline, group_col, score_col, decimals)
+    base = baseline.select(
+        F.col(group_col).alias("_g"),
+        F.col("value").alias("_v"),
+        "cum_le",
+        "n",
+    )
+    m = _value_counts(df, group_col, score_col, decimals).join(
+        base, ["_g", "_v"], "full"
+    )
     wcum = (
         Window.partitionBy("_g")
         .orderBy("_v")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    stepped = m.withColumn("_bcum", F.sum("_np").over(wcum))
-    ng = F.sum("_np").over(Window.partitionBy("_g"))
-    stepped = stepped.withColumn("_ng", ng)
+    # window-fill the baseline's step function (cum_le at the greatest
+    # baseline value ≤ each merged grid value) beside the batch's own
+    stepped = (
+        m.withColumn(
+            "_base_cum",
+            F.coalesce(
+                F.last("cum_le", ignorenulls=True).over(wcum), F.lit(0)
+            ),
+        )
+        .withColumn("_np", F.coalesce("_c", F.lit(0)))
+        .withColumn(
+            "_base_n",
+            F.first("n", ignorenulls=True).over(Window.partitionBy("_g")),
+        )
+        .withColumn("_bcum", F.sum("_np").over(wcum))
+        .withColumn("_ng", F.sum("_np").over(Window.partitionBy("_g")))
+    )
     gap = F.abs(
         F.col("_bcum").cast("double") / F.col("_ng").cast("double")
         - F.col("_base_cum").cast("double")
@@ -2574,14 +2596,10 @@ def duck_spectrum_sums(
 
 
 # ---------------------------------------------------------------------------
-# Frozen-baseline arms for the round-10 statistics (r10 verdict Next #5):
-# Good–Turing coverage, source-Gini concentration, and OOV rate each get
-# the x130/x141/x153 fit/apply split — fit a slim state table on HISTORY,
-# gate each micro-batch against it, with EXACT parity: because every one
-# of these statistics is a pure function of additive integer count
-# tables, apply(batch, fit(history)) ≡ the batch operator over
-# history ∪ batch bit-for-bit (same BIGINT sums, same single IEEE
-# division) — the score_auc exactness discipline, not an approximation.
+# Frozen-baseline arms for Good–Turing coverage, source-Gini concentration
+# and OOV rate (the x130/x141/x153 fit/apply split): fit a slim count
+# table on HISTORY, gate each micro-batch through the statistic's one
+# evaluation (see the count-table section above).
 
 
 def fit_token_counts(
@@ -2596,13 +2614,10 @@ def fit_token_counts(
     (group, token) exchange with map-side combine; the frame is
     vocab-bounded (the x129/x132 law) and in production persists as
     the sketch-store-style stat table a stream maintains."""
-    return (
-        df.select(
-            F.col(group_col).alias(group_col),
-            F.explode(F.split(F.col(text_col), " ")).alias("token"),
-        )
-        .groupBy(group_col, "token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    return _token_counts(df, group_col, text_col).select(
+        F.col("_g").alias(group_col),
+        F.col("_t").alias("token"),
+        F.col("_c").alias("cnt"),
     )
 
 
@@ -2614,47 +2629,21 @@ def apply_good_turing_gate(
 ) -> DataFrame:
     """APPLY arm of the x143 Good–Turing coverage gauge: merge the
     incoming batch's (group, token) counts with the FROZEN history
-    counts by integer addition and evaluate f₁/N on the merged table.
-    EXACT parity: apply(batch, fit(history)) ≡
-    good_turing_unseen(history ∪ batch) bit-for-bit — counts add, the
-    merged table is identical, and the one division sees the same
-    BIGINTs. Output schema = good_turing_unseen's: (group_col,
-    n_tokens, vocab, singletons, unseen_mass round-9).
+    counts by integer addition and evaluate f₁/N on the merged table
+    through good_turing_unseen's own evaluation — so apply(batch,
+    fit(history)) ≡ good_turing_unseen(history ∪ batch) by
+    construction (parity-tested). Same output schema.
 
     foreachBatch-shaped: the merge is one (group, token) join bounded
     by |batch vocab| + |history vocab|; history rows never re-derive
     from text (the signature-store rule applied to token counts)."""
-    batch = fit_token_counts(df, group_col, text_col)
     base = baseline.select(
-        F.col(group_col), F.col("token"), F.col("cnt").alias("_bc")
+        F.col(group_col).alias("_g"),
+        F.col("token").alias("_t"),
+        F.col("cnt").alias("_c"),
     )
-    merged = (
-        batch.withColumnRenamed("cnt", "_nc")
-        .join(base, [group_col, "token"], "full")
-        .select(
-            group_col,
-            "token",
-            (
-                F.coalesce("_nc", F.lit(0)) + F.coalesce("_bc", F.lit(0))
-            ).alias("_c"),
-        )
-    )
-    agg = merged.groupBy(group_col).agg(
-        F.sum("_c").alias("n_tokens"),
-        F.count(F.lit(1)).alias("vocab"),
-        F.sum(F.when(F.col("_c") == 1, 1).otherwise(0)).alias("singletons"),
-    )
-    return agg.select(
-        group_col,
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        F.col("vocab").cast("bigint").alias("vocab"),
-        F.col("singletons").cast("bigint").alias("singletons"),
-        F.round(
-            F.col("singletons").cast("double")
-            / F.col("n_tokens").cast("double"),
-            9,
-        ).alias("unseen_mass"),
-    ).orderBy(group_col)
+    batch = _token_counts(df, group_col, text_col)
+    return _gt_eval(_merge_counts(batch, base, ["_g", "_t"]), group_col)
 
 
 def fit_source_mass(
@@ -2663,13 +2652,8 @@ def fit_source_mass(
     """FIT arm of the x146 Gini gate: per-source token mass —
     (group_col, mass BIGINT), the Lorenz table. ≤|sources| rows; mass
     is additive, so streaming maintenance is integer addition."""
-    return (
-        df.select(
-            F.col(group_col).alias(group_col),
-            F.size(F.split(F.col(text_col), " ")).alias("_m"),
-        )
-        .groupBy(group_col)
-        .agg(F.sum("_m").cast("bigint").alias("mass"))
+    return _source_mass(df, group_col, text_col).select(
+        F.col("_g").alias(group_col), F.col("_c").alias("mass")
     )
 
 
@@ -2681,43 +2665,14 @@ def apply_gini_gate(
 ) -> DataFrame:
     """APPLY arm of the x146 concentration gauge: add the batch's
     per-source token mass to the FROZEN history masses and evaluate
-    the exact sorted-cumulative Gini on the merged ≤|sources| table.
-    EXACT parity: apply(batch, fit(history)) ≡
-    source_gini(history ∪ batch) — masses add, the deterministic
-    (mass, source) rank sees identical integers, one final division.
-    Output schema = source_gini's: (n_sources, total_tokens, gini)."""
-    batch = fit_source_mass(df, group_col, text_col)
+    source_gini's own Gini on the merged ≤|sources| table, so
+    apply(batch, fit(history)) ≡ source_gini(history ∪ batch) by
+    construction (parity-tested). Same output schema."""
     base = baseline.select(
-        F.col(group_col), F.col("mass").alias("_bm")
+        F.col(group_col).alias("_g"), F.col("mass").alias("_c")
     )
-    merged = (
-        batch.withColumnRenamed("mass", "_nm")
-        .join(base, [group_col], "full")
-        .select(
-            F.col(group_col).alias("_g"),
-            (
-                F.coalesce("_nm", F.lit(0)) + F.coalesce("_bm", F.lit(0))
-            ).alias("_x"),
-        )
-    )
-    w = Window.orderBy(F.col("_x").asc(), F.col("_g").asc())
-    ranked = merged.withColumn("_i", F.row_number().over(w))
-    agg = ranked.agg(
-        F.count(F.lit(1)).alias("n_sources"),
-        F.sum("_x").alias("total_tokens"),
-        F.sum(F.col("_i") * F.col("_x")).alias("_ix"),
-    )
-    n = F.col("n_sources")
-    tot = F.col("total_tokens")
-    gini = (
-        (F.lit(2) * F.col("_ix") - (n + 1) * tot).cast("double")
-        / (n * tot).cast("double")
-    )
-    return agg.select(
-        n.cast("bigint").alias("n_sources"),
-        tot.cast("bigint").alias("total_tokens"),
-        F.when(tot > 0, F.round(gini, 9)).alias("gini"),
-    )
+    batch = _source_mass(df, group_col, text_col)
+    return _gini_eval(_merge_counts(batch, base, ["_g"]))
 
 
 def fit_vocab_topn(
@@ -2725,21 +2680,10 @@ def fit_vocab_topn(
 ) -> DataFrame:
     """FIT arm of the x147 OOV gate: the frozen corpus top-``top_n``
     vocabulary — (token) rows under the deterministic (count DESC,
-    token ASC) rank, exactly the vocabulary :func:`oov_rate` derives
-    internally, so apply(df, fit(df)) reproduces the batch operator
-    bit-for-bit. ≤top_n rows — the broadcast side of every gate
-    evaluation."""
-    cnt = (
-        df.select(F.explode(F.split(F.col(text_col), " ")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("_gc"))
-    )
-    w = Window.orderBy(F.col("_gc").desc(), F.col("token").asc())
-    return (
-        cnt.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= int(top_n))
-        .select("token")
-    )
+    token ASC) rank — the rank :func:`oov_rate` applies internally.
+    ≤top_n rows — the broadcast side of every gate evaluation."""
+    vocab = _vocab_topn(_token_counts(df, None, text_col), top_n)
+    return vocab.select(F.col("_t").alias("token"))
 
 
 def apply_oov_gate(
@@ -2752,40 +2696,12 @@ def apply_oov_gate(
     occurrence rate of the incoming batch against a FROZEN vocabulary
     — the streaming question ("how much of today's crawl falls outside
     the tokenizer vocab we already shipped?"), where the batch op
-    re-derives the vocab from the same corpus. EXACT parity on the
-    fitting corpus: apply(df, fit_vocab_topn(df)) ≡ oov_rate(df)
-    bit-for-bit (same rank rule, same integer sums). Output schema =
-    oov_rate's: (group_col, n_tokens, oov_occurrences, oov_rate
-    round-9)."""
-    cnt = (
-        df.select(
-            F.col(group_col).alias(group_col),
-            F.explode(F.split(F.col(text_col), " ")).alias("token"),
-        )
-        .groupBy(group_col, "token")
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-    flagged = cnt.join(
-        F.broadcast(vocab.select("token").withColumn("_in", F.lit(1))),
-        "token",
-        "left",
-    )
-    agg = flagged.groupBy(group_col).agg(
-        F.sum("_c").alias("n_tokens"),
-        F.sum(
-            F.when(F.col("_in").isNull(), F.col("_c")).otherwise(0)
-        ).alias("oov_occurrences"),
-    )
-    return agg.select(
-        group_col,
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        F.col("oov_occurrences").cast("bigint").alias("oov_occurrences"),
-        F.round(
-            F.col("oov_occurrences").cast("double")
-            / F.col("n_tokens").cast("double"),
-            9,
-        ).alias("oov_rate"),
-    ).orderBy(group_col)
+    re-derives the vocab from the same corpus. Same rank rule and same
+    evaluation as oov_rate, so apply(df, fit_vocab_topn(df)) ≡
+    oov_rate(df) by construction (parity-tested). Same output
+    schema."""
+    frozen = F.broadcast(vocab.select(F.col("token").alias("_t")))
+    return _oov_eval(_token_counts(df, group_col, text_col), frozen, group_col)
 
 
 def duck_oov_frozen_sql(

@@ -523,10 +523,11 @@ def ivf_topk_expr(
         corpus, id_col, vec_col, "c",
         quantizer.assign_expr_col(vec_col).alias("cell"),
     )
+    # the query norm is taken after the probe cut: once per probed cell
     probe = _nearest_cells(
         queries, quantizer, n_probe, id_col, vec_col,
-        F.col(vec_col).alias("qv"), vectors.norm(vec_col).alias("_nqv"),
-    )
+        F.col(vec_col).alias("qv"),
+    ).withColumn("_nqv", vectors.norm("qv"))
     return _topk(vectors.cosine_scored(assigned, probe, "cell"), "cos", k)
 
 

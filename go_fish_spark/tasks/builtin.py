@@ -16,6 +16,33 @@ from .protocol import BasicTask
 from .registry import register_task
 
 
+def _flag_rows(df, options, value, alias, cond, flag):
+    """Shared tail of the row gates: append ``round(value, 9)`` as
+    ``alias`` and ``cond`` as the boolean ``flag`` (a NULL condition is
+    not flagged, so unseen keys and NULL values pass); with the option
+    ``mode='drop'`` keep only the unflagged rows, without the two
+    columns (default ``mode='flag'``)."""
+    flagged = df.select(
+        "*",
+        F.round(value, 9).alias(alias),
+        F.coalesce(cond, F.lit(False)).alias(flag),
+    )
+    if options.get("mode", "flag") == "drop":
+        return flagged.filter(~F.col(flag)).drop(alias, flag)
+    return flagged
+
+
+def _per_key(key_col, values):
+    """One CASE over a bounded key set: ``values[key]`` where
+    ``key_col`` equals the key, NULL for any other key (or when
+    ``values`` is empty)."""
+    out = None
+    for k, v in values.items():
+        cond = F.col(key_col) == k
+        out = F.when(cond, v) if out is None else out.when(cond, v)
+    return F.lit(None).cast("double") if out is None else out
+
+
 @register_task("filter_eq")
 class FilterEq(BasicTask):
     """≡ `testdata/rules/a.go:12-18` (Str == "a"). Options: column, value."""
@@ -345,29 +372,19 @@ class AnomalyGate(BasicTask):
         value_col = self.options.get("value_col", "value")
         alias = self.options.get("alias", "zscore")
         zth = float(self.options.get("z_threshold", 3.0))
-        z = None
-        for t, (mean, std) in dict(self.options["baselines"]).items():
-            if not float(std) > 0:
-                # a zero/negative std cannot score anything — under
-                # Spark's default ANSI mode the division would raise
-                # DIVIDE_BY_ZERO and kill the stream; treat the type as
-                # baseline-less instead (rows pass un-scored)
-                continue
-            cond = F.col(type_col) == t
-            expr = (F.col(value_col).cast("double") - float(mean)) / float(std)
-            z = F.when(cond, expr) if z is None else z.when(cond, expr)
-        if z is None:  # empty baselines: nothing scorable
-            z = F.lit(None).cast("double")
-        flagged = df.select(
-            "*",
-            F.round(z, 9).alias(alias),
-            F.coalesce(F.abs(z) >= zth, F.lit(False)).alias("is_anomaly"),
+        v = F.col(value_col).cast("double")
+        # a zero/negative std cannot score anything — under Spark's
+        # default ANSI mode the division would raise DIVIDE_BY_ZERO and
+        # kill the stream; treat the type as baseline-less instead (rows
+        # pass un-scored)
+        z = _per_key(type_col, {
+            t: (v - float(mean)) / float(std)
+            for t, (mean, std) in dict(self.options["baselines"]).items()
+            if float(std) > 0
+        })
+        return _flag_rows(
+            df, self.options, z, alias, F.abs(z) >= zth, "is_anomaly"
         )
-        if self.options.get("mode", "flag") == "drop":
-            return flagged.filter(~F.col("is_anomaly")).drop(
-                alias, "is_anomaly"
-            )
-        return flagged
 
 
 def ecdf_gate_config(baseline_df, max_points: int = 512) -> list:
@@ -432,16 +449,10 @@ class EcdfGate(BasicTask):
             )
         else:  # empty baseline: nothing scorable
             pctl = F.lit(None).cast("double")
-        flagged = df.select(
-            "*",
-            F.round(pctl, 9).alias(alias),
-            F.coalesce(
-                (pctl < lo) | (pctl > hi), F.lit(False)
-            ).alias("is_tail"),
+        return _flag_rows(
+            df, self.options, pctl, alias, (pctl < lo) | (pctl > hi),
+            "is_tail",
         )
-        if self.options.get("mode", "flag") == "drop":
-            return flagged.filter(~F.col("is_tail")).drop(alias, "is_tail")
-        return flagged
 
 
 @register_task("oov_gate")
@@ -480,14 +491,9 @@ class OovGate(BasicTask):
             F.col(col).isNotNull() & (F.size(toks) > 0),
             n_oov.cast("double") / F.size(toks).cast("double"),
         )
-        flagged = df.select(
-            "*",
-            F.round(share, 9).alias(alias),
-            F.coalesce(share > max_oov, F.lit(False)).alias("is_oov"),
+        return _flag_rows(
+            df, self.options, share, alias, share > max_oov, "is_oov"
         )
-        if self.options.get("mode", "flag") == "drop":
-            return flagged.filter(~F.col("is_oov")).drop(alias, "is_oov")
-        return flagged
 
 
 @register_task("source_cap_gate")
@@ -513,25 +519,13 @@ class SourceCapGate(BasicTask):
         max_share = float(self.options.get("max_share", 0.5))
         masses = {str(k): int(v) for k, v in dict(self.options["masses"]).items()}
         total = float(sum(masses.values()))
-        share = None
-        for s, m in masses.items():
-            cond = F.col(source_col) == s
-            expr = F.lit(m / total if total > 0 else None).cast("double")
-            share = (
-                F.when(cond, expr) if share is None else share.when(cond, expr)
-            )
-        if share is None:
-            share = F.lit(None).cast("double")
-        flagged = df.select(
-            "*",
-            F.round(share, 9).alias(alias),
-            F.coalesce(share > max_share, F.lit(False)).alias("is_capped"),
+        share = _per_key(source_col, {
+            s: F.lit(m / total if total > 0 else None).cast("double")
+            for s, m in masses.items()
+        })
+        return _flag_rows(
+            df, self.options, share, alias, share > max_share, "is_capped"
         )
-        if self.options.get("mode", "flag") == "drop":
-            return flagged.filter(~F.col("is_capped")).drop(
-                alias, "is_capped"
-            )
-        return flagged
 
 
 @register_task("coverage_gate")
@@ -557,25 +551,10 @@ class CoverageGate(BasicTask):
         source_col = self.options.get("source_col", "source")
         alias = self.options.get("alias", "unseen_mass")
         max_unseen = float(self.options.get("max_unseen", 0.1))
-        um = None
-        for s, v in dict(self.options["baselines"]).items():
-            cond = F.col(source_col) == s
-            um = (
-                F.when(cond, F.lit(float(v)))
-                if um is None
-                else um.when(cond, F.lit(float(v)))
-            )
-        if um is None:
-            um = F.lit(None).cast("double")
-        flagged = df.select(
-            "*",
-            F.round(um, 9).alias(alias),
-            F.coalesce(um > max_unseen, F.lit(False)).alias(
-                "is_undercrawled"
-            ),
+        um = _per_key(source_col, {
+            s: F.lit(float(v))
+            for s, v in dict(self.options["baselines"]).items()
+        })
+        return _flag_rows(
+            df, self.options, um, alias, um > max_unseen, "is_undercrawled"
         )
-        if self.options.get("mode", "flag") == "drop":
-            return flagged.filter(~F.col("is_undercrawled")).drop(
-                alias, "is_undercrawled"
-            )
-        return flagged

@@ -20,7 +20,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", SF_SMALL)
 #: Oracle smoke kept in the default run: the entries that go through the
 #: dedup blocked-pair kernel (operators/dedup.py), the entries that go
 #: through the ANN search kernels (operators/similarity.py; x175 stays
-#: slow, it takes over a minute alone) and q43's exact-moment oracle.
+#: slow, it takes over a minute alone), the count-table statistics and
+#: their frozen-baseline gates plus the shared KL term
+#: (operators/profile.py: x67, x135, x141, x143, x146, x147, x158-x160)
+#: and q43's exact-moment oracle.
 #: Every other per-entry compare is marked ``slow`` — it duplicates the
 #: full-registry self-check (scripts/check_correctness.py) — and
 #: scripts/close_round.py forces the slow set back on with `-o addopts=`.
@@ -34,6 +37,10 @@ SMOKE = {
     "x47_ivfpq", "x59_knn_classify", "x64_mutual_knn",
     "x79_ann_recall_audit", "x127_hard_negatives", "x157_ann_choice",
     "x166_ann_store_search", "x167_ann_search_stream",
+    "x67_length_drift", "x135_score_auc", "x141_auc_gate_readback",
+    "x143_good_turing", "x146_source_gini", "x147_oov_rate",
+    "x158_gt_gate_readback", "x159_gini_gate_readback",
+    "x160_oov_gate_readback",
     "q43_exact_corr",
 }
 

@@ -1,6 +1,8 @@
 """Corpus-profile operators (operators/profile.py) + PageRank
 (operators/graph.py): golden-value unit tests on constructed inputs (the
-sf-corpus oracle compares are x67–x71 in the registry self-check)."""
+sf-corpus oracle compares are x67–x71 in the registry self-check), the
+exact gate/batch parity laws of the frozen-baseline gates, and the
+declarable row gates (tasks/builtin.py)."""
 
 from __future__ import annotations
 
@@ -328,3 +330,418 @@ def test_zipf_slope_single_token_group_is_null(spark):
     assert out["healthy"].n_ranks == 3
     assert out["healthy"].slope is not None
     assert not math.isnan(out["healthy"].slope)
+
+
+# --- count-table statistics: gate/batch parity, goldens, row gates ---------
+
+
+def test_auc_gate_fit_apply_exact_parity(spark):
+    """apply(pos rows, fit(neg rows)) reproduces the batch score_auc
+    EXACTLY (same BIGINT numerator through the U-statistic identity,
+    same single division) — including tie-heavy scores. The law covers
+    the rows with a non-NULL score: the gate excludes NULL scores on
+    both sides, while score_auc ranks them."""
+    from go_fish_spark.operators.profile import (
+        apply_auc_gate,
+        score_auc,
+        score_distribution_baseline,
+    )
+
+    rows = [
+        (i, "s%d" % (i % 3), float((i * 7) % 5), i % 4 == 0)
+        for i in range(120)
+    ] + [(120, "s0", None, True), (121, "s1", None, False)]
+    df = spark.createDataFrame(rows, "id long, g string, s double, y boolean")
+    scored = df.filter(F.col("s").isNotNull())
+    batch = {
+        r.g: (r.n_pos, r.auc)
+        for r in score_auc(scored, "g", "s", "y").collect()
+    }
+    base = score_distribution_baseline(df.filter(~F.col("y")), "g", "s")
+    gate = {
+        r.g: (r.n, r.auc)
+        for r in apply_auc_gate(
+            df.filter(F.col("y")), base, "g", "s"
+        ).collect()
+    }
+    assert set(gate) == set(batch)
+    for g in batch:
+        assert gate[g] == batch[g], (g, gate[g], batch[g])
+    # over every row, score_auc counts the NULL-score rows
+    full = {r.g: (r.n, r.n_pos) for r in score_auc(df, "g", "s", "y").collect()}
+    assert full["s0"][1] == batch["s0"][0] + 1
+    assert full["s1"][0] == 41 and full["s1"][1] == batch["s1"][0]
+
+
+def test_ks_gate_fit_apply_exact_parity(spark):
+    """apply(group rows, fit(complement rows)) reproduces the batch
+    ks_drift row for every group EXACTLY (merged-grid sup, integer
+    cums, same IEEE per-point gap)."""
+    from go_fish_spark.operators.profile import (
+        apply_ks_gate,
+        ks_drift,
+        score_distribution_baseline,
+    )
+
+    rows = [
+        (i, "s%d" % (i % 3), float((i * 13) % 23) / 7.0)
+        for i in range(150)
+    ]
+    df = spark.createDataFrame(rows, "id long, g string, s double")
+    batch = {r.g: (r.n, r.ks) for r in ks_drift(df, "g", "s").collect()}
+    for g in ("s0", "s1", "s2"):
+        base = score_distribution_baseline(
+            df.filter(F.col("g") != g).select(
+                F.lit(g).alias("g"), "s"
+            ),
+            "g", "s", decimals=3,
+        )
+        got = apply_ks_gate(
+            df.filter(F.col("g") == g), base, "g", "s", decimals=3
+        ).collect()
+        assert len(got) == 1
+        assert (got[0].n, got[0].ks) == batch[g], (g, got[0], batch[g])
+
+
+def test_gates_stream_equals_batch(spark, tmp_path):
+    """The streaming arm: both gates run per micro-batch under
+    foreachBatch against the frozen baseline and reproduce the batch
+    computation over the same rows; a group unknown to the baseline
+    reports NULL."""
+    import os
+
+    import pyspark.sql.types as T
+
+    from go_fish_spark.operators.profile import (
+        apply_auc_gate,
+        apply_ks_gate,
+        score_distribution_baseline,
+    )
+
+    hist = spark.createDataFrame(
+        [(i, "a" if i % 2 else "b", float(i % 11)) for i in range(80)],
+        "id long, g string, s double",
+    )
+    base_auc = score_distribution_baseline(hist, "g", "s").localCheckpoint()
+    base_ks = score_distribution_baseline(
+        hist, "g", "s", decimals=3
+    ).localCheckpoint()
+
+    src = str(tmp_path / "in")
+    os.makedirs(src)
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("g", T.StringType()),
+        T.StructField("s", T.DoubleType()),
+    ])
+    todays = [(1000 + i, ["a", "b", "zz"][i % 3], float(i % 7) + 2.0)
+              for i in range(30)]
+    spark.createDataFrame(todays, schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(src)
+
+    got: dict = {}
+
+    def gate_batch(bdf, batch_id):
+        got["auc"] = sorted(
+            map(tuple, apply_auc_gate(bdf, base_auc, "g", "s").collect())
+        )
+        got["ks"] = sorted(
+            map(tuple, apply_ks_gate(bdf, base_ks, "g", "s").collect())
+        )
+
+    q = (
+        spark.readStream.schema(schema).parquet(src)
+        .writeStream.foreachBatch(gate_batch)
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    bdf = spark.read.parquet(src)
+    assert got["auc"] == sorted(
+        map(tuple, apply_auc_gate(bdf, base_auc, "g", "s").collect())
+    )
+    assert got["ks"] == sorted(
+        map(tuple, apply_ks_gate(bdf, base_ks, "g", "s").collect())
+    )
+    # unknown group "zz" is present with NULL verdicts
+    auc = {t[0]: t for t in got["auc"]}
+    ks = {t[0]: t for t in got["ks"]}
+    assert auc["zz"][2] is None and ks["zz"][2] is None
+    assert auc["a"][2] is not None and ks["a"][2] is not None
+
+
+def test_source_gini_goldens(spark):
+    """Equal masses -> 0; near-total concentration -> ~1 - 1/n; the
+    exact sorted-cumulative formula on a hand-checkable case."""
+    from go_fish_spark.operators.profile import source_gini
+
+    eq = spark.createDataFrame(
+        [("a", "w x y"), ("b", "p q r"), ("c", "m n o")],
+        "source string, text string",
+    )
+    r = source_gini(eq, "source", "text").collect()[0]
+    assert (r.n_sources, r.total_tokens, r.gini) == (3, 9, 0.0)
+
+    # masses 1, 1, 8: sorted x=(1,1,8), Σix = 1+2+24 = 27
+    # G = (2*27 - 4*10) / (3*10) = 14/30
+    skew = spark.createDataFrame(
+        [("a", "w"), ("b", "p"), ("c", " ".join("t%d" % i for i in range(8)))],
+        "source string, text string",
+    )
+    r = source_gini(skew, "source", "text").collect()[0]
+    assert r.gini == round(14 / 30, 9)
+
+
+def test_good_turing_goldens(spark):
+    """singletons/N by hand: tokens (a a b c) -> f1=2 (b,c), N=4."""
+    from go_fish_spark.operators.profile import good_turing_unseen
+
+    df = spark.createDataFrame(
+        [("s", "a a b c"), ("t", "x x x x")], "source string, text string"
+    )
+    got = {
+        r.source: (r.n_tokens, r.vocab, r.singletons, r.unseen_mass)
+        for r in good_turing_unseen(df, "source", "text").collect()
+    }
+    assert got["s"] == (4, 3, 2, 0.5)
+    assert got["t"] == (4, 1, 0, 0.0)
+
+
+def test_oov_rate_goldens(spark):
+    """top_n=2 vocab is {a, b} (count desc, token asc): source u's c/d
+    occurrences are OOV."""
+    from go_fish_spark.operators.profile import oov_rate
+
+    df = spark.createDataFrame(
+        [("s", "a a b"), ("t", "a b b"), ("u", "a c d c")],
+        "source string, text string",
+    )
+    got = {
+        r.source: (r.n_tokens, r.oov_occurrences, r.oov_rate)
+        for r in oov_rate(df, "source", "text", top_n=2).collect()
+    }
+    assert got["s"] == (3, 0, 0.0)
+    assert got["t"] == (3, 0, 0.0)
+    assert got["u"] == (4, 3, 0.75)
+
+
+def test_ecdf_gate_task(spark):
+    """The declarable frozen-ECDF tail gate: percentile lookup matches
+    the fitted baseline, tails flag/drop, NULLs pass unflagged, and the
+    task is declarable through the registry (check-task contract)."""
+    from go_fish_spark.operators.profile import score_distribution_baseline
+    from go_fish_spark.tasks import check_task, get_task
+    from go_fish_spark.tasks.builtin import ecdf_gate_config
+
+    hist = spark.createDataFrame(
+        [("g", float(v)) for v in range(1, 101)], "g string, s double"
+    )
+    base = score_distribution_baseline(hist, "g", "s")
+    cfg = ecdf_gate_config(base)
+    assert cfg[0] == [1.0, 0.01] and cfg[-1] == [100.0, 1.0]
+
+    task = get_task(
+        "ecdf_gate", baseline=cfg, value_col="v", lo=0.05, hi=0.95
+    )
+    check_task(task)
+    df = spark.createDataFrame(
+        [(1, 50.0), (2, 2.0), (3, 1000.0), (4, None), (5, 0.5)],
+        "id long, v double",
+    )
+    got = {r.id: (r.pctl, r.is_tail) for r in task.apply(df).collect()}
+    assert got[1] == (0.5, False)
+    assert got[2] == (0.02, True)        # low tail
+    assert got[3] == (1.0, True)         # above everything -> high tail
+    assert got[4] == (None, False)       # NULL passes unflagged
+    assert got[5] == (0.0, True)         # below everything -> pctl 0
+    dropped = get_task(
+        "ecdf_gate", baseline=cfg, value_col="v", lo=0.05, hi=0.95,
+        mode="drop",
+    ).apply(df)
+    assert sorted(r.id for r in dropped.collect()) == [1, 4]
+    assert dropped.columns == ["id", "v"]  # row-preserving family, drop mode
+
+    # subsampling keeps the step's top (cdf reaches 1.0)
+    small = ecdf_gate_config(base, max_points=10)
+    assert len(small) <= 10 and small[-1][1] == 1.0
+
+
+_GT_ROWS = [
+    ("web", "alpha beta beta gamma gamma gamma unique1"),
+    ("web", "alpha delta delta unique2"),
+    ("book", "epsilon epsilon zeta"),
+    ("book", "eta theta theta unique3 unique4"),
+    ("forum", "iota iota iota"),
+    ("wiki", "kappa kappa lambda"),
+]
+
+
+_GT_SCHEMA = "source string, text string"
+
+
+def _split(spark, pred):
+    df = spark.createDataFrame(
+        [(i, s, t) for i, (s, t) in enumerate(_GT_ROWS)],
+        "doc_id long, " + _GT_SCHEMA,
+    )
+    return df.filter(pred), df
+
+
+def test_good_turing_gate_exact_parity(spark):
+    """apply(batch, fit(history)) == good_turing_unseen(history+batch)
+    bit-for-bit — counts are additive, the merged table is identical,
+    for sources in the batch only, in history only, and in both."""
+    from go_fish_spark.operators.profile import (
+        apply_good_turing_gate,
+        fit_token_counts,
+        good_turing_unseen,
+    )
+
+    batch, full = _split(spark, F.col("doc_id") % 2 == 0)
+    hist = full.filter(F.col("doc_id") % 2 != 0)
+    base = fit_token_counts(hist, "source", "text")
+    got = sorted(
+        map(
+            tuple,
+            apply_good_turing_gate(batch, base, "source", "text").collect(),
+        )
+    )
+    want = sorted(
+        map(tuple, good_turing_unseen(full, "source", "text").collect())
+    )
+    assert got == want
+    # forum is batch-only, wiki history-only: both merge branches run
+    assert {"forum", "wiki"} <= {t[0] for t in got}
+
+
+def test_gini_gate_exact_parity(spark):
+    from go_fish_spark.operators.profile import (
+        apply_gini_gate,
+        fit_source_mass,
+        source_gini,
+    )
+
+    batch, full = _split(spark, F.col("doc_id") % 2 == 0)
+    hist = full.filter(F.col("doc_id") % 2 != 0)
+    base = fit_source_mass(hist, "source", "text")
+    got = apply_gini_gate(batch, base, "source", "text").collect()
+    want = source_gini(full, "source", "text").collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    assert got[0].n_sources == 4  # forum batch-only, wiki history-only
+
+
+def test_oov_gate_identity_on_fitting_corpus(spark):
+    """apply(df, fit_vocab_topn(df)) == oov_rate(df) — the same
+    deterministic vocab rank, the same integer sums."""
+    from go_fish_spark.operators.profile import (
+        apply_oov_gate,
+        fit_vocab_topn,
+        oov_rate,
+    )
+
+    _, full = _split(spark, F.lit(True))
+    vocab = fit_vocab_topn(full, "text", top_n=5)
+    got = sorted(
+        map(
+            tuple,
+            apply_oov_gate(full, vocab, "source", "text").collect(),
+        )
+    )
+    want = sorted(
+        map(tuple, oov_rate(full, "source", "text", top_n=5).collect())
+    )
+    assert got == want
+
+
+def test_good_turing_gate_stream_equals_batch(spark, tmp_path):
+    """The gate run inside a real foreachBatch micro-batch equals the
+    batch-side apply on the same rows — stream ≡ batch e2e."""
+    import os
+
+    from go_fish_spark.operators.profile import (
+        apply_good_turing_gate,
+        fit_token_counts,
+    )
+
+    batch, full = _split(spark, F.col("doc_id") % 2 == 0)
+    hist = full.filter(F.col("doc_id") % 2 != 0)
+    base = fit_token_counts(hist, "source", "text").localCheckpoint()
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    cp = str(tmp_path / "cp")
+    batch.write.parquet(src)
+
+    def gate(bdf, _bid):
+        apply_good_turing_gate(bdf, base, "source", "text").write.mode(
+            "append"
+        ).parquet(out)
+
+    (
+        spark.readStream.schema("doc_id long, " + _GT_SCHEMA)
+        .parquet(src)
+        .writeStream.foreachBatch(gate)
+        .option("checkpointLocation", cp)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination(120)
+    )
+    got = sorted(map(tuple, spark.read.parquet(out).collect()))
+    want = sorted(
+        map(
+            tuple,
+            apply_good_turing_gate(batch, base, "source", "text").collect(),
+        )
+    )
+    assert got == want
+    assert os.path.isdir(out)
+
+
+def test_oov_and_cap_and_coverage_gate_tasks(spark):
+    """The three declarable gates: flag semantics, NULL-safe unseen
+    handling, drop mode."""
+    from go_fish_spark.tasks import get_task
+
+    df = spark.createDataFrame(
+        [
+            (1, "web", "alpha beta gamma"),
+            (2, "web", "qqq zzz www"),
+            (3, "niche", "alpha alpha"),
+            (4, "unknown_src", None),
+        ],
+        "doc_id long, source string, text string",
+    )
+    oov = get_task("oov_gate", vocab=["alpha", "beta"], max_oov=0.5)
+    got = {r.doc_id: (r.oov_share, r.is_oov) for r in oov.apply(df).collect()}
+    assert got[1] == (round(1 / 3, 9), False)
+    assert got[2] == (1.0, True)
+    assert got[4] == (None, False)  # NULL text never silently dropped
+    kept = {
+        r.doc_id
+        for r in get_task(
+            "oov_gate", vocab=["alpha", "beta"], max_oov=0.5, mode="drop"
+        ).apply(df).collect()
+    }
+    assert kept == {1, 3, 4}
+
+    cap = get_task(
+        "source_cap_gate", masses={"web": 900, "niche": 100}, max_share=0.6
+    )
+    got = {
+        r.doc_id: (r.mass_share, r.is_capped) for r in cap.apply(df).collect()
+    }
+    assert got[1] == (0.9, True) and got[3] == (0.1, False)
+    assert got[4] == (None, False)  # unseen source not capped
+
+    cov = get_task(
+        "coverage_gate",
+        baselines={"web": 0.02, "niche": 0.4},
+        max_unseen=0.1,
+    )
+    got = {
+        r.doc_id: (r.unseen_mass, r.is_undercrawled)
+        for r in cov.apply(df).collect()
+    }
+    assert got[1] == (0.02, False) and got[3] == (0.4, True)
+    assert got[4] == (None, False)

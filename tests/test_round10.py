@@ -539,177 +539,7 @@ def test_maintenance_plan_decisions(spark):
     assert p["incremental_frac"] > 0.5
 
 
-# --- x135/x137 streaming fit/apply arms (r9 verdict Next #6) ------------------
-
-
-def test_auc_gate_fit_apply_exact_parity(spark):
-    """apply(pos rows, fit(neg rows)) reproduces the batch score_auc
-    EXACTLY (same BIGINT numerator through the U-statistic identity,
-    same single division) — including tie-heavy scores."""
-    from go_fish_spark.operators.profile import (
-        apply_auc_gate,
-        score_auc,
-        score_distribution_baseline,
-    )
-
-    rows = [
-        (i, "s%d" % (i % 3), float((i * 7) % 5), i % 4 == 0)
-        for i in range(120)
-    ]
-    df = spark.createDataFrame(rows, "id long, g string, s double, y boolean")
-    batch = {
-        r.g: (r.n_pos, r.auc)
-        for r in score_auc(df, "g", "s", "y").collect()
-    }
-    base = score_distribution_baseline(df.filter(~F.col("y")), "g", "s")
-    gate = {
-        r.g: (r.n, r.auc)
-        for r in apply_auc_gate(
-            df.filter(F.col("y")), base, "g", "s"
-        ).collect()
-    }
-    assert set(gate) == set(batch)
-    for g in batch:
-        assert gate[g] == batch[g], (g, gate[g], batch[g])
-
-
-def test_ks_gate_fit_apply_exact_parity(spark):
-    """apply(group rows, fit(complement rows)) reproduces the batch
-    ks_drift row for every group EXACTLY (merged-grid sup, integer
-    cums, same IEEE per-point gap)."""
-    from go_fish_spark.operators.profile import (
-        apply_ks_gate,
-        ks_drift,
-        score_distribution_baseline,
-    )
-
-    rows = [
-        (i, "s%d" % (i % 3), float((i * 13) % 23) / 7.0)
-        for i in range(150)
-    ]
-    df = spark.createDataFrame(rows, "id long, g string, s double")
-    batch = {r.g: (r.n, r.ks) for r in ks_drift(df, "g", "s").collect()}
-    for g in ("s0", "s1", "s2"):
-        base = score_distribution_baseline(
-            df.filter(F.col("g") != g).select(
-                F.lit(g).alias("g"), "s"
-            ),
-            "g", "s", decimals=3,
-        )
-        got = apply_ks_gate(
-            df.filter(F.col("g") == g), base, "g", "s", decimals=3
-        ).collect()
-        assert len(got) == 1
-        assert (got[0].n, got[0].ks) == batch[g], (g, got[0], batch[g])
-
-
-def test_gates_stream_equals_batch(spark, tmp_path):
-    """The streaming arm: both gates run per micro-batch under
-    foreachBatch against the frozen baseline and reproduce the batch
-    computation over the same rows; a group unknown to the baseline
-    reports NULL."""
-    import os
-
-    import pyspark.sql.types as T
-
-    from go_fish_spark.operators.profile import (
-        apply_auc_gate,
-        apply_ks_gate,
-        score_distribution_baseline,
-    )
-
-    hist = spark.createDataFrame(
-        [(i, "a" if i % 2 else "b", float(i % 11)) for i in range(80)],
-        "id long, g string, s double",
-    )
-    base_auc = score_distribution_baseline(hist, "g", "s").localCheckpoint()
-    base_ks = score_distribution_baseline(
-        hist, "g", "s", decimals=3
-    ).localCheckpoint()
-
-    src = str(tmp_path / "in")
-    os.makedirs(src)
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("g", T.StringType()),
-        T.StructField("s", T.DoubleType()),
-    ])
-    todays = [(1000 + i, ["a", "b", "zz"][i % 3], float(i % 7) + 2.0)
-              for i in range(30)]
-    spark.createDataFrame(todays, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-
-    got: dict = {}
-
-    def gate_batch(bdf, batch_id):
-        got["auc"] = sorted(
-            map(tuple, apply_auc_gate(bdf, base_auc, "g", "s").collect())
-        )
-        got["ks"] = sorted(
-            map(tuple, apply_ks_gate(bdf, base_ks, "g", "s").collect())
-        )
-
-    q = (
-        spark.readStream.schema(schema).parquet(src)
-        .writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", str(tmp_path / "cp"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    bdf = spark.read.parquet(src)
-    assert got["auc"] == sorted(
-        map(tuple, apply_auc_gate(bdf, base_auc, "g", "s").collect())
-    )
-    assert got["ks"] == sorted(
-        map(tuple, apply_ks_gate(bdf, base_ks, "g", "s").collect())
-    )
-    # unknown group "zz" is present with NULL verdicts
-    auc = {t[0]: t for t in got["auc"]}
-    ks = {t[0]: t for t in got["ks"]}
-    assert auc["zz"][2] is None and ks["zz"][2] is None
-    assert auc["a"][2] is not None and ks["a"][2] is not None
-
-
 # --- round-10 coverage ops: golden-value semantics ----------------------------
-
-
-def test_source_gini_goldens(spark):
-    """Equal masses -> 0; near-total concentration -> ~1 - 1/n; the
-    exact sorted-cumulative formula on a hand-checkable case."""
-    from go_fish_spark.operators.profile import source_gini
-
-    eq = spark.createDataFrame(
-        [("a", "w x y"), ("b", "p q r"), ("c", "m n o")],
-        "source string, text string",
-    )
-    r = source_gini(eq, "source", "text").collect()[0]
-    assert (r.n_sources, r.total_tokens, r.gini) == (3, 9, 0.0)
-
-    # masses 1, 1, 8: sorted x=(1,1,8), Σix = 1+2+24 = 27
-    # G = (2*27 - 4*10) / (3*10) = 14/30
-    skew = spark.createDataFrame(
-        [("a", "w"), ("b", "p"), ("c", " ".join("t%d" % i for i in range(8)))],
-        "source string, text string",
-    )
-    r = source_gini(skew, "source", "text").collect()[0]
-    assert r.gini == round(14 / 30, 9)
-
-
-def test_good_turing_goldens(spark):
-    """singletons/N by hand: tokens (a a b c) -> f1=2 (b,c), N=4."""
-    from go_fish_spark.operators.profile import good_turing_unseen
-
-    df = spark.createDataFrame(
-        [("s", "a a b c"), ("t", "x x x x")], "source string, text string"
-    )
-    got = {
-        r.source: (r.n_tokens, r.vocab, r.singletons, r.unseen_mass)
-        for r in good_turing_unseen(df, "source", "text").collect()
-    }
-    assert got["s"] == (4, 3, 2, 0.5)
-    assert got["t"] == (4, 1, 0, 0.0)
 
 
 def test_roc_points_goldens(spark):
@@ -725,24 +555,6 @@ def test_roc_points_goldens(spark):
     assert pts[5.0] == (5, 0, 1.0, 0.0)
     assert pts[0.0] == (5, 5, 1.0, 1.0)
     assert pts[9.0] == (1, 0, 0.2, 0.0)
-
-
-def test_oov_rate_goldens(spark):
-    """top_n=2 vocab is {a, b} (count desc, token asc): source u's c/d
-    occurrences are OOV."""
-    from go_fish_spark.operators.profile import oov_rate
-
-    df = spark.createDataFrame(
-        [("s", "a a b"), ("t", "a b b"), ("u", "a c d c")],
-        "source string, text string",
-    )
-    got = {
-        r.source: (r.n_tokens, r.oov_occurrences, r.oov_rate)
-        for r in oov_rate(df, "source", "text", top_n=2).collect()
-    }
-    assert got["s"] == (3, 0, 0.0)
-    assert got["t"] == (3, 0, 0.0)
-    assert got["u"] == (4, 3, 0.75)
 
 
 def test_winsorized_mean_clamps_outlier(spark):
@@ -841,47 +653,6 @@ def test_cli_label_store(tmp_path, spark):
     assert json.loads(p.stdout.strip().splitlines()[-1]) == {
         "compacted_rows": 20,
     }
-
-
-def test_ecdf_gate_task(spark):
-    """The declarable frozen-ECDF tail gate: percentile lookup matches
-    the fitted baseline, tails flag/drop, NULLs pass unflagged, and the
-    task is declarable through the registry (check-task contract)."""
-    from go_fish_spark.operators.profile import score_distribution_baseline
-    from go_fish_spark.tasks import check_task, get_task
-    from go_fish_spark.tasks.builtin import ecdf_gate_config
-
-    hist = spark.createDataFrame(
-        [("g", float(v)) for v in range(1, 101)], "g string, s double"
-    )
-    base = score_distribution_baseline(hist, "g", "s")
-    cfg = ecdf_gate_config(base)
-    assert cfg[0] == [1.0, 0.01] and cfg[-1] == [100.0, 1.0]
-
-    task = get_task(
-        "ecdf_gate", baseline=cfg, value_col="v", lo=0.05, hi=0.95
-    )
-    check_task(task)
-    df = spark.createDataFrame(
-        [(1, 50.0), (2, 2.0), (3, 1000.0), (4, None), (5, 0.5)],
-        "id long, v double",
-    )
-    got = {r.id: (r.pctl, r.is_tail) for r in task.apply(df).collect()}
-    assert got[1] == (0.5, False)
-    assert got[2] == (0.02, True)        # low tail
-    assert got[3] == (1.0, True)         # above everything -> high tail
-    assert got[4] == (None, False)       # NULL passes unflagged
-    assert got[5] == (0.0, True)         # below everything -> pctl 0
-    dropped = get_task(
-        "ecdf_gate", baseline=cfg, value_col="v", lo=0.05, hi=0.95,
-        mode="drop",
-    ).apply(df)
-    assert sorted(r.id for r in dropped.collect()) == [1, 4]
-    assert dropped.columns == ["id", "v"]  # row-preserving family, drop mode
-
-    # subsampling keeps the step's top (cdf reaches 1.0)
-    small = ecdf_gate_config(base, max_points=10)
-    assert len(small) <= 10 and small[-1][1] == 1.0
 
 
 def test_durable_labels_demo_runs(spark):

@@ -501,181 +501,6 @@ def test_run_ann_rejects_unrunnable_plan(spark):
         run_ann(df, q, plan)
 
 
-# --- r10 Next #5: frozen arms for Good-Turing / Gini / OOV ---------------------
-
-
-_GT_ROWS = [
-    ("web", "alpha beta beta gamma gamma gamma unique1"),
-    ("web", "alpha delta delta unique2"),
-    ("book", "epsilon epsilon zeta"),
-    ("book", "eta theta theta unique3 unique4"),
-    ("forum", "iota iota iota"),
-]
-_GT_SCHEMA = "source string, text string"
-
-
-def _split(spark, pred):
-    df = spark.createDataFrame(
-        [(i, s, t) for i, (s, t) in enumerate(_GT_ROWS)],
-        "doc_id long, " + _GT_SCHEMA,
-    )
-    return df.filter(pred), df
-
-
-def test_good_turing_gate_exact_parity(spark):
-    """apply(batch, fit(history)) == good_turing_unseen(history+batch)
-    bit-for-bit — counts are additive, the merged table is identical."""
-    from go_fish_spark.operators.profile import (
-        apply_good_turing_gate,
-        fit_token_counts,
-        good_turing_unseen,
-    )
-
-    batch, full = _split(spark, F.col("doc_id") % 2 == 0)
-    hist = full.filter(F.col("doc_id") % 2 != 0)
-    base = fit_token_counts(hist, "source", "text")
-    got = sorted(
-        map(
-            tuple,
-            apply_good_turing_gate(batch, base, "source", "text").collect(),
-        )
-    )
-    want = sorted(
-        map(tuple, good_turing_unseen(full, "source", "text").collect())
-    )
-    assert got == want
-
-
-def test_gini_gate_exact_parity(spark):
-    from go_fish_spark.operators.profile import (
-        apply_gini_gate,
-        fit_source_mass,
-        source_gini,
-    )
-
-    batch, full = _split(spark, F.col("doc_id") % 2 == 0)
-    hist = full.filter(F.col("doc_id") % 2 != 0)
-    base = fit_source_mass(hist, "source", "text")
-    got = apply_gini_gate(batch, base, "source", "text").collect()
-    want = source_gini(full, "source", "text").collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-
-
-def test_oov_gate_identity_on_fitting_corpus(spark):
-    """apply(df, fit_vocab_topn(df)) == oov_rate(df) — the same
-    deterministic vocab rank, the same integer sums."""
-    from go_fish_spark.operators.profile import (
-        apply_oov_gate,
-        fit_vocab_topn,
-        oov_rate,
-    )
-
-    _, full = _split(spark, F.lit(True))
-    vocab = fit_vocab_topn(full, "text", top_n=5)
-    got = sorted(
-        map(
-            tuple,
-            apply_oov_gate(full, vocab, "source", "text").collect(),
-        )
-    )
-    want = sorted(
-        map(tuple, oov_rate(full, "source", "text", top_n=5).collect())
-    )
-    assert got == want
-
-
-def test_good_turing_gate_stream_equals_batch(spark, tmp_path):
-    """The gate run inside a real foreachBatch micro-batch equals the
-    batch-side apply on the same rows — stream ≡ batch e2e."""
-    import os
-
-    from go_fish_spark.operators.profile import (
-        apply_good_turing_gate,
-        fit_token_counts,
-    )
-
-    batch, full = _split(spark, F.col("doc_id") % 2 == 0)
-    hist = full.filter(F.col("doc_id") % 2 != 0)
-    base = fit_token_counts(hist, "source", "text").localCheckpoint()
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    cp = str(tmp_path / "cp")
-    batch.write.parquet(src)
-
-    def gate(bdf, _bid):
-        apply_good_turing_gate(bdf, base, "source", "text").write.mode(
-            "append"
-        ).parquet(out)
-
-    (
-        spark.readStream.schema("doc_id long, " + _GT_SCHEMA)
-        .parquet(src)
-        .writeStream.foreachBatch(gate)
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination(120)
-    )
-    got = sorted(map(tuple, spark.read.parquet(out).collect()))
-    want = sorted(
-        map(
-            tuple,
-            apply_good_turing_gate(batch, base, "source", "text").collect(),
-        )
-    )
-    assert got == want
-    assert os.path.isdir(out)
-
-
-def test_oov_and_cap_and_coverage_gate_tasks(spark):
-    """The three declarable gates: flag semantics, NULL-safe unseen
-    handling, drop mode."""
-    from go_fish_spark.tasks import get_task
-
-    df = spark.createDataFrame(
-        [
-            (1, "web", "alpha beta gamma"),
-            (2, "web", "qqq zzz www"),
-            (3, "niche", "alpha alpha"),
-            (4, "unknown_src", None),
-        ],
-        "doc_id long, source string, text string",
-    )
-    oov = get_task("oov_gate", vocab=["alpha", "beta"], max_oov=0.5)
-    got = {r.doc_id: (r.oov_share, r.is_oov) for r in oov.apply(df).collect()}
-    assert got[1] == (round(1 / 3, 9), False)
-    assert got[2] == (1.0, True)
-    assert got[4] == (None, False)  # NULL text never silently dropped
-    kept = {
-        r.doc_id
-        for r in get_task(
-            "oov_gate", vocab=["alpha", "beta"], max_oov=0.5, mode="drop"
-        ).apply(df).collect()
-    }
-    assert kept == {1, 3, 4}
-
-    cap = get_task(
-        "source_cap_gate", masses={"web": 900, "niche": 100}, max_share=0.6
-    )
-    got = {
-        r.doc_id: (r.mass_share, r.is_capped) for r in cap.apply(df).collect()
-    }
-    assert got[1] == (0.9, True) and got[3] == (0.1, False)
-    assert got[4] == (None, False)  # unseen source not capped
-
-    cov = get_task(
-        "coverage_gate",
-        baselines={"web": 0.02, "niche": 0.4},
-        max_unseen=0.1,
-    )
-    got = {
-        r.doc_id: (r.unseen_mass, r.is_undercrawled)
-        for r in cov.apply(df).collect()
-    }
-    assert got[1] == (0.02, False) and got[3] == (0.4, True)
-    assert got[4] == (None, False)
-
-
 # --- r10 Next #6: WAV/MP4 header metadata ---------------------------------------
 
 
