@@ -2254,20 +2254,6 @@ def pair_budget_estimate(
     )
 
 
-def _cooccurrence_cost(keyed: DataFrame, key_col: str) -> int:
-    """Σ m·(m−1)/2 over the key histogram — the exact candidate-pair
-    row count a self-join on ``key_col`` will produce (the x103 law).
-    One key exchange with map-side combine + a single-row sum; never
-    runs the join it prices."""
-    row = (
-        keyed.groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("_m"))
-        .agg(F.sum(F.expr("_m * (_m - 1) div 2")).alias("_c"))
-        .collect()[0]
-    )
-    return int(row["_c"] or 0)
-
-
 def blocking_cost_stats(
     df: DataFrame,
     text_col: str,

@@ -2067,11 +2067,12 @@ def _auc_eval(counts: DataFrame) -> DataFrame:
     AUC = (R2 − P(P+1)) / (2·P·N) is the one division. R2 − P(P+1)
     equals the U-statistic numerator Σ_v n_pos(v)·(2·neg_before(v) +
     neg(v)) exactly, so a gate that counts negatives from a frozen
-    baseline evaluates the same formula. NULL auc unless both classes
-    are present."""
+    baseline evaluates the same formula. A NULL score ranks last, as
+    in the DuckDB mirror's ``ORDER BY _s``. NULL auc unless both
+    classes are present."""
     w = (
         Window.partitionBy("_g")
-        .orderBy("_v")
+        .orderBy(F.col("_v").asc_nulls_last())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     cum = F.coalesce(F.sum("_c").over(w), F.lit(0))

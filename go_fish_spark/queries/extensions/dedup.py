@@ -1655,10 +1655,9 @@ def x150_sigstore_readback(spark, sf_dir):
     DuckDB's mirror of the whole hash pipeline (fingerprinted as
     md5(joined sig) per doc). Restart semantics are covered by the
     round-9 e2e; THIS entry pins the read-back values themselves."""
-    import os
     import shutil
 
-    from ...streaming.sigstore import read_signature_store
+    from ...streaming.sigstore import append_sig_patch, read_signature_store
 
     from ._shared import shared_doc_sigs
 
@@ -1676,23 +1675,19 @@ def x150_sigstore_readback(spark, sf_dir):
     # else).
     shared = shared_doc_sigs(spark, sf_dir)
 
-    def write_batch(bdf, batch_id):
-        bdf.select(
-            "doc_id", sig.alias("_sig")
-        ).withColumn("_batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(base)
-
     for b in range(3):
-        shared.filter(F.col("doc_id") % 3 == b).select(
-            "doc_id", "_sig"
-        ).withColumn("_batch_id", F.lit(b)).write.mode("append").parquet(
-            base
+        append_sig_patch(
+            shared.filter(F.col("doc_id") % 3 == b).select(
+                "doc_id", "_sig"
+            ),
+            base, b, n_shards=16,
         )
     edited = docs.filter(F.col("doc_id") % 10 == 0).select(
         "doc_id", F.concat(F.lit("edited "), F.col("text")).alias("text")
     )
-    write_batch(edited, 3)
+    append_sig_patch(
+        edited.select("doc_id", sig.alias("_sig")), base, 3, n_shards=16
+    )
 
     store = read_signature_store(spark, base, id_col="doc_id")
     return store.select(
@@ -2003,6 +1998,7 @@ def x164_committed_store_readback(spark, sf_dir):
     import os
 
     from ...streaming.labelstore import read_committed_store
+    from ...streaming.sigstore import append_sig_patch
     from ...streaming.storekernel import publish_commit
     from ._shared import shared_doc_sigs
 
@@ -2013,10 +2009,11 @@ def x164_committed_store_readback(spark, sf_dir):
     base = _store_dir(spark, "x164")
 
     def append_sigs_and_publish(b):
-        shared.filter(F.col("doc_id") % 3 == b).select(
-            F.col("doc_id").alias("_id"), "_sig"
-        ).withColumn("_batch_id", F.lit(b)).write.mode("append").parquet(
-            os.path.join(base, "_sigs")
+        append_sig_patch(
+            shared.filter(F.col("doc_id") % 3 == b).select(
+                F.col("doc_id").alias("_id"), "_sig"
+            ),
+            os.path.join(base, "_sigs"), b, id_col="_id", n_shards=16,
         )
         publish_commit(base, b)
 

@@ -10,7 +10,11 @@ How it composes the existing disciplines:
   (`sources/sharding.with_shard`): every label row carries the
   deterministic md5 hash-bucket of its id and the store is
   ``partitionBy("shard")`` parquet — an id-bounded read prunes to one
-  shard directory, and per-shard files stay compactable units.
+  shard directory, and per-shard files stay compactable units. It is
+  the only layout the label and sig surfaces are read in: a store with
+  flat files at its root or a manifest without ``covered_default`` is
+  refused (storekernel.read_store_manifest) — rebuild from a fresh
+  store.
 * **Upserts** are the x77 sketch-store discipline applied to labels:
   each micro-batch APPENDS only its patch — `incremental_audit_merge(
   ..., emit="changed")`'s upsert set, bounded by |batch| + |touched
@@ -245,8 +249,6 @@ def read_committed_store(spark, store_dir: str) -> dict:
     pair — never a batch's signatures without its labels. Returns
     ``{"committed_batch": B|None, "labels": DF|None, "sigs": DF|None}``;
     both None before the first commit."""
-    from .sigstore import _live_sig_rows
-
     committed = _sk.read_commit(store_dir)
     if committed is None:
         return {"committed_batch": None, "labels": None, "sigs": None}
@@ -256,12 +258,10 @@ def read_committed_store(spark, store_dir: str) -> dict:
     # sig surface through the kernel stitch (r12 verdict Next #1): the
     # scan is the compaction generation + only newer patches — never
     # the whole append history again (the read-amplification disease
-    # labels had before r11, measured 10.9× there). Legacy files
-    # WITHOUT _batch_id (pre-commit-discipline, ADVICE r11 #2) fill in
-    # as -1: the ``<= committed`` cut keeps them (they predate every
-    # commit point) and the latest-wins window ranks them below any
-    # stamped re-append — the correct precedence, now a kernel rule.
-    sigs = _live_sig_rows(spark, _os.path.join(store_dir, "_sigs"), "_id")
+    # labels had before r11, measured 10.9× there). Every sig row is
+    # batch-stamped by its append, so the ``<= committed`` cut is exact;
+    # a sig store in any other layout is refused by the kernel.
+    sigs = _sk.live_keyed_rows(spark, _os.path.join(store_dir, "_sigs"))
     if sigs is not None:
         sigs = _sk.latest_wins(
             sigs.filter(F.col("_batch_id") <= committed),
@@ -356,11 +356,7 @@ def label_store_maintenance_stream(
     can never interleave — is storekernel.leased_store_stream; this
     function supplies the batch body and the two surfaces."""
     from .dedup_maintenance import fold_label_batch
-    from .sigstore import (
-        _live_sig_rows,
-        append_sig_patch,
-        compact_signature_store,
-    )
+    from .sigstore import append_sig_patch, compact_signature_store
 
     spark = docs_stream.sparkSession
     labels_path = _os.path.join(store_dir, "labels")
@@ -378,9 +374,7 @@ def label_store_maintenance_stream(
         live = _sk.live_keyed_rows(spark, labels_path)
         patch = fold_label_batch(
             bdf, live, _latest_wins(live) if live is not None else None,
-            lambda: _live_sig_rows(spark, sig_dir, "_id").select(
-                "_id", "_sig"
-            ),
+            lambda: _sk.live_keyed_rows(spark, sig_dir).select("_id", "_sig"),
             # the batch stamp lets read_committed_store cut sigs at the
             # commit point; sharded like labels (r12 verdict Next #1)
             lambda fresh: append_sig_patch(

@@ -22,19 +22,19 @@ incremental-signature discipline made durable).
 
 COMPACTION (r12 verdict Next #1 — the last store to get it): sustained
 appends fragment the store exactly like labels — every read re-scanned
-every sig file ever written, with mergeSchema (the read-amplification
-disease SCALE.md r11 measured at 10.9× for labels). The store now
-folds on the SHARED KERNEL (`storekernel.compact_keyed_store`):
-generation directories, per-shard SELECTIVE folds with hard-link carry
-of cold shards, a fenced atomic manifest repoint, and N-1 generation
-retention — the identical discipline labels (labelstore) and ANN codes
-(annstore) run, with zero store-specific fold code. Legacy files
-written before the shard/stamp discipline fold in as batch -1 (they
-lose to any stamped re-append — the read_committed_store precedence);
-``covered_default=-2`` keeps a never-folded shard's legacy rows live
-until ITS fold. The stream's per-batch lease, append and inline fold
-run in the kernel's ``leased_store_stream``, the loop the label and
-ANN streams share.
+every sig file ever written (the read-amplification disease SCALE.md
+r11 measured at 10.9× for labels). The store now folds on the SHARED
+KERNEL (`storekernel.compact_keyed_store`): generation directories,
+per-shard SELECTIVE folds with hard-link carry of cold shards, a
+fenced atomic manifest repoint, and N-1 generation retention — the
+identical discipline labels (labelstore) and ANN codes (annstore) run,
+with zero store-specific fold code. Every write goes through
+:func:`append_sig_patch` or the fold, so the store has ONE layout:
+``shard=`` directories of batch-stamped files. A store written any
+other way (flat files at its root, a scalar-cut manifest) is refused
+by the kernel with "rebuild from a fresh store". The stream's
+per-batch lease, append and inline fold run in the kernel's
+``leased_store_stream``, the loop the label and ANN streams share.
 
 Reference anchor: the persisted-state pattern of `state/kv.go:45-80` /
 `backend.go:64-188` applied to the sketch family (gap category —
@@ -151,35 +151,13 @@ def signature_store_stream(
     )
 
 
-def _live_sig_rows(
-    spark, store_path: str, id_col: str, extra_filter=None
-) -> DataFrame | None:
-    """The raw LIVE sig rows: current compaction generation + only the
-    patches newer than their shard's covered cut (the kernel stitch).
-    mergeSchema + legacy fill: files written before the shard/stamp
-    discipline read back with ``_batch_id=-1`` (they predate every
-    stamped batch and lose to any re-append) and their shard recomputed
-    from the id with the same md5 rule the sharded appends use."""
-    return _sk.live_keyed_rows(
-        spark,
-        store_path,
-        extra_filter=extra_filter,
-        merge_schema=True,
-        legacy_fill_key=id_col,
-        # shard count comes from the manifest when one exists (the fold
-        # records it); before any fold no cut runs and none is needed
-        n_shards=None,
-    )
-
-
 def read_signature_store(
     spark, store_path: str, id_col: str = "doc_id"
 ) -> DataFrame:
     """Latest-wins view of the store: one (id_col, …, _sig) row per id —
     the row from the highest ``_batch_id`` (re-appended/edited docs
     supersede; a retried batch's duplicate rows are identical and
-    collapse; pre-discipline legacy rows read as batch -1 and lose to
-    any stamped re-append). Compaction-aware: when a manifest exists
+    collapse). Compaction-aware: when a manifest exists
     the scan is generation + newer-patches only — the read-amplification
     win the r13 fold discipline exists for. Column ``_id`` alias
     matches the ``store=`` contract of
@@ -192,7 +170,7 @@ def read_signature_store(
     before and after a compaction even when a batch carried true
     duplicate-id rows; a lost-checkpoint batch-id collision can never
     pick a row by partition order)."""
-    df = _live_sig_rows(spark, store_path, id_col)
+    df = _sk.live_keyed_rows(spark, store_path)
     if df is None:
         raise FileNotFoundError(store_path)
     keep = [c for c in df.columns if c not in ("_batch_id", "shard")]
@@ -220,10 +198,7 @@ def compact_signature_store(
     COMMIT.json exists) the fold caps at the committed batch, so a
     half-committed batch is never baked into a generation.
 
-    Legacy files (no shard/stamp) fold in as batch -1;
-    ``covered_default=-2`` keeps a never-folded shard's legacy rows
-    live until its own fold, and a FULL fold prunes the legacy files
-    it just absorbed. Called without ``fence`` the fold takes the
+    Called without ``fence`` the fold takes the
     store's writer lease (refused while the maintenance stream holds
     it); with ``fence`` the caller already holds it
     (storekernel.held_fence). Returns the folded row count."""
@@ -234,16 +209,11 @@ def compact_signature_store(
             store_path,
             key_cols=[id_col],
             # value columns and the all-values-ascending tiebreak derive
-            # from the live frame INSIDE the kernel — a second
-            # mergeSchema frame built here just to list columns would
-            # double the fold's footer-merge pass
+            # from the live frame INSIDE the kernel
             shard_key=id_col,
             n_shards=n_shards,
             shards=shards,
             prune=prune,
             committed=_sk.read_commit(store_dir),
             fence=fence,
-            merge_schema=True,
-            legacy_fill=True,
-            never_folded_cut=-2,
         )

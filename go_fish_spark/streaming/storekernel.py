@@ -159,17 +159,13 @@ def _probe_no_visible_files(path: str) -> bool:
     return True  # empty tree: UNABLE_TO_INFER_SCHEMA, provably
 
 
-def read_parquet_if_exists(
-    spark, path: str, merge_schema: bool = False
-) -> DataFrame | None:
+def read_parquet_if_exists(spark, path: str) -> DataFrame | None:
     """Read a parquet store, returning None ONLY when nothing has ever
     been committed at ``path``. Every other failure — corruption,
     permission, schema mismatch — RE-RAISES: treating a transient read
     error as "store empty" would silently make a maintenance stream
     label a batch as if it were the first delivery, without merging
-    against history (ADVICE r10 #1). ``merge_schema`` unions file
-    schemas so legacy files missing later-added columns surface them as
-    nulls instead of being schema-clipped (ADVICE r11 #2).
+    against history (ADVICE r10 #1).
 
     Missing/empty ABSOLUTE paths short-circuit on a Python-side listing
     instead of letting the JVM throw (optimization r15): the analysis
@@ -184,11 +180,8 @@ def read_parquet_if_exists(
 
     if _probe_no_visible_files(path):
         return None
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
     try:
-        return reader.parquet(path)
+        return spark.read.parquet(path)
     except AnalysisException as e:
         msg = str(e)
         if (
@@ -288,8 +281,7 @@ def walk_parquet_files(root: str) -> tuple[int, int, dict]:
         # never descend into _temporary/.staging etc. — a crashed
         # append leaves uncommitted task files there that no reader
         # ever sees; counting them would permanently inflate the
-        # compaction pressure signal (and register as phantom legacy
-        # files forcing full folds forever)
+        # compaction pressure signal
         dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
         leaf = _os.path.basename(dirpath)
         for fn in filenames:
@@ -310,7 +302,7 @@ def _file_footer_batch(path: str):
 
     * ``(b, True)``   — the file's max ``_batch_id`` is exactly ``b``;
     * ``(None, True)`` — the file provably contributes no batch stamp
-      (zero rows, column absent, or all-null column — the legacy forms);
+      (zero rows, column absent, or all-null column);
     * ``(None, False)`` — statistics missing/unreadable: the caller must
       fall back to the data-scan path."""
     import pyarrow.parquet as _pq
@@ -322,14 +314,12 @@ def _file_footer_batch(path: str):
     if md.num_rows == 0:
         return None, True
     mx = None
-    seen = False
     for rg in range(md.num_row_groups):
         g = md.row_group(rg)
         for ci in range(g.num_columns):
             c = g.column(ci)
             if c.path_in_schema != "_batch_id":
                 continue
-            seen = True
             st = c.statistics
             if st is None:
                 return None, False
@@ -339,8 +329,6 @@ def _file_footer_batch(path: str):
                 return None, False
             v = int(st.max)
             mx = v if mx is None else max(mx, v)
-    if not seen:
-        return None, True  # column absent — pre-discipline file
     return mx, True
 
 
@@ -374,36 +362,11 @@ def _has_partition_dirs_for(path: str, key_col: str) -> bool:
     )
 
 
-def _prune_covered_files_footer(
-    entries: list,
-    covered: int,
-    key_col: str | None,
-    covered_by_key: dict | None,
-    prune_null_batch: bool,
-) -> int | None:
-    """Footer-statistics arm of :func:`prune_covered_files` (guide §1.2
-    step 1 / §6: the file→batch map is metadata, so deciding which files
-    a fold superseded needs a stat call per file, not a Spark job over
-    the patch data). ``entries`` is ``[(key_value|None, file_path)]``
-    as assembled by the caller to mirror Spark's partition discovery
-    exactly. Returns the removed count, or None when any footer lacks
-    usable statistics (caller falls back to the scan arm). A null key
-    takes the DEFAULT cut — the scan arm's ``F.lit(None)`` fill."""
+def _remove_files(paths) -> int:
+    """Best-effort delete; returns how many went (a vanished file is
+    already gone)."""
     removed = 0
-    dead_paths: list[str] = []
-    for k, f in entries:
-        m, ok = _file_footer_batch(f)
-        if not ok:
-            return None
-        cut = covered
-        if key_col is not None and covered_by_key is not None and k is not None:
-            cut = covered_by_key.get(str(k), covered)
-        dead = (m is not None and int(m) <= int(cut)) or (
-            m is None and prune_null_batch
-        )
-        if dead:
-            dead_paths.append(f)
-    for p in dead_paths:
+    for p in paths:
         try:
             _os.remove(p)
             removed += 1
@@ -412,14 +375,35 @@ def _prune_covered_files_footer(
     return removed
 
 
+def _prune_covered_files_footer(
+    entries: list, covered: int, covered_by_key: dict | None
+) -> int | None:
+    """Footer-statistics arm of :func:`prune_covered_files` (guide §1.2
+    step 1 / §6: the file→batch map is metadata, so deciding which files
+    a fold superseded needs a stat call per file, not a Spark job over
+    the patch data). ``entries`` is ``[(key_value, file_path)]`` from
+    the partition directories, exactly Spark's partition discovery.
+    Returns the removed count, or None when any footer lacks usable
+    statistics (caller falls back to the scan arm)."""
+    dead_paths: list[str] = []
+    for k, f in entries:
+        m, ok = _file_footer_batch(f)
+        if not ok:
+            return None
+        cut = covered
+        if covered_by_key is not None:
+            cut = covered_by_key.get(str(k), covered)
+        if m is not None and int(m) <= int(cut):
+            dead_paths.append(f)
+    return _remove_files(dead_paths)
+
+
 def prune_covered_files(
     spark,
     path: str,
     covered: int,
     key_col: str | None = None,
     covered_by_key: dict | None = None,
-    merge_schema: bool = False,
-    prune_null_batch: bool = False,
 ) -> int:
     """Delete data FILES under ``path`` wholly superseded by a fold —
     every row in them has ``_batch_id <=`` its key's covered cut, so
@@ -435,77 +419,28 @@ def prune_covered_files(
     patch-tail contract; an object-store deployment reads through
     snapshot manifests instead of dir listings and never races).
 
-    ``merge_schema`` is required for stores with pre-discipline files
-    lacking ``_batch_id`` (their rows read as null). Such files are
-    skipped by default (a SELECTIVE fold may not have folded their
-    shards); ``prune_null_batch=True`` — safe only after a FULL
-    legacy-fill fold, which bakes every legacy row into the new
-    generation — removes them too.
-
     Fast path (optimization r14, guide §1.2/§6): because every kernel
     writer stamps ``_batch_id`` as a per-append constant, the file→max
     map is fully determined by the parquet FOOTER statistics plus the
     partition directory names — :func:`_prune_covered_files_footer`
     answers it with per-file stat calls instead of a Spark job over the
-    patch data. The scan arm below remains the arm of record for every
-    layout the footer arm cannot prove equivalent on: files whose
-    footers lack usable statistics, and the key_col-as-data-column shape
-    whose uniqueness guard must still raise."""
+    patch data, whenever ``key_col`` names real ``key=`` partition
+    directories (each file's key is its directory name, constant per
+    file by construction). The scan arm below remains the arm of record
+    for files whose footers lack usable statistics, and for the
+    key_col-as-data-column shape whose uniqueness guard must raise."""
     from urllib.parse import unquote, urlparse
 
-    # footer fast path — only on layouts where footer metadata and
-    # directory names reproduce the scan arm bit-for-bit:
-    #   * key_col set + real `key=` partition dirs: each file's key is
-    #     its directory name (constant per file by construction, so the
-    #     non-partition-key guard cannot fire); files in those dirs are
-    #     pruned per their key's cut; root files stay invisible (mixed-
-    #     layout rule) except via the prune_null_batch block below.
-    #     If the key dirs hold no files, Spark's discovery degrades to a
-    #     flat read of the root files with a null key → default cut.
-    #   * key_col None + no partition dirs: flat read, default cut.
-    # The key_col-as-data-column shape (key_col set, no partition dirs,
-    # data files present) falls through to the scan arm so its
-    # uniqueness guard still raises; so does any file lacking usable
-    # footer statistics.
-    entries = None
     if key_col is not None and _has_partition_dirs_for(path, key_col):
-        entries = _key_dir_files(path, key_col)
-        if not entries:
-            entries = [(None, f) for f in _root_parquet_files(path)]
-    elif key_col is None and not _has_partition_dirs(path):
-        entries = [(None, f) for f in _root_parquet_files(path)]
-    if entries is not None:
         fast = _prune_covered_files_footer(
-            entries, covered, key_col, covered_by_key, prune_null_batch
+            _key_dir_files(path, key_col), covered, covered_by_key
         )
         if fast is not None:
-            if prune_null_batch and _has_partition_dirs(path):
-                # root-level legacy files are invisible to the
-                # partitioned read; absorbed by a FULL legacy-fill fold
-                for p in _root_parquet_files(path):
-                    try:
-                        _os.remove(p)
-                        fast += 1
-                    except OSError:
-                        pass
             return fast
 
-    df = read_parquet_if_exists(spark, path, merge_schema)
+    df = read_parquet_if_exists(spark, path)
     if df is None:
         return 0
-    if "_batch_id" not in df.columns:
-        # every file predates the stamp discipline — nothing is
-        # provably covered unless a full legacy-fill fold just ran
-        if not prune_null_batch:
-            return 0
-        df = df.withColumn("_batch_id", F.lit(None).cast("long"))
-    if key_col is not None and key_col not in df.columns:
-        # pure pre-shard flat layout (no partition dirs at all): files
-        # carry no key. Null key → the DEFAULT cut applies per file,
-        # which is conservative-correct: a selective fold never
-        # advances the default, and a full fold's default covers
-        # everything it folded (including the stitched flat rows).
-        df = df.withColumn(key_col, F.lit(None).cast("string"))
     aggs = [F.max("_batch_id").alias("m")]
     if key_col is not None:
         # min (deterministic) + a uniqueness guard (ADVICE r12 #4):
@@ -517,7 +452,7 @@ def prune_covered_files(
         aggs.append(F.min(F.col(key_col)).alias("k"))
         aggs.append(F.countDistinct(F.col(key_col)).alias("_nk"))
     rows = df.groupBy(F.input_file_name().alias("f")).agg(*aggs).collect()
-    removed = 0
+    dead_paths: list[str] = []
     for r in rows:
         cut = covered
         if key_col is not None and covered_by_key is not None:
@@ -528,29 +463,9 @@ def prune_covered_files(
                     "partition column; refusing to prune"
                 )
             cut = covered_by_key.get(str(r["k"]), covered)
-        dead = (r["m"] is not None and int(r["m"]) <= int(cut)) or (
-            r["m"] is None and prune_null_batch
-        )
-        if dead:
-            p = unquote(urlparse(r["f"]).path)
-            try:
-                _os.remove(p)
-                removed += 1
-            except OSError:
-                pass  # best-effort GC — a vanished file is already gone
-    if prune_null_batch and _has_partition_dirs(path):
-        # root-level legacy files are INVISIBLE to the partitioned read
-        # above (partition discovery ignores them — the same reason
-        # live_keyed_rows stitches them back in); after a FULL
-        # legacy-fill fold they are absorbed into the generation, so
-        # remove them directly
-        for p in _root_parquet_files(path):
-            try:
-                _os.remove(p)
-                removed += 1
-            except OSError:
-                pass
-    return removed
+        if r["m"] is not None and int(r["m"]) <= int(cut):
+            dead_paths.append(unquote(urlparse(r["f"]).path))
+    return _remove_files(dead_paths)
 
 
 def carry_partitions(
@@ -639,8 +554,24 @@ def read_store_manifest(store_path: str) -> dict | None:
     ``{"gen": N, "covered_max_batch": B, "covered": {shard: B_s},
     "covered_default": D, "version": k}`` — a shard's patches with
     ``_batch_id <=`` its covered cut are folded into generation N; the
-    reader of record scans gen N plus only the newer patches."""
-    return read_json_if_exists(store_manifest_path(store_path))
+    reader of record scans gen N plus only the newer patches.
+
+    Every reader and fold passes through here, so this is the door the
+    one store layout is kept at: a store with data files at its ROOT
+    (flat appends from before the shard/stamp discipline — Spark's
+    partition discovery would silently skip them beside ``shard=``
+    directories) or a manifest without ``covered_default`` (the older
+    scalar-cut form) raises ValueError instead of being read."""
+    man = read_json_if_exists(store_manifest_path(store_path))
+    if _root_parquet_files(store_path) or (
+        man is not None and "covered_default" not in man
+    ):
+        raise ValueError(
+            f"{store_path} is not a sharded, batch-stamped keyed store "
+            "(data files at the store root, or a manifest without "
+            "covered_default); rebuild from a fresh store"
+        )
+    return man
 
 
 def patch_cut_filter(man: dict):
@@ -648,11 +579,10 @@ def patch_cut_filter(man: dict):
     a scalar cut (every shard covered at the same batch); SELECTIVE
     folds write a per-shard ``covered`` map — each shard's patches are
     cut at ITS OWN fold batch, with ``covered_default`` for shards
-    never folded. Legacy manifests (scalar ``covered_max_batch`` only)
-    read as a uniform cut. The map is a tiny literal (≤ n_shards
-    entries) evaluated per row — no join, no shuffle."""
+    never folded. The map is a tiny literal (≤ n_shards entries)
+    evaluated per row — no join, no shuffle."""
     cov = man.get("covered") or {}
-    default = int(man.get("covered_default", man["covered_max_batch"]))
+    default = int(man["covered_default"])
     if not cov:
         return F.col("_batch_id") > F.lit(default)
     pairs = []
@@ -667,41 +597,9 @@ def patch_cut_filter(man: dict):
     return F.col("_batch_id") > cut
 
 
-def _fill_legacy(
-    df: DataFrame, key_col: str, n_shards: int | None
-) -> DataFrame:
-    """Normalize PRE-DISCIPLINE rows so the cut/latest-wins machinery
-    can reason about them: a missing/null ``_batch_id`` becomes -1
-    (predates every stamped batch, so it loses to any re-append — the
-    read_committed_store precedence), and a missing/null ``shard`` is
-    recomputed from the key with the same md5 rule the sharded appends
-    use (deterministic — the fill IS the shard the row would have been
-    written to). ``n_shards=None`` fills the stamp only (shard is
-    irrelevant before a manifest exists: no cut filter runs)."""
-    from ..operators.sampling import hash_bucket
-
-    if "_batch_id" not in df.columns:
-        df = df.withColumn("_batch_id", F.lit(None).cast("long"))
-    df = df.withColumn(
-        "_batch_id", F.coalesce(F.col("_batch_id").cast("long"), F.lit(-1))
-    )
-    if n_shards is None:
-        return df
-    if "shard" not in df.columns:
-        df = df.withColumn("shard", F.lit(None).cast("int"))
-    return df.withColumn(
-        "shard",
-        F.coalesce(
-            F.col("shard").cast("int"),
-            hash_bucket(key_col, n_shards).cast("int"),
-        ),
-    )
-
-
 def _root_parquet_files(path: str) -> list[str]:
     """Data files sitting at the store ROOT (not inside a ``shard=``
-    partition directory) — the layout legacy, pre-shard-discipline
-    appends left behind."""
+    partition directory)."""
     if not _os.path.isdir(path):
         return []
     return [
@@ -711,64 +609,18 @@ def _root_parquet_files(path: str) -> list[str]:
     ]
 
 
-def _has_partition_dirs(path: str) -> bool:
-    if not _os.path.isdir(path):
-        return False
-    return any(
-        "=" in d and _os.path.isdir(_os.path.join(path, d))
-        for d in _os.listdir(path)
-    )
-
-
 def live_keyed_rows(
-    spark,
-    store_path: str,
-    extra_filter=None,
-    merge_schema: bool = False,
-    legacy_fill_key: str | None = None,
-    n_shards: int | None = None,
+    spark, store_path: str, extra_filter=None
 ) -> DataFrame | None:
     """The raw LIVE rows of a sharded keyed table: the current
     compaction generation (if any) plus only the patches NEWER than
     what it folded (per-shard cut — :func:`patch_cut_filter`).
     Superseded patch files left behind by a crash between the manifest
     repoint and the prune are filtered out by the cut — a torn
-    compaction is garbage, never corruption. ``legacy_fill_key`` turns
-    on :func:`_fill_legacy` for stores whose early files predate the
-    stamp/shard discipline (requires ``n_shards``)."""
+    compaction is garbage, never corruption. A store in any other
+    layout is refused by :func:`read_store_manifest`."""
     man = read_store_manifest(store_path)
-    patches = read_parquet_if_exists(spark, store_path, merge_schema)
-    if legacy_fill_key is not None:
-        # MIXED layout (legacy flat files + new sharded appends): once
-        # ``shard=`` partition directories exist, Spark's partition
-        # discovery silently IGNORES data files at the store root — the
-        # legacy rows would vanish from every read. Stitch them back by
-        # explicit file list (a directory entry read, not a scan).
-        roots = _root_parquet_files(store_path)
-        if roots and _has_partition_dirs(store_path):
-            # honor merge_schema on the explicit-file read too (ADVICE
-            # r13): with mixed flat files (some pre-stamp, some carrying
-            # _batch_id) Spark may otherwise pick a footer schema
-            # lacking _batch_id and silently null real stamps — the
-            # legacy fill would then demote stamped re-appends to batch
-            # -1 and latest-wins could return a stale row.
-            reader = spark.read
-            if merge_schema:
-                reader = reader.option("mergeSchema", "true")
-            legacy = reader.parquet(*roots)
-            patches = (
-                patches.unionByName(legacy, allowMissingColumns=True)
-                if patches is not None
-                else legacy
-            )
-    if patches is not None and legacy_fill_key is not None:
-        # the shard fill must use the SAME shard count the folds use —
-        # the manifest records it (a mismatched fill could assign a
-        # legacy row to a shard whose cut would wrongly hide it)
-        ns = (man or {}).get("n_shards") or n_shards
-        patches = _fill_legacy(
-            patches, legacy_fill_key, int(ns) if ns else None
-        )
+    patches = read_parquet_if_exists(spark, store_path)
     if man is not None:
         # the manifest is the pointer of record: a missing generation
         # directory under a live manifest is corruption — raise (the
@@ -800,50 +652,25 @@ def _covered_from_footers(
     files (per-file constant stamps), shard selection by directory
     name, plus the current generation's files for the selected shards.
     Returns ``(covered|None, ok)``; ``ok=False`` → caller must run the
-    scan arm (legacy/flat layouts, missing stats, a missing generation
-    directory — which the scan arm reports properly — or a listing that
-    finds NO files at all: the caller only runs this after reading a
-    non-None live frame through Spark, so files exist, and a Python-side
-    walk that cannot see any of them means the path does not resolve to
-    the same tree for both sides — e.g. a RELATIVE store path when the
-    JVM and Python working directories diverge. Trusting the empty walk
-    there silently turned the fold into a no-op, r14 regression)."""
-    if _root_parquet_files(store_path):
-        return None, False  # flat/legacy layout — scan arm handles it
+    scan arm (missing stats, a missing generation directory — which the
+    scan arm reports properly — or a listing that finds NO files at
+    all: the caller only runs this after reading a non-None live frame
+    through Spark, so files exist, and a Python-side walk that cannot
+    see any of them means the path does not resolve to the same tree
+    for both sides — e.g. a RELATIVE store path when the JVM and Python
+    working directories diverge. Trusting the empty walk there silently
+    turned the fold into a no-op, r14 regression)."""
     cov = dict((man or {}).get("covered") or {})
-    default = (
-        int(man.get("covered_default", man["covered_max_batch"]))
-        if man is not None
-        else None
-    )
-    mx = None
-    n_files = 0
-
-    def _see(b: int) -> None:
-        nonlocal mx
-        mx = b if mx is None else max(mx, b)
-
-    for s, f in _key_dir_files(store_path, "shard"):
-        try:
-            si = int(s)
-        except ValueError:
-            return None, False
-        if sel is not None and si not in sel:
-            continue
-        n_files += 1
-        b, ok = _file_footer_batch(f)
-        if not ok or b is None:
-            return None, False  # stats unusable or pre-discipline file
-        if man is not None and b <= int(cov.get(str(s), default)):
-            continue  # superseded by the shard's covered cut
-        if committed is not None and b > int(committed):
-            continue  # beyond the cross-store commit point
-        _see(b)
+    roots = [(store_path, True)]
     if man is not None:
         gen_root = store_generation_path(store_path, man["gen"])
         if not _os.path.isdir(gen_root):
             return None, False  # corruption — scan arm raises properly
-        for s, f in _key_dir_files(gen_root, "shard"):
+        roots.append((gen_root, False))
+    mx = None
+    n_files = 0
+    for root, is_patch in roots:
+        for s, f in _key_dir_files(root, "shard"):
             try:
                 si = int(s)
             except ValueError:
@@ -853,10 +680,16 @@ def _covered_from_footers(
             n_files += 1
             b, ok = _file_footer_batch(f)
             if not ok or b is None:
-                return None, False
+                return None, False  # stats unusable or unstamped file
+            if (
+                is_patch
+                and man is not None
+                and b <= int(cov.get(s, man["covered_default"]))
+            ):
+                continue  # superseded by the shard's covered cut
             if committed is not None and b > int(committed):
-                continue
-            _see(b)
+                continue  # beyond the cross-store commit point
+            mx = b if mx is None else max(mx, b)
     if n_files == 0:
         return None, False  # Python-side view sees no data — scan arm
     return mx, True
@@ -875,9 +708,6 @@ def compact_keyed_store(
     prune: bool = True,
     committed: int | None = None,
     fence: tuple | None = None,
-    merge_schema: bool = False,
-    legacy_fill: bool = False,
-    never_folded_cut: int = -1,
 ) -> int:
     """Fold live rows down to one latest-wins row per key, written as a
     NEW generation directory sharded by the md5 bucket of
@@ -888,9 +718,6 @@ def compact_keyed_store(
     CARRIED by hard link (zero bytes) and its patches stay live at its
     old cut. ``committed`` caps the fold at the published cross-store
     commit so a half-committed batch is never baked into a generation.
-    ``legacy_fill`` folds pre-discipline rows (no stamp/shard) in as
-    batch -1; pair it with ``never_folded_cut=-2`` so a never-folded
-    shard's legacy patches stay live (cut -2 < -1) until ITS fold.
 
     ``value_cols=None`` derives the value columns from the live frame
     (everything except keys/shard/stamp) — for stores with
@@ -930,14 +757,7 @@ def compact_keyed_store(
         if committed is not None
         else None
     )
-    live = live_keyed_rows(
-        spark,
-        store_path,
-        extra_filter=cut,
-        merge_schema=merge_schema,
-        legacy_fill_key=(key_cols[0] if legacy_fill else None),
-        n_shards=n_shards,
-    )
+    live = live_keyed_rows(spark, store_path, extra_filter=cut)
     if live is None:
         return 0
     sel = sorted({int(s) for s in shards}) if shards is not None else None
@@ -951,14 +771,10 @@ def compact_keyed_store(
         ]
     if tiebreak is None:
         tiebreak = [F.col(c).asc() for c in value_cols]
-    # covered stamp from footer statistics when the layout allows —
-    # otherwise the scan arm (one full pass over the live rows)
-    covered, _fast = (
-        _covered_from_footers(store_path, man, committed, sel)
-        if not legacy_fill
-        else (None, False)
-    )
-    if not _fast:
+    # covered stamp from footer statistics when every footer has
+    # usable stats — otherwise the scan arm (one pass over the live rows)
+    covered, fast = _covered_from_footers(store_path, man, committed, sel)
+    if not fast:
         covered = live.agg(F.max("_batch_id").alias("m")).collect()[0]["m"]
     if covered is None:
         return 0  # nothing published (or nothing hot) — nothing to fold
@@ -992,11 +808,7 @@ def compact_keyed_store(
         # whose lease WAS reclaimed fails-stop before the repoint
         renew_lease(fence[0], fence[1])
     old_map = dict(man.get("covered") or {}) if man is not None else {}
-    old_default = (
-        int(man.get("covered_default", man["covered_max_batch"]))
-        if man is not None
-        else int(never_folded_cut)
-    )
+    old_default = int(man["covered_default"]) if man is not None else -1
     if sel is None:
         new_map: dict = {}
         new_default = covered
@@ -1038,8 +850,6 @@ def compact_keyed_store(
             new_default,
             key_col="shard",
             covered_by_key=new_map,
-            merge_schema=merge_schema,
-            prune_null_batch=(sel is None and legacy_fill),
         )
     return n
 
@@ -1112,15 +922,6 @@ def sharded_compaction_plan(
     read_amp, action, to_fold, fold_scope = read_amp_decision(
         live, patch_files, file_cutoff, min_patch_files, "shard="
     )
-    # legacy (pre-shard-discipline) files live at non-"shard=" leaves;
-    # they belong to NO single shard, so only a FULL fold can absorb
-    # them — force full scope while any exist (the rule's denominator
-    # counts "shard=" leaves only, so theirs never deflate it)
-    legacy_files = sum(
-        nf for s, nf in patch_shards.items() if not s.startswith("shard=")
-    )
-    if legacy_files:
-        fold_scope = "full"
     return {
         "action": action,
         "read_amp": read_amp,
@@ -1131,7 +932,6 @@ def sharded_compaction_plan(
         "gen_bytes": gen_bytes,
         "n_live_shards": len(live),
         "max_files_one_shard": max(live.values()) if live else 0,
-        "legacy_files": legacy_files,
         "shards_to_fold": to_fold,
         "fold_scope": fold_scope,
     }

@@ -22,8 +22,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", SF_SMALL)
 #: through the ANN search kernels (operators/similarity.py; x175 stays
 #: slow, it takes over a minute alone), the count-table statistics and
 #: their frozen-baseline gates plus the shared KL term
-#: (operators/profile.py: x67, x135, x141, x143, x146, x147, x158-x160)
-#: and q43's exact-moment oracle.
+#: (operators/profile.py: x67, x135, x141, x143, x146, x147, x158-x160),
+#: the sig-store readers of the one sharded store layout
+#: (streaming/storekernel.py: x150, x164, x174 — about 5 s each at
+#: sf0.001) and q43's exact-moment oracle.
 #: Every other per-entry compare is marked ``slow`` — it duplicates the
 #: full-registry self-check (scripts/check_correctness.py) — and
 #: scripts/close_round.py forces the slow set back on with `-o addopts=`.
@@ -41,6 +43,8 @@ SMOKE = {
     "x143_good_turing", "x146_source_gini", "x147_oov_rate",
     "x158_gt_gate_readback", "x159_gini_gate_readback",
     "x160_oov_gate_readback",
+    "x150_sigstore_readback", "x164_committed_store_readback",
+    "x174_sig_compaction_readback",
     "q43_exact_corr",
 }
 

@@ -340,9 +340,13 @@ def test_auc_gate_fit_apply_exact_parity(spark):
     EXACTLY (same BIGINT numerator through the U-statistic identity,
     same single division) — including tie-heavy scores. The law covers
     the rows with a non-NULL score: the gate excludes NULL scores on
-    both sides, while score_auc ranks them."""
+    both sides, while score_auc ranks them — last, like its DuckDB
+    mirror (group "nl" is a NULL score between two positives)."""
+    import duckdb
+
     from go_fish_spark.operators.profile import (
         apply_auc_gate,
+        duck_score_auc_sql,
         score_auc,
         score_distribution_baseline,
     )
@@ -350,7 +354,13 @@ def test_auc_gate_fit_apply_exact_parity(spark):
     rows = [
         (i, "s%d" % (i % 3), float((i * 7) % 5), i % 4 == 0)
         for i in range(120)
-    ] + [(120, "s0", None, True), (121, "s1", None, False)]
+    ] + [(120, "s0", None, True), (121, "s1", None, False)] + [
+        (122 + i, "nl", s, y)
+        for i, (s, y) in enumerate(
+            [(1.0, True), (2.0, False), (None, True), (3.0, True),
+             (0.5, False)]
+        )
+    ]
     df = spark.createDataFrame(rows, "id long, g string, s double, y boolean")
     scored = df.filter(F.col("s").isNotNull())
     batch = {
@@ -371,6 +381,15 @@ def test_auc_gate_fit_apply_exact_parity(spark):
     full = {r.g: (r.n, r.n_pos) for r in score_auc(df, "g", "s", "y").collect()}
     assert full["s0"][1] == batch["s0"][0] + 1
     assert full["s1"][0] == 41 and full["s1"][1] == batch["s1"][0]
+    # Spark == DuckDB over every row, NULL scores included
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id BIGINT, g VARCHAR, s DOUBLE, y BOOLEAN)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", rows)
+    duck = con.execute(duck_score_auc_sql("t", "g", "s", "y")).fetchall()
+    con.close()
+    got = [tuple(r) for r in score_auc(df, "g", "s", "y").collect()]
+    assert got == [tuple(r) for r in duck]
+    assert dict((r[0], r[3]) for r in got)["nl"] == 0.833333333
 
 
 def test_ks_gate_fit_apply_exact_parity(spark):

@@ -285,6 +285,7 @@ def test_committed_reader_never_sees_sig_label_skew(spark, tmp_path):
     from go_fish_spark.operators.dedup import minhash_signature
     from go_fish_spark.streaming import labelstore as ls
     from go_fish_spark.streaming import storekernel as sk
+    from go_fish_spark.streaming.sigstore import append_sig_patch
 
     store = str(tmp_path / "store")
     labels_path = os.path.join(store, "labels")
@@ -292,12 +293,13 @@ def test_committed_reader_never_sees_sig_label_skew(spark, tmp_path):
     os.makedirs(store)
 
     def _append_sigs(rows, batch_id):
-        spark.createDataFrame(rows, "doc_id long, text string").select(
-            F.col("doc_id").alias("_id"),
-            minhash_signature("text", 64, 3, 42, True).alias("_sig"),
-        ).withColumn("_batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(sig_dir)
+        append_sig_patch(
+            spark.createDataFrame(rows, "doc_id long, text string").select(
+                F.col("doc_id").alias("_id"),
+                minhash_signature("text", 64, 3, 42, True).alias("_sig"),
+            ),
+            sig_dir, batch_id, id_col="_id", n_shards=4,
+        )
 
     # batch 0: full commit
     b0 = [(1, "alpha beta gamma delta"), (2, "epsilon zeta eta theta")]
@@ -993,16 +995,18 @@ def test_cli_label_store_committed_read(tmp_path, spark):
     from go_fish_spark.operators.dedup import minhash_signature
     from go_fish_spark.streaming import labelstore as ls
     from go_fish_spark.streaming import storekernel as sk
+    from go_fish_spark.streaming.sigstore import append_sig_patch
 
     store = str(tmp_path / "store")
     os.makedirs(store)
-    spark.createDataFrame(
-        [(1, "alpha beta gamma delta")], "doc_id long, text string"
-    ).select(
-        F.col("doc_id").alias("_id"),
-        minhash_signature("text", 64, 3, 42, True).alias("_sig"),
-    ).withColumn("_batch_id", F.lit(0)).write.mode("append").parquet(
-        os.path.join(store, "_sigs")
+    append_sig_patch(
+        spark.createDataFrame(
+            [(1, "alpha beta gamma delta")], "doc_id long, text string"
+        ).select(
+            F.col("doc_id").alias("_id"),
+            minhash_signature("text", 64, 3, 42, True).alias("_sig"),
+        ),
+        os.path.join(store, "_sigs"), 0, id_col="_id", n_shards=4,
     )
     ls.append_label_patch(
         spark.createDataFrame([(1, 1)], "id long, component long"),

@@ -1,6 +1,6 @@
-"""Round-12 regressions: the four r11 ADVICE findings (model-derived
-cell histograms, legacy-sig schema merge, generation retention, fold
-batch-id stamping) plus the round's new store machinery."""
+"""Round-12 regressions: the r11 ADVICE findings (model-derived cell
+histograms, generation retention, fold batch-id stamping) plus the
+round's new store machinery."""
 
 from __future__ import annotations
 
@@ -87,48 +87,6 @@ def test_ann_stream_histograms_at_loaded_model_cell_count(spark, tmp_path):
     # with the truncation bug half the mass vanished and js drifted
     assert plans[0]["js_divergence"] == 0.0
     assert plans[0]["action"] == "incremental"
-
-
-# --- ADVICE r11 #2: legacy sig files survive the committed cut ----------------
-
-
-def test_committed_store_legacy_sigs_survive_schema_merge(spark, tmp_path):
-    from go_fish_spark.streaming import labelstore as ls
-    from go_fish_spark.streaming import storekernel as sk
-
-    store = str(tmp_path / "store")
-    sig_dir = os.path.join(store, "_sigs")
-    # legacy file: written before the commit discipline — no _batch_id
-    spark.createDataFrame(
-        [(1, "sigA"), (2, "sigB")], "_id long, _sig string"
-    ).write.mode("append").parquet(sig_dir)
-    # post-upgrade file: carries the batch stamp
-    spark.createDataFrame(
-        [(3, "sigC")], "_id long, _sig string"
-    ).withColumn("_batch_id", F.lit(0)).write.mode("append").parquet(sig_dir)
-    ls.append_label_patch(
-        spark.createDataFrame(
-            [(1, 1), (2, 1), (3, 3)], "id long, component long"
-        ),
-        os.path.join(store, "labels"), batch_id=0, n_shards=4,
-    )
-    sk.publish_commit(store, 0)
-
-    view = ls.read_committed_store(spark, store)
-    got = {r["_id"]: r["_sig"] for r in view["sigs"].collect()}
-    # without mergeSchema the read could adopt the stamped schema and
-    # the <= committed cut silently dropped the legacy rows as null
-    assert got == {1: "sigA", 2: "sigB", 3: "sigC"}
-    # a stamped re-append of a legacy id supersedes it (null sorts last)
-    spark.createDataFrame(
-        [(1, "sigA2")], "_id long, _sig string"
-    ).withColumn("_batch_id", F.lit(1)).write.mode("append").parquet(sig_dir)
-    sk.publish_commit(store, 1)
-    got2 = {
-        r["_id"]: r["_sig"]
-        for r in ls.read_committed_store(spark, store)["sigs"].collect()
-    }
-    assert got2[1] == "sigA2" and got2[2] == "sigB"
 
 
 # --- ADVICE r11 #4: fold rows outrank a restarted batch-id space --------------

@@ -500,8 +500,6 @@ def test_walk_ignores_temporary_dirs(spark, tmp_path):
         fh.write(b"not a real footer")
     files1, _b, per1 = sk.walk_parquet_files(store)
     assert (files1, per1) == (files0, per0)
-    plan = sk.sharded_compaction_plan(store, file_cutoff=1.0, min_patch_files=1)
-    assert plan["legacy_files"] == 0  # no phantom legacy pressure
 
 
 def test_sig_read_identical_before_and_after_fold_on_dup_rows(
@@ -613,99 +611,3 @@ def test_sig_store_fold_midsequence_readback(spark, tmp_path):
     want |= {(30 + i, (7, 7, 7)) for i in range(20)}
     assert got == want
 
-
-def test_sig_store_legacy_files_fold_away(spark, tmp_path):
-    """Pre-discipline files (no shard, no _batch_id) read as batch -1
-    (they lose to any stamped re-append) and a FULL fold absorbs them
-    into the generation and prunes the legacy files themselves."""
-    from go_fish_spark.streaming.sigstore import (
-        append_sig_patch,
-        compact_signature_store,
-        read_signature_store,
-    )
-
-    store = str(tmp_path / "store" / "sigs")
-    # legacy flat write: no shard, no batch stamp
-    _sig_rows(spark, 20, "legacy").coalesce(1).write.mode("append").parquet(
-        store
-    )
-    # stamped sharded re-append of ids 0-4 must supersede
-    append_sig_patch(_sig_rows(spark, 5, "new"), store, 0, n_shards=4)
-    want = {(i, (i, i + 1, hash("new") % 97)) for i in range(5)}
-    want |= {(i, (i, i + 1, hash("legacy") % 97)) for i in range(5, 20)}
-
-    def got():
-        return {
-            (r["doc_id"], tuple(r["_sig"]))
-            for r in read_signature_store(spark, store).collect()
-        }
-
-    assert got() == want  # before any fold
-    files_before = len(_live_parquet_files(store))
-    n = compact_signature_store(spark, store, n_shards=4)
-    assert n == 20
-    assert got() == want  # after the full fold
-    # the legacy (unstamped) files were provably absorbed — pruned
-    assert len(_live_parquet_files(store)) < files_before
-
-
-def test_sig_store_pure_flat_legacy_full_fold(spark, tmp_path):
-    """A PURE pre-discipline store (flat files only, no shard dirs, no
-    stamps) must survive a full fold end to end: the fold absorbs the
-    rows, the prune removes the provably-absorbed flat files without
-    crashing on the missing shard column, and the read-back is
-    unchanged."""
-    from go_fish_spark.streaming.sigstore import (
-        compact_signature_store,
-        read_signature_store,
-    )
-
-    store = str(tmp_path / "store" / "sigs")
-    for i in range(3):  # three flat legacy appends
-        _sig_rows(spark, 10, f"b{i}").filter(
-            F.col("doc_id") % 3 == i
-        ).coalesce(1).write.mode("append").parquet(store)
-    want = {
-        (r["doc_id"], tuple(r["_sig"]))
-        for r in read_signature_store(spark, store).collect()
-    }
-    files_before = len(_live_parquet_files(store))
-    assert files_before == 3
-    n = compact_signature_store(spark, store, n_shards=4)
-    assert n == 10
-    got = {
-        (r["doc_id"], tuple(r["_sig"]))
-        for r in read_signature_store(spark, store).collect()
-    }
-    assert got == want
-    assert len(_live_parquet_files(store)) == 0  # flat files absorbed
-
-
-def test_plan_forces_full_scope_while_legacy_files_exist(spark, tmp_path):
-    """Legacy root files belong to no single shard — only a FULL fold
-    absorbs them, so the plan must force fold_scope='full' (and report
-    them) while any exist; once absorbed, selective folds resume."""
-    from go_fish_spark.streaming import storekernel as sk
-    from go_fish_spark.streaming.sigstore import (
-        append_sig_patch,
-        compact_signature_store,
-    )
-
-    store = str(tmp_path / "store" / "sigs")
-    _sig_rows(spark, 10, "legacy").coalesce(1).write.mode("append").parquet(
-        store
-    )
-    for b in range(3):  # fragment one shard population
-        append_sig_patch(_sig_rows(spark, 20, f"b{b}"), store, b, n_shards=4)
-    plan = sk.sharded_compaction_plan(store, file_cutoff=2.0, min_patch_files=1)
-    assert plan["legacy_files"] == 1
-    assert plan["fold_scope"] == "full"  # never 'selective' w/ legacy
-    compact_signature_store(spark, store, n_shards=4)  # absorbs legacy
-    for b in range(3, 6):
-        append_sig_patch(
-            _sig_rows(spark, 4, f"b{b}"), store, b, n_shards=4
-        )
-    plan2 = sk.sharded_compaction_plan(store, file_cutoff=2.0, min_patch_files=1)
-    assert plan2["legacy_files"] == 0
-    # with legacy gone, per-shard selectivity is allowed again
-    assert plan2["fold_scope"] in ("selective", "full")

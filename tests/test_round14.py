@@ -1,7 +1,6 @@
-"""Round-14 regressions: the four r13 ADVICE findings (legacy-stitch
-mergeSchema, race-free lease heartbeat, recall-monitor data-census
-guard, recursive-mtime tmp sweep) plus the round's PQ-parameter
-planning work."""
+"""Round-14 regressions: the r13 ADVICE findings (race-free lease
+heartbeat, recall-monitor data-census guard, recursive-mtime tmp sweep)
+plus the round's PQ-parameter planning work."""
 
 from __future__ import annotations
 
@@ -9,47 +8,6 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
-
-
-# --- ADVICE r13 #1: legacy root stitch must honor mergeSchema -----------------
-
-
-def test_legacy_root_stitch_honors_merge_schema(spark, tmp_path):
-    """Mixed FLAT files — one pre-stamp (no _batch_id), one carrying a
-    real stamp — stitched back beside shard= partition dirs: the
-    explicit-file read must merge footers, or Spark can pick the
-    pre-stamp schema and silently null the real stamp, demoting a
-    stamped re-append to batch -1 so latest-wins returns a stale row."""
-    from go_fish_spark.streaming import storekernel as sk
-
-    path = str(tmp_path / "store")
-    # legacy flat file, pre-discipline: no _batch_id column at all
-    spark.createDataFrame(
-        [(1, "stale")], "id long, val string"
-    ).coalesce(1).write.mode("append").parquet(path)
-    # later flat re-append, already stamped (batch 7) but still flat
-    spark.createDataFrame(
-        [(1, "fresh", 7)], "id long, val string, _batch_id long"
-    ).coalesce(1).write.mode("append").parquet(path)
-    # then the sharded discipline begins: partition dirs now exist
-    spark.createDataFrame(
-        [(2, "sharded", 10, 0)],
-        "id long, val string, _batch_id long, shard int",
-    ).write.mode("append").partitionBy("shard").parquet(path)
-
-    df = sk.live_keyed_rows(
-        spark, path, merge_schema=True, legacy_fill_key="id", n_shards=4
-    )
-    rows = {r["val"]: r["_batch_id"] for r in df.collect()}
-    assert rows["fresh"] == 7  # the stamp survived the stitch
-    assert rows["stale"] == -1  # pre-stamp row filled to lose
-    assert rows["sharded"] == 10
-    # latest-wins over the stitched view picks the stamped re-append
-    win = sk.latest_wins(
-        df, ["id"], [F.col("val").asc()], ["id", "val"]
-    )
-    got = {(r["id"], r["val"]) for r in win.collect()}
-    assert got == {(1, "fresh"), (2, "sharded")}
 
 
 # --- ADVICE r13 #2 / verdict Next #2: race-free lease heartbeat ---------------

@@ -7,7 +7,6 @@ compares outcomes exactly."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -50,17 +49,7 @@ def test_file_footer_batch_reads_constant_stamp(spark, tmp_path):
     assert seen == {0, 1, 2}
 
 
-def test_file_footer_batch_absent_column(spark, tmp_path):
-    p = os.path.join(str(tmp_path), "legacy")
-    spark.range(5).select(F.col("id").alias("id")).coalesce(1).write.parquet(p)
-    files = sk._root_parquet_files(p)
-    assert files
-    b, ok = sk._file_footer_batch(files[0])
-    assert ok and b is None  # pre-discipline file: provably no stamp
-
-
-def _scan_arm_prune(spark, path, covered, key_col, covered_by_key,
-                    merge_schema=False, prune_null_batch=False):
+def _scan_arm_prune(spark, path, covered, key_col, covered_by_key):
     """Force the original Spark scan arm by making the footer arm
     decline (monkeypatch-free: call with a transient stats-breaker is
     fragile, so temporarily swap the footer fn)."""
@@ -69,8 +58,7 @@ def _scan_arm_prune(spark, path, covered, key_col, covered_by_key,
     try:
         return sk.prune_covered_files(
             spark, path, covered, key_col=key_col,
-            covered_by_key=covered_by_key, merge_schema=merge_schema,
-            prune_null_batch=prune_null_batch,
+            covered_by_key=covered_by_key,
         )
     finally:
         sk._prune_covered_files_footer = orig
@@ -107,31 +95,6 @@ def test_footer_prune_matches_scan(spark, tmp_path, covered_by_key):
         )
 
     assert keyed(a) == keyed(b)
-
-
-def test_footer_prune_flat_layout_matches_scan(spark, tmp_path):
-    for sub in ("a", "b"):
-        p = os.path.join(str(tmp_path), sub)
-        for b in range(3):
-            (
-                spark.range(5)
-                .withColumn("_batch_id", F.lit(b))
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(p)
-            )
-    pa, pb = os.path.join(str(tmp_path), "a"), os.path.join(str(tmp_path), "b")
-    na = sk.prune_covered_files(spark, pa, 1, key_col=None)
-    nb = _scan_arm_prune(spark, pb, 1, None, None)
-    assert na == nb == 2  # batches 0 and 1 covered
-
-    def batches(path):
-        return sorted(
-            sk._file_footer_batch(os.path.join(path, rel))[0]
-            for rel in _surviving(path)
-        )
-
-    assert batches(pa) == batches(pb) == [2]
 
 
 def test_footer_prune_falls_back_for_data_column_key(spark, tmp_path):
@@ -209,18 +172,6 @@ def test_covered_from_footers_after_fold(spark, tmp_path):
         fast, ok = sk._covered_from_footers(store, man, committed, sel)
         assert ok
         assert fast == _scan_covered(spark, store, man, committed, sel)
-
-
-def test_covered_footer_declines_on_root_files(spark, tmp_path):
-    store = _mk_store(spark, tmp_path)
-    # drop a legacy flat file at the root — mixed layout must decline
-    spark.range(3).withColumn("_batch_id", F.lit(0)).coalesce(1).write.mode(
-        "append"
-    ).parquet(os.path.join(str(tmp_path), "flat"))
-    src = sk._root_parquet_files(os.path.join(str(tmp_path), "flat"))[0]
-    shutil.copy(src, os.path.join(store, "legacy.parquet"))
-    _fast, ok = sk._covered_from_footers(store, None, None, None)
-    assert not ok
 
 
 def test_compact_keyed_store_footer_fold_roundtrip(spark, tmp_path):
