@@ -19,6 +19,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..tasks import get_task
 from . import query
 from .util import duck_ts_str, ts_str
 
@@ -832,7 +833,9 @@ def q92_pit_training_set(spark, sf_dir):
     feature can see the label period — temporal leakage is the
     time-axis version of what the eval-contamination guards (x21/x45)
     protect against. Users with no pre-cutoff history are absent (no
-    features to train on); non-purchasers get FALSE.
+    features to train on); non-purchasers get FALSE. The features are
+    the ``pit_features`` task's batch arm, the body its streaming arm
+    runs once per micro-batch over (KV ∪ batch).
 
     100 TB shape: ONE user-keyed exchange per side of the cutoff (both
     filters push to the scan), then a user-keyed left join of two
@@ -840,31 +843,13 @@ def q92_pit_training_set(spark, sf_dir):
     pruning on a date-partitioned layout makes the feature scan touch
     only pre-cutoff files."""
     events = table(spark, sf_dir, "events")
-    cutoff = F.lit("2024-01-21 00:00:00").cast("timestamp")
+    cutoff = "2024-01-21 00:00:00"
+    feat = get_task("pit_features", cutoff=cutoff).apply(events)
     label_end = F.lit("2024-01-28 00:00:00").cast("timestamp")
-    feat = (
-        events.filter(F.col("ts") < cutoff)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events_before"),
-            F.countDistinct("event_type").alias("n_types_before"),
-            F.datediff(
-                F.lit("2024-01-21").cast("date"),
-                F.max(F.col("ts").cast("date")),
-            )
-            .cast("int")
-            .alias("recency_days"),
-            F.sum(
-                F.round(F.col("value"), 12).cast("decimal(27,18)")
-            )
-            .cast("double")
-            .alias("total_value"),
-        )
-    )
     lab = (
         events.filter(
             (F.col("event_type") == "purchase")
-            & (F.col("ts") >= cutoff)
+            & (F.col("ts") >= F.lit(cutoff).cast("timestamp"))
             & (F.col("ts") < label_end)
         )
         .select("user_id")
@@ -874,14 +859,8 @@ def q92_pit_training_set(spark, sf_dir):
     return (
         feat.join(lab, "user_id", "left")
         .select(
-            "user_id",
-            "n_events_before",
-            "n_types_before",
-            "recency_days",
-            F.round("total_value", 6).alias("total_value"),
-            F.coalesce("purchased", F.lit(False)).alias(
-                "label_purchase"
-            ),
+            *feat.columns,
+            F.coalesce("purchased", F.lit(False)).alias("label_purchase"),
         )
         .orderBy("user_id")
     )

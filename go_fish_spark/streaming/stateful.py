@@ -3,21 +3,17 @@ on Spark's streaming state.
 
 | reference | here |
 |---|---|
-| KVStore set/get (`state/kv.go:45-80`), BoltDB-persisted | the ``s2s_enrich``/``keyed_counter`` tasks' batch-stamped KV log (``streaming/kvlog.py``), one JVM window/aggregation per micro-batch; ``run_stateful`` (``applyInPandasWithState``) for user-written keyed tasks |
+| KVStore set/get (`state/kv.go:45-80`), BoltDB-persisted | the ``s2s_enrich``/``keyed_counter`` tasks' batch-stamped KV log (``streaming/kvlog.py``), one JVM window/aggregation per micro-batch; a user-written ``StatefulTask``: one ``applyInPandas`` per micro-batch over the same log |
 | s2s enrichment join (`s2s_rules/cloudTrail_s2s_join.go:68-78,124-130`) | task ``s2s_enrich`` (``tasks/builtin_stateful.py``) run through ``CompiledPipeline.start``; ``interval_enrich_stream`` for the bounded-age native join |
 | keyed agg w/ drain (`agg_rules/cloudTrail_agg.go:30-96`) | ``windowed_count_stream`` (event-time window + watermark — the declared-interval upgrade over the 1 s processing-time poller, SURVEY §2.4) |
 | Counter window read-and-reset (`state/count.go:18-31`) | ``global_count_stream`` (update mode) |
+| point-in-time features (q92's live arm) | task ``pit_features``: one JVM aggregation per micro-batch over the KV log |
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
 def interval_enrich_stream(
@@ -186,120 +182,3 @@ def global_count_stream(events: DataFrame) -> DataFrame:
     18-31`): in update mode each micro-batch emits the running total; the
     delta between emissions is the reference's read-and-reset value."""
     return events.agg(F.count(F.lit(1)).alias("cnt"))
-
-
-#: Feature row emitted by :func:`pit_feature_stream` — the q92 feature
-#: vector (labels are a batch concern; the stream maintains FEATURES).
-PIT_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events_before", T.LongType()),
-        T.StructField("n_types_before", T.LongType()),
-        T.StructField("recency_days", T.IntegerType()),
-        T.StructField("total_value", T.DoubleType()),
-    ]
-)
-
-
-def pit_feature_stream(
-    events: DataFrame,
-    cutoff: str,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
-    """Streaming arm of q92's point-in-time training-set construction
-    (`queries/stateful.py`): incrementally maintain each user's feature
-    vector as events arrive, under the CUTOFF DISCIPLINE — rows at or
-    past ``cutoff`` are filtered BEFORE the stateful operator, so the
-    features physically cannot read the label period (the live form of
-    temporal-leakage protection; batch q92 enforces the same bound with
-    a scan filter). After each micro-batch every touched user emits its
-    CURRENT feature row; the latest emission per user is that user's
-    point-in-time feature vector, and at end-of-stream it equals the
-    batch computation row-for-row (parity test in test_streaming.py).
-
-    Exactness across arms: ``total_value`` is maintained as an INTEGER
-    count of 1e-12 units (the batch arm's round-12 → decimal(27,18)
-    discipline — no float accumulation drift between one big batch and
-    many small ones); ``n_types_before`` keeps the bounded distinct
-    type-set in state; ``recency_days`` = days(cutoff_date − max event
-    date).
-
-    100 TB shape: state is keyed by user and partitioned across
-    executors, checkpoint-persisted; each micro-batch does ONE keyed
-    exchange of just that batch's rows. The type-set per user is
-    bounded by the event-type vocabulary, and the emitted frame is one
-    row per TOUCHED user per batch, not per event."""
-    from datetime import date, datetime
-    from decimal import ROUND_HALF_UP, Decimal
-
-    cutoff_dt = datetime.fromisoformat(cutoff)
-    cutoff_day: date = cutoff_dt.date()
-    cols = [f.name for f in PIT_FEATURE_SCHEMA]
-
-    def proc(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import json as _json
-
-        st = _json.loads(state.get[0]) if state.exists else {
-            "n": 0, "types": [], "max_day": None, "units": None,
-        }
-        types = set(st["types"])
-        rows = pd.concat(list(pdfs))
-        for row in rows.itertuples(index=False):
-            st["n"] += 1
-            # NULL types are ignored, matching the batch arm's
-            # countDistinct (and keeping the sorted() serialization
-            # total-ordered — None is not comparable to str)
-            ty = getattr(row, type_col)
-            if ty is not None and not pd.isna(ty):
-                types.add(ty)
-            d = getattr(row, ts_col).date().isoformat()
-            if st["max_day"] is None or d > st["max_day"]:
-                st["max_day"] = d
-            v = getattr(row, value_col)
-            if v is not None and not pd.isna(v):
-                # round-12 → integer 1e-12 units: the batch arm's
-                # decimal(27,18) sum, without float drift across batches.
-                # units stays None until a non-null value arrives —
-                # SQL SUM over all-NULL is NULL, not 0
-                st["units"] = (st["units"] or 0) + int(
-                    Decimal(repr(float(v))).quantize(
-                        Decimal("1e-12"), rounding=ROUND_HALF_UP
-                    ).scaleb(12)
-                )
-        st["types"] = sorted(types)
-        state.update((_json.dumps(st),))
-        recency = (cutoff_day - date.fromisoformat(st["max_day"])).days
-        # Mirror the BATCH arm's rounding path EXACTLY: the batch sum is
-        # decimal(27,18) → CAST AS DOUBLE → round(x, 6), and Spark's
-        # round-on-double goes through BigDecimal.valueOf(double) — i.e.
-        # Decimal(repr(x)) — before HALF_UP. Quantizing the exact decimal
-        # directly can differ on half-ulp .5 boundaries at the 6th
-        # decimal, so convert to float FIRST, then re-parse its repr.
-        if st["units"] is not None:
-            as_double = float(Decimal(st["units"]).scaleb(-12))
-            total = float(
-                Decimal(repr(as_double)).quantize(
-                    Decimal("1e-6"), rounding=ROUND_HALF_UP
-                )
-            )
-        else:
-            total = None
-        yield pd.DataFrame(
-            [[key[0], st["n"], len(types), recency, total]], columns=cols
-        )
-
-    gated = events.filter(
-        F.col(ts_col) < F.lit(cutoff).cast("timestamp")
-    )
-    return gated.groupBy(F.col(user_col)).applyInPandasWithState(
-        proc,
-        outputStructType=PIT_FEATURE_SCHEMA,
-        stateStructType=T.StructType([T.StructField("json", T.StringType())]),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

@@ -8,6 +8,9 @@ scenarios driven purely from a JSON pipeline spec (no user Python):
   events for one principal → one row with Occurrences == 3.
 * streaming: the same s2s spec compiled streaming carries state ACROSS
   micro-batches (write in batch 1 enriches a read in batch 2).
+* the other keyed tasks on the same KV log — a user-written
+  ``StatefulTask`` and ``pit_features`` — accumulate, clear, replay after
+  a crash and equal the batch arm.
 """
 
 from __future__ import annotations
@@ -509,3 +512,193 @@ def test_multi_source_keyed_spec_streams_as_one_tagged_union(spark, tmp_path):
     out = spark.read.schema(TRAIL_SCHEMA + ", entity string").json(str(tmp_path / "out"))
     assert {r.event_id: r.entity for r in out.collect()} == {
         1: "user/alice", 2: "r2", 3: "user/alice"}
+
+
+# ---------------------------------------------------------------------------
+# The other keyed-state tasks on the same KV log: a user-written
+# StatefulTask and pit_features (q92's features).
+
+
+def _keyed_raw(tmp_path, schema, task, options=None):
+    """json source (``<tmp>/in``) → one keyed rule → json sink (``<tmp>/out``)."""
+    return {
+        "sources": {"in": {"type": "json", "options": {
+            "path": str(tmp_path / "in"), "schema": schema}}},
+        "rules": {"r": {"source": "in", "task": task, "sink": "out",
+                        "options": options or {}}},
+        "sinks": {"out": {"type": "json", "options": {"path": str(tmp_path / "out")}}},
+        "states": {},
+    }
+
+
+def _register_stateful(name, key, output_schema, process):
+    """Register a StatefulTask subclass whose process() is ``process``. The
+    class is local, so it travels to the Python workers by value."""
+    from go_fish_spark.tasks import register_task
+    from go_fish_spark.tasks.builtin_stateful import StatefulTask
+
+    @register_task(name)
+    class UserTask(StatefulTask):
+        def process(self, key, rows, state):
+            return process(key, rows, state)
+
+    UserTask.key, UserTask.output_schema = key, output_schema
+    return name
+
+
+def _deliver_and_drain(spark, tmp_path, raw, i, events):
+    _deliver(spark, tmp_path, i, events)
+    return _drain(spark, raw, tmp_path)
+
+
+def _running_max_task():
+    import pandas as pd
+
+    def running_max(key, rows, state):
+        cur = state.get("max", float("-inf"))
+        cur = max(cur, rows["v"].max())
+        out = pd.DataFrame({"user_id": [key[0]], "running_max": [cur]})
+        return out, {"max": cur}
+
+    return _register_stateful(
+        "test_running_max", "user_id", "user_id long, running_max double", running_max
+    )
+
+
+def test_custom_stateful_accumulator(spark, tmp_path):
+    """A user task: running max of value per user, carried across
+    micro-batches in task-managed state."""
+    raw = _keyed_raw(tmp_path, "user_id long, v double", _running_max_task())
+    outdir = str(tmp_path / "out")
+    _deliver_and_drain(spark, tmp_path, raw, 0, [
+        dict(user_id=1, v=5.0), dict(user_id=1, v=3.0), dict(user_id=2, v=1.0),
+    ])
+    # batch 2: lower value must NOT lower the running max; higher must raise
+    _deliver_and_drain(spark, tmp_path, raw, 1, [dict(user_id=1, v=4.0), dict(user_id=2, v=9.0)])
+
+    out = spark.read.schema("user_id long, running_max double").json(outdir)
+    rows = sorted((r.user_id, r.running_max) for r in out.collect())
+    assert rows == [(1, 5.0), (1, 5.0), (2, 1.0), (2, 9.0)]
+
+
+def test_stateful_state_clear(spark, tmp_path):
+    """Returning None state clears it (≡ kv.Delete / the window drain
+    pattern, `agg_rules/cloudTrail_agg.go:78-96`)."""
+    import pandas as pd
+
+    def drain_count(key, rows, state):
+        # accumulate then immediately drain: every batch starts from zero
+        n = state.get("n", 0) + len(rows)
+        return pd.DataFrame({"user_id": [key[0]], "n": [n]}), None
+
+    task = _register_stateful("test_drain_count", "user_id", "user_id long, n long", drain_count)
+    raw = _keyed_raw(tmp_path, "user_id long, v double", task)
+    outdir = str(tmp_path / "out")
+    _deliver_and_drain(spark, tmp_path, raw, 0, [dict(user_id=1, v=1.0), dict(user_id=1, v=1.0)])
+    _deliver_and_drain(spark, tmp_path, raw, 1, [dict(user_id=1, v=1.0)])
+    out = spark.read.schema("user_id long, n long").json(outdir)
+    # drained: batch2 count restarts at 1, not 3
+    assert sorted(r.n for r in out.collect()) == [1, 2]
+
+
+PIT_SCHEMA = "user_id long, ts timestamp, event_type string, value double"
+PIT_OUT = ("user_id long, n_events_before long, n_types_before long, "
+           "recency_days int, total_value double")
+PIT_CUTOFF = "2024-01-21 00:00:00"
+
+
+def test_pit_stream_null_event_type(spark, tmp_path):
+    """Round-8 review fix: a NULL event_type pre-cutoff row must not
+    kill the stateful serializer (sorted over None/str) and must be
+    excluded from n_types_before exactly as batch countDistinct
+    excludes NULLs."""
+    raw = _keyed_raw(tmp_path, PIT_SCHEMA, "pit_features", {"cutoff": PIT_CUTOFF})
+    _deliver_and_drain(spark, tmp_path, raw, 0, [
+        dict(user_id=1, ts="2024-01-02 10:00:00", event_type="view",
+             value=1.0),
+        dict(user_id=1, ts="2024-01-03 10:00:00", event_type=None,
+             value=2.0),
+    ])
+    out = spark.read.schema(PIT_OUT).json(str(tmp_path / "out")).collect()
+    assert len(out) == 1
+    r = out[0]
+    assert r.n_events_before == 2      # the null-typed event still counts
+    assert r.n_types_before == 1       # ...but not its type
+    assert r.total_value == 3.0
+
+
+def _running_max_case():
+    deliveries = [[dict(user_id=1 + (i * 5 + j) % 3, v=float((i * 7 + j * 3) % 11))
+                   for j in range(4)] for i in range(4)]
+    return (_running_max_task(), {}, "user_id long, v double",
+            "user_id long, running_max double", deliveries)
+
+
+def _pit_case():
+    types = ["view", "cart", None, "purchase"]
+    deliveries = [[dict(user_id=1 + (i + j) % 3,
+                        ts=f"2024-01-{(i * 5 + j * 3) % 27 + 1:02d} 0{j}:00:00",
+                        event_type=types[(i + j) % 4],
+                        value=None if (i * j) % 5 == 3 else (i - j) * 0.25)
+                   for j in range(4)] for i in range(4)]
+    return "pit_features", {"cutoff": PIT_CUTOFF}, PIT_SCHEMA, PIT_OUT, deliveries
+
+
+@pytest.mark.parametrize("case", [_running_max_case, _pit_case], ids=["user_task", "pit_features"])
+def test_keyed_task_crash_replay_and_batch_equals_stream(spark, tmp_path, monkeypatch, case):
+    """A user StatefulTask and pit_features over four deliveries: (b) batch
+    1 dies after its sink commit and before its KV patch, (a) batch 2's
+    sink commit is lost after its KV patch, and each replays; every batch
+    still emits each key it touched exactly once, with the value the batch
+    arm computes over the deliveries so far, and (c) the latest emission
+    per key equals ``result()`` over the concatenated input."""
+    from go_fish_spark.streaming.kvlog import KVLog
+
+    task, options, schema, out_schema, deliveries = case()
+    raw = _keyed_raw(tmp_path, schema, task, options)
+
+    def batch_rows(batches):
+        d = tmp_path / f"batch{len(os.listdir(tmp_path))}"
+        d.mkdir()
+        (d / "in.json").write_text("".join(json.dumps(e) + "\n" for b in batches for e in b))
+        spec = _keyed_raw(tmp_path, schema, task, options)
+        spec["sources"]["in"]["options"]["path"] = str(d)
+        return [tuple(r) for r in compile_pipeline(spark, parse_spec(spec)).result("out").collect()]
+
+    want = []
+    for i, b in enumerate(deliveries):
+        touched = {r[0] for r in batch_rows([b])}
+        want += [r for r in batch_rows(deliveries[: i + 1]) if r[0] in touched]
+    kv_root = tmp_path / "ckpt" / "out" / "kv" / "r"
+    meta, commits = tmp_path / "out" / "_spark_metadata", tmp_path / "ckpt" / "out" / "commits"
+
+    _deliver_and_drain(spark, tmp_path, raw, 0, deliveries[0])
+    commit = KVLog.commit
+
+    def crash_on_batch_1(self):
+        if self.batch_id == 1:
+            raise RuntimeError("crash before the KV patch")
+        commit(self)
+
+    monkeypatch.setattr(KVLog, "commit", crash_on_batch_1)
+    _deliver(spark, tmp_path, 1, deliveries[1])
+    for q in compile_pipeline(spark, parse_spec(raw), streaming=True).start(
+        str(tmp_path / "ckpt"), available_now=True
+    ):
+        with pytest.raises(Exception, match="crash before the KV patch"):
+            q.awaitTermination(180)
+    assert (meta / "1").exists() and not (kv_root / "patch-1.parquet").exists()
+    monkeypatch.setattr(KVLog, "commit", commit)
+    _drain(spark, raw, tmp_path)  # (b) replays batch 1: sink skip, patch written
+
+    _deliver_and_drain(spark, tmp_path, raw, 2, deliveries[2])
+    assert (kv_root / "patch-2.parquet").exists()
+    for p in (meta / "2", meta / ".2.crc", commits / "2", commits / ".2.crc"):
+        p.unlink()
+    _drain(spark, raw, tmp_path)  # (a) replays batch 2 against the KV cut at < 2
+    _deliver_and_drain(spark, tmp_path, raw, 3, deliveries[3])
+
+    emitted = [tuple(r) for r in spark.read.schema(out_schema).json(str(tmp_path / "out")).collect()]
+    assert sorted(emitted) == sorted(want)
+    latest = {r[0]: r for r in want}  # want is in delivery order
+    assert latest == {r[0]: r for r in batch_rows(deliveries)}

@@ -25,7 +25,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", SF_SMALL)
 #: (operators/profile.py: x67, x135, x141, x143, x146, x147, x158-x160),
 #: the sig-store readers of the one sharded store layout
 #: (streaming/storekernel.py: x150, x164, x174 — about 5 s each at
-#: sf0.001) and q43's exact-moment oracle.
+#: sf0.001), q43's exact-moment oracle and q92, whose features are the
+#: ``pit_features`` keyed task's batch arm (tasks/builtin_stateful.py;
+#: 4.9 s alone at sf0.001, 0.4 s warm).
 #: Every other per-entry compare is marked ``slow`` — it duplicates the
 #: full-registry self-check (scripts/check_correctness.py) — and
 #: scripts/close_round.py forces the slow set back on with `-o addopts=`.
@@ -45,7 +47,7 @@ SMOKE = {
     "x160_oov_gate_readback",
     "x150_sigstore_readback", "x164_committed_store_readback",
     "x174_sig_compaction_readback",
-    "q43_exact_corr",
+    "q43_exact_corr", "q92_pit_training_set",
 }
 
 

@@ -547,46 +547,6 @@ def test_sorted_neighborhood_empty_shingle_pairs_dropped(spark):
     assert drows == out
 
 
-def test_pit_stream_null_event_type(spark, tmp_path):
-    """Round-8 review fix: a NULL event_type pre-cutoff row must not
-    kill the stateful serializer (sorted over None/str) and must be
-    excluded from n_types_before exactly as batch countDistinct
-    excludes NULLs."""
-    import json as _json
-
-    from go_fish_spark.streaming import sources
-    from go_fish_spark.streaming.stateful import pit_feature_stream
-
-    indir = tmp_path / "pit_null"
-    indir.mkdir()
-    rows = [
-        dict(user_id=1, ts="2024-01-02 10:00:00", event_type="view",
-             value=1.0),
-        dict(user_id=1, ts="2024-01-03 10:00:00", event_type=None,
-             value=2.0),
-    ]
-    with open(indir / "b0.json", "w") as f:
-        for r in rows:
-            f.write(_json.dumps(r) + "\n")
-    stream = sources.json_stream(
-        spark, str(indir),
-        "user_id long, ts timestamp, event_type string, value double",
-    )
-    from go_fish_spark.streaming import sinks
-
-    q = sinks.memory_sink(
-        pit_feature_stream(stream, "2024-01-21 00:00:00"),
-        "pit_null_out", output_mode="append", trigger_available_now=True,
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM pit_null_out").collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r.n_events_before == 2      # the null-typed event still counts
-    assert r.n_types_before == 1       # ...but not its type
-    assert r.total_value == 3.0
-
-
 def test_audit_sink_orphan_partials_cleaned_on_next_commit(spark, tmp_path):
     """Round-8 review fix: part files whose suffix has no manifest
     (a driver crash between rename and manifest write) are removed by

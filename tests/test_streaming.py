@@ -1951,7 +1951,7 @@ def test_s2s_state_survives_checkpointed_restart(spark, tmp_path):
 
 
 def test_stream_pit_features_vs_batch(spark, tmp_path):
-    """q92's streaming arm (pit_feature_stream): features maintained
+    """q92's streaming arm (the pit_features task): features maintained
     incrementally across THREE micro-batches under the cutoff
     discipline equal the batch q92 feature computation row-for-row —
     and post-cutoff rows (including a purchase inside the label
@@ -1961,8 +1961,7 @@ def test_stream_pit_features_vs_batch(spark, tmp_path):
     round-12 → decimal → round-6 discipline exactly."""
     import pyspark.sql.functions as F
 
-    from go_fish_spark.streaming import sources
-    from go_fish_spark.streaming.stateful import pit_feature_stream
+    from go_fish_spark.plans import compile_pipeline, parse_spec
 
     cutoff = "2024-01-21 00:00:00"
     pre = [
@@ -2011,15 +2010,26 @@ def test_stream_pit_features_vs_batch(spark, tmp_path):
         dict(user_id=u, ts=t, event_type=e, value=v)
         for u, t, e, v in pre + post
     ]
-    # three files → three micro-batches: state must carry across them
-    write_events(indir, rows[:2], fname="b0.json")
-    write_events(indir, rows[2:5], fname="b1.json")
-    write_events(indir, rows[5:], fname="b2.json")
-    stream = sources.json_stream(
-        spark, str(indir), schema, max_files_per_trigger=1
-    )
-    run_to_memory(pit_feature_stream(stream, cutoff), "pit_out")
-    emitted = spark.sql("SELECT * FROM pit_out").collect()
+    outdir = str(tmp_path / "pit_out")
+    spec = parse_spec({
+        "sources": {"in": {"type": "json", "options": {
+            "path": str(indir), "schema": schema}}},
+        "rules": {"pit": {"source": "in", "task": "pit_features", "sink": "out",
+                          "options": {"cutoff": cutoff}}},
+        "sinks": {"out": {"type": "json", "options": {"path": outdir}}},
+        "states": {},
+    })
+    # three deliveries → three micro-batches: state must carry across them
+    for i, part in enumerate((rows[:2], rows[2:5], rows[5:])):
+        write_events(indir, part, fname=f"b{i}.json")
+        for q in compile_pipeline(spark, spec, streaming=True).start(
+            str(tmp_path / "ckpt"), available_now=True
+        ):
+            q.awaitTermination(120)
+    emitted = spark.read.schema(
+        "user_id long, n_events_before long, n_types_before long, "
+        "recency_days int, total_value double"
+    ).json(outdir).collect()
     # no emission may reflect post-cutoff data: user 4 never appears
     assert all(r.user_id != 4 for r in emitted)
     latest = {}
@@ -2030,3 +2040,41 @@ def test_stream_pit_features_vs_batch(spark, tmp_path):
         ):
             latest[r.user_id] = r
     assert {u: tuple(r) for u, r in latest.items()} == batch_rows
+
+
+def test_streaming_pipeline_compile(spark, tmp_path):
+    """Streaming compile of a pipeline spec: json-dir source → rules →
+    two sinks, started as one query per sink."""
+    from go_fish_spark.plans import compile_pipeline, parse_spec
+
+    indir = tmp_path / "in"
+    write_events(indir, [
+        dict(event_id=1, kind="a"), dict(event_id=2, kind="b"),
+        dict(event_id=3, kind="a"),
+    ])
+    out_a, out_b = str(tmp_path / "oa"), str(tmp_path / "ob")
+    spec = parse_spec({
+        "sources": {"src": {"type": "json", "options": {
+            "path": str(indir), "schema": "event_id long, kind string"}}},
+        "rules": {
+            "as": {"source": "src", "task": "filter_eq", "sink": "sa",
+                    "options": {"column": "kind", "value": "a"}},
+            "bs": {"source": "src", "task": "filter_eq", "sink": "sb",
+                    "options": {"column": "kind", "value": "b"}},
+        },
+        "sinks": {
+            "sa": {"type": "json", "options": {"path": out_a}},
+            "sb": {"type": "json", "options": {"path": out_b}},
+        },
+        "states": {},
+    })
+    compiled = compile_pipeline(spark, spec, streaming=True)
+    with pytest.raises(ValueError, match="use start"):
+        compiled.run()
+    queries = compiled.start(str(tmp_path / "ckpt"), available_now=True)
+    for q in queries:
+        q.awaitTermination(120)
+    a = spark.read.schema("event_id long, kind string").json(out_a)
+    b = spark.read.schema("event_id long, kind string").json(out_b)
+    assert sorted(r.event_id for r in a.collect()) == [1, 3]
+    assert [r.event_id for r in b.collect()] == [2]
